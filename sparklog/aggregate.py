@@ -21,17 +21,6 @@ def hourly_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def dedup_bucket_metrics(keyed: DataFrame, key: str, id_col: str,
-                         cap: int, refine=None) -> DataFrame:
-    """Observability for the dedup/LSH cap cascade, surfaced next to
-    parse_metrics: one row of n_buckets / n_over_cap_buckets /
-    n_refined_rows / n_salted_rows / n_dropped_rows so recall loss from
-    refine/salt/drop is never silent (round-2 judge item #2)."""
-    from .queries import bucket_split_stats
-
-    return bucket_split_stats(keyed, key, id_col, cap, refine)
-
-
 def parse_metrics(df: DataFrame) -> DataFrame:
     """Parse-success/failure counters per source — the pipeline's
     observability surface (error-as-data, SURVEY.md §2 cross-cutting)."""

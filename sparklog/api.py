@@ -80,13 +80,8 @@ def parse_tokens(df, col: str = "tokens",
 
 def parse_lines_pandas(lines: pd.Series,
                        cfg: ParseConfig | None = None) -> pd.DataFrame:
-    """pandas Series of raw lines -> parsed frame with detection (the
-    library surface, no Spark session required)."""
-    from .udfs import parse_syslog_frame
+    """pandas Series of raw lines -> ``rfc`` + parsed frame with per-row
+    dialect detection (the library surface, no Spark session required)."""
+    from .udfs import parse_frame
 
-    cfg = cfg or ParseConfig()
-    lines = lines if isinstance(lines, pd.Series) else pd.Series(lines)
-    rfc = detect_rfc(lines)
-    out = parse_syslog_frame(lines, rfc, cfg)
-    out.insert(0, "rfc", rfc.to_numpy())
-    return out
+    return parse_frame(lines, cfg or ParseConfig())

@@ -8,10 +8,11 @@ which makes the routed-row token-array equality audit well-defined.
 
 Two decoder paths:
 
-* **SQL/JVM path (preferred, codegen'd, no Python):**
+* **SQL/JVM path (codegen'd, no Python):**
   ``concat_ws('', transform(tokens, t -> char(t)))``
-* **pandas path** for use inside other pandas UDFs: offset-sliced
-  ``np.concatenate`` over the Arrow list values — no per-row Python loops.
+* **Arrow path** (``detokenize_arrow``) for the Python parse batch: one
+  utf-32 decode over the flat code points builds a pa.StringArray — no
+  per-row Python loops.
 """
 
 from __future__ import annotations
@@ -71,20 +72,6 @@ def detokenize_arrow(tokens: pd.Series):
     return pa.StringArray.from_buffers(
         len(lens), pa.py_buffer(byte_offsets.tobytes()),
         pa.py_buffer(data))
-
-
-def detokenize_pandas(tokens: pd.Series) -> pd.Series:
-    """list[int32] -> str, Arrow-friendly: flatten + single decode + split."""
-    lens = tokens.map(len).to_numpy()
-    if len(lens) == 0:
-        return pd.Series([], dtype=object, index=tokens.index)
-    flat = (np.concatenate([np.asarray(t, dtype=np.int32) for t in tokens])
-            if lens.sum() else np.array([], dtype=np.int32))
-    text = flat.astype("<u4").tobytes().decode("utf-32-le")
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    return pd.Series([text[a:b] for a, b in zip(starts, ends)],
-                     index=tokens.index, dtype=object)
 
 
 # Spark SQL expression for the JVM-side (whole-stage-codegen) decoder.

@@ -3,8 +3,11 @@
 This is a brand-new, whole-column (pandas) reimplementation of the parsing
 semantics of jeromer/syslogparser (the reference at /root/reference).  It is
 NOT a port: the reference is a per-message cursor scanner; this module
-expresses the same grammar as masked column operations so that it can run
-inside Arrow-batched pandas UDFs on Spark with zero per-row Python loops.
+expresses the same grammar as masked column operations so that whole Arrow
+batches parse with zero per-row Python loops.  It is the slow path behind
+the Arrow fast path (fastpath.py); udfs.parse_batch_arrow dispatches every
+batch between the two, and the public parse_rfc3164/parse_rfc5424 are thin
+pandas adapters over it.
 
 Semantics are pinned to the reference by file:line citations:
 
@@ -310,105 +313,20 @@ def _localize(wall: pd.Series, location: str, err: pd.Series):
     return utc, off
 
 
-def _as_pandas(raw) -> pd.Series:
-    if isinstance(raw, pd.Series):
-        return raw
-    return pd.Series(raw.to_pandas().to_numpy(), dtype=object)
-
-
 def _fast_eligible(cfg: ParseConfig) -> bool:
     return (cfg.priority is None and not cfg.hostname and not cfg.tag
             and cfg.ts_format is None
             and cfg.location in ("UTC", "utc", None))
 
 
-_INT_OUT_COLS = ("priority", "facility", "severity", "version",
-                 "tz_offset_minutes")
-
-
-def _merge_fast_slow(raw: pd.Series, cfg: ParseConfig, fast_fn, slow_fn,
-                     fast_only_cols: dict) -> pd.DataFrame:
-    """Run the Arrow fast path; slow-parse only the rows it punts on.
-
-    Output assembly is positional array fill (pd.concat over mixed-NA
-    object frames costs more than the parse itself).  ``raw`` may be a
-    pandas Series or a pa.Array/ChunkedArray (the zero-object-churn path
-    from the tokens UDF)."""
-    try:
-        import pyarrow as pa
-        is_arrow = isinstance(raw, (pa.Array, pa.ChunkedArray))
-    except ImportError:  # pragma: no cover
-        is_arrow = False
-    if is_arrow:
-        pos = None
-        index = pd.RangeIndex(len(raw))
-        hit, cols = fast_fn(raw)
-    else:
-        pos = raw.reset_index(drop=True).fillna("").astype(object)
-        index = raw.index
-        hit, cols = fast_fn(pos)
-
-    def run_slow(mask):
-        if pos is not None:
-            return slow_fn(pos[mask], cfg)
-        sub = pd.Series(raw.filter(pa.array(mask)).to_pandas().to_numpy(),
-                        index=np.flatnonzero(mask))
-        return slow_fn(sub, cfg)
-
-    if not hit.any():
-        out = run_slow(np.ones(len(hit), dtype=bool))
-        out.index = index
-        return out
-
-    n = len(hit)
-    miss = ~hit
-    slow = run_slow(miss) if miss.any() else None
-    data: dict = {}
-    for c in _OUTPUT_COLUMNS:
-        if c in _INT_OUT_COLS:
-            flt = np.full(n, np.nan)
-            if c in cols:
-                flt[hit] = cols[c]          # cols carry hit rows only
-            if slow is not None:
-                flt[miss] = slow[c].to_numpy(dtype="float64",
-                                             na_value=np.nan)
-            data[c] = pd.array(flt, dtype="Int64")
-        elif c == "ts":
-            ts = np.full(n, np.datetime64("NaT"), dtype="M8[ns]")
-            if c in cols:
-                ts[hit] = cols[c]
-            if slow is not None:
-                ts[miss] = slow[c].to_numpy(dtype="M8[ns]")
-            data[c] = ts
-        else:
-            obj = np.full(n, None, dtype=object)
-            if c in cols:
-                src = cols[c]
-                if not isinstance(src, np.ndarray):  # pa.Array strings
-                    src = src.to_numpy(zero_copy_only=False)
-                obj[hit] = src
-            elif c in fast_only_cols:
-                obj[hit] = fast_only_cols[c]
-            if slow is not None:
-                obj[miss] = slow[c].to_numpy(dtype=object)
-            data[c] = obj
-    out = pd.DataFrame(data, index=index)
-    return out
-
-
 def parse_rfc3164(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """Full RFC3164 parse: Arrow/re2 fast path for canonical lines with the
-    masked-column slow path for quirk/error/injected-config rows.  Both
-    paths are golden- and differential-tested to agree exactly."""
-    if _fast_eligible(cfg):
-        from . import fastpath
+    """Full RFC3164 parse of every line: the Arrow/re2 fast path for
+    canonical lines, the masked-column slow path for quirk/error/
+    injected-config rows (udfs.parse_batch_arrow).  Both paths are
+    golden- and differential-tested to agree exactly."""
+    from .udfs import parse_frame
 
-        return _merge_fast_slow(
-            raw, cfg,
-            lambda s: fastpath.parse_rfc3164_fast(s, cfg.default_year),
-            _parse_rfc3164_slow,
-            fast_only_cols={"ts_is_nil": False, "parse_error": None})
-    return _parse_rfc3164_slow(_as_pandas(raw), cfg)
+    return parse_frame(raw, cfg, RFC_3164)
 
 
 def _parse_rfc3164_slow(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:
@@ -494,16 +412,10 @@ def _atoi_field(sub: pd.Series, width: int):
 
 
 def parse_rfc5424(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """Full RFC5424 parse: Arrow/re2 fast path + slow-path fallback."""
-    if _fast_eligible(cfg):
-        from . import fastpath
+    """Full RFC5424 parse of every line (see parse_rfc3164)."""
+    from .udfs import parse_frame
 
-        return _merge_fast_slow(
-            raw, cfg,
-            lambda s: fastpath.parse_rfc5424_fast(s),
-            _parse_rfc5424_slow,
-            fast_only_cols={"ts_is_nil": False, "parse_error": None})
-    return _parse_rfc5424_slow(_as_pandas(raw), cfg)
+    return parse_frame(raw, cfg, RFC_5424)
 
 
 def _parse_rfc5424_slow(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:

@@ -2,12 +2,11 @@
 enrich → route (fan-out sinks) → aggregate → audit, with manifest commits
 and resume.
 
-Plan shape (everything except the parse UDF is JVM-side):
+Plan shape (everything except the one MapInArrow is JVM-side):
 
     Scan parquet (pruned: doc_id, tokens, source)
-      → project detokenize (codegen: transform+char)      [no shuffle]
-      → project detect_rfc (codegen)                      [no shuffle]
-      → ArrowEvalPython parse_syslog                      [no shuffle]
+      → MapInArrow: decode + detect + parse, one Arrow
+        pass per batch (udfs.make_map_in_arrow_parser)   [no shuffle]
       → 3× BroadcastHashJoin (dims)                       [no shuffle]
       → salted repartition on sink key                    [the ONE shuffle]
       → dynamic-partition parquet write per sink
@@ -59,6 +58,19 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
                .mapInArrow(fn, MAP_IN_ARROW_SCHEMA))
 
 
+def _run_stage(manifest: Manifest, stats: dict, name: str, fn,
+               fail_after: str | None = None) -> None:
+    """Run one manifest stage: skip it (recording the resume) when a
+    previous run committed it, else run ``fn`` and commit its info dict.
+    ``fail_after`` kills the job right after the named stage commits."""
+    if manifest.is_done(name):
+        stats["resumed_stages"].append(name)
+        return
+    manifest.commit_stage(name, fn() or {})
+    if fail_after == name:
+        raise RuntimeError(f"injected failure after stage {name}")
+
+
 def _read_source(spark: SparkSession, src_path: str,
                  table_format: str = "parquet") -> DataFrame:
     """Source reader through the catalog abstraction (SURVEY.md §7.5):
@@ -87,15 +99,6 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     src = _read_source(spark, src_path, table_format)
     parsed = enrich(parse_stage(src, cfg), spark)
     routed = with_route_columns(parsed)
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-        if fail_after == name:
-            raise RuntimeError(f"injected failure after stage {name}")
 
     def _sinks():
         write_sinks(routed, os.path.join(out_dir, "sinks"),
@@ -128,11 +131,12 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
                 f"token-array equality audit failed: {violations} rows")
         return {"violations": 0}
 
-    stage("sinks", _sinks)
-    stage("aggregates", _aggregates)
-    stage("metrics", _metrics)
+    stages = [("sinks", _sinks), ("aggregates", _aggregates),
+              ("metrics", _metrics)]
     if do_audit:
-        stage("audit", _audit)
+        stages.append(("audit", _audit))
+    for name, fn in stages:
+        _run_stage(manifest, stats, name, fn, fail_after)
 
     routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
     stats["rows"] = routed_back.count()
@@ -162,13 +166,6 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     manifest = Manifest(out_dir)
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
 
     def _pairs():
         (dedup_minhash_lsh(spark, sf_dir)
@@ -213,10 +210,11 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                     os.path.join(out_dir, "dedup_metrics")).collect()}
         return {"bucket_metrics": rows}
 
-    stage("near_dup_pairs", _pairs)
-    stage("components", _components)
-    stage("substring_runs", _substring)
-    stage("dedup_metrics", _metrics)
+    for name, fn in (("near_dup_pairs", _pairs),
+                     ("components", _components),
+                     ("substring_runs", _substring),
+                     ("dedup_metrics", _metrics)):
+        _run_stage(manifest, stats, name, fn)
 
     stats["n_pairs"] = spark.read.parquet(
         os.path.join(out_dir, "near_dup_pairs")).count()
@@ -254,13 +252,6 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
 
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-
     def _curated():
         (curate_corpus(spark, sf_dir)
          .write.mode("overwrite")
@@ -281,9 +272,9 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         rows = cur.groupBy("reason").count().collect()
         return {"reasons": {r["reason"]: r["count"] for r in rows}}
 
-    stage("curated", _curated)
-    stage("corpus", _corpus)
-    stage("curate_metrics", _metrics)
+    for name, fn in (("curated", _curated), ("corpus", _corpus),
+                     ("curate_metrics", _metrics)):
+        _run_stage(manifest, stats, name, fn)
 
     stats["reasons"] = (manifest.load()["stages"]
                         .get("curate_metrics", {}).get("reasons", {}))
@@ -312,13 +303,6 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
 
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-
     def _flags():
         (dedup_incremental(spark, sf_dir)
          .write.mode("overwrite")
@@ -345,9 +329,9 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                   for r in rows}
         return {"flag_combos": combos}
 
-    stage("flags", _flags)
-    stage("additions", _additions)
-    stage("incremental_metrics", _metrics)
+    for name, fn in (("flags", _flags), ("additions", _additions),
+                     ("incremental_metrics", _metrics)):
+        _run_stage(manifest, stats, name, fn)
 
     stats["flag_combos"] = (manifest.load()["stages"]
                             .get("incremental_metrics", {})
@@ -377,19 +361,12 @@ def run_tokenize(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
 
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-
     def _merges():
         merges = _bpe_merges(spark, sf_dir)
         save_merges(spark, merges, os.path.join(out_dir, "merges"))
         return {"n_merges": len(merges)}
 
-    stage("merges", _merges)
+    _run_stage(manifest, stats, "merges", _merges)
     stats["n_merges"] = (manifest.load()["stages"]
                          .get("merges", {}).get("n_merges"))
     stats["wall_sec"] = time.time() - t0

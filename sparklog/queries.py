@@ -5,7 +5,7 @@ Two families:
 
 * ``syslog_*`` — construct deterministic syslog lines FROM the shared
   ``events`` table, push them through the REAL pipeline path (tokenize →
-  detokenize → detect → Arrow parse UDF), and have the oracle recompute the
+  detokenize → detect → mapInArrow parse), and have the oracle recompute the
   expected fields directly from the base columns.  A hash match proves the
   whole parse path against an independent derivation.
 * analytics / training-data ops (dedup, similarity, text analysis, TPC-H
@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .api import parse_lines
 from .encoding import detokenize_col, tokenize_col
 from .enrich import FACILITY_NAMES, SEVERITY_CLASS, SEVERITY_NAMES
 
@@ -175,32 +176,11 @@ def _line_5424_col():
         F.lit('"] event body '), F.col("event_id").cast("string"))
 
 
-def _parse_lines(spark: SparkSession, src: DataFrame) -> DataFrame:
-    """raw line -> detect -> parse via mapInArrow.  The map node is a
-    barrier, so downstream filter pushdown can never duplicate the parse
-    (struct-field references to a pandas UDF get re-inlined by Catalyst).
-    The token codec itself is exercised by ``syslog_token_roundtrip`` and
-    by the pipeline's parse_stage."""
-    from pyspark.sql import types as T
-
-    from .udfs import PARSED_SCHEMA, make_map_in_arrow_parser
-
-    fn = make_map_in_arrow_parser(
-        passthrough=tuple(src.columns), input_col="raw", input_kind="raw",
-        out_prefix="p_", emit_raw=False)
-    schema = T.StructType(
-        list(src.schema.fields)
-        + [T.StructField("rfc", T.IntegerType())]
-        + [T.StructField(f"p_{f.name}", f.dataType)
-           for f in PARSED_SCHEMA.fields])
-    return src.mapInArrow(fn, schema)
-
-
 def syslog_parse_rfc3164(spark, sf):
     ev = _t(spark, sf, "events")
     src = ev.select(F.col("event_id").alias("doc_id"),
                     _line_3164_col().alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return out.select(
         "doc_id",
         F.col("p_priority").cast("long").alias("priority"),
@@ -245,7 +225,7 @@ def syslog_parse_rfc5424(spark, sf):
     ev = _t(spark, sf, "events")
     src = ev.select(F.col("event_id").alias("doc_id"),
                     _line_5424_col().alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return out.select(
         "doc_id",
         F.col("p_priority").cast("long").alias("priority"),
@@ -283,7 +263,7 @@ def syslog_detect_mix(spark, sf):
              .otherwise(F.concat(F.lit("garbage line "),
                                  F.col("event_id").cast("string"))))
     src = ev.select(F.col("event_id").alias("doc_id"), line.alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return (out.groupBy(F.col("rfc").cast("long").alias("rfc"))
                .agg(F.count("*").alias("n")))
 
@@ -304,7 +284,7 @@ def syslog_priority_split(spark, sf):
         F.col("event_id").alias("doc_id"),
         F.concat(F.lit("<"), (F.col("event_id") % 192).cast("string"),
                  F.lit(">Oct 11 22:14:15 h t: x")).alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return (out.select(F.col("p_priority").cast("long").alias("priority"),
                        F.col("p_facility").cast("long").alias("facility"),
                        F.col("p_severity").cast("long").alias("severity"))
@@ -336,7 +316,7 @@ def syslog_enrich_names(spark, sf):
     ev = _t(spark, sf, "events")
     src = ev.select(F.col("event_id").alias("doc_id"),
                     _line_3164_col().alias("raw"))
-    out = _parse_lines(spark, src).select(
+    out = parse_lines(src).select(
         "doc_id",
         F.col("p_facility").cast("int").alias("facility"),
         F.col("p_severity").cast("int").alias("severity"))
@@ -367,7 +347,7 @@ def syslog_route_counts(spark, sf):
                    F.lit("<99999>Oct 11 22:14:15 h t: x"))
              .otherwise(_line_3164_col()))
     src = ev.select(F.col("event_id").alias("doc_id"), line.alias("raw"))
-    parsed = _parse_lines(spark, src).select(
+    parsed = parse_lines(src).select(
         "doc_id", "rfc",
         F.col("p_severity").cast("int").alias("severity"),
         F.col("p_parse_error").alias("parse_error"))
@@ -395,7 +375,7 @@ def syslog_hourly_agg(spark, sf):
     ev = _t(spark, sf, "events")
     src = ev.select(F.col("event_id").alias("doc_id"),
                     _line_3164_col().alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return (out.where(F.col("p_parse_error").isNull())
                .groupBy(F.col("p_facility").cast("long").alias("facility"),
                         F.col("p_severity").cast("long").alias("severity"),
@@ -513,7 +493,7 @@ def syslog_error_taxonomy(spark, sf):
              .when(fam == 4, F.lit("<7a>Oct 11 22:14:15 h t: x"))
              .otherwise(F.lit("<34>Foo 99 99:99:99 h t: x")))
     src = ev.select(F.col("event_id").alias("doc_id"), line.alias("raw"))
-    out = _parse_lines(spark, src)
+    out = parse_lines(src)
     return (out.groupBy(F.col("p_parse_error").alias("parse_error"))
                .agg(F.count("*").alias("n")))
 

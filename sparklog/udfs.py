@@ -1,27 +1,21 @@
-"""Arrow-batched pandas UDF wrappers around the vectorized grammar.
+"""The parse dispatcher and its Spark batch function.
 
-One Series→DataFrame pandas UDF per parse call: the JVM ships Arrow batches
-of raw strings + the detected rfc tag, Python runs the masked-column grammar
-once per batch (no per-row loops), and a single struct column comes back.
-This is the only JVM↔Python boundary in the pipeline; everything before
-(detokenize, detect) and after (enrich, route, aggregate) stays JVM-side
-under whole-stage codegen.
+``parse_batch_arrow`` is the one place a batch of raw lines becomes the
+parsed columns, for every ``ParseConfig``: the Arrow fast path and error
+classifier (default config only), the masked-column slow path for the
+rest, merged with one gather per column.  ``make_map_in_arrow_parser``
+wraps it for ``DataFrame.mapInArrow`` (decode + detect + parse in one
+Arrow pass per batch: the pipeline's only JVM<->Python boundary), and
+``parse_frame`` wraps it for the pandas library API.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .grammar import (
-    RFC_3164,
-    RFC_5424,
-    ParseConfig,
-    parse_rfc3164,
-    parse_rfc5424,
-)
+from .grammar import RFC_3164, RFC_5424, ParseConfig
 
 PARSED_SCHEMA = T.StructType([
     T.StructField("priority", T.IntegerType()),
@@ -44,109 +38,6 @@ PARSED_SCHEMA = T.StructType([
 
 _INT_COLS = ["priority", "facility", "severity", "version",
              "tz_offset_minutes"]
-
-
-def _to_arrow_frame(out: pd.DataFrame) -> pd.DataFrame:
-    """Normalize grammar output dtypes for the Arrow return path."""
-    for c in _INT_COLS:
-        out[c] = out[c].astype("Int64")
-    out["ts_is_nil"] = out["ts_is_nil"].astype("boolean")
-    return out
-
-
-def _assemble(n: int, parts, unknown: np.ndarray,
-              index=None) -> pd.DataFrame:
-    """Positional fill of (mask, parsed-subset-frame) parts into one frame.
-    Avoids pd.concat over mixed-NA object frames (slower than the parse)."""
-    from .grammar import _OUTPUT_COLUMNS
-
-    data: dict = {}
-    for c in _OUTPUT_COLUMNS:
-        if c in _INT_COLS:
-            flt = np.full(n, np.nan)
-            for mask, df in parts:
-                flt[mask] = df[c].to_numpy(dtype="float64",
-                                           na_value=np.nan)
-            data[c] = pd.array(flt, dtype="Int64")
-        elif c == "ts":
-            ts = np.full(n, np.datetime64("NaT"), dtype="M8[ns]")
-            for mask, df in parts:
-                ts[mask] = df[c].to_numpy(dtype="M8[ns]")
-            data[c] = ts
-        else:
-            obj = np.full(n, None, dtype=object)
-            for mask, df in parts:
-                obj[mask] = df[c].to_numpy(dtype=object)
-            data[c] = obj
-    if unknown.any():
-        pe = data["parse_error"]
-        pe[unknown] = "DetectFailed"
-    return pd.DataFrame(data, index=index)
-
-
-def parse_syslog_frame(raw: pd.Series, rfc: pd.Series,
-                       cfg: ParseConfig) -> pd.DataFrame:
-    """Dispatch one batch to both grammars by detected dialect.
-
-    Rows with rfc==UNKNOWN get a 'DetectFailed' parse_error (the reference
-    caller would have no parser to construct; we make it routable data).
-    """
-    rfc = pd.Series(rfc, index=raw.index).fillna(0).astype(int).to_numpy()
-    raw = raw.reset_index(drop=True)
-    m3 = rfc == RFC_3164
-    m5 = rfc == RFC_5424
-    parts = []
-    if m3.any():
-        parts.append((m3, parse_rfc3164(raw[m3], cfg)))
-    if m5.any():
-        parts.append((m5, parse_rfc5424(raw[m5], cfg)))
-    out = _assemble(len(raw), parts, ~(m3 | m5))
-    return _to_arrow_frame(out)
-
-
-def parse_tokens_arrow_frame(tokens: pd.Series,
-                             cfg: ParseConfig) -> pd.DataFrame:
-    """tokens -> parsed frame, Arrow end-to-end: detokenize builds a
-    pa.StringArray directly (no Python string objects), detection and the
-    grammar fast paths run as Arrow compute kernels; only quirk/error rows
-    drop to the pandas slow path."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .encoding import detokenize_arrow
-    from .grammar import detect_rfc_arrow
-
-    arr = detokenize_arrow(tokens)
-    rfc = detect_rfc_arrow(arr)
-    m3 = rfc == RFC_3164
-    m5 = rfc == RFC_5424
-    parts = []
-    if m3.any():
-        parts.append((m3, parse_rfc3164(pc.filter(arr, pa.array(m3)), cfg)))
-    if m5.any():
-        parts.append((m5, parse_rfc5424(pc.filter(arr, pa.array(m5)), cfg)))
-    out = _assemble(len(rfc), parts, ~(m3 | m5))
-    out.insert(0, "rfc", pd.array(rfc, dtype="Int64"))
-    out["ts_is_nil"] = out["ts_is_nil"].astype("boolean")
-    for c in _INT_COLS:
-        out[c] = out[c].astype("Int64")
-    return out
-
-
-def make_parse_udf(cfg: ParseConfig | None = None):
-    """pandas UDF (raw string, rfc int) -> parsed struct."""
-    cfg = cfg or ParseConfig()
-
-    @F.pandas_udf(PARSED_SCHEMA)
-    def parse_syslog(raw: pd.Series, rfc: pd.Series) -> pd.DataFrame:
-        return parse_syslog_frame(raw, rfc, cfg)
-
-    return parse_syslog
-
-
-# rfc joins the struct so decode+detect+parse is ONE Arrow round trip
-PARSED_SCHEMA_TOKENS = T.StructType(
-    [T.StructField("rfc", T.IntegerType())] + PARSED_SCHEMA.fields)
 
 
 def _string_from_token_list(col):
@@ -174,11 +65,17 @@ def _string_from_token_list(col):
     return detokenize_arrow(toks)
 
 
-def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig):
-    """Whole-batch parse producing Arrow arrays directly (no pandas on the
-    hot path): fast-path hits keep their Arrow string buffers; only misses
-    and unknown-dialect rows go through the pandas slow path; the three row
-    groups are merged with one gather (take) per column."""
+def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig) -> dict:
+    """Whole-batch parse of a pa.StringArray with per-row dialect codes
+    ``rfc`` -> {output column: pa.Array}, for every ParseConfig.
+
+    Default-config batches take the Arrow fast path first (hits keep their
+    Arrow string buffers), then the Arrow error classifier on the misses;
+    only what both leave goes through the pandas slow path.  Injected
+    configs skip both (the fast path and the classifier assume the
+    default config) and send every known-dialect row to the slow path.
+    Unknown-dialect rows carry ``DetectFailed``.  The row groups are
+    merged with one gather (take) per column."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -191,36 +88,34 @@ def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig):
     )
 
     n = len(rfc)
-    m3 = rfc == RFC_3164
-    m5 = rfc == RFC_5424
-    if not _fast_eligible(cfg):
-        # injected-config jobs: pandas path throughout
-        return None
-
+    fast = _fast_eligible(cfg)
     hit3 = np.zeros(n, dtype=bool)
     hit5 = np.zeros(n, dtype=bool)
     cols3: dict = {}
     cols5: dict = {}
-    if m3.all():
-        h3, cols3 = fastpath.parse_rfc3164_fast(arr, cfg.default_year)
-        hit3 = h3
-    elif m3.any():
-        a3 = pc.filter(arr, pa.array(m3))
-        h3, cols3 = fastpath.parse_rfc3164_fast(a3, cfg.default_year)
-        hit3[np.flatnonzero(m3)[h3]] = True
-    if m5.all():
-        h5, cols5 = fastpath.parse_rfc5424_fast(arr)
-        hit5 = h5
-    elif m5.any():
-        a5 = pc.filter(arr, pa.array(m5))
-        h5, cols5 = fastpath.parse_rfc5424_fast(a5)
-        hit5[np.flatnonzero(m5)[h5]] = True
+    if fast:
+        m3 = rfc == RFC_3164
+        m5 = rfc == RFC_5424
+        if m3.all():
+            h3, cols3 = fastpath.parse_rfc3164_fast(arr, cfg.default_year)
+            hit3 = h3
+        elif m3.any():
+            a3 = pc.filter(arr, pa.array(m3))
+            h3, cols3 = fastpath.parse_rfc3164_fast(a3, cfg.default_year)
+            hit3[np.flatnonzero(m3)[h3]] = True
+        if m5.all():
+            h5, cols5 = fastpath.parse_rfc5424_fast(arr)
+            hit5 = h5
+        elif m5.any():
+            a5 = pc.filter(arr, pa.array(m5))
+            h5, cols5 = fastpath.parse_rfc5424_fast(a5)
+            hit5[np.flatnonzero(m5)[h5]] = True
 
-    # homogeneous canonical batch (the 100 TB common case): columns are
-    # already in row order — skip the concat+gather entirely
-    for full_hit, cols_d in ((hit3, cols3), (hit5, cols5)):
-        if full_hit.all():
-            return {c: _fast_col(cols_d, c, n) for c in _OUTPUT_COLUMNS}
+        # homogeneous canonical batch (the 100 TB common case): columns
+        # are already in row order — skip the concat+gather entirely
+        for full_hit, cols_d in ((hit3, cols3), (hit5, cols5)):
+            if full_hit.all():
+                return {c: _fast_col(cols_d, c, n) for c in _OUTPUT_COLUMNS}
 
     miss = ~(hit3 | hit5)
     slow_parts = []
@@ -232,7 +127,8 @@ def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig):
         srfc = rfc[miss_idx]
         # Arrow error pre-classification: provable error codes skip the
         # pandas slow path entirely (garbage bursts stay cheap)
-        codes = fastpath.classify_errors_fast(miss_arr, srfc)
+        codes = (fastpath.classify_errors_fast(miss_arr, srfc) if fast
+                 else np.full(len(srfc), None, dtype=object))
         codes[~((srfc == RFC_3164) | (srfc == RFC_5424))] = "DetectFailed"
         classified = np.array([x is not None for x in codes])
         if classified.any():
@@ -298,7 +194,7 @@ def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig):
             chunks.append(_slow_col_to_pa(slow[colname], typ))
         merged = pa.concat_arrays([c.combine_chunks()
                                    if isinstance(c, pa.ChunkedArray) else c
-                                   for c in chunks])
+                                   for c in chunks] or [pa.nulls(0, typ)])
         return merged.take(inv_pa)
 
     return {c: seg(c, _pa_type(c)) for c in _OUTPUT_COLUMNS}
@@ -357,11 +253,10 @@ def make_map_in_arrow_parser(cfg: ParseConfig | None = None,
                              emit_raw: bool = True):
     """Batch function for DataFrame.mapInArrow: passthrough columns ride
     along untouched (same Arrow buffers); decode+detect+parse append the
-    rfc + parsed columns.  Compared to the pandas UDF this skips the
-    arrow->pandas conversion of the token list column (65k ndarray
-    allocations per batch) on input, and — being a map barrier — can never
-    be duplicated by filter pushdown the way struct-field references to a
-    pandas UDF can.
+    rfc + parsed columns.  The token list column feeds the decoder
+    straight from its Arrow buffers (no per-row ndarray allocations), and
+    — being a map barrier — the parse can never be duplicated by filter
+    pushdown the way struct-field references to a UDF result can.
 
     The token ARRAY column must never appear in the OUTPUT batch: shipping
     array<int> back across the Arrow boundary costs 10-20x the parse
@@ -377,12 +272,7 @@ def make_map_in_arrow_parser(cfg: ParseConfig | None = None,
     def fn(batches):
         import pyarrow.compute as pc
 
-        from .grammar import (
-            _OUTPUT_COLUMNS,
-            detect_rfc_arrow,
-            parse_rfc3164,
-            parse_rfc5424,
-        )
+        from .grammar import _OUTPUT_COLUMNS, detect_rfc_arrow
 
         for b in batches:
             col = b.column(b.schema.get_field_index(input_col))
@@ -401,48 +291,51 @@ def make_map_in_arrow_parser(cfg: ParseConfig | None = None,
                 names.append("raw")
             names += ["rfc"] + [f"{out_prefix}{c}" for c in _OUTPUT_COLUMNS]
             arrays.append(pa.array(rfc, pa.int32()))
-
-            out_arrow = parse_batch_arrow(arr, rfc, cfg)
-            if out_arrow is not None:      # arrow-native hot path
-                arrays.extend(out_arrow[c] for c in _OUTPUT_COLUMNS)
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-                continue
-
-            # injected-config jobs: pandas path
-            m3 = rfc == RFC_3164
-            m5 = rfc == RFC_5424
-            parts = []
-            if m3.any():
-                parts.append((m3, parse_rfc3164(
-                    pc.filter(arr, pa.array(m3)), cfg)))
-            if m5.any():
-                parts.append((m5, parse_rfc5424(
-                    pc.filter(arr, pa.array(m5)), cfg)))
-            out = _assemble(len(rfc), parts, ~(m3 | m5))
-            for c in _OUTPUT_COLUMNS:
-                v = out[c]
-                if c in _INT_COLS:
-                    arrays.append(pa.Array.from_pandas(v, type=pa.int32()))
-                elif c == "ts":
-                    arrays.append(pa.array(v.to_numpy())
-                                  .cast(pa.timestamp("us")))
-                elif c == "ts_is_nil":
-                    arrays.append(pa.Array.from_pandas(v, type=pa.bool_()))
-                else:
-                    # from_pandas maps stray NaN (slow-path masked fields)
-                    # to null, unlike pa.array over tolist()
-                    arrays.append(pa.Array.from_pandas(v,
-                                                       type=pa.string()))
+            out = parse_batch_arrow(arr, rfc, cfg)
+            arrays.extend(out[c] for c in _OUTPUT_COLUMNS)
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return fn
 
 
+def parse_frame(lines, cfg: ParseConfig,
+                rfc: int | None = None) -> pd.DataFrame:
+    """pandas adapter over parse_batch_arrow for the library API: lines (a
+    pandas Series or anything pd.Series accepts) are parsed as dialect
+    ``rfc``, or detected per row when ``rfc`` is None — the frame then
+    leads with the detected ``rfc`` column.  Null lines parse as "".  The
+    frame keeps the caller's index; ints come back as nullable Int64,
+    ``ts`` as M8[ns], strings and ``ts_is_nil`` as object."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .grammar import _OUTPUT_COLUMNS, detect_rfc_arrow
+
+    lines = lines if isinstance(lines, pd.Series) else pd.Series(lines)
+    arr = pa.array(lines, pa.string(), from_pandas=True)
+    if arr.null_count:
+        arr = pc.fill_null(arr, "")
+    codes = (detect_rfc_arrow(arr) if rfc is None
+             else np.full(len(arr), rfc, dtype=np.int64))
+    out = parse_batch_arrow(arr, codes, cfg)
+    data = {} if rfc is not None else {"rfc": codes}
+    for c in _OUTPUT_COLUMNS:
+        v = out[c].to_numpy(zero_copy_only=False)
+        if c in _INT_COLS:
+            data[c] = pd.array(v, dtype="Int64")
+        elif c == "ts":
+            data[c] = v.astype("M8[ns]")
+        else:
+            data[c] = np.asarray(v, dtype=object)
+    return pd.DataFrame(data, index=lines.index)
+
+
 MAP_IN_ARROW_SCHEMA = T.StructType(
     [T.StructField("doc_id", T.StringType()),
      T.StructField("source", T.StringType()),
-     T.StructField("raw", T.StringType())]
-    + PARSED_SCHEMA_TOKENS.fields)
+     T.StructField("raw", T.StringType()),
+     T.StructField("rfc", T.IntegerType())]
+    + PARSED_SCHEMA.fields)
 
 
 DECODED_SCHEMA = T.StructType([
@@ -466,46 +359,3 @@ def make_decoder_fn(input_col: str = "tokens"):
                 names=["doc_id", "raw"])
 
     return fn
-
-
-def make_parse_from_tokens_udf(cfg: ParseConfig | None = None):
-    """pandas UDF (tokens array<int>) -> (rfc + parsed) struct.
-
-    Detokenize (numpy utf-32 bulk decode), dialect detection, and both
-    grammars run in a single Python pass per Arrow batch.  This keeps the
-    token arrays out of JVM per-char array ops (split/transform/char),
-    which otherwise dominate GC at scale.
-    """
-    cfg = cfg or ParseConfig()
-
-    @F.pandas_udf(PARSED_SCHEMA_TOKENS)
-    def parse_tokens(tokens: pd.Series) -> pd.DataFrame:
-        return parse_tokens_arrow_frame(tokens, cfg)
-
-    return parse_tokens
-
-
-def detect_rfc_col(raw_col: str = "raw"):
-    """JVM-side (codegen) dialect detection, quirk-exact vs
-    syslogparser.go:30-56 — see grammar.detect_rfc for the taxonomy.
-
-    instr() is 1-based: p = position of '>' within the first 10 chars.
-    """
-    head = F.substring(F.col(raw_col), 1, 10)
-    p = F.instr(head, ">")  # 0 when absent
-    after = F.substring(F.col(raw_col), p + 1, 1)
-    return (
-        # null input -> UNKNOWN, matching detect_rfc_arrow (without this,
-        # every when() below is NULL on null input and the chain would
-        # fall through to the 3164 otherwise())
-        F.when(F.col(raw_col).isNull(), F.lit(0))
-        .when(F.length(raw_col) == 0, F.lit(0))
-        # no '>' in the scan window: v=0 quirk -> 5424 for full windows,
-        # UNKNOWN (reference panic) for short buffers
-        .when((p == 0) & (F.length(raw_col) >= 10), F.lit(RFC_5424))
-        .when(p == 0, F.lit(0))
-        .when(p == 10, F.lit(0))         # '>' at index 9: version outside
-        .when(after == "", F.lit(0))     # '>' is the last byte (ref panics)
-        .when(F.ascii(after).between(48, 57), F.lit(RFC_5424))
-        .otherwise(F.lit(RFC_3164))
-    ).cast("int")

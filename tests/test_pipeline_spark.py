@@ -138,32 +138,32 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
     assert sink_digest(out_a) == sink_digest(out_b)
 
 
-def test_pandas_udf_variant_matches_mapinarrow(spark, tmp_path):
-    """The pandas-UDF tokens parser (kept as an alternative to the
-    mapInArrow default) must produce identical rows."""
-    from pyspark.sql import functions as F
-
+def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
+    """The Spark parse stage (tokens -> mapInArrow) and the pandas library
+    API share one dispatcher; both adapters must produce identical rows on
+    a synthetic corpus plus every golden error line and a non-ASCII
+    line."""
+    from sparklog.api import parse_lines_pandas
     from sparklog.pipeline import PARSED_COLS, parse_stage
-    from sparklog.udfs import make_parse_from_tokens_udf
 
+    pdf = fixtures.synth_lines(800, seed=21)
+    extra = ([c["raw"] for c in fixtures.GOLDEN_ERRORS]
+             + ["<34>Oct 11 22:14:15 hôte su: échec für ü"])
+    pdf = pd.concat([pdf, pd.DataFrame({
+        "doc_id": [f"x{i:03d}" for i in range(len(extra))],
+        "raw": extra, "source": "golden"})], ignore_index=True)
     src_path = str(tmp_path / "tokens")
-    fixtures.write_tokens_table(spark, fixtures.synth_lines(800, seed=21),
-                                src_path, n_partitions=2)
-    src = spark.read.parquet(src_path)
-    a = parse_stage(src).drop("raw")
-    udf = make_parse_from_tokens_udf()
-    b = (src.withColumn("parsed", udf(F.col("tokens")))
-            .select("doc_id", "source",
-                    F.col("parsed.rfc").alias("rfc"),
-                    *[F.col(f"parsed.{c}").alias(c) for c in PARSED_COLS]))
-    pa_ = a.orderBy("doc_id").toPandas()
-    pb_ = b.orderBy("doc_id").toPandas()
-    assert pa_.columns.tolist() == pb_.columns.tolist()
-    for c in pa_.columns:
+    fixtures.write_tokens_table(spark, pdf, src_path, n_partitions=2)
+    a = (parse_stage(spark.read.parquet(src_path))
+         .select("doc_id", "rfc", *PARSED_COLS)
+         .toPandas().set_index("doc_id").loc[pdf["doc_id"]])
+    b = parse_lines_pandas(pdf["raw"])
+    assert a.columns.tolist() == b.columns.tolist()
+    for c in a.columns:
         # object-cast first: float columns keep NaN through .where(None)
         # and NaN != NaN would fail equal frames
-        ga = pa_[c].astype(object).where(pa_[c].notna(), None).tolist()
-        gb = pb_[c].astype(object).where(pb_[c].notna(), None).tolist()
+        ga = a[c].astype(object).where(a[c].notna(), None).tolist()
+        gb = b[c].astype(object).where(b[c].notna(), None).tolist()
         assert ga == gb, c
 
 

@@ -78,24 +78,3 @@ def test_query_plans_single_udf(spark):
             continue
         df = fn(spark, "/root/testdata/sf0.001")
         assert _plan(df).count("MapInArrow") == 1, name
-
-
-def test_jvm_detect_matches_python(spark):
-    """The JVM-side detect_rfc_col (codegen alternative) must agree with
-    the Arrow detector on goldens + synthetic + quirk rows."""
-    import pandas as pd
-
-    from sparklog.grammar import detect_rfc
-    from sparklog.udfs import detect_rfc_col
-
-    rows = ([r for r, _ in fixtures.GOLDEN_DETECT]
-            + [c["raw"][:300] for c in fixtures.GOLDEN_VALID]
-            + [c["raw"][:300] for c in fixtures.GOLDEN_ERRORS]
-            + fixtures.synth_lines(500, seed=13)["raw"].tolist()
-            + ["", "<", ">", "<34>", "x" * 9, "x" * 10])
-    pdf = pd.DataFrame({"raw": rows})
-    df = spark.createDataFrame(pdf)
-    got = [r[0] for r in
-           df.select(detect_rfc_col("raw")).collect()]
-    want = detect_rfc(pdf["raw"]).tolist()
-    assert got == want
