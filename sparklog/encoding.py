@@ -21,20 +21,6 @@ import numpy as np
 import pandas as pd
 
 
-def tokenize_pandas(raw: pd.Series) -> pd.Series:
-    """str -> list[int32] code points (generator side)."""
-    # frombuffer over utf-32 gives code points in one vectorized pass per row
-    joined = "\x00".join(raw.fillna("").tolist())
-    cps = np.frombuffer(joined.encode("utf-32-le"), dtype=np.int32)
-    lens = raw.fillna("").str.len().to_numpy()
-    # split at separator positions
-    ends = np.cumsum(lens + 1) - 1
-    starts = ends - lens
-    return pd.Series(
-        [cps[a:b].copy() for a, b in zip(starts, ends)], index=raw.index
-    )
-
-
 def detokenize_arrow(tokens: pd.Series):
     """list[int32] code points -> pa.StringArray without per-row Python.
 

@@ -1,9 +1,10 @@
 """Snapshot/manifest layer: Iceberg-style commit + resume over Parquet.
 
-The north rule targets Iceberg tables; no Iceberg jar is obtainable in this
-offline sandbox (SURVEY.md §7.5), so the pipeline writes through a thin
-catalog abstraction: when ``format='iceberg'`` is available on a real
-cluster the same code path uses it verbatim; here, snapshots are emulated
+The north rule targets Iceberg tables; no Iceberg jar ships with this
+project (SURVEY.md §7.5), so the pipeline writes through a thin catalog
+abstraction: ``run_pipeline(table_format='iceberg')`` reads its source
+with Spark's iceberg data source (a missing runtime jar or a bad table
+path raises; there is no parquet fallback), and snapshots are emulated
 as versioned manifest JSON documents committed by atomic rename.
 
 A snapshot records, per completed stage: row counts, parse metrics and
@@ -59,12 +60,10 @@ class Manifest:
         os.replace(cur_tmp, self._current_path())
         return state
 
-    def is_done(self, stage: str) -> bool:
-        return stage in self.load()["stages"]
-
 
 def partition_lineage(df) -> list[dict]:
-    """Per-input-partition row counts (lineage rows for the manifest)."""
+    """Row and parse-failure counts per scan partition of ``df`` (the
+    re-read sinks table): the lineage rows of the manifest."""
     from pyspark.sql import functions as F
 
     rows = (df.groupBy(F.spark_partition_id().alias("partition_id"))

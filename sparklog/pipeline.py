@@ -22,7 +22,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import hourly_counts, parse_metrics
@@ -61,89 +61,90 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
 def _run_stage(manifest: Manifest, stats: dict, name: str, fn,
                fail_after: str | None = None) -> None:
     """Run one manifest stage: skip it (recording the resume) when a
-    previous run committed it, else run ``fn`` and commit its info dict.
+    previous run committed it, else run ``fn(done)`` on the info dicts of
+    the stages committed so far and commit the info dict it returns.
     ``fail_after`` kills the job right after the named stage commits."""
-    if manifest.is_done(name):
+    done = manifest.load()["stages"]
+    if name in done:
         stats["resumed_stages"].append(name)
         return
-    manifest.commit_stage(name, fn() or {})
+    manifest.commit_stage(name, fn(done))
     if fail_after == name:
         raise RuntimeError(f"injected failure after stage {name}")
 
 
-def _read_source(spark: SparkSession, src_path: str,
-                 table_format: str = "parquet") -> DataFrame:
-    """Source reader through the catalog abstraction (SURVEY.md §7.5):
-    'iceberg' is used verbatim when the runtime jar is present (real
-    clusters); this offline sandbox falls back to parquet + the manifest
-    emulation in lineage.py."""
-    if table_format == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(src_path)
-        except Exception:  # noqa: BLE001 — jar absent offline
-            pass
-    return spark.read.parquet(src_path)
+def _run_job(out_dir: str, stages, fail_after: str | None = None
+             ) -> tuple[dict, dict]:
+    """Run (or resume) ``[(name, fn)]`` stages under the manifest in
+    ``out_dir``.  Returns (stats, committed stage infos): a job reports
+    its counts from the infos of the stages that produced them, so a
+    resumed run reports what a fresh run does and no output is re-read
+    after the stage loop."""
+    manifest = Manifest(out_dir)
+    stats: dict = {"resumed_stages": []}
+    t0 = time.time()
+    for name, fn in stages:
+        _run_stage(manifest, stats, name, fn, fail_after)
+    stats["wall_sec"] = time.time() - t0
+    state = manifest.load()
+    stats["snapshot"] = state["snapshot_id"]
+    return stats, state["stages"]
+
+
+def _write(df: DataFrame, path: str) -> dict:
+    """Overwrite ``path`` with ``df`` as parquet; the row count is observed
+    on that same write (no second pass over the output)."""
+    obs = Observation()
+    (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+       .write.mode("overwrite").parquet(path))
+    return {"rows": obs.get["rows"]}
 
 
 def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
                  cfg: ParseConfig | None = None, num_partitions: int = 32,
                  salt_buckets: int = 16, fail_after: str | None = None,
-                 do_audit: bool = True,
                  table_format: str = "parquet") -> dict:
     """Run (or resume) the full job.  ``fail_after`` kills the run after the
-    named stage commits — used by the resume test."""
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
+    named stage commits — used by the resume test.
 
-    src = _read_source(spark, src_path, table_format)
-    parsed = enrich(parse_stage(src, cfg), spark)
-    routed = with_route_columns(parsed)
+    The source goes through the catalog abstraction (SURVEY.md §7.5):
+    ``table_format="iceberg"`` reads with Spark's iceberg source, so the
+    runtime jar must be on the classpath; a load error is raised, never
+    replaced by a parquet read of the same path."""
+    src = spark.read.format(table_format).load(src_path)
+    routed = with_route_columns(enrich(parse_stage(src, cfg), spark))
+    sinks = os.path.join(out_dir, "sinks")
 
-    def _sinks():
-        write_sinks(routed, os.path.join(out_dir, "sinks"),
-                    num_partitions, salt_buckets)
-        return {"lineage": partition_lineage(
-            spark.read.parquet(os.path.join(out_dir, "sinks")))}
+    def _sinks(_):
+        write_sinks(routed, sinks, num_partitions, salt_buckets)
+        return {"lineage": partition_lineage(spark.read.parquet(sinks))}
 
-    def _aggregates():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        (hourly_counts(routed_back)
-         .repartition(1)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "aggregates")))
-        return {}
+    def _aggregates(_):
+        return _write(hourly_counts(spark.read.parquet(sinks))
+                      .repartition(1), os.path.join(out_dir, "aggregates"))
 
-    def _metrics():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        pm = parse_metrics(routed_back)
-        pm.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "metrics"))
-        rows = {f"{r['source']}/{r['rfc']}": (r["n_ok"], r["n_failed"])
-                for r in pm.collect()}
-        return {"per_source": {k: list(v) for k, v in rows.items()}}
+    def _metrics(_):
+        path = os.path.join(out_dir, "metrics")
+        info = _write(parse_metrics(spark.read.parquet(sinks))
+                      .repartition(1), path)
+        info["per_source"] = {f"{r['source']}/{r['rfc']}":
+                              [r["n_ok"], r["n_failed"]]
+                              for r in spark.read.parquet(path).collect()}
+        return info
 
-    def _audit():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        violations = audit_token_equality(routed_back, src)
+    def _audit(_):
+        violations = audit_token_equality(spark.read.parquet(sinks), src)
         if violations:
             raise AssertionError(
                 f"token-array equality audit failed: {violations} rows")
         return {"violations": 0}
 
-    stages = [("sinks", _sinks), ("aggregates", _aggregates),
-              ("metrics", _metrics)]
-    if do_audit:
-        stages.append(("audit", _audit))
-    for name, fn in stages:
-        _run_stage(manifest, stats, name, fn, fail_after)
-
-    routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-    stats["rows"] = routed_back.count()
-    stats["n_failed"] = routed_back.where(
-        F.col("parse_error").isNotNull()).count()
-    stats["wall_sec"] = time.time() - t0
-    stats["snapshot"] = manifest.load()["snapshot_id"]
+    stats, done = _run_job(out_dir, [
+        ("sinks", _sinks), ("aggregates", _aggregates),
+        ("metrics", _metrics), ("audit", _audit)], fail_after)
+    lineage = done["sinks"]["lineage"]
+    stats["rows"] = sum(r["n_rows"] for r in lineage)
+    stats["n_failed"] = sum(r["n_failed"] for r in lineage)
     return stats
 
 
@@ -163,70 +164,43 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         release_caches,
     )
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def _pairs():
-        (dedup_minhash_lsh(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "near_dup_pairs")))
+    def _save(df, name):
+        info = _write(df, os.path.join(out_dir, name))
         release_caches()
-        return {}
+        return info
 
-    def _components():
+    def _components(_):
         df, cc = dedup_components_with_stats(spark, sf_dir)
-        df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "components"))
-        release_caches()
-        return {"cc": cc}
+        return {**_save(df, "components"), "cc": cc}
 
-    def _substring():
-        # maximal cross-doc verbatim runs (round 7): the doc-level pair/
-        # component outputs cannot see a long shared block inside two
-        # distinct pages; downstream excision/dedup tooling consumes
-        # these (doc_a, doc_b, offset_a, offset_b, match_len) rows
-        (dedup_substring(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "substring_runs")))
-        release_caches()
-        return {}
-
-    def _metrics():
+    def _metrics(done):
         # reuse the components stage's propagation stats (committed in
         # its manifest info) instead of running the CC loop a second time
-        cc = (manifest.load()["stages"].get("components", {})
-              .get("cc"))
-        dm = dedup_path_metrics(spark, sf_dir, cc_stats=cc)
-        dm.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "dedup_metrics"))
-        release_caches()
-        rows = {r["path"]: {k: r[k] for k in
-                            ("n_rows", "n_buckets", "n_over_cap_buckets",
-                             "n_refined_rows", "n_salted_rows",
-                             "n_dropped_rows", "cc_iterations",
-                             "cc_converged", "n_components")}
-                for r in spark.read.parquet(
-                    os.path.join(out_dir, "dedup_metrics")).collect()}
-        return {"bucket_metrics": rows}
+        _save(dedup_path_metrics(spark, sf_dir,
+                                 cc_stats=done["components"]["cc"])
+              .repartition(1), "dedup_metrics")
+        dm = spark.read.parquet(os.path.join(out_dir, "dedup_metrics"))
+        return {"bucket_metrics": {
+            r["path"]: {k: v for k, v in r.asDict().items() if k != "path"}
+            for r in dm.collect()}}
 
-    for name, fn in (("near_dup_pairs", _pairs),
-                     ("components", _components),
-                     ("substring_runs", _substring),
-                     ("dedup_metrics", _metrics)):
-        _run_stage(manifest, stats, name, fn)
-
-    stats["n_pairs"] = spark.read.parquet(
-        os.path.join(out_dir, "near_dup_pairs")).count()
-    stats["n_substring_runs"] = spark.read.parquet(
-        os.path.join(out_dir, "substring_runs")).count()
-    stats["n_components"] = spark.read.parquet(
-        os.path.join(out_dir, "components")) \
-        .select("component_rep").distinct().count()
-    stats["bucket_metrics"] = (manifest.load()["stages"]
-                               .get("dedup_metrics", {})
-                               .get("bucket_metrics", {}))
-    stats["wall_sec"] = time.time() - t0
+    # substring_runs: maximal cross-doc verbatim runs (round 7) — the
+    # doc-level pair/component outputs cannot see a long shared block
+    # inside two distinct pages; downstream excision/dedup tooling
+    # consumes these (doc_a, doc_b, offset_a, offset_b, match_len) rows
+    stats, done = _run_job(out_dir, [
+        ("near_dup_pairs",
+         lambda _: _save(dedup_minhash_lsh(spark, sf_dir), "near_dup_pairs")),
+        ("components", _components),
+        ("substring_runs",
+         lambda _: _save(dedup_substring(spark, sf_dir), "substring_runs")),
+        ("dedup_metrics", _metrics)])
+    stats["n_pairs"] = done["near_dup_pairs"]["rows"]
+    stats["n_substring_runs"] = done["substring_runs"]["rows"]
+    # every membership rep is a label vertex, so the distinct labels are
+    # exactly the distinct component_rep values written
+    stats["n_components"] = done["components"]["cc"]["n_components"]
+    stats["bucket_metrics"] = done["dedup_metrics"]["bucket_metrics"]
     return stats
 
 
@@ -248,39 +222,28 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     double the corpus-sized work."""
     from .queries import curate_corpus
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
+    curated = os.path.join(out_dir, "curated")
 
-    def _curated():
-        (curate_corpus(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "curated")))
-        return {}
+    def _curated(_):
+        return _write(curate_corpus(spark, sf_dir), curated)
 
-    def _corpus():
-        cur = spark.read.parquet(os.path.join(out_dir, "curated"))
-        (cur.where("keep")
-            .select("doc_id", "source",
-                    F.col("scrubbed_text").alias("text"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "corpus")))
-        return {}
+    def _corpus(_):
+        return _write(spark.read.parquet(curated).where("keep")
+                      .select("doc_id", "source",
+                              F.col("scrubbed_text").alias("text")),
+                      os.path.join(out_dir, "corpus"))
 
-    def _metrics():
-        cur = spark.read.parquet(os.path.join(out_dir, "curated"))
-        rows = cur.groupBy("reason").count().collect()
-        return {"reasons": {r["reason"]: r["count"] for r in rows}}
+    def _metrics(_):
+        counts = spark.read.parquet(curated).groupBy("reason").count()
+        return {"reasons": {r["reason"]: r["count"]
+                            for r in counts.collect()}}
 
-    for name, fn in (("curated", _curated), ("corpus", _corpus),
-                     ("curate_metrics", _metrics)):
-        _run_stage(manifest, stats, name, fn)
-
-    stats["reasons"] = (manifest.load()["stages"]
-                        .get("curate_metrics", {}).get("reasons", {}))
+    stats, done = _run_job(out_dir, [
+        ("curated", _curated), ("corpus", _corpus),
+        ("curate_metrics", _metrics)])
+    stats["reasons"] = done["curate_metrics"]["reasons"]
     stats["n_docs"] = sum(stats["reasons"].values())
     stats["n_kept"] = stats["reasons"].get("kept", 0)
-    stats["wall_sec"] = time.time() - t0
     return stats
 
 
@@ -299,47 +262,30 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     the additions join is batch-sized."""
     from .queries import _t, dedup_incremental
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
+    flags = os.path.join(out_dir, "flags")
+    keys = ("exact_dup_corpus", "near_dup_corpus", "dup_in_batch", "keep")
 
-    def _flags():
-        (dedup_incremental(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "flags")))
-        return {}
+    def _flags(_):
+        return _write(dedup_incremental(spark, sf_dir), flags)
 
-    def _additions():
-        kept = (spark.read.parquet(os.path.join(out_dir, "flags"))
-                .where("keep").select("doc_id"))
+    def _additions(_):
+        kept = spark.read.parquet(flags).where("keep").select("doc_id")
         docs = _t(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("long").alias("doc_id"), "text", "source")
-        (docs.join(F.broadcast(kept), "doc_id")
-             .write.mode("overwrite")
-             .parquet(os.path.join(out_dir, "additions")))
-        return {}
+        return _write(docs.join(F.broadcast(kept), "doc_id"),
+                      os.path.join(out_dir, "additions"))
 
-    def _metrics():
-        fl = spark.read.parquet(os.path.join(out_dir, "flags"))
-        rows = (fl.groupBy("exact_dup_corpus", "near_dup_corpus",
-                           "dup_in_batch", "keep").count().collect())
-        combos = {"|".join(str(r[c]) for c in
-                           ("exact_dup_corpus", "near_dup_corpus",
-                            "dup_in_batch", "keep")): r["count"]
-                  for r in rows}
-        return {"flag_combos": combos}
+    def _metrics(_):
+        rows = spark.read.parquet(flags).groupBy(*keys).count().collect()
+        return {"flag_combos": {"|".join(str(r[c]) for c in keys):
+                                r["count"] for r in rows}}
 
-    for name, fn in (("flags", _flags), ("additions", _additions),
-                     ("incremental_metrics", _metrics)):
-        _run_stage(manifest, stats, name, fn)
-
-    stats["flag_combos"] = (manifest.load()["stages"]
-                            .get("incremental_metrics", {})
-                            .get("flag_combos", {}))
+    stats, done = _run_job(out_dir, [
+        ("flags", _flags), ("additions", _additions),
+        ("incremental_metrics", _metrics)])
+    stats["flag_combos"] = done["incremental_metrics"]["flag_combos"]
     stats["n_batch"] = sum(stats["flag_combos"].values())
-    stats["n_added"] = spark.read.parquet(
-        os.path.join(out_dir, "additions")).count()
-    stats["wall_sec"] = time.time() - t0
+    stats["n_added"] = done["additions"]["rows"]
     return stats
 
 
@@ -357,19 +303,13 @@ def run_tokenize(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     from .bpe import save_merges
     from .queries import _bpe_merges
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def _merges():
+    def _merges(_):
         merges = _bpe_merges(spark, sf_dir)
         save_merges(spark, merges, os.path.join(out_dir, "merges"))
         return {"n_merges": len(merges)}
 
-    _run_stage(manifest, stats, "merges", _merges)
-    stats["n_merges"] = (manifest.load()["stages"]
-                         .get("merges", {}).get("n_merges"))
-    stats["wall_sec"] = time.time() - t0
+    stats, done = _run_job(out_dir, [("merges", _merges)])
+    stats["n_merges"] = done["merges"]["n_merges"]
     return stats
 
 
@@ -395,22 +335,19 @@ def main(argv=None):
     ap.add_argument("--ts-format", default=None,
                     help="custom strptime timestamp layout")
     ap.add_argument("--ts-format-len", type=int, default=None)
-    ap.add_argument("--dedup-sf", default=None,
-                    help="run the dedup job (near-dup pairs + components "
-                         "+ bucket metrics) over this sf dir instead of "
-                         "the parse pipeline")
-    ap.add_argument("--curate-sf", default=None,
-                    help="run the curation job (verdict ledger + scrubbed "
-                         "kept corpus + reason counts) over this sf dir "
-                         "instead of the parse pipeline")
-    ap.add_argument("--incremental-sf", default=None,
-                    help="run the incremental-dedup job (batch-vs-corpus "
-                         "flags + kept additions + flag counts) over this "
-                         "sf dir instead of the parse pipeline")
-    ap.add_argument("--tokenize-sf", default=None,
-                    help="learn + persist the BPE tokenizer artifact "
-                         "(merges/ parquet) over this sf dir instead of "
-                         "the parse pipeline")
+    sf_jobs = {
+        "dedup": (run_dedup, "the dedup job (near-dup pairs + components "
+                  "+ bucket metrics)"),
+        "curate": (run_curate, "the curation job (verdict ledger + "
+                   "scrubbed kept corpus + reason counts)"),
+        "incremental": (run_incremental, "the incremental-dedup job "
+                        "(batch-vs-corpus flags + kept additions + flag "
+                        "counts)"),
+        "tokenize": (run_tokenize, "the tokenizer job (learn + persist "
+                     "the BPE merges/ parquet artifact)")}
+    for name, (_job, what) in sf_jobs.items():
+        ap.add_argument(f"--{name}-sf", default=None, help=f"run {what} "
+                        "over this sf dir instead of the parse pipeline")
     args = ap.parse_args(argv)
 
     cfg = ParseConfig(
@@ -423,22 +360,11 @@ def main(argv=None):
     spark = get_spark(args.master)
     spark.sparkContext.setLogLevel("WARN")
 
-    if args.dedup_sf:
-        print(json.dumps(run_dedup(spark, args.dedup_sf, args.out),
-                         default=str))
-        return
-    if args.curate_sf:
-        print(json.dumps(run_curate(spark, args.curate_sf, args.out),
-                         default=str))
-        return
-    if args.incremental_sf:
-        print(json.dumps(run_incremental(spark, args.incremental_sf,
-                                         args.out), default=str))
-        return
-    if args.tokenize_sf:
-        print(json.dumps(run_tokenize(spark, args.tokenize_sf, args.out),
-                         default=str))
-        return
+    for name, (job, _what) in sf_jobs.items():
+        sf = getattr(args, f"{name}_sf")
+        if sf:
+            print(json.dumps(job(spark, sf, args.out), default=str))
+            return
 
     src = args.src
     if args.gen_rows:

@@ -1644,35 +1644,38 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
 
 
 def _cc_core(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
-    """Shared CC machinery: (membership, labels, n_iters, converged) on
-    the collapsed rep graph — built once so run_dedup's components stage
-    and its metrics stage don't each pay the full label propagation
-    (round-5 self-review: the pipeline ran CC twice per invocation)."""
+    """Shared CC machinery: ((doc_id, component_rep) frame, labels,
+    n_iters, converged) on the collapsed rep graph — built once so
+    run_dedup's components stage and its metrics stage don't each pay the
+    full label propagation (round-5 self-review: the pipeline ran CC
+    twice per invocation)."""
     _keyed, membership, rep_pairs, _bands, _n = _minhash_rep_graph(
         spark, sf, bucket_cap)
     vertices = membership.select(F.col("rep").alias("v")).distinct()
     labels, n_iters, converged = _cc_labels(vertices, rep_pairs)
-    return membership, labels, n_iters, converged
+    df = (membership.join(labels.select(F.col("v").alias("rep"),
+                                        F.col("l").alias("component_rep")),
+                          "rep")
+                    .select("doc_id", "component_rep"))
+    return df, labels, n_iters, converged
+
+
+def _cc_stats(labels: DataFrame, n_iters: int, converged: bool) -> dict:
+    """The convergence stats a production job records beside the
+    components; the counts run on the localCheckpoint-truncated labels,
+    so they are narrow aggregates, not plan re-executions."""
+    return {"n_rows": labels.count(),
+            "cc_iterations": n_iters,
+            "cc_converged": converged,
+            "n_components": labels.select("l").distinct().count()}
 
 
 def dedup_components_with_stats(spark, sf,
                                 bucket_cap: int = LSH_BUCKET_CAP):
     """(components DataFrame, cc_stats dict) — the components table plus
-    the convergence stats a production job records beside it; the counts
-    run on the localCheckpoint-truncated labels, so they are narrow
-    aggregates, not plan re-executions."""
-    membership, labels, n_iters, converged = _cc_core(spark, sf,
-                                                      bucket_cap)
-    df = (membership.join(labels.select(F.col("v").alias("rep"),
-                                        F.col("l")
-                                         .alias("component_rep")),
-                          "rep")
-                    .select("doc_id", "component_rep"))
-    stats = {"n_rows": labels.count(),
-             "cc_iterations": n_iters,
-             "cc_converged": converged,
-             "n_components": labels.select("l").distinct().count()}
-    return df, stats
+    its _cc_stats convergence stats."""
+    df, labels, n_iters, converged = _cc_core(spark, sf, bucket_cap)
+    return df, _cc_stats(labels, n_iters, converged)
 
 
 def dedup_connected_components(spark, sf,
@@ -1703,11 +1706,7 @@ def dedup_connected_components(spark, sf,
     the membership map at the end — the raw corpus is never an input to
     the iteration.  Oracle: recursive CTE reachability over the same edge
     relation (band-sharing pairs + text-partition edges)."""
-    membership, labels, _iters, _conv = _cc_core(spark, sf, bucket_cap)
-    return (membership.join(labels.select(F.col("v").alias("rep"),
-                                          F.col("l").alias("component_rep")),
-                            "rep")
-                      .select("doc_id", "component_rep"))
+    return _cc_core(spark, sf, bucket_cap)[0]
 
 
 def _sql_connected_components() -> str:
@@ -2157,30 +2156,17 @@ def dedup_path_metrics(spark, sf, cc_stats: dict | None = None
     # graph the metrics above describe
     if cc_stats is None:
         vertices = _m.select(F.col("rep").alias("v")).distinct()
-        labels, iters, converged = _cc_labels(vertices, _rp)
-        cc_row = labels.agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("l").alias("n_components")).select(
-                F.lit("minhash_components").alias("path"), "n_rows",
-                nulls.alias("n_buckets"),
-                nulls.alias("n_over_cap_buckets"),
-                nulls.alias("n_refined_rows"), nulls.alias("n_salted_rows"),
-                nulls.alias("n_dropped_rows"),
-                F.lit(iters).cast("long").alias("cc_iterations"),
-                F.lit(converged).alias("cc_converged"),
-                "n_components")
-    else:
-        cc_row = spark.range(1).select(
-            F.lit("minhash_components").alias("path"),
-            F.lit(cc_stats["n_rows"]).cast("long").alias("n_rows"),
-            nulls.alias("n_buckets"), nulls.alias("n_over_cap_buckets"),
-            nulls.alias("n_refined_rows"), nulls.alias("n_salted_rows"),
-            nulls.alias("n_dropped_rows"),
-            F.lit(cc_stats["cc_iterations"]).cast("long")
-             .alias("cc_iterations"),
-            F.lit(cc_stats["cc_converged"]).alias("cc_converged"),
-            F.lit(cc_stats["n_components"]).cast("long")
-             .alias("n_components"))
+        cc_stats = _cc_stats(*_cc_labels(vertices, _rp))
+    cc_row = spark.range(1).select(
+        F.lit("minhash_components").alias("path"),
+        F.lit(cc_stats["n_rows"]).cast("long").alias("n_rows"),
+        nulls.alias("n_buckets"), nulls.alias("n_over_cap_buckets"),
+        nulls.alias("n_refined_rows"), nulls.alias("n_salted_rows"),
+        nulls.alias("n_dropped_rows"),
+        F.lit(cc_stats["cc_iterations"]).cast("long")
+         .alias("cc_iterations"),
+        F.lit(cc_stats["cc_converged"]).alias("cc_converged"),
+        F.lit(cc_stats["n_components"]).cast("long").alias("n_components"))
     # substring-window loss meter (round 7): dedup_substring DROPS
     # over-cap window buckets (no refine/salt cascade — boilerplate
     # windows pair n^2 and carry no dedup signal), so its row reports
@@ -2303,8 +2289,10 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
     dot and both norms accumulate per-dimension LEFT-TO-RIGHT (the same
     IEEE addition sequence as list_sum and as the interpreted fold this
     replaces — NOT numpy's pairwise dot), then round(x, ndigits).
-    Zero-norm pairs produce NaN (0/0, the _brute_topk treatment).  The
-    interpreted Catalyst division would instead RAISE under ANSI mode
+    Zero-norm pairs produce NaN (0/0, the _brute_topk treatment), and a
+    NaN cosine passes ``>=`` filters: Spark orders NaN above every double,
+    so ``NaN >= 0.99`` is true.
+    The interpreted Catalyst division would instead RAISE under ANSI mode
     (Spark 4 default) — no gate corpus contains zero-norm vectors, or
     the old fold would have crashed, and ann_ivf_topk's sentinel filter
     excludes them structurally — so on every corpus both folds ever see,

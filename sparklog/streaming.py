@@ -4,8 +4,9 @@ aggregate pipeline over a streaming tokens source.
 The reference is a synchronous library (no streaming); this is the
 pipeline-level extension the north rule's scale posture implies: watermarked
 event-time windows for the per-sink aggregates, checkpointed state for
-resume, and foreachBatch for fan-out sinks (exactly-once per epoch with the
-same deterministic salting as the batch path).
+resume, and foreachBatch for fan-out sinks (exactly-once per epoch,
+partitioned by the batch path's (rfc, sink_class) sink key under a
+per-epoch directory, without the batch path's salted repartition).
 """
 
 from __future__ import annotations

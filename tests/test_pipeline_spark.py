@@ -111,6 +111,10 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     # dead-letter rows landed in their own sink partition
     dead = glob.glob(os.path.join(out_dir, "sinks", "*", "sink_class=dead"))
     assert dead
+    # the reported failure count is the dead-letter sink's row count
+    assert stats["n_failed"] == (
+        spark.read.parquet(os.path.join(out_dir, "sinks"))
+        .where(F.col("sink_class") == "dead").count())
 
 
 def test_resume_after_kill_is_idempotent(spark, tmp_path):
@@ -132,10 +136,14 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
                      fail_after="sinks")
     stats = run_pipeline(spark, src_path, out_a, num_partitions=2)
     assert stats["resumed_stages"] == ["sinks"]
+    assert stats["rows"] == 1000
 
     out_b = str(tmp_path / "out_b")
-    run_pipeline(spark, src_path, out_b, num_partitions=2)
+    fresh = run_pipeline(spark, src_path, out_b, num_partitions=2)
     assert sink_digest(out_a) == sink_digest(out_b)
+    # counts come from the committed sinks stage, so the resumed run
+    # reports what the fresh run does
+    assert stats["n_failed"] == fresh["n_failed"]
 
 
 def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
@@ -221,12 +229,20 @@ def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path):
         else:
             assert row["n_dropped_rows"] == 0  # hard guard never fires
     assert os.path.exists(os.path.join(out, "dedup_metrics"))
+    # reported counts equal what the job wrote
+    counts = ("n_pairs", "n_substring_runs", "n_components")
+    assert [stats[k] for k in counts] == [
+        spark.read.parquet(os.path.join(out, "near_dup_pairs")).count(),
+        spark.read.parquet(os.path.join(out, "substring_runs")).count(),
+        spark.read.parquet(os.path.join(out, "components"))
+        .select("component_rep").distinct().count()]
     # rerun resumes every stage from the manifest
     again = run_dedup(spark, "/root/testdata/sf0.001", out)
     assert set(again["resumed_stages"]) == {"near_dup_pairs", "components",
                                             "substring_runs",
                                             "dedup_metrics"}
     assert again["bucket_metrics"] == m
+    assert [again[k] for k in counts] == [stats[k] for k in counts]
 
 
 def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):
@@ -289,6 +305,7 @@ def test_run_incremental_writes_flags_additions_and_metrics(spark,
     assert set(again["resumed_stages"]) == {"flags", "additions",
                                             "incremental_metrics"}
     assert again["flag_combos"] == stats["flag_combos"]
+    assert again["n_added"] == stats["n_added"]
 
 
 def test_run_tokenize_artifact_roundtrips_and_injects(spark, tmp_path):
