@@ -724,45 +724,25 @@ def _with_shingles(d: DataFrame, *extra_cols: str) -> DataFrame:
 
 def dedup_ngram_jaccard(spark, sf):
     """Near-dup detection: word-3-gram Jaccard >= 0.8 within (lang, source),
-    as exact-duplicate collapse -> prefix-filtered near-dup on UNIQUE texts
-    -> pair re-expansion.  Matches the oracle's quadratic self-join result
-    set EXCEPT for exact-duplicate groups larger than LSH_BUCKET_CAP: their
-    within-group pairs go through the salt-split cascade (bounded
-    within-split pairs plus one star edge per split, quadratic
-    cross-split pairs forgone — metered by bucket_split_stats, never
-    silent).  That bound is deliberate: a viral
-    text with 10^8 copies implies 10^16 identical pairs, which no consumer
-    wants enumerated; what dedup actually consumes is the component
-    partition, and that is preserved exactly — within-group connectivity
-    survives both through the LINEAR (doc_id -> group rep) membership
-    edges dedup_connected_components uses and through the cascade's own
-    star edges (see _bucket_pairs) — (see
-    test_overcap_group_pairs_bounded_but_component_complete).  Below the
-    cap — every real oracle-gate corpus — pair parity is exact.
+    collapse-first: _collapse on (lang, source, text), prefix-filtered
+    near-dup on the UNIQUE texts, _expand_pairs back to doc ids
+    (within-group pairs at jaccard 1.0, only for texts with >= 3 words:
+    the oracle's union > 0 clause excludes shingle-less docs).  Matches
+    the oracle's quadratic self-join pair for pair except inside
+    exact-duplicate groups larger than LSH_BUCKET_CAP (bounded by
+    design, see _expand_pairs).  Collapsing first turned a
+    x10-replicated corpus from ~100x into ~1x candidate-join volume.
 
-    Stage 1 — collapse: group by (lang, source, text); one representative
-    (min doc_id) per distinct text.  Web corpora are duplication-heavy and
-    every downstream cost here is quadratic in the per-text copy count, so
-    collapsing FIRST is the standard design (exact dedup before near-dup);
-    it turned a x10-replicated corpus from ~100x into ~1x candidate-join
-    volume.  Within-group pairs are emitted directly with jaccard = 1.0
-    (identical texts; only for texts with >= 3 words, since the oracle's
-    union > 0 clause excludes shingle-less docs).
-
-    Stage 2 — candidates on representatives via the PPJoin prefix filter
+    Candidates on representatives come from the PPJoin prefix filter
     (exact, not probabilistic): order each doc's shingles rarest-first
     (global doc-frequency, shingle tiebreak).  If J(A,B) >= t, the shared
     shingles number >= t*max(|A|,|B|), so A's and B's first
     |x| - ceil(t*|x|) + 1 shingles must INTERSECT — a prefix-to-PREFIX
     join (not prefix-to-all: ~5x less join volume on this corpus) is a
     provable candidate superset; the t*|A| <= |B| <= |A|/t length filter
-    prunes further.  Shuffle keys are (shingle) and (doc_id), never a
-    low-cardinality block.
-
-    Stage 3 — exact verification of candidate rep pairs only, then
-    cross-group expansion: every member of group(A) pairs with every
-    member of group(B) at the rep pair's jaccard (members are byte-
-    identical to their rep, so the value is exact, not approximated)."""
+    prunes further, and only candidate rep pairs are verified exactly.
+    Shuffle keys are (shingle) and (doc_id), never a low-cardinality
+    block."""
     t = F.lit(0.8)
     # rows with a NULL blocking field can never pair in the oracle (its
     # equi-join on lang/source is NULL-rejecting), so drop them up front —
@@ -784,45 +764,17 @@ def dedup_ngram_jaccard(spark, sf):
     # key expression makes Catalyst keep the join's pushed-down
     # isnotnull(gk) predicate, inlining a SECOND full-text md5 per row
     # into three filter branches (measured ~15% on the x100 corpus).
-    # Membership stays ROWS (doc_id, rep), never a collect_list agg
-    # buffer (a viral text with 10^8 copies must not materialize an
-    # array).
     gk = F.md5(F.concat_ws(
         "\x1f",
         F.length("lang").cast("string"), F.col("lang"),
         F.length("source").cast("string"), F.col("source"),
         F.length("text").cast("string"), F.col("text")))
-    keyed = docs.select(
-        gk.alias("gk"),
-        "doc_id", F.size(F.split("text", " ")).alias("nw"))
     # representative text/lang/source ride the collapse aggregation (all
-    # rows of a gk group are identical in them — the key is injective —
-    # so min() is the value; partial-agg volume bounded by the unique
-    # count) — see _minhash_rep_graph for why re-joining docs by rep id
-    # does not survive web-scale unique counts
-    grp_t = (docs.groupBy(gk.alias("gk"))
-                 .agg(F.min("doc_id").alias("rep"),
-                      F.min("text").alias("text"),
-                      F.min("lang").alias("lang"),
-                      F.min("source").alias("source")))
-    groups = grp_t.select("gk", "rep")
-
-    # within-group pairs: identical texts, J = 1 by definition (>= 3 words
-    # so the shingle set is non-empty, matching the oracle's union > 0).
-    # Enumerated through the capped/salt-split cascade so a mass-duplicate
-    # group keeps bounded within-split pairs instead of exploding.
+    # rows of a gk group are identical in them — the key is injective)
+    keyed, grp_t, membership = _collapse(
+        docs, gk, "doc_id", F.size(F.split("text", " ")).alias("nw"),
+        text=F.min("text"), lang=F.min("lang"), source=F.min("source"))
     n_docs = _table_rowcount(spark, sf, "documents")
-    dup_pairs = (_bucket_pairs(
-        keyed.where(F.col("nw") >= 3).select("gk", "doc_id"),
-        "gk", "doc_id", LSH_BUCKET_CAP, unique_keys=True,
-        approx_rows=n_docs)
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
-                F.lit(1.0).alias("jaccard")))
-
-    # persisted: the (doc_id, rep) map is the exact-dedup staging table a
-    # production pipeline materializes anyway, and it is narrow
-    membership = _persist(keyed.select("gk", "doc_id").join(groups, "gk")
-                          .select("doc_id", "rep"))
     reps = _with_shingles(
         grp_t.select(F.col("rep").alias("doc_id"), "text", "lang",
                      "source"),
@@ -860,19 +812,11 @@ def dedup_ngram_jaccard(spark, sf):
                              F.round(inter / union, 4).alias("jaccard"))
                      .where(F.col("jaccard") >= 0.8))
 
-    # cross-group expansion by JOIN fan-out (groups partition the doc ids,
-    # so expanded pairs are already unique; quadratic only where the
-    # answer itself is)
-    m_a = membership.select(F.col("rep").alias("rep_a"),
-                            F.col("doc_id").alias("da"))
-    m_b = membership.select(F.col("rep").alias("rep_b"),
-                            F.col("doc_id").alias("db"))
-    cross_pairs = (rep_pairs.join(m_a, "rep_a").join(m_b, "rep_b")
-                   .select(F.least("da", "db").alias("doc_a"),
-                           F.greatest("da", "db").alias("doc_b"),
-                           "jaccard"))
-    return cross_pairs.unionByName(dup_pairs) \
-                      .select("doc_a", "doc_b", "jaccard")
+    # within-group pairs: identical texts, J = 1 by definition (>= 3 words
+    # so the shingle set is non-empty, matching the oracle's union > 0)
+    return _expand_pairs(rep_pairs, membership,
+                         keyed.where(F.col("nw") >= 3),
+                         ("doc_a", "doc_b"), ("da", "db"), n_docs)
 
 
 SQL_DEDUP_NGRAM_JACCARD = f"""
@@ -924,6 +868,11 @@ _SPLIT_HARD_CAP_FACTOR = 4
 # + BytesToBytesMap entry overhead for the widest (key, count, _gm) row.
 _OVERCAP_BCAST_MAX_BYTES = 64 << 20
 _OVERCAP_KEY_EST_BYTES = 96
+
+# _bucket_pairs' enumeration kernel yields whenever this many pairs are
+# pending: a batch of up to 8192 capped groups could otherwise gather
+# ~8.4M pairs per group before its one yield
+_PAIR_FLUSH_BUDGET = 1 << 20
 
 
 def _maybe_bcast(df: DataFrame, approx_rows, cap: int) -> DataFrame:
@@ -1065,14 +1014,6 @@ def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
         F.sum((F.col("_bn3") > hard).cast("long")).alias("n_dropped_rows"))
 
 
-# Ordered-pair enumeration within one capped bucket (ids sorted
-# ascending, every (x, y) with x before y — the self-join-free LSH
-# candidate shape) lives in _bucket_pairs' enum_pairs Arrow kernel
-# since round 8; the old interpreted
-# flatten(transform(ids, (x, i) -> transform(slice(ids, i+2, ...))))
-# expression cost ~600 ns/pair.
-
-
 def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                   refine=None, unique_keys: bool = False,
                   approx_rows=None) -> DataFrame:
@@ -1109,7 +1050,7 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
     n_refined_rows."""
     # the group-size guard runs BEFORE collecting: an unbounded group must
     # never materialize its id list in the agg buffer (the guard is a
-    # broadcast probe — see _with_over_cap_count — so the only shuffle of
+    # broadcast probe — see _keyed_with_splits — so the only shuffle of
     # the big side is this groupBy itself)
     bounded = (_keyed_with_splits(keyed, key, id_col, cap, refine,
                                   approx_rows)
@@ -1127,14 +1068,17 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
     # pair enumeration runs in a numpy mapInArrow kernel (round-8): the
     # previous flatten(transform(ids, (x, i) -> transform(slice(...))))
     # was evaluated by the interpreted HOF path at ~600 ns per pair —
-    # the dominant cost of every duplication-heavy pair stage (x100
-    # ann_lsh_candidate_pairs spent ~30 s of 32 s there).  np.triu_indices
+    # the dominant cost of every duplication-heavy pair stage (x100 LSH
+    # candidate enumeration spent ~30 s of 32 s there).  np.triu_indices
     # over each group's sorted id array emits the IDENTICAL (x before y,
     # ids ascending) pair set, plus the same (group-min, split-min) star
     # edge for salted splits; per-group memory is bounded by the hard cap
-    # (<= (cap*factor)^2/2 int64 pairs).
+    # (<= (cap*factor)^2/2 int64 pairs), and pending pairs are flushed
+    # once they reach the budget, so one yield holds at most the budget
+    # plus one group's pairs whatever the Arrow batch size.
     src = (grouped.where((F.size("ids") >= 2) | (F.col("_gn") > cap))
                   .select("ids", "_gn", "_g"))
+    budget = _PAIR_FLUSH_BUDGET
 
     def enum_pairs(batches):
         import numpy as np
@@ -1152,7 +1096,7 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
             gn = batch.column("_gn").to_numpy(zero_copy_only=False)
             g = batch.column("_g").fill_null(-1).to_numpy(
                 zero_copy_only=False)
-            out_a, out_b = [], []
+            out_a, out_b, pending = [], [], 0
             for i in range(rows):
                 n = int(lens[i])
                 x = vals[starts[i]:starts[i] + n]
@@ -1160,34 +1104,97 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                     ia, ib = np.triu_indices(n, 1)
                     out_a.append(x[ia])
                     out_b.append(x[ib])
+                    pending += len(ia)
                 # star edge: same condition as the old Catalyst branch
                 # (_gn > cap AND ids[1] != _g); _gm is non-null on every
                 # over-cap group by construction
                 if gn[i] > cap and n >= 1 and x[0] != g[i]:
                     out_a.append(np.array([g[i]], dtype=np.int64))
                     out_b.append(x[:1])
-            if not out_a:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_a)),
-                 pa.array(np.concatenate(out_b))], ["a", "b"])
+                    pending += 1
+                if out_a and (pending >= budget or i == rows - 1):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(np.concatenate(out_a)),
+                         pa.array(np.concatenate(out_b))], ["a", "b"])
+                    out_a, out_b, pending = [], [], 0
 
     pairs = src.mapInArrow(enum_pairs, "a bigint, b bigint")
     return pairs if unique_keys else pairs.distinct()
+
+
+def _collapse(rows: DataFrame, gk, id_col: str, *keyed_cols, **carry):
+    """Exact collapse, the first step of every collapse-first pair path:
+    rows -> (keyed, groups, membership).
+
+    keyed      = (gk, id_col, *keyed_cols): one narrow row per input row,
+                 so the payload never crosses a shuffle.
+    groups     = (gk, rep = min id, *carry): one row per distinct key.
+                 The rep payload rides the aggregation (``carry`` maps a
+                 name to a min/min_by aggregate), so partial agg ships
+                 one candidate per key per task; re-joining the corpus by
+                 rep id instead shuffled every payload (21 s of
+                 dedup_embedding_cosine's x100 time).
+    membership = (id_col, rep) rows, persisted (_persist): the exact-dedup
+                 staging table, never a collect_list buffer (a text with
+                 10^8 copies must not materialize an array).
+
+    ``gk`` must be NON-NULLABLE: a nullable key keeps the join's
+    pushed-down isnotnull(gk), inlining a second payload hash per row
+    (~15% at x100).  Callers first drop rows their oracle never pairs."""
+    keyed = rows.select(gk.alias("gk"), id_col, *keyed_cols)
+    groups = (rows.groupBy(gk.alias("gk"))
+                  .agg(F.min(id_col).alias("rep"),
+                       *[agg.alias(name) for name, agg in carry.items()]))
+    membership = _persist(keyed.select("gk", id_col)
+                          .join(groups.select("gk", "rep"), "gk")
+                          .select(id_col, "rep"))
+    return keyed, groups, membership
+
+
+def _expand_pairs(rep_pairs: DataFrame, membership: DataFrame,
+                  dup_keyed: DataFrame, out: tuple, via: tuple,
+                  approx_rows: int, cap: int = LSH_BUCKET_CAP) -> DataFrame:
+    """Expand a verdict on representatives back to ids: rep_pairs
+    (rep_a, rep_b, *values) -> (out_a < out_b, *values).
+
+    Cross-group pairs fan out by JOIN through the membership (``via``
+    names its member-id columns): members are byte-identical to their
+    rep, so the values are exact, and groups partition the ids, so the
+    pairs are unique (quadratic only where the answer itself is).
+
+    Within-group pairs are ``dup_keyed``'s (gk, id) rows (the caller's
+    eligible subset of the keyed table) through the cap/salt cascade,
+    every value at 1.0.  Below the cap — every oracle-gate corpus — that
+    is the exhaustive pair set.  Above it the pair LIST is bounded by
+    design (10^8 copies imply 10^16 pairs no consumer wants):
+    within-split pairs plus one star edge per split, the cross-split
+    pairs metered by bucket_split_stats.  The component partition stays
+    exact through the linear membership edges and the star edges (see
+    _bucket_pairs, dedup_connected_components)."""
+    ra, rb, *vals = rep_pairs.columns
+    id_col = membership.columns[0]
+    (oa, ob), (xa, xb) = out, via
+    dup = (_bucket_pairs(dup_keyed.select("gk", id_col), "gk", id_col, cap,
+                         unique_keys=True, approx_rows=approx_rows)
+           .select(F.col("a").alias(oa), F.col("b").alias(ob),
+                   *[F.lit(1.0).alias(v) for v in vals]))
+    m_a = membership.select(F.col("rep").alias(ra), F.col(id_col).alias(xa))
+    m_b = membership.select(F.col("rep").alias(rb), F.col(id_col).alias(xb))
+    cross = (rep_pairs.join(m_a, ra).join(m_b, rb)
+             .select(F.least(xa, xb).alias(oa), F.greatest(xa, xb).alias(ob),
+                     *vals))
+    return cross.unionByName(dup)
 
 
 def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     """The MinHash path's shared core:
     (keyed, membership, rep_pairs, bands, n_docs).
 
-    keyed      = (gk=md5(text), doc_id, nw) — the exact-collapse key table.
-                 The FULL TEXT never crosses a shuffle — grouping, pair
-                 enumeration, and membership all move 40-byte rows (a
-                 window over the raw text shipped+sorted every copy of
-                 every document, measured 2x slower at x100 duplication).
-    membership = (doc_id, rep) rows, persisted (registry-scoped, see
-                 _persist) — never a collect_list agg buffer (a viral text
-                 with 10^8 copies must not materialize an array).
+    keyed      = (gk=md5(text), doc_id, nw) — _collapse's key table.
+                 The FULL TEXT never crosses a shuffle (a window over the
+                 raw text shipped+sorted every copy of every document,
+                 measured 2x slower at x100 duplication).
+    membership = _collapse's persisted (doc_id, rep) rows.
     rep_pairs  = near-dup candidate pairs BETWEEN group representatives
                  from the banded-signature machinery, cap/refine/salt
                  bounded.
@@ -1205,36 +1212,17 @@ def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     this graph: linear membership edges + rep-level near-dup edges) and
     dedup_path_metrics."""
     # NULL-text rows never survive the membership join (NULL keys are
-    # join-rejected), so drop them up front; the explicit filter plus the
-    # NON-NULLABLE key expression below lets Catalyst delete the joins'
-    # pushed-down isnotnull(gk) predicates — a nullable md5(text) key
-    # left an inlined SECOND full-text md5 per row in three filter
-    # branches (same finding as dedup_ngram_jaccard's key, measured ~15%
-    # of that query's x100 time)
+    # join-rejected), so drop them up front; with the non-nullable _gk()
+    # key Catalyst then deletes the joins' isnotnull(gk) predicates
     docs = (_t(spark, sf, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
         .where(F.col("text").isNotNull()))
-    gk_expr = _gk()
     # footer row count sizes the cascade's broadcast gate (bands emit 2
     # rows per UNIQUE text <= 2 * n_docs)
     n_docs = _table_rowcount(spark, sf, "documents")
-    keyed = docs.select(gk_expr.alias("gk"), "doc_id",
-                        F.size(F.split("text", " ")).alias("nw"))
-    # the representative TEXT rides through the collapse aggregation:
-    # every row of a gk group carries the identical text, so min(text)
-    # is that text, and partial agg ships one candidate per key per task
-    # (volume bounded by the UNIQUE count).  Re-joining docs by rep id
-    # instead depends on AQE broadcasting an unbounded rep-id list — at
-    # web-scale uniques that degrades to a sort-merge join shuffling
-    # EVERY text, the exact cost this query's shape exists to avoid.
-    grp_t = (docs.groupBy(gk_expr.alias("gk"))
-                 .agg(F.min("doc_id").alias("rep"),
-                      F.min("text").alias("text")))
-    groups = grp_t.select("gk", "rep")
-    # persisted: the (doc_id, rep) map is the exact-dedup staging table a
-    # production pipeline materializes anyway, and it is narrow
-    membership = _persist(keyed.select("gk", "doc_id").join(groups, "gk")
-                          .select("doc_id", "rep"))
+    keyed, grp_t, membership = _collapse(
+        docs, _gk(), "doc_id", F.size(F.split("text", " ")).alias("nw"),
+        text=F.min("text"))
     reps = grp_t.select(F.col("rep").alias("doc_id"), "text")
     bands = _sig_bands(reps, "doc_id")
     rep_pairs = _bucket_pairs(bands, "band", "doc_id", bucket_cap,
@@ -1258,61 +1246,46 @@ def dedup_minhash_lsh(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     4-hash signature, then salt-split (never dropped — boilerplate-heavy
     corpora keep within-split dup pairs; see _keyed_with_splits).
 
-    Exact duplicates are collapsed FIRST (groupBy text), the signature
-    machinery runs on UNIQUE texts only, and pairs re-expand through
-    group membership afterwards: identical texts have identical
-    signatures by construction, so hashing each copy separately is pure
-    waste that grows with the corpus duplication rate (x100-replication
-    measured 241s -> the collapsed shape's cost is that of the unique
-    corpus).  Within-group pairs (texts with >= 3 words — shingle-less
-    docs have no bands, mirroring the oracle's len(w) >= 3 guard) share
-    every band and are emitted directly."""
+    Collapse-first (_minhash_rep_graph): the signature machinery runs on
+    UNIQUE texts only and _expand_pairs re-expands the rep pairs —
+    identical texts have identical signatures, so hashing each copy is
+    waste that grows with the duplication rate (x100 replication measured
+    241 s before).  Within-group pairs (texts with >= 3 words —
+    shingle-less docs have no bands, mirroring the oracle's len(w) >= 3
+    guard) share every band and are emitted directly."""
     keyed, membership, rep_pairs, _bands, n_docs = _minhash_rep_graph(
         spark, sf, bucket_cap)
-    # within-group pairs (identical texts share every band; >= 3 words
-    # mirrors the oracle's len(w) >= 3 guard) go through the SAME
-    # capped/salt-split cascade as band buckets, so a mass-duplicate
-    # group keeps bounded within-split pairs instead of exploding
-    dup_pairs = (_bucket_pairs(
-        keyed.where(F.col("nw") >= 3).select("gk", "doc_id"),
-        "gk", "doc_id", bucket_cap, unique_keys=True,
-        approx_rows=n_docs)
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b")))
-    # cross-group expansion by JOIN fan-out (groups partition the doc ids,
-    # so expanded pairs are already unique; quadratic only where the
-    # answer itself is)
-    m_a = membership.select(F.col("rep").alias("a"),
-                            F.col("doc_id").alias("da"))
-    m_b = membership.select(F.col("rep").alias("b"),
-                            F.col("doc_id").alias("db"))
-    cross = (rep_pairs.join(m_a, "a").join(m_b, "b")
-             .select(F.least("da", "db").alias("doc_a"),
-                     F.greatest("da", "db").alias("doc_b")))
-    return cross.unionByName(dup_pairs)
+    return _expand_pairs(rep_pairs, membership,
+                         keyed.where(F.col("nw") >= 3),
+                         ("doc_a", "doc_b"), ("da", "db"), n_docs,
+                         bucket_cap)
 
 
-def _sql_minhash() -> str:
+def _sql_sig_bands() -> str:
+    """The sigs and bands CTEs of the MinHash oracles (the _sig_bands
+    mirror), shared by SQL_DEDUP_MINHASH_LSH and
+    SQL_DEDUP_CONNECTED_COMPONENTS."""
     w = "string_split(text, ' ')"
     sh = _SHINGLES_DUCK.format(w=w)
     sig = ", ".join(
         f"list_min(list_transform({sh}, s -> substr(md5(s), {1 + 8 * k}, 8)"
         f")) AS h{k}"
         for k in range(4))
-    return f"""
-WITH sigs AS (
+    return f"""sigs AS (
   SELECT doc_id::BIGINT AS doc_id, {sig}
   FROM documents WHERE len({w}) >= 3
 ), bands AS (
   SELECT doc_id, 'b0:' || h0 || '|' || h1 AS band FROM sigs
   UNION ALL
   SELECT doc_id, 'b1:' || h2 || '|' || h3 AS band FROM sigs
-)
+)"""
+
+
+SQL_DEDUP_MINHASH_LSH = f"""
+WITH {_sql_sig_bands()}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
 """
-
-
-SQL_DEDUP_MINHASH_LSH = _sql_minhash()
 
 
 def _sig_bands(d: DataFrame, key: str) -> DataFrame:
@@ -1714,21 +1687,8 @@ def _sql_connected_components() -> str:
     band-sharing doc pairs (a doc's bands equal its rep's bands, so doc-
     level and rep-level band edges induce identical components) plus
     text-partition membership edges."""
-    w = "string_split(text, ' ')"
-    sh = _SHINGLES_DUCK.format(w=w)
-    sig = ", ".join(
-        f"list_min(list_transform({sh}, s -> substr(md5(s), {1 + 8 * k}, 8)"
-        f")) AS h{k}"
-        for k in range(4))
     return f"""
-WITH RECURSIVE sigs AS (
-  SELECT doc_id::BIGINT AS doc_id, {sig}
-  FROM documents WHERE len({w}) >= 3
-), bands AS (
-  SELECT doc_id, 'b0:' || h0 || '|' || h1 AS band FROM sigs
-  UNION ALL
-  SELECT doc_id, 'b1:' || h2 || '|' || h3 AS band FROM sigs
-), m AS (
+WITH RECURSIVE {_sql_sig_bands()}, m AS (
   SELECT doc_id::BIGINT AS doc_id,
          min(doc_id::BIGINT) OVER (PARTITION BY text) AS rep
   FROM documents
@@ -1759,6 +1719,16 @@ _SUBSTR_CAP = 64    # max occurrences of a window before its bucket is
                     # millions of pages would otherwise pair n^2)
 
 
+def _unique_texts(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (gk = md5(text), rep = min doc_id, t = text): one
+    row per distinct non-NULL text — the unique corpus both substring ops
+    window (_substring_windows) and excise (dedup_substring_excise) on,
+    mirrored by the oracles' shared u CTE."""
+    return (docs.where(F.col("text").isNotNull())
+                .groupBy(F.md5("text").alias("gk"))
+                .agg(F.min("doc_id").alias("rep"), F.min("text").alias("t")))
+
+
 def _substring_windows(spark, sf) -> DataFrame:
     """(rep, pos, h) sliding word windows over UNIQUE texts — the keyed
     table dedup_substring buckets on, shared with dedup_path_metrics so
@@ -1773,12 +1743,8 @@ def _substring_windows(spark, sf) -> DataFrame:
     short fixture docs).  The Generate node is the barrier that keeps
     ProjectCollapse from re-inlining w into the lambda (the
     text_repetition_scores precedent)."""
-    docs = (_t(spark, sf, "documents")
-            .where(F.col("text").isNotNull())
-            .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
-    grp = (docs.groupBy(F.md5("text").alias("gk"))
-               .agg(F.min("doc_id").alias("rep"),
-                    F.min("text").alias("t")))
+    grp = _unique_texts(_t(spark, sf, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"))
     win_expr = (
         f"case when size(w) >= {_SUBSTR_W} then "
         f"transform(sequence(0, size(w) - {_SUBSTR_W}), "
@@ -2032,10 +1998,7 @@ def dedup_substring_excise(spark, sf):
     docs = _t(spark, sf, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
     keyed = docs.select("doc_id", "text", F.md5("text").alias("gk"))
-    uniq = (docs.where(F.col("text").isNotNull())
-                .groupBy(F.md5("text").alias("gk"))
-                .agg(F.min("doc_id").alias("rep"),
-                     F.min("text").alias("t")))
+    uniq = _unique_texts(docs)
     kept_w = F.expr("filter(split(t, ' '), (x, i) -> "
                     "not exists(iv, p -> i >= p.s and i < p.e))")
     vict = (uniq.join(ivl, "rep")
@@ -2134,10 +2097,11 @@ def dedup_path_metrics(spark, sf, cc_stats: dict | None = None
                       keyed.where(F.col("nw") >= 3).select("gk", "doc_id"),
                       "gk", "doc_id", LSH_BUCKET_CAP,
                       approx_rows=n_docs)))
-    e = _embeddings_v(spark, sf)
+    # ann_lsh_near_pairs buckets the collapsed unique vectors, so its row
+    # meters that rep-level keyed table
     n_vecs = _table_rowcount(spark, sf, "embeddings")
-    p = _lsh_nplanes(n_vecs)
-    keyed_lsh, refine = _lsh_keyed(e, p)
+    _vk, reps, _vm = _vector_collapse(_embeddings_v(spark, sf))
+    keyed_lsh, refine = _lsh_keyed(reps, _lsh_nplanes(n_vecs))
     paths.append(("ann_lsh_buckets",
                   bucket_split_stats(keyed_lsh, "bucket", "vec_id",
                                      LSH_BUCKET_CAP, refine=refine,
@@ -2191,6 +2155,48 @@ def dedup_path_metrics(spark, sf, cc_stats: dict | None = None
     return out.unionByName(sub_row).unionByName(cc_row)
 
 
+def _row_dots(A, B):
+    """Row-wise dot products of two (rows, d) matrices, accumulated per
+    dimension LEFT-TO-RIGHT: the IEEE addition sequence of the oracles'
+    list_sum fold, NOT numpy's pairwise-summation dot, whose different
+    rounding could flip a threshold or a near-tie argmax."""
+    import numpy as np
+
+    acc = np.zeros(A.shape[0])
+    for j in range(A.shape[1]):
+        acc += A[:, j] * B[:, j]
+    return acc
+
+
+def _fold_dots(V, W):
+    """(rows, d) x (m, d) -> (rows, m) dot products, folded per dimension
+    left-to-right like _row_dots."""
+    import numpy as np
+
+    acc = np.zeros((V.shape[0], W.shape[0]))
+    for j in range(V.shape[1]):
+        acc += V[:, j:j + 1] * W[:, j][None, :]
+    return acc
+
+
+def _round_half_away(x, ndigits: int):
+    """numpy round(x, ndigits) the way the DuckDB oracle's round does it:
+    std::round(x * 10^n) / 10^n, ties AWAY from zero — np.round rounds
+    half to EVEN (np.round(0.03125, 4) = 0.0312; DuckDB gives 0.0313).
+    The tie test runs on the exact fraction y - trunc(y), never on
+    floor(y + 0.5), whose addition rounds 0.49999999999999994 up to 1.
+    NaN and inf pass through and trunc keeps the sign of -0.0, as in
+    DuckDB.  ONE definition for the four numpy cosine kernels
+    (_brute_topk, _pair_cosine, _ivf_codebook, _ivf_two)."""
+    import numpy as np
+
+    s = 10.0 ** ndigits
+    with np.errstate(invalid="ignore"):
+        y = np.asarray(x, dtype=np.float64) * s
+        t = np.trunc(y)
+        return np.where(np.abs(y - t) >= 0.5, t + np.sign(y), t) / s
+
+
 def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     """Brute-force cosine top-k: q (query_id, qv) — bounded by design,
     every caller passes a small audit sample — is collected once and
@@ -2205,13 +2211,13 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     per-dimension left-to-right accumulation, the same IEEE addition
     sequence as DuckDB's list_sum, NOT numpy's pairwise dot).
 
-    Similarity is the ROUNDED (4 dp) cosine with a neighbor_id tiebreak
-    so both engines rank identically.  Zero-norm pairs produce NaN
-    (0/0), which Spark and DuckDB both order ABOVE every number in a
-    descending sort — the batch-local cut keeps them by treating NaN as
-    +inf.  ONE definition shared by ann_cosine_topk (the published op)
-    and ann_recall_report (whose 'exact truth' side must never diverge
-    from it)."""
+    Similarity is the ROUNDED (4 dp, _round_half_away) cosine with a
+    neighbor_id tiebreak so both engines rank identically.  Zero-norm
+    pairs produce NaN (0/0), which Spark and DuckDB both order ABOVE
+    every number in a descending sort — the batch-local cut keeps them
+    by treating NaN as +inf.  ONE definition shared by ann_cosine_topk
+    (the published op) and ann_recall_report (whose 'exact truth' side
+    must never diverge from it)."""
     import numpy as np
 
     qrows = sorted(q.collect(), key=lambda r: r.query_id)
@@ -2223,10 +2229,7 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     Q = np.array([r.qv for r in qrows], dtype=np.float64)     # (m, d)
     qids = np.array([r.query_id for r in qrows], dtype=np.int64)
     m, dq = Q.shape
-    nq = np.zeros(m)
-    for j in range(dq):                     # left-to-right norm fold
-        nq += Q[:, j] * Q[:, j]
-    nq = np.sqrt(nq)
+    nq = np.sqrt(_row_dots(Q, Q))
 
     def score(batches):
         import pyarrow as pa
@@ -2242,14 +2245,10 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
                 raise ValueError("ragged embedding column")
             V = (v.flatten().to_numpy(zero_copy_only=False)
                   .astype(np.float64, copy=False).reshape(rows, d))
-            acc = np.zeros((rows, m))
-            nv = np.zeros(rows)
-            for j in range(d):              # oracle's list_sum fold
-                acc += V[:, j:j + 1] * Q[:, j][None, :]
-                nv += V[:, j] * V[:, j]
+            acc, nv = _fold_dots(V, Q), _row_dots(V, V)
             with np.errstate(invalid="ignore", divide="ignore"):
-                cs = np.round(acc / (np.sqrt(nv)[:, None] * nq[None, :]),
-                              4)
+                cs = _round_half_away(
+                    acc / (np.sqrt(nv)[:, None] * nq[None, :]), 4)
             ids = batch.column("neighbor_id").to_numpy()
             key = np.where(np.isnan(cs), np.inf, cs)
             t = min(k, rows)
@@ -2279,24 +2278,24 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
                  ndigits: int = 4) -> DataFrame:
     """(ida, idb, va, vb) rows -> (ida, idb, cosine): the rounded pair
     cosine as ONE numpy mapInArrow kernel, shared by every
-    candidate-verification stage (ann_ivf_topk probe scoring,
-    ann_lsh_near_pairs, dedup_embedding_cosine).
+    candidate-verification stage: ann_ivf_topk probe scoring and
+    _near_vector_pairs (dedup_embedding_cosine, ann_lsh_near_pairs).
 
     Replaces the interpreted Catalyst aggregate(zip_with(...)) fold those
-    stages evaluated per row — O(d) interpreter steps per (dot, na, nb)
-    fold per pair, the exact construct rounds 3/6/7 already excised from
-    IVF assignment and _brute_topk.  Bit-parity with the DuckDB oracle:
-    dot and both norms accumulate per-dimension LEFT-TO-RIGHT (the same
-    IEEE addition sequence as list_sum and as the interpreted fold this
-    replaces — NOT numpy's pairwise dot), then round(x, ndigits).
-    Zero-norm pairs produce NaN (0/0, the _brute_topk treatment), and a
-    NaN cosine passes ``>=`` filters: Spark orders NaN above every double,
-    so ``NaN >= 0.99`` is true.
-    The interpreted Catalyst division would instead RAISE under ANSI mode
-    (Spark 4 default) — no gate corpus contains zero-norm vectors, or
-    the old fold would have crashed, and ann_ivf_topk's sentinel filter
-    excludes them structurally — so on every corpus both folds ever see,
-    results are bit-identical."""
+    stages evaluated per row (O(d) interpreter steps per pair).
+    Bit-parity with the DuckDB oracle: dot and both norms fold per
+    dimension LEFT-TO-RIGHT (_row_dots, list_sum's IEEE addition order),
+    then _round_half_away(x, ndigits), DuckDB's round with ties away
+    from zero (np.round's half-to-even gave 0.0312 for an exact 1/32
+    where the oracle gives 0.0313).  Zero-norm pairs produce NaN (0/0,
+    the _brute_topk treatment), and a NaN cosine passes ``>=`` filters
+    (Spark orders NaN above every double, so ``NaN >= 0.99`` is true),
+    but no caller feeds one any more: the pair dedups collapse through
+    _vector_collapse, which drops zero-norm vectors (their oracle cosine
+    is NULL), and ann_ivf_topk's sentinel filter excludes them.  The
+    interpreted Catalyst division would instead RAISE under ANSI mode
+    (Spark 4 default), so wherever both folds run, results are
+    bit-identical."""
     import numpy as np
 
     def score(batches):
@@ -2319,15 +2318,11 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
             A, B = mats
             if A.shape[1] != B.shape[1]:
                 raise ValueError("embedding dimension mismatch")
-            acc = np.zeros(rows)
-            na = np.zeros(rows)
-            nb = np.zeros(rows)
-            for j in range(A.shape[1]):     # oracle's list_sum fold
-                acc += A[:, j] * B[:, j]
-                na += A[:, j] * A[:, j]
-                nb += B[:, j] * B[:, j]
             with np.errstate(invalid="ignore", divide="ignore"):
-                cs = np.round(acc / (np.sqrt(na) * np.sqrt(nb)), ndigits)
+                cs = _round_half_away(
+                    _row_dots(A, B) / (np.sqrt(_row_dots(A, A))
+                                       * np.sqrt(_row_dots(B, B))),
+                    ndigits)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(ida), batch.column(idb), pa.array(cs)],
                 [ida, idb, "cosine"])
@@ -2342,9 +2337,7 @@ def ann_cosine_topk(spark, sf):
     """Brute-force cosine top-5: query vectors (vec_id<10) vs the corpus
     (the _brute_topk kernel — broadcast query side, corpus never
     shuffles)."""
-    e = _t(spark, sf, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
+    e = _embeddings_v(spark, sf)
     q = e.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = e.where(F.col("vec_id") >= 10).select(
@@ -2998,9 +2991,7 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
                 raise ValueError("ragged or non-64-dim embedding column")
             V = (v.flatten().to_numpy(zero_copy_only=False)
                  .astype(np.float64, copy=False).reshape(rows, d))
-            acc = np.zeros((rows, _LSH_MAX_PLANES))
-            for j in range(d):          # left-to-right fold per plane
-                acc += V[:, j:j + 1] * W[:, j][None, :]
+            acc = _fold_dots(V, W)      # left-to-right fold per plane
             codes = np.where(acc < 0, 48, 49).astype(np.uint8)  # '0'/'1'
             buf = codes.tobytes()
             n = _LSH_MAX_PLANES
@@ -3059,80 +3050,25 @@ def ann_lsh_buckets(spark, sf):
                  .where(F.col("n_vecs") > 1))
 
 
-def ann_lsh_candidate_pairs(spark, sf,
-                            bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """The candidate-generation step of the LSH ANN scale path: vectors
-    sharing a sign-bucket become pairs for exact-cosine verification.
-    Oversized buckets (degenerate corpora: zero vectors, mass duplicates)
-    are refined with the remaining hyperplane bits, then salt-split —
-    never dropped — so fan-out stays bounded at ~4*cap^2/2 per group while
-    mass-duplicate rows keep their within-split pairs.  Oracle-gated as
-    part of ann_lsh_near_pairs (candidates + exact-cosine verify); the
-    >cap refine/salt behavior is covered by tests/test_bucket_caps.py."""
-    e = _embeddings_v(spark, sf)
-    n = _table_rowcount(spark, sf, "embeddings")
-    p = _lsh_nplanes(n)
-    keyed, refine = _lsh_keyed(e, p)
-    # unique_keys: each vec_id carries exactly ONE bucket (a partition,
-    # unlike minhash's 2-band keying), and the cascade's refined/salted
-    # key is a deterministic function of (vector, id) — so pairs are
-    # unique by construction and the pair-set distinct(), a full extra
-    # shuffle of the ~52M-row x100 candidate set, is skipped (round-8)
-    return (_bucket_pairs(keyed, "bucket", "vec_id", bucket_cap,
-                          refine=refine, unique_keys=True, approx_rows=n)
-            .select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b")))
-
-
 def ann_lsh_near_pairs(spark, sf, threshold: float = 0.25):
     """The LSH ANN scale path end-to-end, oracle-gated (round-3 judge
     item #8): sign-bucket candidate pairs -> exact-cosine verification
-    >= threshold, on the RAW corpus (no planted duplicates).  The oracle
-    mirrors the bucket construction exactly — same integer-derived
-    hyperplanes, same nplanes(count(*)) prefix — and verifies with the
-    same rounded cosine; at the gate SF no bucket exceeds the cap, so the
-    SQL bucket self-join IS the candidate set (the >cap refine/salt
-    behavior is exercised separately by tests/test_bucket_caps.py).
-    Scale shape: the candidate set is bucket-bounded (never O(N^2)), and
-    verification joins vectors back by id — two narrow equi-joins keyed
-    on vec_id."""
-    e = _embeddings_v(spark, sf)
-    cand = ann_lsh_candidate_pairs(spark, sf)
-    # Verification BY VALUE (round-8): byte-identical vectors — the
-    # dominant duplicate mode of replicated corpora — have exactly their
-    # representatives' cosine, so the exact-cosine kernel runs once per
-    # unique (rep_a, rep_b) VALUE pair and the narrow verdict joins back
-    # onto the id-level candidate pairs.  The previous shape attached
-    # the two 512-byte vectors to every candidate row and shipped them
-    # through the Python boundary (x100: 52.6M pairs x ~1 KB — measured
-    # 116.8 s); with the attach joins carrying an 8-byte rep id instead
-    # and the kernel seeing only unique pairs, every shuffle is
-    # proportional to the (unavoidable) output row count, never to
-    # output x vector width.  Result rows are identical: cosine(a, b)
-    # == cosine(rep_a, rep_b) exactly, because members are byte-equal
-    # to their reps (the dedup_embedding_cosine collapse argument).
-    # The rep key is engine-internal (the oracle verifies pairs
-    # directly), so no cross-engine parity constraint applies to it.
-    gk = F.concat(F.hex(F.xxhash64("v")),
-                  F.hex(F.xxhash64(F.lit(1), F.col("v"))))
-    grp = (e.groupBy(gk.alias("gk"))
-            .agg(F.min("vec_id").alias("rep"),
-                 F.min_by("v", "vec_id").alias("v")))
-    membership = _persist(
-        e.select("vec_id", gk.alias("gk")).join(grp, "gk")
-         .select("vec_id", "rep"))
-    m_a = membership.select(F.col("vec_id").alias("vec_a"),
-                            F.col("rep").alias("rep_a"))
-    m_b = membership.select(F.col("vec_id").alias("vec_b"),
-                            F.col("rep").alias("rep_b"))
-    cand_g = cand.join(m_a, "vec_a").join(m_b, "vec_b")
-    upairs = cand_g.select("rep_a", "rep_b").distinct()
-    va = grp.select(F.col("rep").alias("rep_a"), F.col("v").alias("va"))
-    vb = grp.select(F.col("rep").alias("rep_b"), F.col("v").alias("vb"))
-    verdict = (_pair_cosine(upairs.join(va, "rep_a").join(vb, "rep_b"),
-                            "rep_a", "rep_b", "va", "vb", 4)
-               .where(F.col("cosine") >= threshold))
-    return (cand_g.join(verdict, ["rep_a", "rep_b"])
-                  .select("vec_a", "vec_b", "cosine"))
+    >= threshold, on the RAW corpus (no planted duplicates) — the
+    _near_vector_pairs body dedup_embedding_cosine runs, at a lower
+    threshold.  The oracle mirrors the bucket construction exactly —
+    same integer-derived hyperplanes, same nplanes(count(*)) prefix —
+    and verifies with the same rounded cosine.
+
+    Collapse-first, so (SQL_ANN_LSH_NEAR_PAIRS unchanged):
+      - the bucket cap counts DISTINCT vectors, not copies, so a bucket
+        over the cap only because of copies keeps all its pairs; output
+        equals the id-level bucket self-join wherever no id-level bucket
+        exceeds the cap (every gate SF);
+      - zero-norm vectors never pair, as in the oracle, whose cosine
+        for them is NULL (DuckDB's 0.0/0.0)."""
+    return _near_vector_pairs(_embeddings_v(spark, sf),
+                              _table_rowcount(spark, sf, "embeddings"),
+                              threshold)
 
 
 def _sql_ann_lsh_near_pairs() -> str:
@@ -3235,21 +3171,14 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     # per-row results are bit-identical to the whole-matrix sweep.
     chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
     for _ in range(_IVF_LLOYD_ITERS):
-        ncv = np.zeros(W.shape[0])
-        for j in range(W.shape[1]):
-            ncv += W[:, j] * W[:, j]
-        ncv = np.sqrt(ncv)
+        ncv = np.sqrt(_row_dots(W, W))
         safe_ncv = np.where(ncv == 0.0, 1.0, ncv)
         b = np.empty(V.shape[0], dtype=np.int64)
         for s0 in range(0, V.shape[0], chunk):
             Vc = V[s0:s0 + chunk]
-            acc = np.zeros((Vc.shape[0], W.shape[0]))
-            nv = np.zeros(Vc.shape[0])
-            for j in range(V.shape[1]):
-                acc += Vc[:, j:j + 1] * W[:, j][None, :]
-                nv += Vc[:, j] * Vc[:, j]
-            cs = np.round(acc / (np.sqrt(nv)[:, None]
-                                 * safe_ncv[None, :]), 6)
+            cs = _round_half_away(
+                _fold_dots(Vc, W) / (np.sqrt(_row_dots(Vc, Vc))[:, None]
+                                     * safe_ncv[None, :]), 6)
             cs[:, ncv == 0.0] = -np.inf
             b[s0:s0 + chunk] = np.argmax(cs, axis=1)
         newW = np.zeros_like(W)
@@ -3288,22 +3217,16 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
     "built-ins genuinely can't express it efficiently" case for an
     Arrow-batched kernel.
 
-    Bit-parity with the DuckDB oracle: the dot/norm accumulations run as
-    an explicit loop over dimensions (acc += v[:,j] * w[j,:]), which is
-    the same left-to-right IEEE addition sequence as the oracle's
-    list_sum fold — NOT numpy's pairwise-summation dot, whose different
-    rounding could flip a near-tie argmax.  Scores are rounded to 6
-    decimals before the top-2 selection, same as the oracle; ties break
-    to the lowest cell id (argmax-first over a cell-ascending codebook).
-    """
+    Bit-parity with the DuckDB oracle: dots and norms fold per dimension
+    left-to-right (_fold_dots/_row_dots, the oracle's list_sum order) and
+    scores are rounded to 6 decimals as the oracle rounds them
+    (_round_half_away) before the top-2 selection; ties break to the
+    lowest cell id (argmax-first over a cell-ascending codebook)."""
     import numpy as np
 
     W = np.asarray(W, dtype=np.float64)          # (nlist, d)
     cells = np.arange(W.shape[0], dtype=np.int32)
-    ncv = np.zeros(W.shape[0])
-    for j in range(W.shape[1]):
-        ncv += W[:, j] * W[:, j]
-    ncv = np.sqrt(ncv)
+    ncv = np.sqrt(_row_dots(W, W))
 
     def score(batches):
         import pyarrow as pa
@@ -3331,17 +3254,13 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
             for s0 in range(0, rows, chunk):
                 Vc = V[s0:s0 + chunk]
                 rc = Vc.shape[0]
-                acc = np.zeros((rc, W.shape[0]))
-                nv = np.zeros(rc)
-                for j in range(d):
-                    acc += Vc[:, j:j + 1] * W[:, j][None, :]
-                    nv += Vc[:, j] * Vc[:, j]
+                acc, nv = _fold_dots(Vc, W), _row_dots(Vc, Vc)
                 # zero-norm rows would divide 0/0 -> NaN scores and an
                 # arbitrary argmax; mask them to the NULL-cosine sentinel
                 # cell instead (ADVICE r3), matching the oracle's NULL
                 # propagation
                 zc = nv == 0.0
-                cs = np.round(
+                cs = _round_half_away(
                     acc / (np.sqrt(np.where(zc, 1.0, nv))[:, None]
                            * np.where(ncv == 0.0, 1.0, ncv)[None, :]), 6)
                 cs[:, ncv == 0.0] = -np.inf  # NULL-cosine cells never win
@@ -3685,83 +3604,62 @@ def dedup_embedding_cosine(spark, sf):
     giving the path known true pairs to find.  Byte-identical vectors are
     collapsed before LSH (recall on them is exactly 1 by construction —
     they are the same group); the LSH+verify machinery only hunts
-    DISTINCT near-identical vectors, on the unique corpus.  The O(N^2)
-    brute-force oracle must agree pair-for-pair.  Shuffle keys: group
-    hash, bucket, then pair ids — never O(N^2) materialization."""
+    DISTINCT near-identical vectors, on the unique corpus (the
+    _near_vector_pairs body, shared with ann_lsh_near_pairs).  The
+    O(N^2) brute-force oracle must agree pair-for-pair."""
     e = _embeddings_v(spark, sf)
     aug = e.unionByName(
         e.select((F.col("vec_id") + _DUP_OFFSET).alias("vec_id"), "v"))
+    return _near_vector_pairs(
+        aug, 2 * _table_rowcount(spark, sf, "embeddings"), 0.99)
 
-    # exact-collapse-first, same design as the text dedups: byte-identical
-    # vectors (the dominant duplicate mode of replicated corpora — every
-    # planted dup and every corpus replica) collapse BEFORE any LSH work.
-    # cosine(v, v) rounds to exactly 1.0 (sqrt(x)*sqrt(x) is within 1 ulp
-    # of x), so within-group pairs are emitted directly at 1.0 through
-    # the capped/salt-split cascade — EXCEPT zero vectors, whose cosine
-    # is NULL in the oracle (0/0) and therefore excluded there too.
-    # Without this, the x100 corpus (200 copies per vector) spent minutes
-    # verifying ~40M identical pairs one interpreted dot at a time.
+
+def _vector_collapse(e: DataFrame):
+    """(vec_id, v) -> _collapse over the non-zero-norm vectors:
+    (keyed (gk, vec_id), reps (vec_id = rep, v), membership).
+
+    Zero vectors are dropped first: their oracle cosine is NULL (0/0).
+    The key is two independent xxhash64s over the raw double array: 128
+    bits stay collision-free at 10^12 rows where one 64-bit hash would
+    emit false "identical" pairs, and both are JVM codegen (the old
+    md5(cast(v as string)) built a ~1.3 KB string per row).  The oracles
+    never group, so the key needs no cross-engine parity."""
     sq = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
-    # group key = two independent xxhash64s over the raw double array
-    # (128 combined bits — collision-safe at 10^12 rows, where a single
-    # 64-bit key would already see birthday collisions and emit false
-    # "identical" pairs).  Both hashes are JVM codegen over the array
-    # buffer; the previous md5(cast(v as string)) materialized a ~1.3 KB
-    # decimal string per row first — the dominant per-row cost of this
-    # query at x100.  The key is engine-internal (the oracle never groups
-    # — it verifies pairs quadratically), so no cross-engine parity
-    # constraint applies to it.
     gk = F.concat(F.hex(F.xxhash64("v")),
                   F.hex(F.xxhash64(F.lit(1), F.col("v"))))
-    keyed = aug.where(F.expr(sq) > 0).select(gk.alias("gk"), "vec_id")
-    # the representative VECTOR rides through the collapse aggregation
-    # (min_by): partial agg ships one candidate vector per key per task,
-    # so volume is bounded by the UNIQUE count — re-joining the corpus
-    # by rep id instead shuffled all 400k vectors to fetch 2k rows
-    # (measured 21 s of this query's x100 time), and broadcasting the
-    # rep list would cap out at web-scale unique counts
-    grp_v = (aug.where(F.expr(sq) > 0)
-                .groupBy(gk.alias("gk"))
-                .agg(F.min("vec_id").alias("rep"),
-                     F.min_by("v", "vec_id").alias("v")))
-    grp = grp_v.select("gk", "rep")
-    n2 = 2 * _table_rowcount(spark, sf, "embeddings")
-    dup_pairs = (_bucket_pairs(keyed, "gk", "vec_id", LSH_BUCKET_CAP,
-                               unique_keys=True, approx_rows=n2)
-                 .select(F.col("a").alias("vec_a"),
-                         F.col("b").alias("vec_b"),
-                         F.lit(1.0).alias("cosine")))
-    membership = _persist(keyed.join(grp, "gk").select("vec_id", "rep"))
-    reps = grp_v.select(F.col("rep").alias("vec_id"), "v")
+    keyed, grp_v, membership = _collapse(
+        e.where(F.expr(sq) > 0), gk, "vec_id",
+        v=F.min_by("v", "vec_id"))
+    return keyed, grp_v.select(F.col("rep").alias("vec_id"), "v"), membership
 
-    # nplanes parameterized on the full corpus size (footer metadata,
-    # no scan); the unique-vector corpus is <= that, so buckets only shrink
-    p = _lsh_nplanes(n2)
-    keyed_lsh, refine = _lsh_keyed(reps, p)
-    # unique_keys: one bucket per rep (same partition argument as
-    # ann_lsh_candidate_pairs) — the candidate-pair distinct() is
-    # redundant and skipped (round-8)
+
+def _near_vector_pairs(e: DataFrame, n_rows: int,
+                       threshold: float) -> DataFrame:
+    """(vec_id, v) -> (vec_a, vec_b, cosine >= threshold), collapse
+    first: byte-identical vectors collapse BEFORE any LSH work, and since
+    cosine(v, v) rounds to exactly 1.0 their pairs are _expand_pairs'
+    within-group pairs.  Reps are keyed by the nplanes(n_rows)-bit sign
+    bucket (refine+salt bounded), candidate rep pairs are verified by
+    _pair_cosine, and the verdict fans out to ids.  ``n_rows`` is the
+    caller's footer row count: it sizes nplanes and the broadcast gates
+    (the unique corpus is <= it).  Every shuffle is proportional to the
+    unique corpus or the output, never O(N^2)."""
+    keyed, reps, membership = _vector_collapse(e)
+    keyed_lsh, refine = _lsh_keyed(reps, _lsh_nplanes(n_rows))
+    # unique_keys: one bucket per rep (a partition, unlike minhash's
+    # 2-band keying), and the cascade's refined/salted key is a function
+    # of (vector, id) — so the candidate-pair distinct() is skipped
     cand = (_bucket_pairs(keyed_lsh, "bucket", "vec_id", LSH_BUCKET_CAP,
                           refine=refine, unique_keys=True,
-                          approx_rows=n2)
+                          approx_rows=n_rows)
             .select(F.col("a").alias("rep_a"), F.col("b").alias("rep_b")))
-
     va = reps.select(F.col("vec_id").alias("rep_a"), F.col("v").alias("va"))
     vb = reps.select(F.col("vec_id").alias("rep_b"), F.col("v").alias("vb"))
-    # verification via the shared _pair_cosine Arrow kernel (round-8:
-    # previously an interpreted aggregate(zip_with(...)) fold per pair)
     rep_pairs = (_pair_cosine(cand.join(va, "rep_a").join(vb, "rep_b"),
                               "rep_a", "rep_b", "va", "vb", 4)
-                 .where(F.col("cosine") >= 0.99))
-    m_a = membership.select(F.col("rep").alias("rep_a"),
-                            F.col("vec_id").alias("ia"))
-    m_b = membership.select(F.col("rep").alias("rep_b"),
-                            F.col("vec_id").alias("ib"))
-    cross = (rep_pairs.join(m_a, "rep_a").join(m_b, "rep_b")
-             .select(F.least("ia", "ib").alias("vec_a"),
-                     F.greatest("ia", "ib").alias("vec_b"), "cosine"))
-    return cross.unionByName(dup_pairs) \
-                .select("vec_a", "vec_b", "cosine")
+                 .where(F.col("cosine") >= threshold))
+    return _expand_pairs(rep_pairs, membership, keyed,
+                         ("vec_a", "vec_b"), ("ia", "ib"), n_rows)
 
 
 SQL_DEDUP_EMBEDDING_COSINE = f"""

@@ -16,12 +16,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparklog.queries import (
+    _bucket_pairs,
+    _embeddings_v,
     _keyed_with_splits,
+    _lsh_keyed,
     _lsh_nplanes,
-    ann_lsh_candidate_pairs,
+    _table_rowcount,
     bucket_split_stats,
     dedup_minhash_lsh,
 )
+
+
+def _lsh_candidate_pairs(spark, sf_dir, bucket_cap):
+    """Id-level LSH candidate pairs: every vector keyed by its
+    nplanes(N)-bit sign bucket, refined and salt-split by the cascade."""
+    n = _table_rowcount(spark, sf_dir, "embeddings")
+    keyed, refine = _lsh_keyed(_embeddings_v(spark, sf_dir), _lsh_nplanes(n))
+    return (_bucket_pairs(keyed, "bucket", "vec_id", bucket_cap,
+                          refine=refine, unique_keys=True, approx_rows=n)
+            .select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b")))
 
 
 @pytest.fixture(scope="module")
@@ -74,11 +87,11 @@ def test_minhash_salt_split_keeps_within_split_pairs(spark,
 
 def test_ann_salt_split_keeps_within_split_pairs(spark,
                                                  degenerate_docs_dir):
-    unbounded = ann_lsh_candidate_pairs(spark, degenerate_docs_dir,
-                                        bucket_cap=10**9).count()
+    unbounded = _lsh_candidate_pairs(spark, degenerate_docs_dir,
+                                     bucket_cap=10**9).count()
     assert unbounded == 200 * 199 // 2
-    capped = ann_lsh_candidate_pairs(spark, degenerate_docs_dir,
-                                     bucket_cap=100).count()
+    capped = _lsh_candidate_pairs(spark, degenerate_docs_dir,
+                                  bucket_cap=100).count()
     assert 0 < capped < unbounded
 
 
@@ -87,7 +100,7 @@ def test_refine_recovers_planted_duplicates(spark, family_docs_dir):
     duplicate (appear in >= 1 pair) under a cap of 10, and every pair must
     be a true pair (same family) — drop semantics would lose whole
     families whenever their 8-bit bucket overflowed."""
-    pairs = ann_lsh_candidate_pairs(spark, family_docs_dir, bucket_cap=10)
+    pairs = _lsh_candidate_pairs(spark, family_docs_dir, bucket_cap=10)
     rows = pairs.collect()
     # correctness: candidates never cross families here (identical vectors
     # share ALL bits; distinct families differ in the refine suffix or
@@ -302,8 +315,6 @@ def test_salted_group_stays_one_component_via_star_edges(spark):
     unique-keys partition (exact-dup groups) and a refined band group of
     DISTINCT 'texts' sharing one full signature (the advisor's exact
     scenario)."""
-    from sparklog.queries import _bucket_pairs
-
     ids = list(range(100))
     # one hot key, unique-keys partition semantics (exact-dup group)
     keyed = spark.range(100).select(
@@ -475,17 +486,21 @@ def test_cc_labels_reports_truncation_distinctly(spark):
     assert lab.select("l").distinct().count() == 1
 
 
-def test_cascade_closure_equals_uncapped_closure_randomized(spark):
+def test_cascade_closure_equals_uncapped_closure_randomized(spark,
+                                                             monkeypatch):
     """Property check over randomized group-size distributions (seeded):
     for a unique-keys partition, the transitive closure of the cascade's
     emitted pairs must equal the uncapped enumeration's closure — i.e.
     every key's ids form exactly one component, no component ever spans
     two keys — while the emitted pair count stays O(groups * cap^2 +
     splits) instead of quadratic.  Exercises under-cap, just-over-cap,
-    and deeply-salted groups together in one keyed table."""
+    and deeply-salted groups together in one keyed table.  A flush
+    budget below one group's pair count makes the enumeration kernel
+    yield after every group: the pair set must not change."""
     import random
 
-    from sparklog.queries import _SPLIT_HARD_CAP_FACTOR, _bucket_pairs
+    from sparklog import queries as Q
+    from sparklog.queries import _SPLIT_HARD_CAP_FACTOR
 
     rng = random.Random(42)
     cap = 8
@@ -499,9 +514,15 @@ def test_cascade_closure_equals_uncapped_closure_randomized(spark):
             key_of[next_id] = g
             next_id += 1
     keyed = spark.createDataFrame(rows, ["gk", "i"])
-    pairs = [(r.a, r.b) for r in
-             _bucket_pairs(keyed, "gk", "i", cap,
-                           unique_keys=True).collect()]
+
+    def emitted():
+        return sorted((r.a, r.b) for r in
+                      _bucket_pairs(keyed, "gk", "i", cap,
+                                    unique_keys=True).collect())
+
+    pairs = emitted()
+    monkeypatch.setattr(Q, "_PAIR_FLUSH_BUDGET", 5)
+    assert emitted() == pairs
     # no pair ever crosses keys, and a < b always
     for a, b in pairs:
         assert key_of[a] == key_of[b] and a < b

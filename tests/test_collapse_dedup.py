@@ -5,7 +5,8 @@ re-expansion path is barely exercised there.  These tests build a
 DUPLICATION-HEAVY corpus (groups of 1..50 copies, a >=0.8-Jaccard
 near-dup family, cross-lang copies, shingle-less short texts) and check
 the Spark results pair-for-pair against the same DuckDB brute-force
-oracles the driver uses.
+oracles the parity gate uses.  The vector paths get the same treatment:
+copies, zero vectors, and a bucket over the cap only because of copies.
 """
 
 import duckdb
@@ -13,7 +14,9 @@ import pandas as pd
 import pytest
 
 from sparklog.queries import (
+    LSH_BUCKET_CAP,
     REGISTRY,
+    SQL_ANN_LSH_NEAR_PAIRS,
     SQL_DEDUP_EMBEDDING_COSINE,
     SQL_DEDUP_MINHASH_LSH,
     SQL_DEDUP_NGRAM_JACCARD,
@@ -105,12 +108,20 @@ def dup_embeddings_dir(spark, tmp_path_factory):
         for _ in range(copies):
             rows.append((vec_id, vec))
             vec_id += 3
-    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    d = str(tmp_path_factory.mktemp("dupvecs"))
+    # zero vectors: NULL cosine in the oracles (0/0), so never a pair
+    for _ in range(3):
+        rows.append((vec_id, [0.0] * 64))
+        vec_id += 3
+    return _write_embeddings(spark, str(tmp_path_factory.mktemp("dupvecs")),
+                             rows)
+
+
+def _write_embeddings(spark, d: str, rows: list) -> str:
     from pyspark.sql import types as T
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
         T.StructField("embedding", T.ArrayType(T.FloatType()))])
+    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
     spark.createDataFrame(pdf, schema).coalesce(2).write.parquet(
         f"{d}/embeddings.parquet")
     return d
@@ -207,15 +218,70 @@ def test_release_caches_leaves_no_persistent_rdds(spark, dup_docs_dir):
     assert not leaked, leaked
 
 
+def _vector_parity(spark, d: str, name: str, sql: str) -> pd.DataFrame:
+    got = REGISTRY[name][0](spark, d).toPandas()
+    want = _oracle(d, "embeddings", sql)
+    assert _pairs(got) == _pairs(want)
+    return want
+
+
 def test_embedding_collapse_matches_bruteforce_on_dup_heavy(
         spark, dup_embeddings_dir):
-    got = (REGISTRY["dedup_embedding_cosine"][0](spark, dup_embeddings_dir)
-           .toPandas())
-    want = _oracle(dup_embeddings_dir, "embeddings",
-                   SQL_DEDUP_EMBEDDING_COSINE)
-    assert _pairs(got) == _pairs(want)
+    want = _vector_parity(spark, dup_embeddings_dir,
+                          "dedup_embedding_cosine",
+                          SQL_DEDUP_EMBEDDING_COSINE)
     # the 30-copy group alone (x2 with planted duplicates) dominates
     assert len(want) >= 60 * 59 // 2
+
+
+def test_ann_lsh_near_pairs_collapse_matches_bruteforce_on_dup_heavy(
+        spark, dup_embeddings_dir):
+    """The same corpus through ann_lsh_near_pairs (threshold 0.25, no
+    planted duplicates): zero vectors must not pair (the id-level
+    candidate path emitted NaN-cosine pairs for them)."""
+    want = _vector_parity(spark, dup_embeddings_dir, "ann_lsh_near_pairs",
+                          SQL_ANN_LSH_NEAR_PAIRS)
+    assert len(want) >= 30 * 29 // 2
+
+
+def test_ann_lsh_near_pairs_bucket_over_cap_only_by_copies(spark,
+                                                           tmp_path):
+    """1,000 copies of one vector plus 30 distinct neighbours that share
+    its 8-bit bucket but not its full 32-bit signature: 1,030 ids in one
+    bucket (over LSH_BUCKET_CAP) but 31 distinct vectors (under it).  The
+    bucket cap counts distinct vectors, so every copy-neighbour pair the
+    oracle's bucket self-join finds must survive; the id-level cascade
+    refined the bucket and lost them."""
+    import numpy as np
+
+    from sparklog.queries import _fold_dots, ann_lsh_buckets
+
+    # _lsh_signatures' integer-derived hyperplanes; bit = acc >= 0
+    kk = np.arange(32, dtype=np.int64)[:, None]
+    ii = np.arange(64, dtype=np.int64)[None, :]
+    planes = (((kk * 73856093 + ii * 19349663) % 2001) - 1000) / 1000.0
+
+    def sig(v):
+        return tuple(_fold_dots(np.asarray(v, np.float64)[None, :],
+                                planes)[0] >= 0)
+
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal(64).astype(np.float32)
+    neighbours = []
+    while len(neighbours) < 30:
+        v = (base + 0.3 * rng.standard_normal(64)).astype(np.float32)
+        if sig(v)[:8] == sig(base)[:8] and sig(v) != sig(base):
+            neighbours.append(v)
+    rows = ([(i, base.tolist()) for i in range(1000)]
+            + [(1000 + j, v.tolist()) for j, v in enumerate(neighbours)])
+    d = _write_embeddings(spark, str(tmp_path), rows)
+
+    [bucket] = ann_lsh_buckets(spark, d).collect()
+    assert bucket.n_vecs == 1030 > LSH_BUCKET_CAP
+    want = _vector_parity(spark, d, "ann_lsh_near_pairs",
+                          SQL_ANN_LSH_NEAR_PAIRS)
+    # every pair in the one bucket passes 0.25 (neighbours are close)
+    assert len(want) == 1030 * 1029 // 2
 
 
 def test_ngram_null_blocking_fields_never_pair(spark, tmp_path):

@@ -1,11 +1,12 @@
-"""Round-8 kernel-equivalence guards: the shared _pair_cosine Arrow
-kernel replaced the interpreted aggregate(zip_with(...)) Catalyst fold
-in ann_ivf_topk probe scoring, ann_lsh_near_pairs and
-dedup_embedding_cosine verification.  These tests pin (a) value
+"""Kernel-equivalence guards for the numpy cosine kernels: the shared
+_pair_cosine Arrow kernel replaced the interpreted aggregate(zip_with(...))
+Catalyst fold in ann_ivf_topk probe scoring and in the rep-pair verify of
+dedup_embedding_cosine and ann_lsh_near_pairs.  These tests pin (a) value
 equality with the interpreted fold it replaced (same left-to-right IEEE
-fold, same rounding, NaN for zero-norm pairs) and (b) the row-local
-property of _ivf_two that lets the query side score only the probe
-vectors."""
+fold, NaN for zero-norm pairs), (b) the DuckDB oracle's rounding — ties
+away from zero, which every numpy kernel shares through _round_half_away
+— and (c) the row-local property of _ivf_two that lets the query side
+score only the probe vectors."""
 
 import math
 import os
@@ -63,6 +64,40 @@ def test_pair_cosine_zero_norm_is_nan(spark):
         "a bigint, b bigint, va array<double>, vb array<double>")
     [r] = _pair_cosine(df, "a", "b", "va", "vb", 4).collect()
     assert math.isnan(r.cosine)
+
+
+def test_pair_cosine_rounds_ties_like_duckdb(spark):
+    """cos((1,0,0,0,0), (1,31,7,3,2)) is exactly 1/32 (|b| = 32), so its
+    4-dp rounding is a tie: DuckDB's round gives 0.0313 and -0.0313 for
+    the negation, where np.round's half-to-even gave 0.0312.  Five-dim
+    rows in their own frame: the kernel takes one dimension per batch."""
+    import duckdb
+    import numpy as np
+
+    from sparklog.queries import _pair_cosine, _round_half_away
+
+    b = [1.0, 31.0, 7.0, 3.0, 2.0]
+    df = spark.createDataFrame(
+        [(1, 2, [1.0, 0.0, 0.0, 0.0, 0.0], b),
+         (3, 4, [-1.0, 0.0, 0.0, 0.0, 0.0], b)],
+        "a bigint, b bigint, va array<double>, vb array<double>")
+    got = {(r.a, r.b): r.cosine
+           for r in _pair_cosine(df.coalesce(1), "a", "b", "va", "vb",
+                                 4).collect()}
+    # the oracles' cosine expression, verbatim
+    oracle = duckdb.connect().execute(
+        "SELECT round(list_sum(list_transform(generate_series(1, len(a)),"
+        " i -> a[i] * b[i])) / (sqrt(list_sum(list_transform(a, x -> x*x)))"
+        " * sqrt(list_sum(list_transform(b, x -> x*x)))), 4) FROM (VALUES"
+        " ([1.0, 0, 0, 0, 0]::DOUBLE[], [1.0, 31, 7, 3, 2]::DOUBLE[]),"
+        " ([-1.0, 0, 0, 0, 0]::DOUBLE[], [1.0, 31, 7, 3, 2]::DOUBLE[]))"
+        " t(a, b)").fetchall()
+    assert [c for (c,) in oracle] == [0.0313, -0.0313]
+    assert got == {(1, 2): 0.0313, (3, 4): -0.0313}
+    # not floor(y + 0.5): the largest double below 0.5 rounds down
+    assert list(_round_half_away(
+        np.array([0.49999999999999994, 0.5, -0.5, 2.5, -2.5]), 0)) == [
+        0.0, 1.0, -1.0, 3.0, -3.0]
 
 
 def test_pair_cosine_rejects_ragged_arrays(spark):

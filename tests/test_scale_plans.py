@@ -136,7 +136,7 @@ def test_sizing_rowcounts_need_no_scan_job(spark, monkeypatch):
         raise AssertionError("count() scan job during plan construction")
 
     monkeypatch.setattr(DataFrame, "count", boom)
-    for fn in (q.ann_lsh_buckets, q.ann_lsh_candidate_pairs,
+    for fn in (q.ann_lsh_buckets,
                q.ann_ivf_topk, q.dedup_embedding_cosine,
                q.ann_lsh_near_pairs):
         fn(spark, SF)
