@@ -38,20 +38,10 @@ def parse_lines(df, col: str = "raw",
     """Spark DataFrame with a raw syslog-line column -> the same rows plus
     ``rfc`` and the parsed fields (prefixed ``p_``), via the mapInArrow
     barrier.  Dialect detection is automatic; parse failures surface as
-    ``p_parse_error`` values."""
-    from pyspark.sql import types as T
+    ``p_parse_error`` values; a null line parses as ""."""
+    from .udfs import map_in_arrow_parse
 
-    from .udfs import PARSED_SCHEMA, make_map_in_arrow_parser
-
-    fn = make_map_in_arrow_parser(
-        cfg, passthrough=tuple(df.columns), input_col=col,
-        input_kind="raw", out_prefix="p_", emit_raw=False)
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("rfc", T.IntegerType())]
-        + [T.StructField(f"p_{f.name}", f.dataType)
-           for f in PARSED_SCHEMA.fields])
-    return df.mapInArrow(fn, schema)
+    return map_in_arrow_parse(df, col, cfg, "p_")
 
 
 def parse_tokens(df, col: str = "tokens",
@@ -61,21 +51,9 @@ def parse_tokens(df, col: str = "tokens",
     is NOT echoed to the output — shipping array<int> back across the
     Arrow boundary costs 10-20x the parse (see udfs.py); the decoded line
     comes back as a ``raw`` string column instead."""
-    from pyspark.sql import types as T
+    from .udfs import map_in_arrow_parse
 
-    from .udfs import PARSED_SCHEMA, make_map_in_arrow_parser
-
-    keep = tuple(c for c in df.columns if c != col)
-    fn = make_map_in_arrow_parser(
-        cfg, passthrough=keep, input_col=col,
-        input_kind="tokens", out_prefix="p_")
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != col]
-        + [T.StructField("raw", T.StringType()),
-           T.StructField("rfc", T.IntegerType())]
-        + [T.StructField(f"p_{f.name}", f.dataType)
-           for f in PARSED_SCHEMA.fields])
-    return df.mapInArrow(fn, schema)
+    return map_in_arrow_parse(df, col, cfg, "p_")
 
 
 def parse_lines_pandas(lines: pd.Series,

@@ -11,52 +11,36 @@ Two decoder paths:
 * **SQL/JVM path (codegen'd, no Python):**
   ``concat_ws('', transform(tokens, t -> char(t)))``
 * **Arrow path** (``detokenize_arrow``) for the Python parse batch: one
-  utf-32 decode over the flat code points builds a pa.StringArray — no
-  per-row Python loops.
+  decoder over the list column's flat values and offsets builds a
+  pa.StringArray — no per-row Python.  ``udfs._string_from_token_list``
+  calls it for batches that are not all ASCII.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 
-def detokenize_arrow(tokens: pd.Series):
-    """list[int32] code points -> pa.StringArray without per-row Python.
+def detokenize_arrow(tokens):
+    """pa.ListArray of int32 code points -> pa.StringArray.
 
-    Flat codepoints -> one utf-32 decode -> one utf-8 encode; per-row BYTE
-    offsets derived vectorially from codepoint widths (1/2/3/4 bytes), so
-    the Arrow string buffer is built in two passes even for non-ASCII.
-    """
+    The flat code points of the rows take one utf-32 decode and one utf-8
+    encode.  A row's BYTE offset is its code-point offset plus the extra
+    utf-8 bytes (1-3 each) of the multi-byte code points before it, so
+    only those code points are visited.  A null list decodes to "" (its
+    offsets are equal)."""
     import pyarrow as pa
 
-    lens = np.fromiter((len(t) for t in tokens), dtype=np.int64,
-                       count=len(tokens))
-    if len(lens) == 0:
-        return pa.array([], pa.string())
-    flat = (np.concatenate([np.asarray(t, dtype=np.int32) for t in tokens])
-            if lens.sum() else np.array([], dtype=np.int32))
-
-    byte_offsets = np.zeros(len(lens) + 1, dtype=np.int32)
-    if len(flat) == 0 or (flat < 0x80).all():
-        # ASCII fast path (syslog is PRINTUSASCII): utf-8 bytes ARE the
-        # codepoints — one narrowing cast, offsets = char offsets
-        data = flat.astype(np.uint8).tobytes()
-        np.cumsum(lens, out=byte_offsets[1:])
-        return pa.StringArray.from_buffers(
-            len(lens), pa.py_buffer(byte_offsets.tobytes()),
-            pa.py_buffer(data))
-
-    text = flat.astype("<u4").tobytes().decode("utf-32-le")
-    data = text.encode("utf-8")
-    blen = (1 + (flat >= 0x80).astype(np.int64) + (flat >= 0x800)
-            + (flat >= 0x10000))
-    cum = np.cumsum(blen)
-    ends = np.cumsum(lens)
-    byte_offsets[1:] = np.where(ends > 0, cum[np.maximum(ends - 1, 0)], 0)
-    byte_offsets = np.maximum.accumulate(byte_offsets).astype(np.int32)
+    off = tokens.offsets.to_numpy().astype(np.int64)
+    flat = tokens.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
+    data = (flat.astype("<i4", copy=False).tobytes().decode("utf-32-le")
+            .encode("utf-8"))
+    wide = np.flatnonzero(flat >= 0x80)
+    extra = np.cumsum(1 + (flat[wide] >= 0x800) + (flat[wide] >= 0x10000))
+    starts = off - off[0]
+    starts += np.concatenate(([0], extra))[np.searchsorted(wide, starts)]
     return pa.StringArray.from_buffers(
-        len(lens), pa.py_buffer(byte_offsets.tobytes()),
+        len(tokens), pa.py_buffer(starts.astype(np.int32)),
         pa.py_buffer(data))
 
 

@@ -10,6 +10,10 @@ semantics are identical by construction and verified by differential tests
 (tests/test_fastpath_equiv.py runs both paths over golden + hypothesis
 corpora and asserts frame equality).
 
+No input coercion happens here: every function takes the null-free
+pa.StringArray that ``udfs._line_array`` builds (``""`` never matches
+either shape regex, so a null line reaches the slow path as ``""``).
+
 Throughput: the fast path is ~10-30x the object-dtype pandas path; at
 cluster scale the parse UDF cost is what the BASELINE sequences/sec metric
 measures, so this is the hot loop of the whole pipeline.
@@ -123,18 +127,6 @@ def _sd_split(rest):
     return sd, msg, has_term
 
 
-def _as_arrow(raw) -> pa.Array:
-    if isinstance(raw, pa.ChunkedArray):
-        raw = raw.combine_chunks()
-    elif not isinstance(raw, pa.Array):
-        raw = pa.array(raw.tolist(), pa.string())
-    # null-fill: regex kernels propagate nulls into the hit mask (object-
-    # dtype masks downstream) and pc.max(...) of an all-null array is null;
-    # "" never matches either shape regex, so null rows fall to the slow
-    # path exactly like the pre-Arrow formulation
-    return pc.fill_null(raw, "") if raw.null_count else raw
-
-
 def _clamp(arr: pa.Array, limit: int) -> pa.Array:
     """Packet-length clamp (rfc3164.go:12 / rfc5424.go:14), skipped when no
     row exceeds it (byte length bounds codepoint length, so the check is
@@ -198,10 +190,10 @@ def _refine(hit: np.ndarray, refine: np.ndarray, cols: dict):
     return out, cols
 
 
-def parse_rfc3164_fast(raw, default_year: int):
+def parse_rfc3164_fast(raw: pa.StringArray, default_year: int):
     """-> (hit mask ndarray over the input, dict of columns for HIT ROWS
     ONLY; strings stay pa.Array, numerics/ts are numpy)."""
-    arr = _clamp(_as_arrow(raw), 2048)
+    arr = _clamp(raw, 2048)
     hit = _np(pc.match_substring_regex(arr, RX_3164))
     if not hit.any():
         return hit, {}
@@ -280,6 +272,7 @@ def parse_rfc3164_fast(raw, default_year: int):
     cols = {
         "priority": pri, "facility": pri // 8, "severity": pri % 8,
         "ts": ts, "tz_offset_minutes": np.zeros_like(pri),
+        "ts_is_nil": np.zeros(len(pri), dtype=bool),
         "hostname": host,           # strings stay as Arrow arrays
         "tag": tag,
         "content": content,
@@ -287,10 +280,10 @@ def parse_rfc3164_fast(raw, default_year: int):
     return _refine(hit, refine, cols)
 
 
-def parse_rfc5424_fast(raw):
+def parse_rfc5424_fast(raw: pa.StringArray):
     """-> (hit mask ndarray over the input, dict of columns for HIT ROWS
     ONLY; strings stay pa.Array, numerics/ts are numpy)."""
-    arr = _clamp(_as_arrow(raw), 3048)
+    arr = _clamp(raw, 3048)
     hit = _np(pc.match_substring_regex(arr, RX_5424))
     if not hit.any():
         return hit, {}
@@ -378,6 +371,7 @@ def parse_rfc5424_fast(raw):
     cols = {
         "priority": pri, "facility": pri // 8, "severity": pri % 8,
         "version": ver, "ts": ts, "tz_offset_minutes": tz_min,
+        "ts_is_nil": np.zeros(len(pri), dtype=bool),
         "hostname": host,           # strings stay as Arrow arrays
         "app_name": app,
         "proc_id": proc,

@@ -674,13 +674,8 @@ def detect_rfc_arrow(arr) -> np.ndarray:
 
 
 def detect_rfc(raw) -> pd.Series:
-    """Dialect detection over a pandas Series (see detect_rfc_arrow)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    """Dialect detection over a pandas Series (see detect_rfc_arrow); a
+    null line is detected as ""."""
+    from .udfs import _line_array
 
-    # from_pandas converts straight off the Series buffer (None/NaN ->
-    # null) without the tolist() object round-trip
-    arr = pa.array(raw, pa.string(), from_pandas=True)
-    if arr.null_count:
-        arr = pc.fill_null(arr, "")
-    return pd.Series(detect_rfc_arrow(arr), index=raw.index)
+    return pd.Series(detect_rfc_arrow(_line_array(raw)), index=raw.index)

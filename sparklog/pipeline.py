@@ -30,14 +30,7 @@ from .enrich import enrich
 from .grammar import ParseConfig
 from .lineage import Manifest, partition_lineage
 from .route import audit_token_equality, with_route_columns, write_sinks
-from .udfs import MAP_IN_ARROW_SCHEMA, make_map_in_arrow_parser
-
-PARSED_COLS = [
-    "priority", "facility", "severity", "version", "ts",
-    "tz_offset_minutes", "ts_is_nil", "hostname", "tag", "content",
-    "app_name", "proc_id", "msg_id", "structured_data", "message",
-    "parse_error",
-]
+from .udfs import map_in_arrow_parse
 
 
 def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
@@ -53,9 +46,8 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
     never appears in the output: echoing array<int> across the Arrow
     boundary measured 10-20x the parse cost; ``raw`` carries the same
     information through the bijective codec."""
-    fn = make_map_in_arrow_parser(cfg)
-    return (src.select("doc_id", "source", "tokens")
-               .mapInArrow(fn, MAP_IN_ARROW_SCHEMA))
+    return map_in_arrow_parse(src.select("doc_id", "source", "tokens"),
+                              "tokens", cfg)
 
 
 def _run_stage(manifest: Manifest, stats: dict, name: str, fn,

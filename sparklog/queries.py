@@ -2625,6 +2625,9 @@ def parse_media_header(b: bytes):
         while i + 4 <= len(b):
             if b[i] != 0xFF:
                 break
+            if b[i + 1] == 0xFF:    # fill byte before a marker (T.81
+                i += 1              # §B.1.1.2): any number may precede it
+                continue
             marker = b[i + 1]
             if marker == 0x01 or 0xD0 <= marker <= 0xD9:
                 i += 2          # standalone markers carry no length

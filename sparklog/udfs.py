@@ -1,301 +1,225 @@
-"""The parse dispatcher and its Spark batch function.
+"""The parse layer: one path from an Arrow batch to the parsed columns.
 
 ``parse_batch_arrow`` is the one place a batch of raw lines becomes the
-parsed columns, for every ``ParseConfig``: the Arrow fast path and error
-classifier (default config only), the masked-column slow path for the
-rest, merged with one gather per column.  ``make_map_in_arrow_parser``
-wraps it for ``DataFrame.mapInArrow`` (decode + detect + parse in one
-Arrow pass per batch: the pipeline's only JVM<->Python boundary), and
-``parse_frame`` wraps it for the pandas library API.
+parsed columns, for every ``ParseConfig``.  Each tier yields parts of
+(row positions, columns): the Arrow fast-path hits per dialect, the rows
+the Arrow error classifier settles, and the masked-column slow path per
+dialect.  One merge concatenates the parts and gathers each column back
+into row order.
+
+``make_map_in_arrow_parser`` wraps it for ``DataFrame.mapInArrow`` (decode
++ detect + parse in one Arrow pass per batch: the pipeline's only
+JVM<->Python boundary), ``map_in_arrow_parse`` builds that call and its
+output schema for every Spark entry point, and ``parse_frame`` wraps it
+for the pandas library API.  ``_line_array`` turns every entry point's
+input into the one batch shape ``parse_batch_arrow`` takes.
+
+The parsed columns are named once (``grammar._OUTPUT_COLUMNS``) and typed
+once (``PARSED_SCHEMA``); the Arrow types the batches carry and the pandas
+dtypes of ``parse_frame`` derive from it.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from .grammar import RFC_3164, RFC_5424, ParseConfig
+from .grammar import _OUTPUT_COLUMNS, RFC_3164, RFC_5424, ParseConfig
 
 PARSED_SCHEMA = T.StructType([
-    T.StructField("priority", T.IntegerType()),
-    T.StructField("facility", T.IntegerType()),
-    T.StructField("severity", T.IntegerType()),
-    T.StructField("version", T.IntegerType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("tz_offset_minutes", T.IntegerType()),
-    T.StructField("ts_is_nil", T.BooleanType()),
-    T.StructField("hostname", T.StringType()),
-    T.StructField("tag", T.StringType()),
-    T.StructField("content", T.StringType()),
-    T.StructField("app_name", T.StringType()),
-    T.StructField("proc_id", T.StringType()),
-    T.StructField("msg_id", T.StringType()),
-    T.StructField("structured_data", T.StringType()),
-    T.StructField("message", T.StringType()),
-    T.StructField("parse_error", T.StringType()),
-])
+    T.StructField(name, typ) for name, typ in zip(_OUTPUT_COLUMNS, (
+        *[T.IntegerType()] * 4,      # priority, facility, severity, version
+        T.TimestampType(),           # ts
+        T.IntegerType(),             # tz_offset_minutes
+        T.BooleanType(),             # ts_is_nil
+        *[T.StringType()] * 9,       # hostname .. message, parse_error
+    ), strict=True)])
 
-_INT_COLS = ["priority", "facility", "severity", "version",
-             "tz_offset_minutes"]
+# naive timestamp[us]: the session time zone is UTC
+_ARROW_TYPES = {f.name: to_arrow_type(f.dataType, timestamp_utc=False)
+                for f in PARSED_SCHEMA.fields}
 
 
-def _string_from_token_list(col):
-    """pa list<int32> -> pa.StringArray without materializing per-row numpy
-    arrays (the mapInArrow input-side win: ListArray values/offsets are
-    used directly)."""
-    import pyarrow as pa
+def _string_from_token_list(col: pa.ListArray) -> pa.StringArray:
+    """list<int32> code points -> pa.StringArray straight from the list's
+    values and offsets (no per-row arrays).  An all-ASCII batch (syslog is
+    PRINTUSASCII) is one narrowing cast; any other batch goes to
+    ``encoding.detokenize_arrow``.  A null list decodes to ""."""
+    from . import encoding
 
-    from .encoding import detokenize_arrow
+    off = col.offsets.to_numpy().astype(np.int64)
+    flat = col.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
+    if (flat >= 0x80).any():
+        return encoding.detokenize_arrow(col)
+    return pa.StringArray.from_buffers(
+        len(col), pa.py_buffer((off - off[0]).astype(np.int32)),
+        pa.py_buffer(flat.astype(np.uint8)))
 
+
+def _line_array(col) -> pa.StringArray:
+    """Any parse input -> the null-free pa.StringArray that detection and
+    ``parse_batch_arrow`` take.  The input kind is read from the Arrow
+    type: a list<int32> token column is decoded; a string column (or
+    anything ``pa.array`` takes as strings, e.g. a pandas Series) has its
+    chunks combined and nulls set to ""."""
+    if not isinstance(col, (pa.Array, pa.ChunkedArray)):
+        col = pa.array(col, pa.string(), from_pandas=True)
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    vals = col.values.to_numpy(zero_copy_only=False)
-    lo, hi = off[0], off[-1]
-    flat = vals[lo:hi]
-    rel = (off - lo)
-    if len(flat) == 0 or (flat < 0x80).all():
-        data = flat.astype(np.uint8).tobytes()
-        return pa.StringArray.from_buffers(
-            len(off) - 1, pa.py_buffer(rel.astype(np.int32).tobytes()),
-            pa.py_buffer(data))
-    # non-ASCII fallback: slice per row via the generic pandas-side codec
-    toks = pd.Series([flat[a:b] for a, b in zip(rel[:-1], rel[1:])])
-    return detokenize_arrow(toks)
+    if pa.types.is_list(col.type):
+        return _string_from_token_list(col)
+    return pc.fill_null(col, "") if col.null_count else col
 
 
-def parse_batch_arrow(arr, rfc: np.ndarray, cfg: ParseConfig) -> dict:
-    """Whole-batch parse of a pa.StringArray with per-row dialect codes
-    ``rfc`` -> {output column: pa.Array}, for every ParseConfig.
+def _rows(arr: pa.Array, mask: np.ndarray) -> pa.Array:
+    """The rows of ``arr`` where ``mask`` holds (no copy when it holds
+    everywhere)."""
+    return arr if mask.all() else arr.filter(pa.array(mask))
+
+
+def parse_batch_arrow(arr: pa.StringArray, rfc: np.ndarray,
+                      cfg: ParseConfig) -> dict:
+    """Whole-batch parse of a null-free pa.StringArray with per-row dialect
+    codes ``rfc`` -> {output column: pa.Array}, for every ParseConfig.
 
     Default-config batches take the Arrow fast path first (hits keep their
     Arrow string buffers), then the Arrow error classifier on the misses;
     only what both leave goes through the pandas slow path.  Injected
     configs skip both (the fast path and the classifier assume the
     default config) and send every known-dialect row to the slow path.
-    Unknown-dialect rows carry ``DetectFailed``.  The row groups are
-    merged with one gather (take) per column."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    Unknown-dialect rows carry ``DetectFailed``.
 
-    from . import fastpath
-    from .grammar import (
-        _OUTPUT_COLUMNS,
-        _fast_eligible,
-        _parse_rfc3164_slow,
-        _parse_rfc5424_slow,
-    )
+    Every tier adds parts of (row positions, columns); a column a part
+    lacks is null there.  The one merge concatenates the parts and puts
+    each column back in row order with one take, skipped when a single
+    part covers the batch (its positions are then the identity)."""
+    from . import fastpath, grammar
 
     n = len(rfc)
-    fast = _fast_eligible(cfg)
-    hit3 = np.zeros(n, dtype=bool)
-    hit5 = np.zeros(n, dtype=bool)
-    cols3: dict = {}
-    cols5: dict = {}
+    fast = grammar._fast_eligible(cfg)
+    dialects = (
+        (RFC_3164, lambda a: fastpath.parse_rfc3164_fast(a, cfg.default_year),
+         grammar._parse_rfc3164_slow),
+        (RFC_5424, fastpath.parse_rfc5424_fast, grammar._parse_rfc5424_slow),
+    )
+    parts = []
+    left = np.ones(n, dtype=bool)       # rows no tier has settled yet
     if fast:
-        m3 = rfc == RFC_3164
-        m5 = rfc == RFC_5424
-        if m3.all():
-            h3, cols3 = fastpath.parse_rfc3164_fast(arr, cfg.default_year)
-            hit3 = h3
-        elif m3.any():
-            a3 = pc.filter(arr, pa.array(m3))
-            h3, cols3 = fastpath.parse_rfc3164_fast(a3, cfg.default_year)
-            hit3[np.flatnonzero(m3)[h3]] = True
-        if m5.all():
-            h5, cols5 = fastpath.parse_rfc5424_fast(arr)
-            hit5 = h5
-        elif m5.any():
-            a5 = pc.filter(arr, pa.array(m5))
-            h5, cols5 = fastpath.parse_rfc5424_fast(a5)
-            hit5[np.flatnonzero(m5)[h5]] = True
-
-        # homogeneous canonical batch (the 100 TB common case): columns
-        # are already in row order — skip the concat+gather entirely
-        for full_hit, cols_d in ((hit3, cols3), (hit5, cols5)):
-            if full_hit.all():
-                return {c: _fast_col(cols_d, c, n) for c in _OUTPUT_COLUMNS}
-
-    miss = ~(hit3 | hit5)
-    slow_parts = []
-    err_codes = None
-    err_pos = np.array([], dtype=np.int64)
-    if miss.any():
-        miss_idx = np.flatnonzero(miss)
-        miss_arr = pc.filter(arr, pa.array(miss))
-        srfc = rfc[miss_idx]
+        for code, fast_parse, _ in dialects:
+            m = rfc == code
+            if m.any():
+                hit, cols = fast_parse(_rows(arr, m))
+                pos = np.flatnonzero(m)[hit]
+                parts.append((pos, cols))
+                left[pos] = False
+    if left.any():
+        pos = np.flatnonzero(left)
+        sub, srfc = _rows(arr, left), rfc[pos]
         # Arrow error pre-classification: provable error codes skip the
         # pandas slow path entirely (garbage bursts stay cheap)
-        codes = (fastpath.classify_errors_fast(miss_arr, srfc) if fast
-                 else np.full(len(srfc), None, dtype=object))
-        codes[~((srfc == RFC_3164) | (srfc == RFC_5424))] = "DetectFailed"
-        classified = np.array([x is not None for x in codes])
-        if classified.any():
-            err_codes = codes[classified]
-            err_pos = miss_idx[classified]
-        rem = ~classified
-        if rem.any():
-            sub = pd.Series(
-                pc.filter(miss_arr, pa.array(rem)).to_numpy(
-                    zero_copy_only=False),
-                index=miss_idx[rem], dtype=object)
-            srfc_r = srfc[rem]
-            sm3 = srfc_r == RFC_3164
-            sm5 = srfc_r == RFC_5424
-            frames = []
-            order = []
-            if sm3.any():
-                frames.append(_parse_rfc3164_slow(sub[sm3], cfg))
-                order.append(miss_idx[rem][sm3])
-            if sm5.any():
-                frames.append(_parse_rfc5424_slow(sub[sm5], cfg))
-                order.append(miss_idx[rem][sm5])
-            for f in frames:  # align dtypes so concat never silently casts
-                f["ts_is_nil"] = f["ts_is_nil"].astype(object)
-            slow = pd.concat(frames, ignore_index=True)
-            slow_pos = np.concatenate(order)
-            slow_parts = [(slow, slow_pos)]
+        codes = (fastpath.classify_errors_fast(sub, srfc) if fast
+                 else np.full(len(pos), None, dtype=object))
+        codes[(srfc != RFC_3164) & (srfc != RFC_5424)] = "DetectFailed"
+        err = pd.notna(codes)
+        parts.append((pos[err],
+                      {"parse_error": pa.array(codes[err], pa.string())}))
+        for code, _, slow_parse in dialects:
+            m = ~err & (srfc == code)
+            if m.any():
+                lines = _rows(sub, m).to_numpy(zero_copy_only=False)
+                parts.append((pos[m], slow_parse(pd.Series(lines), cfg)))
 
-    # gather permutation: [3164 hits, 5424 hits, classified errs, slow]
-    pos = [np.flatnonzero(hit3), np.flatnonzero(hit5), err_pos]
-    if slow_parts:
-        pos.append(slow_parts[0][1])
-    perm_src = np.concatenate(pos) if pos else np.array([], dtype=np.int64)
-    inv = np.empty(n, dtype=np.int64)
-    inv[perm_src] = np.arange(n)
-    inv_pa = pa.array(inv)
-
-    n3, n5 = int(hit3.sum()), int(hit5.sum())
-
-    n_err = len(err_pos)
-
-    def seg(colname, typ):
-        """Build the concatenated [hits3, hits5, classified-errors, slow]
-        segment for one output column, then gather into row order."""
-        chunks = []
-        for nn, cols_d in ((n3, cols3), (n5, cols5)):
-            if not nn:
-                continue
-            if colname in cols_d:
-                chunks.append(_to_pa(cols_d[colname], typ))
-            elif colname == "ts_is_nil":
-                # fast-path hits always carry a concrete False
-                chunks.append(pa.array(np.zeros(nn, dtype=bool)))
-            else:
-                chunks.append(pa.nulls(nn, typ))
-        if n_err:
-            if colname == "parse_error":
-                chunks.append(pa.array(list(err_codes), pa.string()))
-            else:
-                chunks.append(pa.nulls(n_err, typ))
-        if slow_parts:
-            slow = slow_parts[0][0]
-            chunks.append(_slow_col_to_pa(slow[colname], typ))
-        merged = pa.concat_arrays([c.combine_chunks()
-                                   if isinstance(c, pa.ChunkedArray) else c
-                                   for c in chunks] or [pa.nulls(0, typ)])
-        return merged.take(inv_pa)
-
-    return {c: seg(c, _pa_type(c)) for c in _OUTPUT_COLUMNS}
+    parts = [(pos, cols) for pos, cols in parts if len(pos)]
+    order = None
+    if len(parts) > 1:
+        inv = np.empty(n, dtype=np.int64)
+        inv[np.concatenate([pos for pos, _ in parts])] = np.arange(n)
+        order = pa.array(inv)
+    out = {}
+    for name, typ in _ARROW_TYPES.items():
+        chunks = [_part_column(cols, name, typ, len(pos))
+                  for pos, cols in parts] or [pa.nulls(0, typ)]
+        col = chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
+        out[name] = col if order is None else col.take(order)
+    return out
 
 
-def _pa_type(colname):
-    import pyarrow as pa
-
-    if colname in _INT_COLS:
-        return pa.int32()
-    if colname == "ts":
-        return pa.timestamp("us")
-    if colname == "ts_is_nil":
-        return pa.bool_()
-    return pa.string()
-
-
-def _to_pa(v, typ):
-    """Fast-path column (numpy or pa.Array over the hit rows) -> pa.Array
-    of `typ`."""
-    import pyarrow as pa
-
-    if isinstance(v, (pa.Array, pa.ChunkedArray)):
-        return v.cast(typ)
-    if typ == pa.bool_():
-        return pa.array(v.astype(bool))
-    return pa.array(v).cast(typ)
-
-
-def _fast_col(cols_d: dict, colname: str, n: int):
-    """All-hit shortcut column builder: fast-path output (already in row
-    order) -> pa.Array; absent columns are nulls, ts_is_nil is False."""
-    import pyarrow as pa
-
-    typ = _pa_type(colname)
-    if colname in cols_d:
-        return _to_pa(cols_d[colname], typ)
-    if colname == "ts_is_nil":
-        return pa.array(np.zeros(n, dtype=bool))
-    return pa.nulls(n, typ)
-
-
-def _slow_col_to_pa(series: pd.Series, typ):
-    import pyarrow as pa
-
-    if typ == pa.timestamp("us"):
-        return pa.array(series.to_numpy(dtype="M8[ns]")).cast(typ)
-    return pa.Array.from_pandas(series, type=typ)
+def _part_column(cols, name: str, typ: pa.DataType, k: int) -> pa.Array:
+    """One part's ``name`` column as a pa.Array of ``typ``: nulls when the
+    part lacks it; fast-path columns are Arrow or numpy, slow-path ones a
+    pandas Series."""
+    if name not in cols:
+        return pa.nulls(k, typ)
+    v = cols[name]
+    if isinstance(v, pd.Series):
+        if pa.types.is_timestamp(typ):
+            return pa.array(v.to_numpy(dtype="M8[ns]")).cast(typ)
+        return pa.Array.from_pandas(v, type=typ)
+    return (v if isinstance(v, pa.Array) else pa.array(v)).cast(typ)
 
 
 def make_map_in_arrow_parser(cfg: ParseConfig | None = None,
                              passthrough=("doc_id", "source"),
                              input_col: str = "tokens",
-                             input_kind: str = "tokens",
-                             out_prefix: str = "",
-                             emit_raw: bool = True):
+                             out_prefix: str = ""):
     """Batch function for DataFrame.mapInArrow: passthrough columns ride
     along untouched (same Arrow buffers); decode+detect+parse append the
-    rfc + parsed columns.  The token list column feeds the decoder
-    straight from its Arrow buffers (no per-row ndarray allocations), and
-    — being a map barrier — the parse can never be duplicated by filter
-    pushdown the way struct-field references to a UDF result can.
+    rfc + parsed columns.  Being a map barrier, the parse can never be
+    duplicated by filter pushdown the way struct-field references to a
+    UDF result can.
 
-    The token ARRAY column must never appear in the OUTPUT batch: shipping
-    array<int> back across the Arrow boundary costs 10-20x the parse
-    itself (measured 17-23s vs 0.6-2.8s per 400k rows at local[32]) and
-    bloats the JVM with list-array allocations.  Instead the decoded line
-    is emitted as a plain string column (``emit_raw``) — the codec is
-    bijective, so downstream equality audits on the string are exactly the
-    token-array invariant."""
-    import pyarrow as pa
-
+    The input kind is read from ``input_col``'s Arrow type
+    (``_line_array``).  A list<int32> token column feeds the decoder
+    straight from its Arrow buffers and the decoded line is emitted as a
+    ``raw`` string column: the token ARRAY must never appear in the OUTPUT
+    batch, since shipping array<int> back across the Arrow boundary costs
+    10-20x the parse itself (measured 17-23s vs 0.6-2.8s per 400k rows at
+    local[32]), and the codec is bijective, so downstream equality audits
+    on the string are exactly the token-array invariant.  A string column
+    is parsed as is (nulls as "") and no ``raw`` is emitted."""
     cfg = cfg or ParseConfig()
 
     def fn(batches):
-        import pyarrow.compute as pc
-
-        from .grammar import _OUTPUT_COLUMNS, detect_rfc_arrow
+        from .grammar import detect_rfc_arrow
 
         for b in batches:
-            col = b.column(b.schema.get_field_index(input_col))
-            if input_kind == "tokens":
-                arr = _string_from_token_list(col)
-            else:
-                arr = (col.combine_chunks()
-                       if isinstance(col, pa.ChunkedArray) else col)
-                arr = pc.if_else(pc.is_valid(arr), arr, "")
+            col = b.column(input_col)
+            arr = _line_array(col)
             rfc = detect_rfc_arrow(arr)
-            arrays = [b.column(b.schema.get_field_index(c))
-                      for c in passthrough]
-            names = list(passthrough)
-            if emit_raw:
-                arrays.append(arr)
-                names.append("raw")
-            names += ["rfc"] + [f"{out_prefix}{c}" for c in _OUTPUT_COLUMNS]
-            arrays.append(pa.array(rfc, pa.int32()))
             out = parse_batch_arrow(arr, rfc, cfg)
-            arrays.extend(out[c] for c in _OUTPUT_COLUMNS)
+            names = list(passthrough)
+            arrays = [b.column(c) for c in passthrough]
+            if pa.types.is_list(col.type):
+                names.append("raw")
+                arrays.append(arr)
+            names += ["rfc"] + [f"{out_prefix}{c}" for c in out]
+            arrays += [pa.array(rfc, pa.int32()), *out.values()]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return fn
+
+
+def map_in_arrow_parse(df, input_col: str, cfg: ParseConfig | None = None,
+                       out_prefix: str = ""):
+    """``df`` plus ``rfc`` and the parsed columns (named with
+    ``out_prefix``) through one mapInArrow.  An array<int> token column is
+    replaced by the decoded ``raw`` string; a string column stays, and
+    every other column passes through."""
+    tokens = isinstance(df.schema[input_col].dataType, T.ArrayType)
+    keep = [f for f in df.schema.fields if not tokens or f.name != input_col]
+    fn = make_map_in_arrow_parser(cfg, tuple(f.name for f in keep),
+                                  input_col, out_prefix)
+    schema = T.StructType(
+        keep
+        + ([T.StructField("raw", T.StringType())] if tokens else [])
+        + [T.StructField("rfc", T.IntegerType())]
+        + [T.StructField(f"{out_prefix}{f.name}", f.dataType)
+           for f in PARSED_SCHEMA.fields])
+    return df.mapInArrow(fn, schema)
 
 
 def parse_frame(lines, cfg: ParseConfig,
@@ -306,36 +230,22 @@ def parse_frame(lines, cfg: ParseConfig,
     leads with the detected ``rfc`` column.  Null lines parse as "".  The
     frame keeps the caller's index; ints come back as nullable Int64,
     ``ts`` as M8[ns], strings and ``ts_is_nil`` as object."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .grammar import _OUTPUT_COLUMNS, detect_rfc_arrow
+    from .grammar import detect_rfc_arrow
 
     lines = lines if isinstance(lines, pd.Series) else pd.Series(lines)
-    arr = pa.array(lines, pa.string(), from_pandas=True)
-    if arr.null_count:
-        arr = pc.fill_null(arr, "")
+    arr = _line_array(lines)
     codes = (detect_rfc_arrow(arr) if rfc is None
              else np.full(len(arr), rfc, dtype=np.int64))
-    out = parse_batch_arrow(arr, codes, cfg)
     data = {} if rfc is not None else {"rfc": codes}
-    for c in _OUTPUT_COLUMNS:
-        v = out[c].to_numpy(zero_copy_only=False)
-        if c in _INT_COLS:
+    for c, col in parse_batch_arrow(arr, codes, cfg).items():
+        v = col.to_numpy(zero_copy_only=False)
+        if pa.types.is_integer(col.type):
             data[c] = pd.array(v, dtype="Int64")
-        elif c == "ts":
+        elif pa.types.is_timestamp(col.type):
             data[c] = v.astype("M8[ns]")
         else:
             data[c] = np.asarray(v, dtype=object)
     return pd.DataFrame(data, index=lines.index)
-
-
-MAP_IN_ARROW_SCHEMA = T.StructType(
-    [T.StructField("doc_id", T.StringType()),
-     T.StructField("source", T.StringType()),
-     T.StructField("raw", T.StringType()),
-     T.StructField("rfc", T.IntegerType())]
-    + PARSED_SCHEMA.fields)
 
 
 DECODED_SCHEMA = T.StructType([
@@ -348,14 +258,11 @@ def make_decoder_fn(input_col: str = "tokens"):
     """mapInArrow batch fn: tokens -> (doc_id, raw) only, for the audit's
     source side (input-side token arrays are cheap; it is the OUTPUT side
     that must stay string-only)."""
-    import pyarrow as pa
 
     def fn(batches):
         for b in batches:
-            col = b.column(b.schema.get_field_index(input_col))
-            arr = _string_from_token_list(col)
             yield pa.RecordBatch.from_arrays(
-                [b.column(b.schema.get_field_index("doc_id")), arr],
+                [b.column("doc_id"), _line_array(b.column(input_col))],
                 names=["doc_id", "raw"])
 
     return fn

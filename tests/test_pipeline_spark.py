@@ -152,7 +152,8 @@ def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
     a synthetic corpus plus every golden error line and a non-ASCII
     line."""
     from sparklog.api import parse_lines_pandas
-    from sparklog.pipeline import PARSED_COLS, parse_stage
+    from sparklog.grammar import _OUTPUT_COLUMNS
+    from sparklog.pipeline import parse_stage
 
     pdf = fixtures.synth_lines(800, seed=21)
     extra = ([c["raw"] for c in fixtures.GOLDEN_ERRORS]
@@ -163,7 +164,7 @@ def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, pdf, src_path, n_partitions=2)
     a = (parse_stage(spark.read.parquet(src_path))
-         .select("doc_id", "rfc", *PARSED_COLS)
+         .select("doc_id", "rfc", *_OUTPUT_COLUMNS)
          .toPandas().set_index("doc_id").loc[pdf["doc_id"]])
     b = parse_lines_pandas(pdf["raw"])
     assert a.columns.tolist() == b.columns.tolist()
@@ -173,6 +174,49 @@ def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
         ga = a[c].astype(object).where(a[c].notna(), None).tolist()
         gb = b[c].astype(object).where(b[c].notna(), None).tolist()
         assert ga == gb, c
+
+
+def test_public_parse_entry_points_agree(spark, tmp_path):
+    """``parse_lines`` (string column) and ``parse_tokens`` (array<int>
+    column) read the input kind from the column type: both give the
+    ``parse_stage`` columns row for row, ``parse_tokens`` emits the decoded
+    ``raw`` and ``parse_lines`` only passes its own ``raw`` through (a null
+    line parses as "" and stays null in the passthrough)."""
+    from sparklog.api import parse_lines, parse_tokens
+    from sparklog.grammar import _OUTPUT_COLUMNS
+
+    pdf = fixtures.synth_lines(300, seed=5)
+    extra = ([c["raw"] for c in fixtures.GOLDEN_ERRORS]
+             + ["<34>Oct 11 22:14:15 hôte su: échec für ü", None])
+    pdf = pd.concat([pdf, pd.DataFrame({
+        "doc_id": [f"x{i:03d}" for i in range(len(extra))],
+        "raw": extra, "source": "golden"})], ignore_index=True)
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, pdf, src_path, n_partitions=2)
+    tokens_df = spark.read.parquet(src_path)
+    lines_df = spark.createDataFrame(pdf)
+    p_cols = [f"p_{c}" for c in _OUTPUT_COLUMNS]
+
+    by_lines = parse_lines(lines_df, "raw")
+    by_tokens = parse_tokens(tokens_df, "tokens")
+    assert by_lines.columns == lines_df.columns + ["rfc"] + p_cols
+    assert by_tokens.columns == (["doc_id", "n_tok", "source", "raw", "rfc"]
+                                 + p_cols)
+
+    def rows(df, cols):
+        return {r["doc_id"]: tuple(r[c] for c in cols)
+                for r in df.select("doc_id", *cols).collect()}
+
+    stage = rows(parse_stage(tokens_df), ["rfc", *_OUTPUT_COLUMNS])
+    assert len(stage) == len(pdf)
+    assert rows(by_lines, ["rfc", *p_cols]) == stage
+    assert rows(by_tokens, ["rfc", *p_cols]) == stage
+    want_raw = dict(zip(pdf["doc_id"], pdf["raw"]))
+    assert rows(by_lines, ["raw"]) == {k: (v,) for k, v in want_raw.items()}
+    assert rows(by_tokens, ["raw"]) == {k: (v or "",)
+                                        for k, v in want_raw.items()}
+    # the null line, parsed as "": too short to carry a dialect
+    assert stage["x%03d" % (len(extra) - 1)][-1] == "DetectFailed"
 
 
 def test_injected_config_goldens_through_spark(spark, tmp_path):

@@ -1061,6 +1061,13 @@ def test_parse_media_header_real_bytes(spark, tmp_path):
     jpg2 = (b"\xff\xd8" + seg(0xC2, b"\x08" + struct.pack(">HH", 7, 9)
                               + b"\x01\x01\x11\x00"))
     assert parse_media_header(jpg2) == ("jpeg", 9, 7)
+    # 0xFF fill bytes may precede any marker (ITU T.81 B.1.1.2)
+    sof = seg(0xC0, b"\x08" + struct.pack(">HH", 7, 9)
+              + b"\x01\x01\x11\x00")
+    assert parse_media_header(b"\xff\xd8\xff" + sof) == ("jpeg", 9, 7)
+    app0 = seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    assert parse_media_header(b"\xff\xd8" + app0 + b"\xff\xff" + sof) == \
+        ("jpeg", 9, 7)
 
     # degradation, never exceptions
     assert parse_media_header(b"") == ("unknown", None, None)
