@@ -3,10 +3,16 @@
 The reference has no joins; enrichment is the pipeline layer the north rule
 adds: facility/severity name maps and a hostname geo/tier dim, all tiny →
 broadcast hash joins (no shuffle of the fact side).
+
+The dims are built from ``pyarrow`` tables, which Spark plans as a JVM-side
+``LocalRelation``.  A list of Python tuples would plan as a ``LogicalRDD``
+of pickled rows, and every query would then run one extra RDD job per dim
+before broadcasting it.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,14 +37,16 @@ TIERS = ["edge", "core", "mgmt"]
 
 def dim_facility(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
-        [(i, n) for i, n in enumerate(FACILITY_NAMES)],
+        pa.table({"facility": range(len(FACILITY_NAMES)),
+                  "facility_name": FACILITY_NAMES}),
         "facility int, facility_name string")
 
 
 def dim_severity(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
-        [(i, n, c) for i, (n, c)
-         in enumerate(zip(SEVERITY_NAMES, SEVERITY_CLASS))],
+        pa.table({"severity": range(len(SEVERITY_NAMES)),
+                  "severity_name": SEVERITY_NAMES,
+                  "severity_class": SEVERITY_CLASS}),
         "severity int, severity_name string, severity_class string")
 
 
@@ -51,8 +59,9 @@ def dim_host(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
              ("localhost", "us-east", "edge"),
              ("mymachine.example.com", "eu-central", "core"),
              ("192.0.2.1", "ap-south", "edge")]
-    return spark.createDataFrame(rows, "hostname string, geo string, "
-                                       "tier string")
+    return spark.createDataFrame(
+        pa.table(dict(zip(("hostname", "geo", "tier"), zip(*rows)))),
+        "hostname string, geo string, tier string")
 
 
 def enrich(parsed: DataFrame, spark: SparkSession,

@@ -8,10 +8,11 @@ path raises; there is no parquet fallback), and snapshots are emulated
 as versioned manifest JSON documents committed by atomic rename.
 
 A snapshot records, per completed stage: row counts, parse metrics and
-per-partition lineage rows.  ``resume`` reads the last committed snapshot
-and skips completed stages; stage writes are idempotent (deterministic
-salting, overwrite mode), so a kill-and-rerun produces byte-identical
-output.
+the sinks lineage (rows, parse failures and rows per sink class), each
+observed on the write that produced the output rather than by reading it
+back.  ``resume`` reads the last committed snapshot and skips completed
+stages; stage writes are idempotent (deterministic salting, overwrite
+mode), so a kill-and-rerun produces byte-identical output.
 """
 
 from __future__ import annotations
@@ -19,6 +20,11 @@ from __future__ import annotations
 import json
 import os
 import time
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+from .route import SINK_CLASSES
 
 
 class Manifest:
@@ -61,13 +67,27 @@ class Manifest:
         return state
 
 
-def partition_lineage(df) -> list[dict]:
-    """Row and parse-failure counts per scan partition of ``df`` (the
-    re-read sinks table): the lineage rows of the manifest."""
-    from pyspark.sql import functions as F
+def partition_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the sinks lineage counters to the routed ``df``: rows, parse
+    failures and rows per ``sink_class``.  They are counted on the plan
+    that writes ``df``; after that write, the returned observation's
+    ``get`` is the sinks stage's manifest info."""
+    obs = Observation()
+    per_class = [x for c in SINK_CLASSES
+                 for x in (F.lit(c), F.count_if(F.col("sink_class") == c))]
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                      F.count("parse_error").alias("n_failed"),
+                      F.create_map(*per_class).alias("sink_rows")), obs
 
-    rows = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-              .agg(F.count("*").alias("n_rows"),
-                   F.count("parse_error").alias("n_failed"))
-              .collect())
-    return [r.asDict() for r in rows]
+
+def sinks_counts(info: dict) -> tuple[int, int]:
+    """(rows, n_failed) of a committed sinks stage.  A manifest written
+    before the counts were observed on the write holds per-scan-partition
+    ``lineage`` rows instead, whose sums are the same counts."""
+    if "rows" in info:
+        return info["rows"], info["n_failed"]
+    if "lineage" in info:
+        return (sum(r["n_rows"] for r in info["lineage"]),
+                sum(r["n_failed"] for r in info["lineage"]))
+    raise RuntimeError("the committed sinks stage carries no row counts; "
+                       "delete the output's _manifests/ to rerun the job")

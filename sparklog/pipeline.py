@@ -7,10 +7,13 @@ Plan shape (everything except the one MapInArrow is JVM-side):
     Scan parquet (pruned: doc_id, tokens, source)
       → MapInArrow: decode + detect + parse, one Arrow
         pass per batch (udfs.make_map_in_arrow_parser)   [no shuffle]
-      → 3× BroadcastHashJoin (dims)                       [no shuffle]
-      → salted repartition on sink key                    [the ONE shuffle]
+      → 3× BroadcastHashJoin (dims, JVM LocalRelations)   [no shuffle]
+      → CollectMetrics: the sinks lineage (rows, failures, rows per sink
+        class), counted on the write's own plan (lineage.partition_lineage)
+      → salted repartition on sink key, AQE-sized         [the ONE shuffle]
       → dynamic-partition parquet write per sink
-    aggregates/metrics reuse the persisted parse output (partial+final agg).
+    aggregates/metrics reuse the persisted parse output (partial+final agg),
+    and every stage observes its counts on its own write (no read-back).
 
 Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 """
@@ -22,13 +25,13 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import hourly_counts, parse_metrics
 from .enrich import enrich
 from .grammar import ParseConfig
-from .lineage import Manifest, partition_lineage
+from .lineage import Manifest, partition_lineage, sinks_counts
 from .route import audit_token_equality, with_route_columns, write_sinks
 from .udfs import map_in_arrow_parse
 
@@ -83,21 +86,24 @@ def _run_job(out_dir: str, stages, fail_after: str | None = None
     return stats, state["stages"]
 
 
-def _write(df: DataFrame, path: str) -> dict:
-    """Overwrite ``path`` with ``df`` as parquet; the row count is observed
-    on that same write (no second pass over the output)."""
+def _write(df: DataFrame, path: str, *metrics: Column) -> dict:
+    """Overwrite ``path`` with ``df`` as parquet; the row count and the
+    aggregate ``metrics`` are observed on that same write (no second pass
+    over the output)."""
     obs = Observation()
-    (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    (df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
        .write.mode("overwrite").parquet(path))
-    return {"rows": obs.get["rows"]}
+    return obs.get
 
 
 def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
-                 cfg: ParseConfig | None = None, num_partitions: int = 32,
-                 salt_buckets: int = 16, fail_after: str | None = None,
+                 cfg: ParseConfig | None = None,
+                 num_partitions: int | None = None, salt_buckets: int = 16,
+                 fail_after: str | None = None,
                  table_format: str = "parquet") -> dict:
-    """Run (or resume) the full job.  ``fail_after`` kills the run after the
-    named stage commits — used by the resume test.
+    """Run (or resume) the full job.  ``num_partitions=None`` lets AQE size
+    the sink shuffle (see route.py).  ``fail_after`` kills the run after
+    the named stage commits — used by the resume test.
 
     The source goes through the catalog abstraction (SURVEY.md §7.5):
     ``table_format="iceberg"`` reads with Spark's iceberg source, so the
@@ -108,20 +114,22 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     sinks = os.path.join(out_dir, "sinks")
 
     def _sinks(_):
-        write_sinks(routed, sinks, num_partitions, salt_buckets)
-        return {"lineage": partition_lineage(spark.read.parquet(sinks))}
+        observed, lineage = partition_lineage(routed)
+        write_sinks(observed, sinks, num_partitions, salt_buckets)
+        return lineage.get
 
     def _aggregates(_):
         return _write(hourly_counts(spark.read.parquet(sinks))
                       .repartition(1), os.path.join(out_dir, "aggregates"))
 
     def _metrics(_):
-        path = os.path.join(out_dir, "metrics")
         info = _write(parse_metrics(spark.read.parquet(sinks))
-                      .repartition(1), path)
+                      .repartition(1), os.path.join(out_dir, "metrics"),
+                      F.collect_list(F.struct("source", "rfc", "n_ok",
+                                              "n_failed")).alias("per_source"))
         info["per_source"] = {f"{r['source']}/{r['rfc']}":
                               [r["n_ok"], r["n_failed"]]
-                              for r in spark.read.parquet(path).collect()}
+                              for r in info["per_source"]}
         return info
 
     def _audit(_):
@@ -134,9 +142,7 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     stats, done = _run_job(out_dir, [
         ("sinks", _sinks), ("aggregates", _aggregates),
         ("metrics", _metrics), ("audit", _audit)], fail_after)
-    lineage = done["sinks"]["lineage"]
-    stats["rows"] = sum(r["n_rows"] for r in lineage)
-    stats["n_failed"] = sum(r["n_failed"] for r in lineage)
+    stats["rows"], stats["n_failed"] = sinks_counts(done["sinks"])
     return stats
 
 
@@ -312,7 +318,8 @@ def main(argv=None):
     ap.add_argument("--gen-rows", type=int, default=0,
                     help="generate a synthetic tokens table of N rows")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="sink shuffle partitions (default: sized by AQE)")
     ap.add_argument("--fresh", action="store_true",
                     help="ignore existing manifest (full rerun)")
     ap.add_argument("--format", default="parquet",
@@ -363,7 +370,7 @@ def main(argv=None):
         from .fixtures import synth_lines, write_tokens_table
         src = os.path.join(args.out, "src_tokens")
         write_tokens_table(spark, synth_lines(args.gen_rows), src,
-                           n_partitions=max(args.partitions, 8))
+                           n_partitions=max(args.partitions or 8, 8))
     if args.fresh:
         import shutil
         shutil.rmtree(os.path.join(args.out, "_manifests"),

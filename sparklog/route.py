@@ -6,6 +6,11 @@ Hostname/source distributions are Zipf-skewed at scale; writing
 through few tasks.  We salt with ``pmod(xxhash64(doc_id), S)`` —
 deterministic (no rand()) so a resumed run reproduces byte-identical
 partitioning, which keeps the manifest/resume layer idempotent.
+
+The shuffle has no fixed partition count by default: AQE sizes it from
+``spark.sql.shuffle.partitions`` and coalesces small partitions, so the
+sink write gets as many tasks (and files per sink) as the data and the
+cores warrant.  An explicit ``num_partitions`` pins the count.
 """
 
 from __future__ import annotations
@@ -13,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .enrich import SEVERITY_CLASS
+
 DEAD_LETTER_CLASS = "dead"
+# every value with_route_columns can give sink_class
+SINK_CLASSES = (*dict.fromkeys(SEVERITY_CLASS), DEAD_LETTER_CLASS)
 
 
 def with_route_columns(df: DataFrame) -> DataFrame:
@@ -25,17 +34,19 @@ def with_route_columns(df: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int,
+def salted_repartition(df: DataFrame, num_partitions: int | None = None,
                        salt_buckets: int = 16) -> DataFrame:
-    """Co-partition by sink key + deterministic salt to split hot sinks."""
-    return df.repartition(
-        num_partitions,
-        F.col("rfc"), F.col("sink_class"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
-    )
+    """Co-partition by sink key + deterministic salt to split hot sinks.
+    ``num_partitions=None`` leaves the partition count to AQE."""
+    key = (F.col("rfc"), F.col("sink_class"),
+           F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
+    if num_partitions is None:
+        return df.repartition(*key)
+    return df.repartition(num_partitions, *key)
 
 
-def write_sinks(df: DataFrame, out_dir: str, num_partitions: int = 32,
+def write_sinks(df: DataFrame, out_dir: str,
+                num_partitions: int | None = None,
                 salt_buckets: int = 16) -> None:
     """Single-pass fan-out: one write partitioned by sink key.
 

@@ -6,6 +6,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MB = 48 * 1024
+
+
+def _driver_memory() -> str:
+    """``SPARKLOG_DRIVER_MEM`` when set, else ~40% of the host's MemTotal
+    capped at 48g: a fixed 48g heap outgrows a small host, and the OOM
+    killer then takes the JVM (or a neighbour).  48g where
+    ``/proc/meminfo`` is unreadable."""
+    env = os.environ.get("SPARKLOG_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{_MAX_DRIVER_MB}m"
+    return f"{min(_MAX_DRIVER_MB, kb * 2 // 5 // 1024)}m"
+
 
 def get_spark(master: str | None = None, app: str = "sparklog",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -31,8 +50,7 @@ def get_spark(master: str | None = None, app: str = "sparklog",
         # fine (~2us/row compute) while keeping in-flight memory bounded.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARKLOG_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         # local-mode shuffle through one shared disk caps multi-core
         # scaling; tmpfs restores the per-node shuffle locality a real
         # cluster has (each executor spills to its own local disks)

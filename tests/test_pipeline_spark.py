@@ -111,10 +111,45 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     # dead-letter rows landed in their own sink partition
     dead = glob.glob(os.path.join(out_dir, "sinks", "*", "sink_class=dead"))
     assert dead
-    # the reported failure count is the dead-letter sink's row count
+    # the reported failure count is the dead-letter sink's row count, and
+    # the lineage observed on the sink write equals a read-back
+    sinks = spark.read.parquet(os.path.join(out_dir, "sinks"))
     assert stats["n_failed"] == (
-        spark.read.parquet(os.path.join(out_dir, "sinks"))
-        .where(F.col("sink_class") == "dead").count())
+        sinks.where(F.col("sink_class") == "dead").count())
+    lineage = snap["stages"]["sinks"]
+    assert (lineage["rows"], lineage["n_failed"]) == (
+        stats["rows"], stats["n_failed"])
+    assert {c: n for c, n in lineage["sink_rows"].items() if n} == {
+        r["sink_class"]: r["count"]
+        for r in sinks.groupBy("sink_class").count().collect()}
+
+
+def _table_rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_default_partitions_match_pinned(spark, tmp_path):
+    """The AQE-sized sink shuffle (the default) writes the same rows under
+    every rfc=/sink_class= directory as a pinned partition count, and the
+    same aggregates, metrics and counts."""
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(2000, seed=9),
+                                src_path, n_partitions=4)
+    outs = {n: str(tmp_path / f"out_{n}") for n in (None, 32)}
+    stats = {n: run_pipeline(spark, src_path, o, num_partitions=n)
+             for n, o in outs.items()}
+    assert stats[None]["rows"] == stats[32]["rows"] == 2000
+    assert stats[None]["n_failed"] == stats[32]["n_failed"]
+
+    def sink_dirs(out):
+        return {os.path.relpath(d, out): _table_rows(spark, d)
+                for d in glob.glob(os.path.join(out, "sinks", "rfc=*",
+                                                "sink_class=*"))}
+
+    assert sink_dirs(outs[None]) == sink_dirs(outs[32])
+    for table in ("aggregates", "metrics"):
+        assert (_table_rows(spark, os.path.join(outs[None], table))
+                == _table_rows(spark, os.path.join(outs[32], table)))
 
 
 def test_resume_after_kill_is_idempotent(spark, tmp_path):
@@ -144,6 +179,62 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
     # counts come from the committed sinks stage, so the resumed run
     # reports what the fresh run does
     assert stats["n_failed"] == fresh["n_failed"]
+
+
+def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
+    """A manifest whose sinks stage holds per-scan-partition ``lineage``
+    rows (the shape written before the counts were observed on the sink
+    write) resumes with the summed counts; a sinks stage with no counts
+    at all fails with a message that says to delete _manifests/."""
+    import json
+
+    from sparklog.lineage import Manifest
+
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(600, seed=4),
+                                src_path, n_partitions=2)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, src_path, out, fail_after="sinks")
+
+    def rewrite_sinks_info(info):
+        m = Manifest(out)
+        with open(os.path.join(m.dir, "CURRENT")) as f:
+            path = os.path.join(m.dir, f.read().strip())
+        with open(path) as f:
+            state = json.load(f)
+        committed = state["stages"]["sinks"]
+        state["stages"]["sinks"] = {
+            "committed_at": committed["committed_at"], **info}
+        with open(path, "w") as f:
+            json.dump(state, f)
+        return committed
+
+    observed = rewrite_sinks_info({"lineage": [
+        {"partition_id": 0, "n_rows": 250, "n_failed": 4},
+        {"partition_id": 1, "n_rows": 350, "n_failed": 7}]})
+    assert observed["rows"] == 600
+    stats = run_pipeline(spark, src_path, out)
+    assert stats["resumed_stages"] == ["sinks"]
+    assert (stats["rows"], stats["n_failed"]) == (600, 11)
+
+    rewrite_sinks_info({})
+    with pytest.raises(RuntimeError, match="delete .*_manifests/"):
+        run_pipeline(spark, src_path, out)
+
+
+def test_driver_memory_fits_host(monkeypatch):
+    """Without SPARKLOG_DRIVER_MEM the driver heap is ~40% of MemTotal,
+    capped at 48g; the variable still overrides it."""
+    from sparklog.session import _driver_memory
+
+    monkeypatch.setenv("SPARKLOG_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
+    monkeypatch.delenv("SPARKLOG_DRIVER_MEM")
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f
+                        if ln.startswith("MemTotal:"))
+    assert _driver_memory() == f"{min(48 * 1024, total_kb * 2 // 5 // 1024)}m"
 
 
 def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):

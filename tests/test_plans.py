@@ -48,6 +48,21 @@ def test_enrich_joins_are_broadcast(spark, tmp_path):
     assert "SortMergeJoin" not in plan
 
 
+def test_enrich_dims_are_jvm_local(spark, tmp_path):
+    """The dims are LocalRelations: a dim built from Python rows plans as
+    a LogicalRDD (ExistingRDD once physical), which costs every enriched
+    query one RDD job per dim before its broadcast."""
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(200, seed=2),
+                                src_path, n_partitions=1)
+    enriched = enrich(parse_stage(spark.read.parquet(src_path)), spark)
+    optimized = _optimized(enriched)
+    for rdd_node in ("LogicalRDD", "ExistingRDD"):
+        assert rdd_node not in optimized
+        assert rdd_node not in _plan(enriched)
+    assert optimized.count("LocalRelation") == 3
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, fixtures.synth_lines(200, seed=3),
