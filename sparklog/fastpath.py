@@ -62,11 +62,6 @@ RX_5424 = (
 )
 
 
-def _cast0(arr, typ=pa.int64()):
-    """Cast digit strings to int; '' (absent optional group) -> 0."""
-    return pc.cast(pc.if_else(pc.equal(arr, ""), "0", arr), typ)
-
-
 def _np(arr) -> np.ndarray:
     return arr.to_numpy(zero_copy_only=False)
 

@@ -180,11 +180,6 @@ def _slice_from(s: pd.Series, start) -> pd.Series:
     return out
 
 
-def _char_at(s: pd.Series, pos) -> pd.Series:
-    """Per-row single char at bounded distinct positions ('' past end)."""
-    return _slice_from(s, pos).str.slice(0, 1)
-
-
 def _set_err(err: pd.Series, mask, code: str) -> None:
     m = pd.Series(mask, index=err.index).fillna(False).astype(bool) & err.isna()
     if m.any():

@@ -52,29 +52,35 @@ def streaming_hourly_counts(stream: DataFrame,
                     "n_events"))
 
 
-def start_streaming_job(spark: SparkSession, src_dir: str, out_dir: str,
-                        checkpoint: str, cfg: ParseConfig | None = None):
-    """Fan-out sink writer via foreachBatch: exactly-once-per-epoch writes
-    partitioned by (epoch, rfc, sink_class), checkpointed for resume.
-
-    Idempotence: each epoch writes under its own epoch=<id> partition with
-    dynamic-partition OVERWRITE, so a failure between a partial write and
-    the checkpoint commit is repaired by the replay overwriting exactly
-    that epoch's partitions (a blind append would duplicate rows)."""
-    from .enrich import enrich
-
-    parsed = with_route_columns(
-        enrich(parse_stage(read_token_stream(spark, src_dir), cfg), spark))
-
+def _epoch_writer(path: str, *partition_cols: str):
+    """The foreachBatch writer of every streaming job: exactly once per
+    epoch, under its own epoch=<id> partition (then ``partition_cols``)
+    with dynamic-partition OVERWRITE, so a failure between a partial
+    write and the checkpoint commit is repaired by the replay overwriting
+    exactly that epoch's partitions (a blind append would duplicate
+    rows)."""
     def write_epoch(df: DataFrame, epoch_id: int) -> None:
         (df.withColumn("epoch", F.lit(epoch_id))
            .write.mode("overwrite")
            .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("epoch", "rfc", "sink_class")
-           .parquet(f"{out_dir}/sinks"))
+           .partitionBy("epoch", *partition_cols)
+           .parquet(path))
 
+    return write_epoch
+
+
+def start_streaming_job(spark: SparkSession, src_dir: str, out_dir: str,
+                        checkpoint: str, cfg: ParseConfig | None = None):
+    """Fan-out sink writer via foreachBatch (_epoch_writer): exactly-once-
+    per-epoch writes partitioned by (epoch, rfc, sink_class),
+    checkpointed for resume."""
+    from .enrich import enrich
+
+    parsed = with_route_columns(
+        enrich(parse_stage(read_token_stream(spark, src_dir), cfg), spark))
     return (parsed.writeStream
-            .foreachBatch(write_epoch)
+            .foreachBatch(_epoch_writer(f"{out_dir}/sinks", "rfc",
+                                        "sink_class"))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
@@ -133,28 +139,18 @@ def user_state_stream(stream: DataFrame) -> DataFrame:
 
 def run_user_state_job(spark: SparkSession, events_dir: str, out_dir: str,
                        checkpoint: str) -> DataFrame:
-    """PRODUCTION-shape run of the stateful per-user aggregate: the
-    update-mode emissions land in an epoch-partitioned parquet sink via
-    foreachBatch (exactly-once per epoch: dynamic-partition overwrite
-    under epoch=<id>, the same idempotent-replay recipe as
-    start_streaming_job), and the final per-user row is reduced from the
-    sink DISTRIBUTEDLY.  Nothing accumulates on the driver at any corpus
-    size — use this, not run_user_state_batch, on a cluster."""
+    """The stateful per-user aggregate, run to completion: the
+    update-mode emissions land in an epoch-partitioned parquet sink
+    (_epoch_writer), and the final per-user row is reduced from the sink
+    DISTRIBUTEDLY, so nothing accumulates on the driver at any corpus
+    size."""
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(events_dir))
-
-    def write_epoch(df: DataFrame, epoch_id: int) -> None:
-        (df.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("epoch")
-           .parquet(f"{out_dir}/user_state"))
-
     q = (user_state_stream(stream)
          .writeStream
-         .foreachBatch(write_epoch)
+         .foreachBatch(_epoch_writer(f"{out_dir}/user_state"))
          .outputMode("update")
          .option("checkpointLocation", checkpoint)
          .trigger(availableNow=True)
@@ -175,38 +171,6 @@ def read_user_state_result(spark: SparkSession, out_dir: str) -> DataFrame:
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn", "epoch"))
-
-
-def run_user_state_batch(spark: SparkSession, events_dir: str,
-                         checkpoint: str,
-                         name: str = "user_state_sink") -> DataFrame:
-    """ORACLE-HARNESS-ONLY variant: the update-mode MEMORY sink
-    accumulates one row per (user, epoch-with-changes) on the DRIVER, and
-    the final (max n_events) row per user is the complete aggregate.
-    Driver-bound by construction — convenient for the DuckDB parity gate,
-    wrong for a cluster; the production path is run_user_state_job's
-    foreachBatch parquet sink."""
-    from pyspark.sql.window import Window
-
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    schema = spark.read.parquet(events_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(events_dir))
-    q = (user_state_stream(stream)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (spark.table(name)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn"))
 
 
 def run_streaming_hourly_batch(spark: SparkSession, tokens_dir: str,
@@ -244,7 +208,7 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
     probes the STATIC corpus's key/band tables per epoch (stream-static
     via foreachBatch, so each epoch runs the exact batch probe operator
     — queries._probe_corpus_flags), writing per-epoch flag rows with the
-    same epoch-partition overwrite idempotence as start_streaming_job.
+    same epoch-partition overwrite idempotence (_epoch_writer).
 
     The corpus tables are prepared ONCE, deduplicated to unique keys,
     and persisted — they are the artifacts a nightly run_dedup
@@ -257,22 +221,20 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
     per-epoch one — which is exactly why the unioned epoch outputs equal
     the batch operator's corpus-facing flags regardless of how the file
     source splits epochs."""
-    from .queries import _gk, _gk_bands, _probe_corpus_flags
+    from .queries import _collapse, _gk_bands, _probe_corpus_flags, _text_key
 
-    cdocs = corpus.where(F.col("text").isNotNull())
-    c_gks = cdocs.select(_gk().alias("gk")).distinct().persist()
-    c_bands = _gk_bands(
-        cdocs.groupBy(_gk().alias("gk"))
-             .agg(F.min("text").alias("text"))).persist()
+    c_keyed, c_grp = _collapse(corpus.where(F.col("text").isNotNull()),
+                               _text_key("text"), "doc_id",
+                               text=F.min("text"))
+    c_gks = c_keyed.select("gk").distinct().persist()
+    c_bands = _gk_bands(c_grp).persist()
+
+    write = _epoch_writer(out_dir)
 
     def write_epoch(df: DataFrame, epoch_id: int) -> None:
         _, _, probe = _probe_corpus_flags(df, c_gks, c_bands, F.broadcast)
-        (probe.select("doc_id", "exact_dup_corpus", "near_dup_corpus")
-              .withColumn("epoch", F.lit(epoch_id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch")
-              .parquet(out_dir))
+        write(probe.select("doc_id", "exact_dup_corpus", "near_dup_corpus"),
+              epoch_id)
 
     try:
         q = (spark.readStream.schema(DOCS_STREAM_SCHEMA)

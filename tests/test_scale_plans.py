@@ -4,6 +4,8 @@ properties of the PHYSICAL plan, because the failure modes they guard
 correctness tests at small SF.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -15,6 +17,40 @@ SF = "/root/testdata/sf0.001"
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+def _executed_plans(spark, run) -> str:
+    """The formatted physical plans of every SQL execution ``run()``
+    starts, read back from the SQL status store: the plan of an op that
+    collects internally or runs a stream never reaches the caller as a
+    DataFrame."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    seen = {e.executionId() for e in executions()}
+    run()
+    return "\n".join(e.physicalPlanDescription() for e in executions()
+                     if e.executionId() not in seen)
+
+
+def _op_ids(plan: str, op: str) -> set:
+    """Ids of the ``op`` nodes of a formatted plan, read from both the
+    tree (``+- op (N)``) and the details (``(N) op``) sections, so a
+    re-indented or re-ordered rendering still counts each node once."""
+    tree = re.findall(rf"(?<![\w]){op}\s*\((\d+)\)", plan)
+    details = re.findall(rf"^\s*\((\d+)\)\s+{op}\b", plan, re.M)
+    return set(tree) | set(details)
+
+
+def _pushed_filter(plan: str, pred: str) -> bool:
+    """Whether a scan's PushedFilters list holds ``pred`` (e.g.
+    ``LessThan(vec_id,20)``), whitespace inside the predicate ignored."""
+    body = r"\s*".join(map(re.escape, re.sub(r"\s+", "", pred)))
+    return re.search(rf"PushedFilters:\s*\[[^\]]*\b{body}", plan) is not None
 
 
 def test_minhash_signature_subtree_once(spark):
@@ -203,19 +239,34 @@ def test_dedup_group_keys_are_non_nullable_no_double_hash(spark):
     """A NULLABLE group-key expression (md5 over a nullable column) makes
     Catalyst keep the joins' pushed-down isnotnull(gk) predicates, which
     inline a SECOND full-text md5 per row into every filter branch —
-    measured ~15% of dedup_ngram_jaccard's x100 wall time.  The keys are
-    deliberately built on non-nullable expressions (concat_ws/coalesce)
-    so the predicate is simplified away; assert it stays gone."""
-    from sparklog.queries import (
-        dedup_connected_components,
-        dedup_minhash_lsh,
-        dedup_ngram_jaccard,
-    )
+    measured ~15% of dedup_ngram_jaccard's x100 wall time.  Every
+    collapse-first op keys its texts through queries._text_key, the
+    non-nullable length-prefixed md5(concat_ws(length(c), c, ...)):
+    assert on every such op's plans that the predicate stays gone and
+    that no other text key (a bare or coalesced md5(text), an
+    isnull-flag concat) is back."""
+    from sparklog import queries as q
 
-    for fn in (dedup_ngram_jaccard, dedup_minhash_lsh,
-               dedup_connected_components):
-        plan = _plan(fn(spark, SF))
-        assert "isnotnull(md5" not in plan, fn.__name__
+    ops = (q.dedup_ngram_jaccard, q.dedup_minhash_lsh,
+           q.dedup_connected_components, q.dedup_incremental,
+           q.dedup_substring, q.dedup_substring_sampled,
+           q.dedup_substring_excise, q.text_repetition_scores,
+           q.pii_scrub_documents, q.curate_documents, q.curate_corpus,
+           q.pack_sequences, q.decontaminate_benchmark,
+           q.decontaminate_benchmark_tokens, q.token_vocab_topk)
+    plans = {fn.__name__: _plan(fn(spark, SF)) for fn in ops}
+    plans["_bpe_merges"] = _executed_plans(
+        spark, lambda: q._bpe_merges(spark, SF))
+    plans["streaming_incremental_dedup"] = _executed_plans(
+        spark, lambda: q.streaming_incremental_dedup(spark, SF).count())
+    q.release_caches()
+    for name, plan in plans.items():
+        assert "concat_ws" in plan, name     # the plan was captured
+        assert "isnotnull(md5" not in plan, name
+        assert not re.search(r"md5\(cast\((coalesce\()?text#", plan), name
+        heads = re.findall(r"md5\(cast\(concat_ws\([^,]*, ([^,]*),", plan)
+        assert heads and all(h.startswith("cast(length(") for h in heads), (
+            name, heads)
 
 
 def test_vocab_and_mixture_totals_share_single_scan(spark):
@@ -230,7 +281,7 @@ def test_vocab_and_mixture_totals_share_single_scan(spark):
 
     pv = _plan(token_vocab_topk(spark, SF))
     assert pv.count("Location:") == 1, pv       # one scan instance
-    assert pv.count("MapInArrow (") == 1, pv    # BPE kernel runs once
+    assert len(_op_ids(pv, "MapInArrow")) == 1, pv   # BPE kernel once
     pm = _plan(mixture_source_weights(spark, SF))
     assert pm.count("Location:") == 1, pm
 
@@ -256,7 +307,7 @@ def test_token_vocab_topk_counting_is_linear(spark):
     assert "size(filter(" not in p, p
     assert p.count("hashpartitioning") == 2, p
     assert "SinglePartition" in p, p
-    assert p.count("MapInArrow (") == 1, p   # tree form: once
+    assert len(_op_ids(p, "MapInArrow")) == 1, p
 
 
 def test_curate_documents_plan_shape(spark):
@@ -384,5 +435,5 @@ def test_ann_ivf_plan_one_full_assignment_no_interpreted_fold(spark):
     p = _plan(ann_ivf_topk(spark, SF))
     assert "zip_with" not in p, p
     # corpus assignment + query-probe kernel + pair-cosine kernel
-    assert p.count("MapInArrow (") == 3, p
-    assert "LessThan(vec_id,20)" in p, p
+    assert len(_op_ids(p, "MapInArrow")) == 3, p
+    assert _pushed_filter(p, "LessThan(vec_id,20)"), p
