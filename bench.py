@@ -181,16 +181,36 @@ def main() -> None:
     out["pipeline_rows"] = BENCH_ROWS
     out["pipeline_rows_per_sec"] = round(BENCH_ROWS / pipe_sec, 1)
 
-    # per-run dedup observability (untimed): the cap-cascade metrics table
-    # a production dedup invocation writes next to its outputs
-    from sparklog.queries import dedup_path_metrics
+    # per-run dedup observability (untimed): the cap-cascade metrics rows
+    # a production run_dedup commits beside its outputs, plus the ANN LSH
+    # path's row (run_dedup runs no ANN plan) from the same counter
+    import shutil
+    import tempfile
 
-    out["dedup_bucket_metrics"] = {r["path"]: {
-        k: r[k] for k in ("n_rows", "n_buckets", "n_over_cap_buckets",
-                          "n_refined_rows", "n_salted_rows",
-                          "n_dropped_rows", "cc_iterations",
-                          "cc_converged", "n_components")}
-        for r in dedup_path_metrics(spark, sf01_dir).collect()}
+    from sparklog.pipeline import run_dedup
+    from sparklog.queries import (
+        LSH_BUCKET_CAP,
+        _embeddings_v,
+        _lsh_keyed,
+        _lsh_nplanes,
+        _table_rowcount,
+        _vector_collapse,
+        bucket_split_stats,
+    )
+
+    dedup_out = tempfile.mkdtemp(prefix="sparklog_bench_dedup_")
+    bm = run_dedup(spark, sf01_dir, dedup_out)["bucket_metrics"]
+    shutil.rmtree(dedup_out, ignore_errors=True)
+    # ann_lsh_near_pairs buckets the collapsed unique vectors, so its row
+    # meters that rep-level keyed table
+    n_vecs = _table_rowcount(spark, sf01_dir, "embeddings")
+    _vk, reps, _vm = _vector_collapse(_embeddings_v(spark, sf01_dir))
+    keyed_lsh, refine = _lsh_keyed(reps, _lsh_nplanes(n_vecs))
+    ann = bucket_split_stats(keyed_lsh, "bucket", "vec_id", LSH_BUCKET_CAP,
+                             refine=refine, approx_rows=n_vecs
+                             ).collect()[0].asDict()
+    bm["ann_lsh_buckets"] = {k: ann.get(k) for k in bm["minhash_bands"]}
+    out["dedup_bucket_metrics"] = bm
     release_caches()
 
     print(json.dumps(out))

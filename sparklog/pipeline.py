@@ -146,59 +146,119 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     return stats
 
 
+# run_dedup's bucket_metrics columns: the cascade counters, then the CC
+# convergence stats; a row leaves NULL the columns its path has not
+_BUCKET_METRICS = (("n_rows", "long"), ("n_buckets", "long"),
+                   ("n_over_cap_buckets", "long"), ("n_refined_rows", "long"),
+                   ("n_salted_rows", "long"), ("n_dropped_rows", "long"),
+                   ("cc_iterations", "long"), ("cc_converged", "boolean"),
+                   ("n_components", "long"))
+
+
+def _bucket_metrics(done: dict) -> dict:
+    """path -> row of the metrics rows the near_dup_pairs, components and
+    substring_runs stages committed, every column present."""
+    rows: dict = {}
+    for stage in ("near_dup_pairs", "components", "substring_runs"):
+        if "bucket_metrics" not in done[stage]:
+            raise RuntimeError(f"the committed {stage} stage carries no "
+                               "bucket metrics; delete the output's "
+                               "_manifests/ to rerun the job")
+        rows.update(done[stage]["bucket_metrics"])
+    return {path: {c: row.get(c) for c, _t in _BUCKET_METRICS}
+            for path, row in rows.items()}
+
+
 def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """Dedup job over the documents/embeddings tables: near-dup pairs, the
-    component partition (what downstream keep-one-per-component actually
-    consumes), the maximal cross-doc substring runs (round 7 — what an
-    excision pass consumes), and the per-path cap-cascade observability
+    """Dedup job over the documents table: near-dup pairs, the component
+    partition (what downstream keep-one-per-component actually
+    consumes), the maximal cross-doc substring runs (round 7 — the
+    (doc_a, doc_b, offset_a, offset_b, match_len) rows an excision pass
+    consumes: doc-level outputs cannot see a long block shared inside
+    two distinct pages), and the per-path cap-cascade observability
     table — written with the same manifest/stage pattern as
     run_pipeline, metrics beside outputs the way parse_metrics sits
-    beside the sinks."""
+    beside the sinks.
+
+    The MinHash rep graph is built once, by near_dup_pairs, which
+    persists its (doc_id, rep) membership and (a, b) rep pairs under
+    ``rep_graph/`` for the components stage (and for a resume).  Each
+    stage commits the metrics row of the cascade it ran
+    (bucket_split_stats, _cc_stats, _substring_window_stats), and
+    dedup_metrics only writes those committed rows out."""
     from .queries import (
-        dedup_components_with_stats,
-        dedup_minhash_lsh,
-        dedup_path_metrics,
+        LSH_BUCKET_CAP,
+        _cc_core,
+        _cc_stats,
+        _minhash_pairs,
+        _minhash_rep_graph,
+        _persist,
+        _substring_window_stats,
+        bucket_split_stats,
         dedup_substring,
         release_caches,
     )
 
-    def _save(df, name):
+    graph = [os.path.join(out_dir, "rep_graph", t)
+             for t in ("membership", "rep_pairs")]
+
+    def _save(df, name, **metrics):
         info = _write(df, os.path.join(out_dir, name))
         release_caches()
-        return info
+        return {**info, "bucket_metrics": metrics}
+
+    def _row(df):
+        return df.collect()[0].asDict()
+
+    def _pairs(_):
+        exact, membership, rep_pairs, bands, n_docs = _minhash_rep_graph(
+            spark, sf_dir)
+        _persist(bands)   # read by the rep pairs and by their meter
+        _write(membership, graph[0])
+        _write(rep_pairs, graph[1])
+        bands_row = _row(bucket_split_stats(
+            bands, "band", "doc_id", LSH_BUCKET_CAP, refine=F.col("fullsig"),
+            approx_rows=2 * n_docs))
+        exact_row = _row(bucket_split_stats(
+            exact, "gk", "doc_id", LSH_BUCKET_CAP, approx_rows=n_docs))
+        pairs = _minhash_pairs(exact, membership,
+                               spark.read.parquet(graph[1]), n_docs)
+        return _save(pairs, "near_dup_pairs", minhash_bands=bands_row,
+                     exact_text_groups=exact_row)
 
     def _components(_):
-        df, cc = dedup_components_with_stats(spark, sf_dir)
-        return {**_save(df, "components"), "cc": cc}
+        # a manifest from before the graph was persisted resumes here
+        # with nothing to read: stop rather than build the graph again
+        if not all(os.path.isdir(p) for p in graph):
+            raise RuntimeError("the committed near_dup_pairs stage left no "
+                               "rep_graph/; delete the output's "
+                               "_manifests/ to rerun the job")
+        df, *cc = _cc_core(*(spark.read.parquet(p) for p in graph))
+        return _save(df, "components", minhash_components=_cc_stats(*cc))
+
+    def _substring(_):
+        return _save(dedup_substring(spark, sf_dir), "substring_runs",
+                     substring_windows=_row(
+                         _substring_window_stats(spark, sf_dir)))
 
     def _metrics(done):
-        # reuse the components stage's propagation stats (committed in
-        # its manifest info) instead of running the CC loop a second time
-        _save(dedup_path_metrics(spark, sf_dir,
-                                 cc_stats=done["components"]["cc"])
-              .repartition(1), "dedup_metrics")
-        dm = spark.read.parquet(os.path.join(out_dir, "dedup_metrics"))
-        return {"bucket_metrics": {
-            r["path"]: {k: v for k, v in r.asDict().items() if k != "path"}
-            for r in dm.collect()}}
+        rows = [(path, *row.values())
+                for path, row in _bucket_metrics(done).items()]
+        schema = ", ".join(["path string"] + [f"{c} {t}"
+                                              for c, t in _BUCKET_METRICS])
+        return _write(spark.createDataFrame(rows, schema).coalesce(1),
+                      os.path.join(out_dir, "dedup_metrics"))
 
-    # substring_runs: maximal cross-doc verbatim runs (round 7) — the
-    # doc-level pair/component outputs cannot see a long shared block
-    # inside two distinct pages; downstream excision/dedup tooling
-    # consumes these (doc_a, doc_b, offset_a, offset_b, match_len) rows
     stats, done = _run_job(out_dir, [
-        ("near_dup_pairs",
-         lambda _: _save(dedup_minhash_lsh(spark, sf_dir), "near_dup_pairs")),
-        ("components", _components),
-        ("substring_runs",
-         lambda _: _save(dedup_substring(spark, sf_dir), "substring_runs")),
-        ("dedup_metrics", _metrics)])
+        ("near_dup_pairs", _pairs), ("components", _components),
+        ("substring_runs", _substring), ("dedup_metrics", _metrics)])
     stats["n_pairs"] = done["near_dup_pairs"]["rows"]
     stats["n_substring_runs"] = done["substring_runs"]["rows"]
+    stats["bucket_metrics"] = _bucket_metrics(done)
     # every membership rep is a label vertex, so the distinct labels are
     # exactly the distinct component_rep values written
-    stats["n_components"] = done["components"]["cc"]["n_components"]
-    stats["bucket_metrics"] = done["dedup_metrics"]["bucket_metrics"]
+    stats["n_components"] = (stats["bucket_metrics"]["minhash_components"]
+                             ["n_components"])
     return stats
 
 

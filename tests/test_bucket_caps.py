@@ -12,6 +12,8 @@ then SALT-SPLIT, never dropped.  The properties proven here:
       dropped rows.
 """
 
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -430,18 +432,16 @@ def test_ivf_zero_norm_vector_oracle_parity(spark, tmp_path):
                                    check_names=False)
 
 
-def test_path_metrics_reports_cc_convergence(spark):
-    """dedup_path_metrics carries a `minhash_components` row with the CC
+def test_path_metrics_reports_cc_convergence(spark, tmp_path):
+    """run_dedup's metrics carry a `minhash_components` row with the CC
     closer's iteration count and final component count (round-4 judge
     item #6), alongside the per-path cascade rows."""
-    from sparklog.queries import (
-        dedup_connected_components,
-        dedup_path_metrics,
-        release_caches,
-    )
+    from sparklog.pipeline import run_dedup
+    from sparklog.queries import dedup_connected_components, release_caches
 
     sf = "/root/testdata/sf0.001"
-    rows = {r.path: r for r in dedup_path_metrics(spark, sf).collect()}
+    rows = {path: SimpleNamespace(**row) for path, row in run_dedup(
+        spark, sf, str(tmp_path / "dedup"))["bucket_metrics"].items()}
     cc = rows["minhash_components"]
     assert cc.cc_iterations >= 1
     assert cc.cc_converged is True
@@ -464,6 +464,88 @@ def test_path_metrics_reports_cc_convergence(spark):
               .select("component_rep").distinct().count())
     assert cc.n_components == n_comp
     release_caches()
+
+
+@pytest.fixture(scope="module")
+def overcap_docs_dir(spark, tmp_path_factory):
+    """Every cascade over the default cap at once:
+    * one text with 1,030 copies (an over-cap exact-text group);
+    * 1,030 DISTINCT texts over the words {ka, kb} that each contain all
+      eight 3-word shingles of that alphabet, so they share one full
+      MinHash signature and overflow both band buckets even after the
+      refine level (salted);
+    * 70 unique texts sharing one 20-word block, whose one window bucket
+      exceeds the substring cap of 64 (dropped)."""
+    import itertools
+
+    words = ("ka", "kb")
+    every = set(itertools.product(words, repeat=3))
+    family = [" ".join(seq) for seq in itertools.product(words, repeat=14)
+              if {seq[i:i + 3] for i in range(12)} == every][:1030]
+    block = " ".join(f"blk{i}" for i in range(20))
+    texts = (["the same viral post copied across the whole web"] * 1030
+             + family
+             + [" ".join([f"pre{j}x{i}" for i in range(5)] + [block]
+                         + [f"post{j}x{i}" for i in range(5)])
+                for j in range(70)])
+    assert len(family) == 1030
+    d = str(tmp_path_factory.mktemp("overcap"))
+    (spark.createDataFrame([(i, t, "en", "web") for i, t in enumerate(texts)],
+                           "doc_id long, text string, lang string, "
+                           "source string")
+     .coalesce(2).write.parquet(f"{d}/documents.parquet"))
+    return d, texts
+
+
+def test_run_dedup_meters_overcap_cascades(spark, tmp_path,
+                                           overcap_docs_dir):
+    """At the default LSH_BUCKET_CAP, run_dedup's minhash_bands,
+    exact_text_groups and substring_windows rows equal references the
+    test computes itself: bucket_split_stats over keyed tables built
+    here for the two cascades, a plain count per window for the
+    substring drop."""
+    from collections import Counter
+
+    from sparklog.pipeline import run_dedup
+    from sparklog.queries import (
+        _SUBSTR_CAP,
+        _SUBSTR_W,
+        LSH_BUCKET_CAP,
+        _sig_bands,
+        release_caches,
+    )
+
+    d, texts = overcap_docs_dir
+    m = run_dedup(spark, d, str(tmp_path / "dedup"))["bucket_metrics"]
+    release_caches()
+
+    def stats(keyed, key, refine=None):
+        row = bucket_split_stats(keyed, key, "doc_id", LSH_BUCKET_CAP,
+                                 refine=refine).collect()[0].asDict()
+        return {**row, "cc_iterations": None, "cc_converged": None,
+                "n_components": None}
+
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    reps = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    bands = stats(_sig_bands(reps, "doc_id"), "band", F.col("fullsig"))
+    exact = stats(docs.where(F.size(F.split("text", " ")) >= 3), "text")
+    assert m["minhash_bands"] == bands
+    assert m["exact_text_groups"] == exact
+    for row in (bands, exact):
+        assert row["n_over_cap_buckets"] > 0 and row["n_salted_rows"] > 0
+    assert bands["n_over_cap_buckets"] == 2       # both bands
+    assert exact["n_salted_rows"] == 1030         # the viral copies
+
+    windows = Counter(tuple(w[i:i + _SUBSTR_W])
+                      for w in (t.split(" ") for t in set(texts))
+                      for i in range(len(w) - _SUBSTR_W + 1))
+    over = [n for n in windows.values() if n > _SUBSTR_CAP]
+    sw = m["substring_windows"]
+    assert (sw["n_rows"], sw["n_buckets"], sw["n_over_cap_buckets"],
+            sw["n_dropped_rows"]) == (sum(windows.values()), len(windows),
+                                      len(over), sum(over))
+    assert sw["n_dropped_rows"] == 70
+    assert sw["n_refined_rows"] is None and sw["n_salted_rows"] is None
 
 
 def test_cc_labels_reports_truncation_distinctly(spark):

@@ -337,25 +337,44 @@ def test_injected_config_goldens_through_spark(spark, tmp_path):
                 assert row[field] == want, (field, row[field], want)
 
 
-def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path):
+def _count_graph_builds(monkeypatch) -> list:
+    """Wrap queries._minhash_rep_graph so every build is recorded."""
+    from sparklog import queries
+
+    calls = []
+    build = queries._minhash_rep_graph
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(queries, "_minhash_rep_graph", counted)
+    return calls
+
+
+def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path,
+                                                     monkeypatch):
     """The dedup job writes pairs + the component partition + the per-path
     cap-cascade metrics table (round-3 judge item #5: observability per
-    invocation, like parse_metrics beside the sinks), and resumes stages
-    idempotently through the manifest."""
+    invocation, like parse_metrics beside the sinks), builds the MinHash
+    rep graph once, and resumes stages idempotently through the
+    manifest."""
     import os
 
     from sparklog.pipeline import run_dedup
 
+    builds = _count_graph_builds(monkeypatch)
     out = str(tmp_path / "dedup_out")
     stats = run_dedup(spark, "/root/testdata/sf0.001", out)
+    assert len(builds) == 1
     assert stats["n_pairs"] >= 0 and stats["n_components"] > 0
     assert stats["n_substring_runs"] >= 0
     assert os.path.exists(os.path.join(out, "substring_runs"))
-    # one metrics row per dedup path, all cascade counters present
+    # one metrics row per path the job runs, all cascade counters present
+    # (the ANN LSH row is bench.py's: the job runs no ANN plan)
     m = stats["bucket_metrics"]
     assert set(m) == {"minhash_bands", "exact_text_groups",
-                      "ann_lsh_buckets", "substring_windows",
-                      "minhash_components"}
+                      "substring_windows", "minhash_components"}
     for name, row in m.items():
         assert row["n_rows"] > 0
         if name == "minhash_components":   # CC convergence row (round 5)
@@ -363,7 +382,10 @@ def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path):
             assert row["n_components"] >= 1
         else:
             assert row["n_dropped_rows"] == 0  # hard guard never fires
-    assert os.path.exists(os.path.join(out, "dedup_metrics"))
+    # the dedup_metrics table holds exactly the reported rows
+    dm = spark.read.parquet(os.path.join(out, "dedup_metrics")).collect()
+    assert {r["path"]: {k: v for k, v in r.asDict().items() if k != "path"}
+            for r in dm} == m
     # reported counts equal what the job wrote
     counts = ("n_pairs", "n_substring_runs", "n_components")
     assert [stats[k] for k in counts] == [
@@ -371,13 +393,57 @@ def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path):
         spark.read.parquet(os.path.join(out, "substring_runs")).count(),
         spark.read.parquet(os.path.join(out, "components"))
         .select("component_rep").distinct().count()]
-    # rerun resumes every stage from the manifest
+    # rerun resumes every stage from the manifest, building no graph
     again = run_dedup(spark, "/root/testdata/sf0.001", out)
+    assert len(builds) == 1
     assert set(again["resumed_stages"]) == {"near_dup_pairs", "components",
                                             "substring_runs",
                                             "dedup_metrics"}
     assert again["bucket_metrics"] == m
     assert [again[k] for k in counts] == [stats[k] for k in counts]
+
+
+def test_run_dedup_resumes_from_persisted_rep_graph(spark, tmp_path,
+                                                    monkeypatch):
+    """A run killed after near_dup_pairs resumes its components stage
+    from the rep graph that stage persisted (zero graph builds), with the
+    components of an uninterrupted run.  A manifest that committed
+    near_dup_pairs without persisting the graph (the shape written before
+    the graph was persisted) fails with a message that says to delete
+    _manifests/, and never rebuilds the graph."""
+    import os
+
+    from sparklog import queries
+    from sparklog.lineage import Manifest
+    from sparklog.pipeline import run_dedup
+
+    sf = "/root/testdata/sf0.001"
+    out = str(tmp_path / "killed")
+    cc_core = queries._cc_core
+
+    def killed(*_args):
+        raise RuntimeError("killed in components")
+
+    monkeypatch.setattr(queries, "_cc_core", killed)
+    with pytest.raises(RuntimeError, match="killed in components"):
+        run_dedup(spark, sf, out)
+    monkeypatch.setattr(queries, "_cc_core", cc_core)
+    builds = _count_graph_builds(monkeypatch)
+    stats = run_dedup(spark, sf, out)
+    assert builds == []
+    assert stats["resumed_stages"] == ["near_dup_pairs"]
+    want = queries.dedup_connected_components(spark, sf)
+    got = spark.read.parquet(os.path.join(out, "components"))
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert stats["n_components"] == (want.select("component_rep")
+                                     .distinct().count())
+    queries.release_caches()
+
+    old = str(tmp_path / "old")
+    Manifest(old).commit_stage("near_dup_pairs", {"rows": 0})
+    with pytest.raises(RuntimeError, match="delete .*_manifests/"):
+        run_dedup(spark, sf, old)
+    assert len(builds) == 1   # dedup_connected_components above
 
 
 def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):

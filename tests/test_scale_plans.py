@@ -46,6 +46,23 @@ def _op_ids(plan: str, op: str) -> set:
     return set(tree) | set(details)
 
 
+def _scan_ids(plan: str) -> set:
+    """Ids of the parquet file-scan nodes of a formatted plan: one per
+    scan instance, counted by node id rather than by a details line."""
+    return _op_ids(plan, "Scan parquet")
+
+
+def _hash_exchange_ids(plan: str) -> set:
+    """Ids of the hash-partitioned ``Exchange`` nodes of a formatted
+    plan: the details entry ``(N) Exchange`` whose Arguments start with
+    ``hashpartitioning(`` (a broadcast, single-partition or range
+    exchange does not count)."""
+    entries = re.finditer(r"^\s*\((\d+)\)\s+Exchange\b(.*?)(?=\n\s*\n|\Z)",
+                          plan, re.M | re.S)
+    return {m.group(1) for m in entries
+            if re.search(r"Arguments:\s*hashpartitioning\(", m.group(2))}
+
+
 def _pushed_filter(plan: str, pred: str) -> bool:
     """Whether a scan's PushedFilters list holds ``pred`` (e.g.
     ``LessThan(vec_id,20)``), whitespace inside the predicate ignored."""
@@ -80,7 +97,7 @@ def test_minhash_signature_subtree_once(spark):
     # signature exchange, so AQE still materializes it once (asserted
     # below via the repeated stage id).
     assert plan.count("partial_min(substring") == 24, plan
-    assert plan.count("Location:") <= 24, plan
+    assert len(_scan_ids(plan)) <= 24, plan
     df.write.format("noop").mode("overwrite").save()
     ep = df._jdf.queryExecution().executedPlan().toString()
     stage_ids = re.findall(r"ShuffleQueryStage (\d+)", ep)
@@ -280,10 +297,10 @@ def test_vocab_and_mixture_totals_share_single_scan(spark):
     from sparklog.queries import mixture_source_weights, token_vocab_topk
 
     pv = _plan(token_vocab_topk(spark, SF))
-    assert pv.count("Location:") == 1, pv       # one scan instance
+    assert len(_scan_ids(pv)) == 1, pv       # one scan instance
     assert len(_op_ids(pv, "MapInArrow")) == 1, pv   # BPE kernel once
     pm = _plan(mixture_source_weights(spark, SF))
-    assert pm.count("Location:") == 1, pm
+    assert len(_scan_ids(pm)) == 1, pm
 
 
 def test_token_vocab_topk_counting_is_linear(spark):
@@ -305,7 +322,7 @@ def test_token_vocab_topk_counting_is_linear(spark):
     p = _plan(token_vocab_topk(spark, SF))
     assert "array_distinct" not in p, p
     assert "size(filter(" not in p, p
-    assert p.count("hashpartitioning") == 2, p
+    assert len(_hash_exchange_ids(p)) == 2, p
     assert "SinglePartition" in p, p
     assert len(_op_ids(p, "MapInArrow")) == 1, p
 
@@ -321,7 +338,7 @@ def test_curate_documents_plan_shape(spark):
     from sparklog.queries import curate_documents
 
     p = _plan(curate_documents(spark, SF))
-    assert p.count("Location:") == 2, p
+    assert len(_scan_ids(p)) == 2, p
     assert p.count("regexp_replace") == 3, p
     assert p.count("regexp_extract_all") == 1, p
     assert p.count("split(") == 1, p
@@ -339,7 +356,7 @@ def test_url_domain_topk_plan_shape(spark):
     from sparklog.queries import url_domain_topk
 
     p = _plan(url_domain_topk(spark, SF))
-    assert p.count("Location:") == 1, p
+    assert len(_scan_ids(p)) == 1, p
     assert "TakeOrderedAndProject" in p, p
     assert "partial_count" in p, p              # map-side combine
     assert "BroadcastHashJoin" in p, p          # blocklist dim
@@ -359,7 +376,7 @@ def test_curate_corpus_plan_prunes_passthrough_from_group_branch(spark):
     from sparklog.queries import curate_corpus
 
     p = _plan(curate_corpus(spark, SF))
-    assert p.count("Location:") == 2, p
+    assert len(_scan_ids(p)) == 2, p
     assert p.count("regexp_replace") == 3, p
     schemas = re.findall(r"ReadSchema: (\S+)", p)
     assert len(schemas) == 2, p
