@@ -81,13 +81,10 @@ def partition_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 def sinks_counts(info: dict) -> tuple[int, int]:
-    """(rows, n_failed) of a committed sinks stage.  A manifest written
-    before the counts were observed on the write holds per-scan-partition
-    ``lineage`` rows instead, whose sums are the same counts."""
+    """(rows, n_failed) of a committed sinks stage, as observed on its
+    write.  A stage committed without them (a manifest from before the
+    counts were observed on the write) cannot resume."""
     if "rows" in info:
         return info["rows"], info["n_failed"]
-    if "lineage" in info:
-        return (sum(r["n_rows"] for r in info["lineage"]),
-                sum(r["n_failed"] for r in info["lineage"]))
     raise RuntimeError("the committed sinks stage carries no row counts; "
                        "delete the output's _manifests/ to rerun the job")

@@ -872,10 +872,13 @@ _PAIR_FLUSH_BUDGET = 1 << 20
 
 
 def _maybe_bcast(df: DataFrame, approx_rows, cap: int) -> DataFrame:
-    """Broadcast-hint `df` (an over-cap key/count list) only while the
-    caller's footer-derived row estimate bounds its cardinality
-    (n_rows/cap × est. bytes/key) under _OVERCAP_BCAST_MAX_BYTES; None =
-    caller has no estimate, keep the hint (test/laboratory paths)."""
+    """Broadcast-hint `df` only while the caller's row estimate bounds
+    its cardinality (n_rows/cap × est. bytes/key) under
+    _OVERCAP_BCAST_MAX_BYTES; None = caller has no estimate, keep the
+    hint (test/laboratory paths).  The one byte-gated broadcast rule:
+    _keyed_with_splits gates its over-cap key/count lists with the
+    footer estimate, dedup_incremental its batch probe lists with
+    (2 x exact batch rows, cap 1)."""
     if approx_rows is not None \
             and (approx_rows // cap) * _OVERCAP_KEY_EST_BYTES \
             > _OVERCAP_BCAST_MAX_BYTES:
@@ -1445,16 +1448,14 @@ def dedup_incremental(spark, sf):
     only.  The batch-side broadcast is gated in BYTES using the EXACT
     batch row count, piggybacked on the same single bounded action that
     picks the batch source (one (source, n) row); over the gate the
-    hints are dropped and AQE decides (the _maybe_bcast discipline).  In
+    hints are dropped and AQE decides (through _maybe_bcast).  In
     production the corpus key/band tables are the artifacts run_dedup
     already materializes, making this a pure probe job over the new
     batch."""
     batch, corpus, batch_rows = _batch_split(spark, sf)
-    if 2 * batch_rows * _OVERCAP_KEY_EST_BYTES < _OVERCAP_BCAST_MAX_BYTES:
-        bcast = F.broadcast
-    else:
-        def bcast(d):
-            return d
+
+    def bcast(d):
+        return _maybe_bcast(d, 2 * batch_rows, 1)
 
     c_keyed, c_grp = _collapse(corpus.where(F.col("text").isNotNull()),
                                _text_key("text"), "doc_id",
@@ -2126,8 +2127,8 @@ def _round_half_away(x, ndigits: int):
     The tie test runs on the exact fraction y - trunc(y), never on
     floor(y + 0.5), whose addition rounds 0.49999999999999994 up to 1.
     NaN and inf pass through and trunc keeps the sign of -0.0, as in
-    DuckDB.  ONE definition for the four numpy cosine kernels
-    (_brute_topk, _pair_cosine, _ivf_codebook, _ivf_two)."""
+    DuckDB.  ONE rounding for every numpy cosine: _cosines (the matrix
+    form) and _pair_cosine (the row-pair form)."""
     import numpy as np
 
     s = 10.0 ** ndigits
@@ -2135,6 +2136,53 @@ def _round_half_away(x, ndigits: int):
         y = np.asarray(x, dtype=np.float64) * s
         t = np.trunc(y)
         return np.where(np.abs(y - t) >= 0.5, t + np.sign(y), t) / s
+
+
+def _arrow_matrix(col, d: int | None = None):
+    """Arrow list<double> column of a non-empty batch -> (rows, d)
+    float64 matrix.  Every row must hold the same number of values (and
+    exactly ``d`` when given), else ValueError("ragged ...")."""
+    import numpy as np
+
+    lens = col.value_lengths().to_numpy()
+    w = int(lens[0])
+    if not (lens == w).all() or (d is not None and w != d):
+        raise ValueError(f"ragged embedding column (want {d or w} dims)")
+    return (col.flatten().to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False).reshape(len(col), w))
+
+
+def _cosines(V, W, ndigits: int):
+    """(rows, d) x (m, d) -> (rows, m) cosines rounded like the oracles'
+    round(dot / (|v| * |w|), ndigits): dots and norms fold left-to-right
+    (_fold_dots/_row_dots), rounding is _round_half_away.  NaN wherever
+    either norm is zero — the oracle's NULL (0/0) cosine."""
+    import numpy as np
+
+    nv, nw = np.sqrt(_row_dots(V, V)), np.sqrt(_row_dots(W, W))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        cs = _round_half_away(
+            _fold_dots(V, W) / (nv[:, None] * nw[None, :]), ndigits)
+    cs[nv == 0.0] = np.nan
+    cs[:, nw == 0.0] = np.nan
+    return cs
+
+
+def _cell_cosines(V, W):
+    """Yield (row slice, cosines) over row chunks of V against IVF
+    codebook W: the 6-dp _cosines with zero-norm centroid cells at -inf,
+    so they never win an argmax.  Each chunk's (rows x nlist) matrix stays ~64 MB (a
+    10k-row batch x 64k cells would otherwise be ~5 GB); rows are
+    independent, so chunking changes no IEEE fold."""
+    import numpy as np
+
+    zero_cells = _row_dots(W, W) == 0.0
+    chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
+    for s0 in range(0, V.shape[0], chunk):
+        rows = slice(s0, s0 + chunk)
+        cs = _cosines(V[rows], W, 6)
+        cs[:, zero_cells] = -np.inf
+        yield rows, cs
 
 
 def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
@@ -2146,16 +2194,15 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     ranking window sees ~batches*k*|q| candidate rows instead of
     |c|*|q| (round-6 judge item #6: the previous formulation broadcast-
     cross-joined and evaluated an interpreted Catalyst
-    aggregate(zip_with(...)) fold per element; this reuses the numpy
-    fold the IVF kernel already trusts for bit-exact oracle parity —
-    per-dimension left-to-right accumulation, the same IEEE addition
-    sequence as DuckDB's list_sum, NOT numpy's pairwise dot).
+    aggregate(zip_with(...)) fold per element).
 
-    Similarity is the ROUNDED (4 dp, _round_half_away) cosine with a
-    neighbor_id tiebreak so both engines rank identically.  Zero-norm
-    pairs produce NaN (0/0), which Spark and DuckDB both order ABOVE
-    every number in a descending sort — the batch-local cut keeps them
-    by treating NaN as +inf.  ONE definition shared by ann_cosine_topk
+    Similarity is the 4-dp _cosines of each batch's _arrow_matrix
+    against the query matrix — the IVF kernel's bit-exact fold, per-
+    dimension left-to-right like DuckDB's list_sum, NOT numpy's pairwise
+    dot — with a neighbor_id tiebreak so both engines rank identically.
+    Zero-norm pairs score NaN, which Spark orders ABOVE every number in
+    a descending sort — the batch-local cut keeps them by treating NaN
+    as +inf.  ONE definition shared by ann_cosine_topk
     (the published op) and ann_recall_report (whose 'exact truth' side
     must never diverge from it)."""
     import numpy as np
@@ -2169,7 +2216,6 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     Q = np.array([r.qv for r in qrows], dtype=np.float64)     # (m, d)
     qids = np.array([r.query_id for r in qrows], dtype=np.int64)
     m, dq = Q.shape
-    nq = np.sqrt(_row_dots(Q, Q))
 
     def score(batches):
         import pyarrow as pa
@@ -2178,17 +2224,7 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column("v")
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all() or d != dq:
-                raise ValueError("ragged embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                  .astype(np.float64, copy=False).reshape(rows, d))
-            acc, nv = _fold_dots(V, Q), _row_dots(V, V)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cs = _round_half_away(
-                    acc / (np.sqrt(nv)[:, None] * nq[None, :]), 4)
+            cs = _cosines(_arrow_matrix(batch.column("v"), dq), Q, 4)
             ids = batch.column("neighbor_id").to_numpy()
             key = np.where(np.isnan(cs), np.inf, cs)
             t = min(k, rows)
@@ -2222,9 +2258,10 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
     _near_vector_pairs (dedup_embedding_cosine, ann_lsh_near_pairs).
 
     Replaces the interpreted Catalyst aggregate(zip_with(...)) fold those
-    stages evaluated per row (O(d) interpreter steps per pair).
-    Bit-parity with the DuckDB oracle: dot and both norms fold per
-    dimension LEFT-TO-RIGHT (_row_dots, list_sum's IEEE addition order),
+    stages evaluated per row (O(d) interpreter steps per pair).  Both
+    sides are read by _arrow_matrix.  Bit-parity with the DuckDB oracle:
+    dot and both norms fold per dimension LEFT-TO-RIGHT (_row_dots,
+    list_sum's IEEE addition order), the row-pair form of _cosines,
     then _round_half_away(x, ndigits), DuckDB's round with ties away
     from zero (np.round's half-to-even gave 0.0312 for an exact 1/32
     where the oracle gives 0.0313).  Zero-norm pairs produce NaN (0/0,
@@ -2245,19 +2282,8 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
             rows = batch.num_rows
             if rows == 0:
                 continue
-            mats = []
-            for name in (va, vb):
-                col = batch.column(name)
-                lens = col.value_lengths().to_numpy()
-                d = int(lens[0])
-                if not (lens == d).all():
-                    raise ValueError("ragged embedding column")
-                mats.append(col.flatten().to_numpy(zero_copy_only=False)
-                            .astype(np.float64, copy=False)
-                            .reshape(rows, d))
-            A, B = mats
-            if A.shape[1] != B.shape[1]:
-                raise ValueError("embedding dimension mismatch")
+            A = _arrow_matrix(batch.column(va))
+            B = _arrow_matrix(batch.column(vb), A.shape[1])
             with np.errstate(invalid="ignore", divide="ignore"):
                 cs = _round_half_away(
                     _row_dots(A, B) / (np.sqrt(_row_dots(A, A))
@@ -2899,7 +2925,8 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
     engine-side key construction now mirrors the SQL text instead of
     re-deriving each bit range.
 
-    Bit parity: weights are the same integer-derived
+    The batch's vectors are read by _arrow_matrix(v, 64).  Bit parity:
+    weights are the same integer-derived
     ((k*73856093 + i*19349663) % 2001 - 1000)/1000.0 doubles as
     _W_DUCK (int64 arithmetic, no overflow); each plane's dot folds
     left-to-right per dimension — the interpreted fold's IEEE addition
@@ -2919,13 +2946,7 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column(vcol)
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all() or d != 64:
-                raise ValueError("ragged or non-64-dim embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                 .astype(np.float64, copy=False).reshape(rows, d))
+            V = _arrow_matrix(batch.column(vcol), 64)
             acc = _fold_dots(V, W)      # left-to-right fold per plane
             codes = np.where(acc < 0, 48, 49).astype(np.uint8)  # '0'/'1'
             buf = codes.tobytes()
@@ -2965,6 +2986,14 @@ def _embeddings_v(spark, sf) -> DataFrame:
     return _t(spark, sf, "embeddings").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
+
+
+def _sq_norm():
+    """The squared norm of array column ``v``, folded left-to-right like
+    _row_dots: ``_sq_norm() > 0`` keeps the vectors whose cosine is
+    defined (the oracles' cosine of a zero vector is NULL, 0/0)."""
+    return F.expr("aggregate(transform(v, x -> x * x), 0D, "
+                  "(acc, x) -> acc + x)")
 
 
 def ann_lsh_buckets(spark, sf):
@@ -3077,8 +3106,9 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     compute identically — zero-norm vectors excluded (their cosine is
     NULL everywhere).  The first nlist sampled vectors seed the
     centroids, then _IVF_LLOYD_ITERS Lloyd rounds run over the sample:
-    assign by max rounded cosine (tie -> lowest cell), update each
-    non-empty cell to the member mean, empty cells keep their centroid.
+    assign by max _cell_cosines score (6-dp _cosines; tie -> lowest
+    cell), update each non-empty cell to the member mean, empty cells
+    keep their centroid.
 
     Bit-parity with the oracle CTEs: every float fold is left-to-right —
     dot/norm accumulate per-dimension (same order as list_sum), the
@@ -3089,9 +3119,8 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     is numpy over the sample only — the corpus never participates."""
     import numpy as np
 
-    sq = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
     s_cap = min(nlist * _IVF_SAMPLE_FACTOR, _IVF_MAX_SAMPLE)
-    rows = (e.where(F.expr(sq) > 0)
+    rows = (e.where(_sq_norm() > 0)
              .select("vec_id", "v",
                      F.md5(F.col("vec_id").cast("string")).alias("h"))
              .sort("h", "vec_id").limit(s_cap).collect())
@@ -3099,23 +3128,12 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     ids = np.array([r.vec_id for r in rows])
     W = V[:nlist].copy()
     order = np.argsort(ids, kind="stable")
-    # the assign step's (rows x nlist) cosine matrix is computed in row
-    # CHUNKS bounded to ~64 MB: at the documented caps (128k sample x
-    # 64k cells) one full matrix would be ~64 GB of driver heap (round-4
-    # advisor).  Rows are independent, so chunking changes no IEEE fold —
-    # per-row results are bit-identical to the whole-matrix sweep.
-    chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
     for _ in range(_IVF_LLOYD_ITERS):
-        ncv = np.sqrt(_row_dots(W, W))
-        safe_ncv = np.where(ncv == 0.0, 1.0, ncv)
+        # _cell_cosines' row chunks: at the documented caps (128k sample
+        # x 64k cells) one full matrix would be ~64 GB of driver heap
         b = np.empty(V.shape[0], dtype=np.int64)
-        for s0 in range(0, V.shape[0], chunk):
-            Vc = V[s0:s0 + chunk]
-            cs = _round_half_away(
-                _fold_dots(Vc, W) / (np.sqrt(_row_dots(Vc, Vc))[:, None]
-                                     * safe_ncv[None, :]), 6)
-            cs[:, ncv == 0.0] = -np.inf
-            b[s0:s0 + chunk] = np.argmax(cs, axis=1)
+        for rows, cs in _cell_cosines(V, W):
+            b[rows] = np.argmax(cs, axis=1)
         newW = np.zeros_like(W)
         counts = np.zeros(W.shape[0], dtype=np.int64)
         for idx in order:            # vec_id-ascending member fold
@@ -3127,9 +3145,10 @@ def _ivf_codebook(e: DataFrame, nlist: int):
 
 
 def _ivf_two(e: DataFrame, W) -> DataFrame:
-    """(vec_id, v) -> (vec_id, v, cell1, c1, cell2): the per-row top-2
+    """(vec_id, v) -> (vec_id, cell1, c1, cell2): the per-row top-2
     nearest-centroid Arrow kernel of the IVF path against codebook W
-    (cell i = row i).
+    (cell i = row i).  ``v`` is not echoed back: every caller keys on the
+    cells alone.
 
     ROW-LOCAL by construction: scoring any SUBSET of e yields exactly
     the rows that subset would get from a full pass, which is what lets
@@ -3152,16 +3171,15 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
     "built-ins genuinely can't express it efficiently" case for an
     Arrow-batched kernel.
 
-    Bit-parity with the DuckDB oracle: dots and norms fold per dimension
-    left-to-right (_fold_dots/_row_dots, the oracle's list_sum order) and
-    scores are rounded to 6 decimals as the oracle rounds them
-    (_round_half_away) before the top-2 selection; ties break to the
-    lowest cell id (argmax-first over a cell-ascending codebook)."""
+    Bit-parity with the DuckDB oracle: the scores are _cell_cosines'
+    6-dp _cosines of the _arrow_matrix rows (the oracle's list_sum fold
+    order and round) before the top-2 selection; ties break to the
+    lowest cell id (argmax-first over a cell-ascending codebook).  A
+    zero-norm row's cosine is NULL everywhere: it gets the sentinel cell
+    and a NULL c1 (ADVICE r3), never a NaN argmax's pick."""
     import numpy as np
 
     W = np.asarray(W, dtype=np.float64)          # (nlist, d)
-    cells = np.arange(W.shape[0], dtype=np.int32)
-    ncv = np.sqrt(_row_dots(W, W))
 
     def score(batches):
         import pyarrow as pa
@@ -3170,67 +3188,41 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column("v")
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all():
-                raise ValueError("ragged embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                  .astype(np.float64, copy=False).reshape(rows, d))
-            # row-chunked cosine sweep: bounds the (rows x nlist) score
-            # matrix to ~64 MB per task regardless of Arrow batch size
-            # (a 10k-row batch x 64k cells would otherwise be ~5 GB).
-            # Rows are independent — chunking changes no IEEE fold.
-            chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
-            zero = np.empty(rows, dtype=bool)
+            V = _arrow_matrix(batch.column("v"))
+            zero = _row_dots(V, V) == 0.0
             b1 = np.empty(rows, dtype=np.int64)
             b2 = np.empty(rows, dtype=np.int64)
             c1 = np.empty(rows)
-            for s0 in range(0, rows, chunk):
-                Vc = V[s0:s0 + chunk]
-                rc = Vc.shape[0]
-                acc, nv = _fold_dots(Vc, W), _row_dots(Vc, Vc)
-                # zero-norm rows would divide 0/0 -> NaN scores and an
-                # arbitrary argmax; mask them to the NULL-cosine sentinel
-                # cell instead (ADVICE r3), matching the oracle's NULL
-                # propagation
-                zc = nv == 0.0
-                cs = _round_half_away(
-                    acc / (np.sqrt(np.where(zc, 1.0, nv))[:, None]
-                           * np.where(ncv == 0.0, 1.0, ncv)[None, :]), 6)
-                cs[:, ncv == 0.0] = -np.inf  # NULL-cosine cells never win
-                bc1 = np.argmax(cs, axis=1)
-                c1[s0:s0 + chunk] = cs[np.arange(rc), bc1]
-                cs[np.arange(rc), bc1] = -np.inf
-                b2[s0:s0 + chunk] = np.argmax(cs, axis=1)
-                b1[s0:s0 + chunk] = bc1
-                zero[s0:s0 + chunk] = zc
-            cell1 = np.where(zero, _IVF_SENTINEL_CELL,
-                             cells[b1]).astype(np.int32)
-            cell2 = np.where(zero, _IVF_SENTINEL_CELL,
-                             cells[b2]).astype(np.int32)
+            for chunk, cs in _cell_cosines(V, W):
+                r = np.arange(len(cs))
+                b1[chunk] = bc1 = np.argmax(cs, axis=1)
+                c1[chunk] = cs[r, bc1]
+                cs[r, bc1] = -np.inf
+                b2[chunk] = np.argmax(cs, axis=1)
+            cell1 = np.where(zero, _IVF_SENTINEL_CELL, b1).astype(np.int32)
+            cell2 = np.where(zero, _IVF_SENTINEL_CELL, b2).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
-                [batch.column("vec_id"), batch.column("v"),
-                 pa.array(cell1), pa.array(c1, mask=zero),
-                 pa.array(cell2)],
-                ["vec_id", "v", "cell1", "c1", "cell2"])
+                [batch.column("vec_id"), pa.array(cell1),
+                 pa.array(c1, mask=zero), pa.array(cell2)],
+                ["vec_id", "cell1", "c1", "cell2"])
 
     return e.select("vec_id", "v").mapInArrow(
-        score, "vec_id bigint, v array<double>, cell1 int, c1 double, "
-               "cell2 int")
+        score, "vec_id bigint, cell1 int, c1 double, cell2 int")
 
 
 def _ivf_assign(e: DataFrame, cap: int, W) -> DataFrame:
-    """(vec_id, v) -> (vec_id, v, cell, cell1, cell2) nearest-cell
+    """(vec_id, v) -> (vec_id, cell, cell1, cell2) nearest-cell
     assignment against codebook W with the per-cell cap: the _ivf_two
     kernel plus the cap window.  The only shuffle is the pos window
-    (N narrow rows keyed by primary cell); each cell keeps its cap
-    closest rows and spills the rest to their second-nearest cell
-    (deterministic: rounded cosine + vec_id order)."""
+    over N narrow rows keyed by primary cell (v never rides it: shipping
+    the 512-byte array through the window was ~40% of ann_ivf_topk's
+    x100 cost); each cell keeps its cap closest rows and spills the rest
+    to their second-nearest cell (deterministic: rounded cosine + vec_id
+    order)."""
     wpos = (Window.partitionBy("cell1")
                   .orderBy(F.col("c1").desc(), F.col("vec_id").asc()))
     return (_ivf_two(e, W).withColumn("pos", F.row_number().over(wpos))
-            .select("vec_id", "v",
+            .select("vec_id",
                     F.when(F.col("pos") <= cap, F.col("cell1"))
                      .otherwise(F.col("cell2")).alias("cell"),
                     "cell1", "cell2"))
@@ -3255,27 +3247,16 @@ def ann_ivf_topk(spark, sf):
     nlist = _ivf_nlist(n)
     cap = _IVF_CELL_CAP_FACTOR * -(-n // nlist)
     W = _ivf_codebook(e, nlist)
-    two = _ivf_two(e, W)
 
     # Decide narrow, attach the payload once (guide-§8 shape, round-8):
-    # the cap window decides each vector's final cell from
-    # (vec_id, cell1, c1, cell2) ONLY, so it runs on the narrow
-    # projection — the Project above the kernel prunes the 512-byte v
-    # array before the Exchange (shipping v through the cap window was
-    # ~40% of this query's x100 cost).  Candidate ids then join query
-    # probes cell-wise while still narrow, and vectors attach at the END
-    # via broadcast hash joins of the bounded id lists against the
-    # corpus scan — the corpus itself never shuffles.  The candidate
-    # list is ~|queries| x 2 probes x cell cap (~2*sqrt(N) per query),
-    # the same query-sample pricing _brute_topk documents for its
-    # collected query side.
-    wpos = (Window.partitionBy("cell1")
-                  .orderBy(F.col("c1").desc(), F.col("vec_id").asc()))
-    sel = (two.select("vec_id", "cell1", "c1", "cell2")
-              .withColumn("pos", F.row_number().over(wpos))
-              .select("vec_id",
-                      F.when(F.col("pos") <= cap, F.col("cell1"))
-                       .otherwise(F.col("cell2")).alias("cell")))
+    # the _ivf_assign cap window decides each vector's final cell on
+    # narrow rows, candidate ids join query probes cell-wise while still
+    # narrow, and vectors attach at the END via broadcast hash joins of
+    # the bounded id lists against the corpus scan — the corpus itself
+    # never shuffles.  The candidate list is ~|queries| x 2 probes x
+    # cell cap (~2*sqrt(N) per query), the same query-sample pricing
+    # _brute_topk documents for its collected query side.
+    sel = _ivf_assign(e, cap, W)
 
     # no ids are reserved for the codebook anymore (the quantizer is a
     # sampled k-means, not "the first nlist vectors"), so the query /
@@ -3467,9 +3448,7 @@ def ann_recall_report(spark, sf):
     unclusterable.  Real embedding corpora cluster; this report is
     exactly what tunes nlist/nprobe against them."""
     e = _embeddings_v(spark, sf)
-    norm_v = F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, "
-                    "(acc, x) -> acc + x))")
-    base = e.where(norm_v > 0)
+    base = e.where(_sq_norm() > 0)
     q = base.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = base.where(F.col("vec_id") >= 20).select(
@@ -3559,10 +3538,9 @@ def _vector_collapse(e: DataFrame):
     emit false "identical" pairs, and both are JVM codegen (the old
     md5(cast(v as string)) built a ~1.3 KB string per row).  The oracles
     never group, so the key needs no cross-engine parity."""
-    sq = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
     gk = F.concat(F.hex(F.xxhash64("v")),
                   F.hex(F.xxhash64(F.lit(1), F.col("v"))))
-    keyed, grp_v = _collapse(e.where(F.expr(sq) > 0), gk, "vec_id",
+    keyed, grp_v = _collapse(e.where(_sq_norm() > 0), gk, "vec_id",
                              v=F.min_by("v", "vec_id"))
     return (keyed, grp_v.select(F.col("rep").alias("vec_id"), "v"),
             _membership(keyed, grp_v))

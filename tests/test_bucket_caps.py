@@ -210,6 +210,28 @@ def test_ivf_zero_norm_vector_gets_sentinel_cell(spark):
                for i, c in assigned.items() if i != 4), assigned
 
 
+def test_ivf_zero_norm_cell_never_wins(spark):
+    """A zero-norm codebook row (a Lloyd mean can cancel to zero) has
+    NULL cosine against every vector: it must never be a vector's cell1
+    or cell2 — not even for vectors whose every real cosine is negative,
+    which a 0 score would beat and a NaN argmax would lose to."""
+    import numpy as np
+
+    from sparklog.queries import _ivf_assign
+
+    e = (spark.range(12)
+         .select(F.col("id").alias("vec_id"),
+                 F.expr("transform(sequence(0, 3), i -> cast("
+                        "if(i = 0, if(id % 2 = 0, -1.0, 1.0), "
+                        "   if(i = 1, -1.0 - id, 0.0)) as double))")
+                  .alias("v")))
+    codebook = np.zeros((4, 4))
+    codebook[1, 0] = codebook[2, 1] = 1.0     # cells 0 and 3 are zero
+    rows = _ivf_assign(e, 100, codebook).collect()
+    assert len(rows) == 12
+    assert all({r.cell1, r.cell2} == {1, 2} for r in rows), rows
+
+
 def test_ivf_kmeans_codebook_colocates_clusters(spark):
     """The seeded-sample k-means codebook must beat the naive first-N
     quantizer on a clustered corpus (round-3 judge item #3): ids are

@@ -5,8 +5,9 @@ dedup_embedding_cosine and ann_lsh_near_pairs.  These tests pin (a) value
 equality with the interpreted fold it replaced (same left-to-right IEEE
 fold, NaN for zero-norm pairs), (b) the DuckDB oracle's rounding — ties
 away from zero, which every numpy kernel shares through _round_half_away
-— and (c) the row-local property of _ivf_two that lets the query side
-score only the probe vectors."""
+— (c) the row-local property of _ivf_two that lets the query side
+score only the probe vectors, and (d) that every kernel reading vectors
+through _arrow_matrix rejects ragged input."""
 
 import math
 import os
@@ -100,16 +101,44 @@ def test_pair_cosine_rounds_ties_like_duckdb(spark):
         0.0, 1.0, -1.0, 3.0, -3.0]
 
 
-def test_pair_cosine_rejects_ragged_arrays(spark):
+def _vectors(spark, *dims):
+    """One partition of (vec_id, v) rows, row i holding dims[i] ones."""
+    return spark.createDataFrame(
+        [(i, [1.0] * d) for i, d in enumerate(dims)],
+        "vec_id bigint, v array<double>").coalesce(1)
+
+
+@pytest.mark.parametrize("kernel", [
+    "pair_cosine", "brute_topk", "ivf_two", "lsh_signatures_ragged",
+    "lsh_signatures_63_wide"])
+def test_pair_cosine_rejects_ragged_arrays(spark, kernel):
+    """Every kernel reads its vectors through _arrow_matrix, which
+    rejects a batch whose rows differ in length (or, for the 64-plane
+    LSH signature, are not 64 wide)."""
+    import numpy as np
     from pyspark.errors import PythonException
 
-    from sparklog.queries import _pair_cosine
+    from sparklog.queries import (_brute_topk, _ivf_two, _lsh_signatures,
+                                  _pair_cosine)
 
-    df = spark.createDataFrame(
-        [(1, 2, [1.0, 2.0], [1.0, 2.0]), (3, 4, [1.0], [1.0, 2.0])],
-        "a bigint, b bigint, va array<double>, vb array<double>")
+    if kernel == "pair_cosine":
+        df = spark.createDataFrame(
+            [(1, 2, [1.0, 2.0], [1.0, 2.0]), (3, 4, [1.0], [1.0, 2.0])],
+            "a bigint, b bigint, va array<double>, vb array<double>")
+        out = _pair_cosine(df.coalesce(1), "a", "b", "va", "vb", 4)
+    elif kernel == "brute_topk":
+        q = _vectors(spark, 2).select(F.col("vec_id").alias("query_id"),
+                                      F.col("v").alias("qv"))
+        c = _vectors(spark, 2, 1).withColumnRenamed("vec_id", "neighbor_id")
+        out = _brute_topk(q, c, 1)
+    elif kernel == "ivf_two":
+        out = _ivf_two(_vectors(spark, 2, 1), np.eye(2))
+    elif kernel == "lsh_signatures_ragged":
+        out = _lsh_signatures(_vectors(spark, 64, 63))
+    else:
+        out = _lsh_signatures(_vectors(spark, 63, 63))
     with pytest.raises(PythonException, match="ragged"):
-        _pair_cosine(df.coalesce(1), "a", "b", "va", "vb", 4).collect()
+        out.collect()
 
 
 def test_ivf_two_is_row_local(spark):
@@ -121,6 +150,7 @@ def test_ivf_two_is_row_local(spark):
 
     e = _embeddings_v(spark, SF)
     W = _ivf_codebook(e, 8)
+    assert _ivf_two(e, W).columns == ["vec_id", "cell1", "c1", "cell2"]
     full = {r.vec_id: (r.cell1, r.c1, r.cell2)
             for r in _ivf_two(e, W).collect()}
     sub = {r.vec_id: (r.cell1, r.c1, r.cell2)

@@ -184,8 +184,8 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
 def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
     """A manifest whose sinks stage holds per-scan-partition ``lineage``
     rows (the shape written before the counts were observed on the sink
-    write) resumes with the summed counts; a sinks stage with no counts
-    at all fails with a message that says to delete _manifests/."""
+    write) or no counts at all does not resume: it fails with a message
+    that says to delete _manifests/."""
     import json
 
     from sparklog.lineage import Manifest
@@ -214,9 +214,8 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
         {"partition_id": 0, "n_rows": 250, "n_failed": 4},
         {"partition_id": 1, "n_rows": 350, "n_failed": 7}]})
     assert observed["rows"] == 600
-    stats = run_pipeline(spark, src_path, out)
-    assert stats["resumed_stages"] == ["sinks"]
-    assert (stats["rows"], stats["n_failed"]) == (600, 11)
+    with pytest.raises(RuntimeError, match="delete .*_manifests/"):
+        run_pipeline(spark, src_path, out)
 
     rewrite_sinks_info({})
     with pytest.raises(RuntimeError, match="delete .*_manifests/"):
