@@ -183,18 +183,16 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     The MinHash rep graph is built once, by near_dup_pairs, which
     persists its (doc_id, rep) membership and (a, b) rep pairs under
     ``rep_graph/`` for the components stage (and for a resume).  Each
-    stage commits the metrics row of the cascade it ran
-    (bucket_split_stats, _cc_stats, _substring_window_stats), and
+    stage commits the metrics row of the cascade it ran: the two MinHash
+    cascades' meters (_bucket_pairs), observed on the rep_pairs and pairs
+    writes that run them, _cc_stats and _substring_window_stats; and
     dedup_metrics only writes those committed rows out."""
     from .queries import (
-        LSH_BUCKET_CAP,
         _cc_core,
         _cc_stats,
         _minhash_pairs,
         _minhash_rep_graph,
-        _persist,
         _substring_window_stats,
-        bucket_split_stats,
         dedup_substring,
         release_caches,
     )
@@ -203,28 +201,22 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
              for t in ("membership", "rep_pairs")]
 
     def _save(df, name, **metrics):
+        # a meter (Observation) on df's plan is read once the write filled it
         info = _write(df, os.path.join(out_dir, name))
         release_caches()
-        return {**info, "bucket_metrics": metrics}
-
-    def _row(df):
-        return df.collect()[0].asDict()
+        return {**info, "bucket_metrics": {
+            k: m.get if isinstance(m, Observation) else m
+            for k, m in metrics.items()}}
 
     def _pairs(_):
         exact, membership, rep_pairs, bands, n_docs = _minhash_rep_graph(
             spark, sf_dir)
-        _persist(bands)   # read by the rep pairs and by their meter
         _write(membership, graph[0])
-        _write(rep_pairs, graph[1])
-        bands_row = _row(bucket_split_stats(
-            bands, "band", "doc_id", LSH_BUCKET_CAP, refine=F.col("fullsig"),
-            approx_rows=2 * n_docs))
-        exact_row = _row(bucket_split_stats(
-            exact, "gk", "doc_id", LSH_BUCKET_CAP, approx_rows=n_docs))
-        pairs = _minhash_pairs(exact, membership,
-                               spark.read.parquet(graph[1]), n_docs)
-        return _save(pairs, "near_dup_pairs", minhash_bands=bands_row,
-                     exact_text_groups=exact_row)
+        _write(rep_pairs, graph[1])   # runs the band cascade and its meter
+        pairs, groups = _minhash_pairs(exact, membership,
+                                       spark.read.parquet(graph[1]), n_docs)
+        return _save(pairs, "near_dup_pairs", minhash_bands=bands,
+                     exact_text_groups=groups)
 
     def _components(_):
         # a manifest from before the graph was persisted resumes here
@@ -238,8 +230,8 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
 
     def _substring(_):
         return _save(dedup_substring(spark, sf_dir), "substring_runs",
-                     substring_windows=_row(
-                         _substring_window_stats(spark, sf_dir)))
+                     substring_windows=_substring_window_stats(
+                         spark, sf_dir).collect()[0].asDict())
 
     def _metrics(done):
         rows = [(path, *row.values())

@@ -29,7 +29,7 @@ Parity rules (so order-insensitive value hashes match):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -812,7 +812,7 @@ def dedup_ngram_jaccard(spark, sf):
     # so the shingle set is non-empty, matching the oracle's union > 0)
     return _expand_pairs(rep_pairs, membership,
                          keyed.where(F.col("nw") >= 3),
-                         ("doc_a", "doc_b"), ("da", "db"), n_docs)
+                         ("doc_a", "doc_b"), ("da", "db"), n_docs)[0]
 
 
 SQL_DEDUP_NGRAM_JACCARD = f"""
@@ -843,12 +843,12 @@ WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
 # plus one star edge per split (split-min -> group-min, _bucket_pairs),
 # so every row in a mass-duplicate group still pairs with ~cap twins AND
 # the group stays one connected component; only the quadratic cross-split
-# pairs are forgone, observable via bucket_split_stats (never silent).
+# pairs are forgone, counted by _bucket_pairs' meter (never silent).
 LSH_BUCKET_CAP = 1024
 
 # hard guard on the post-salt group size: splits are id-hash balanced so
 # exceeding 4x the cap takes a catastrophic xxhash64 imbalance; rows past
-# it are dropped (counted by bucket_split_stats.n_dropped_rows)
+# it are dropped (counted by the meter's n_dropped_rows)
 _SPLIT_HARD_CAP_FACTOR = 4
 
 # the over-cap key list's cardinality is bounded only by n_rows/cap, so
@@ -890,47 +890,35 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
                        refine=None, approx_rows=None) -> DataFrame:
     """(key, id) rows -> final bounded group keys.
 
-    Three levels, each only where needed:
-      _k0 raw bucket -> _k refined (over-cap buckets get extra signature
-      bits appended; over-cap rows are split off by an inner/anti join
-      pair so refine is STRUCTURALLY only evaluated on them — a
-      when() short-circuit is not enough, see the branch comment)
-      -> _fk salted (still-over-cap groups
-      split into ceil(n/cap) deterministic xxhash64(id) salt groups).
+    Three levels, each only where needed: _k0 raw bucket -> _k refined
+    (over-cap buckets get extra signature bits appended; refine is
+    evaluated only on the rows of over-cap keys, split off by an
+    inner/anti join pair, see the branch comment) -> _fk salted
+    (still-over-cap groups split into ceil(n/cap) deterministic
+    xxhash64(id) salt groups).
 
     Skew-safe group-size measurement: a ``count(*)`` WINDOW over the raw
     group key would funnel every row of a viral-duplicate group through
-    ONE task's sort+count *before* the cascade can salt it — the exact
-    single-key hotspot the cascade exists to defuse (AQE splits skewed
-    joins, not skewed windows; a 10^8-copy text is ~4 GB of 40-byte rows
-    serialized through one core).  Instead, pre-salt group sizes come from
-    partial-aggregation probes — map-side combine means no task ever
-    holds more than its own slice of a hot key: level 1 is a plain
-    groupBy(key) count (the refine expression, which can be an expensive
-    interpreted signature, is never evaluated here), and level 2 counts
-    (key, refine) ONLY on rows of over-cap keys via a semi-join against
-    the level-1 tail (when nothing is over cap, AQE collapses the
-    empty-broadcast join to an empty relation and the probe
-    short-circuits).  Only the over-cap tail (<= n/cap keys; in practice
-    just the skewed heads) is kept and broadcast back — size-gated on the
-    caller's footer row estimate via _maybe_bcast(approx_rows): a
-    degenerate all-over-cap corpus (where the tail is O(unique keys))
-    drops the hint and lets AQE pick, instead of OOMing the driver — so
-    the big side is
-    never shuffled for the measurement at all; unmatched rows are
-    under-cap by construction and read 0, indistinguishable from their
-    true count to every consumer (all comparisons are against
-    cap-derived thresholds).  The post-salt _bn3 count keeps a window:
-    _fk partitions are bounded by ~cap by construction, so that window is
-    skew-free, and it hash-partitions the rows by _fk — the exact
-    partitioning the consumer's groupBy(_fk) needs, so it adds no extra
-    shuffle.  _k0/_k/_fk are all content-derived, never a fixed-
-    cardinality block; volume is the narrow (key, id) projection.
+    ONE task's sort+count before the cascade can salt it (AQE splits
+    skewed joins, not skewed windows).  Pre-salt sizes come from
+    partial-aggregation probes instead: level 1 is a plain groupBy(key)
+    count that never evaluates refine, level 2 counts (key, refine) ONLY
+    on rows of over-cap keys.  Only the over-cap tail (<= n/cap keys) is
+    kept and joined back, broadcast while the caller's footer row
+    estimate bounds it (_maybe_bcast(approx_rows)), so the big side is
+    never shuffled for the measurement; unmatched rows are under-cap by
+    construction and read 0, which every consumer treats as their true
+    count (all comparisons are against cap-derived thresholds).  The
+    post-salt _bn3 count keeps a window: _fk partitions are bounded by
+    ~cap, and it hash-partitions the rows by _fk, the partitioning the
+    consumer's groupBy(_fk) needs, so it adds no shuffle.
 
-    The probe aggregations additionally carry each over-cap group's min
-    id back as `_gm` (NULL on under-cap rows) — 8 bytes per broadcast
-    key — so _bucket_pairs can emit its cross-split star edges without
-    re-referencing this subtree."""
+    The probe aggregations also carry each over-cap group's min id back
+    (NULL on under-cap rows): `_gm` for the refined group, `_gm0` for the
+    raw bucket; the _fk window adds its partition's min id `_fm`.
+    _bucket_pairs emits its star edges from `_gm`, and its meter counts
+    each raw bucket through one marker row (`_id = _gm0` over the cap,
+    `_id = _fm` under it), all without re-referencing this subtree."""
     if refine is not None:
         # level-1 probe never touches the refine expression (it can be an
         # expensive interpreted signature).  Rows of over-cap keys are
@@ -944,14 +932,17 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
         # pure waste.  When no key is over cap, AQE collapses the
         # empty-broadcast inner join to an empty relation and the whole
         # over branch (including the refine evaluation) short-circuits.
-        over1 = (keyed.groupBy(key).agg(F.count("*").alias("_bn"))
+        over1 = (keyed.groupBy(key)
+                      .agg(F.count("*").alias("_bn"),
+                           F.min(F.col(id_col)).alias("_gm0"))
                       .where(F.col("_bn") > cap))
         over_rows = (keyed.join(_maybe_bcast(over1, approx_rows, cap),
                                 key)
                           .select(F.col(key).alias("_k0"),
                                   F.concat(F.col(key), F.lit("#"), refine)
                                    .alias("_k"),
-                                  F.col(id_col).alias("_id"), "_bn"))
+                                  F.col(id_col).alias("_id"), "_bn",
+                                  "_gm0"))
         over2 = (over_rows.groupBy("_k")
                           .agg(F.count("*").alias("_bn2"),
                                F.min(F.col("_id")).alias("_gm"))
@@ -963,7 +954,8 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
                            .select(F.col(key).alias("_k0"),
                                    F.col(key).alias("_k"),
                                    F.col(id_col).alias("_id"),
-                                   F.lit(0).cast("long").alias("_bn")))
+                                   F.lit(0).cast("long").alias("_bn"),
+                                   F.lit(None).cast("long").alias("_gm0")))
         df = (under_rows.unionByName(over_rows)
                         .join(_maybe_bcast(over2, approx_rows, cap),
                               "_k", "left")
@@ -981,7 +973,8 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
                    .withColumn("_bn", F.coalesce(F.col("_bn"), F.lit(0)))
                    .select(F.col(key).alias("_k0"), F.col(key).alias("_k"),
                            F.col(id_col).alias("_id"), "_bn",
-                           F.col("_bn").alias("_bn2"), F.col("_gm")))
+                           F.col("_bn").alias("_bn2"), F.col("_gm"),
+                           F.col("_gm").alias("_gm0")))
     nsplit = F.ceil(F.col("_bn2") / F.lit(cap)).cast("long")
     fk = (F.when(F.col("_bn2") <= cap, F.col("_k"))
            .otherwise(F.concat(
@@ -989,16 +982,18 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
                F.pmod(F.xxhash64(F.col("_id")), nsplit).cast("string"))))
     w3 = Window.partitionBy("_fk")  # bounded partitions: see docstring
     return (df.withColumn("_fk", fk)
-              .withColumn("_bn3", F.count("*").over(w3)))
+              .withColumn("_bn3", F.count("*").over(w3))
+              .withColumn("_fm", F.min("_id").over(w3)))
 
 
 def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
                        refine=None, approx_rows=None) -> DataFrame:
-    """One-row observability aggregate for the cap/refine/salt cascade —
-    run_dedup commits one per cascade it runs, from the stage that runs
-    it, beside the outputs.  n_dropped_rows > 0 means the hard guard fired;
-    n_salted_rows counts rows whose pairs are split-local (bounded recall
-    loss), n_refined_rows counts rows that needed extra signature bits."""
+    """One-row observability aggregate for the cap/refine/salt cascade,
+    a second plan over the keyed input: the countDistinct reference that
+    _bucket_pairs' meter is tested against, and bench.py's ANN LSH row.
+    n_dropped_rows > 0 means the hard guard fired; n_salted_rows counts
+    rows whose pairs are split-local (bounded recall loss),
+    n_refined_rows counts rows that needed extra signature bits."""
     df = _keyed_with_splits(keyed, key, id_col, cap, refine,
                             approx_rows)
     hard = cap * _SPLIT_HARD_CAP_FACTOR
@@ -1015,45 +1010,58 @@ def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
 
 def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                   refine=None, unique_keys: bool = False,
-                  approx_rows=None) -> DataFrame:
-    """(key, id) rows -> distinct candidate pairs (a < b) per bounded
-    group.  ONE aggregation subtree, no self-join: a band self-join
+                  approx_rows=None) -> tuple[DataFrame, Observation]:
+    """(key, id) rows -> (distinct candidate pairs (a < b) per bounded
+    group, meter).  ONE aggregation subtree, no self-join: a band self-join
     re-executes its whole upstream plan per side, while collect_set +
     in-array pair enumeration computes it once; refine+salt (see
     _keyed_with_splits) bounds both list size and pair fan-out at
     ~hard_cap*(hard_cap-1)/2 per group without dropping whole buckets.
 
     unique_keys=True declares each id appears under at most ONE key (a
-    partition into groups, e.g. exact-duplicate groups) — pairs are then
+    partition into groups, e.g. exact-duplicate groups): pairs are then
     unique by construction and the final distinct(), a full shuffle of
-    the pair set (82s of an 90s query on a x100-duplicated corpus), is
-    skipped.  Band-keyed input (one doc in several bands) must keep it.
+    the pair set, is skipped.  Band-keyed input (one doc in several
+    bands) must keep it.
 
-    Star edges keep salted groups CONNECTED: a group salted into k splits
-    keeps all within-split pairs, and each split additionally emits one
-    (group-min, split-min) pair — ceil(n/cap) extra rows, linear — so,
-    ABSENT hard-guard drops (bucket_split_stats.n_dropped_rows > 0; the
-    _SPLIT_HARD_CAP_FACTOR guard removes whole splits BEFORE their star
-    edge is emitted, and surviving splits' star edges may reference the
-    group-min id of a dropped split — ADVICE r5), the pair graph's
-    transitive closure over a salted group is identical to the uncapped
-    enumeration's.  The pair LIST is still bounded (the quadratic
-    cross-split pairs stay forgone, metered by bucket_split_stats), but
-    the COMPONENT partition — what dedup actually consumes — is exact
-    for every same-refined-key group with no dropped rows, not just
-    exact-duplicate ones (round-4 advisor item: a >cap group of
-    DISTINCT texts sharing a full minhash signature previously split
-    into one component per salt shard).  Pairs lost to the refine level
-    (same band, different full signature, inside an over-cap bucket) are
-    the one remaining >cap recall exception, counted by
-    n_refined_rows."""
+    Star edges keep salted groups CONNECTED: each split of a salted group
+    also emits one (group-min, split-min) pair, ceil(n/cap) extra rows,
+    so the pair graph's transitive closure over the group is the uncapped
+    enumeration's, absent hard-guard drops (the _SPLIT_HARD_CAP_FACTOR
+    guard removes whole splits before their star edge is emitted, and a
+    surviving split's star edge may point at a dropped group-min).  The
+    pair LIST stays bounded (the cross-split pairs are forgone), but the
+    COMPONENT partition, what dedup consumes, is exact for every
+    same-refined-key group with no dropped rows.  Pairs the refine level
+    separates (same band, different full signature, inside an over-cap
+    bucket) are the one remaining >cap recall exception.
+
+    The meter observes bucket_split_stats' six counters on this plan's
+    cascade frame, before the hard-guard filter, so the first action on
+    the pairs fills it.  Each raw bucket counts through one marker row
+    (see _keyed_with_splits): the (key, id) rows must be unique."""
+    hard = cap * _SPLIT_HARD_CAP_FACTOR
+    meter = Observation()
+    n_over = F.count_if((F.col("_bn") > cap)
+                        & (F.col("_id") == F.col("_gm0")))
+    # filled only when no join sits between this frame and the action
+    # (AQE leaves a join side's observation unfilled): run_dedup's two
+    # writes qualify, _near_vector_pairs' cand (meter unread) does not
+    metered = _keyed_with_splits(keyed, key, id_col, cap, refine,
+                                 approx_rows).observe(
+        meter, F.count("*").alias("n_rows"),
+        (F.count_if((F.col("_bn") == 0) & (F.col("_id") == F.col("_fm")))
+         + n_over).alias("n_buckets"),
+        n_over.alias("n_over_cap_buckets"),
+        F.sum((F.col("_k") != F.col("_k0")).cast("long"))
+         .alias("n_refined_rows"),
+        F.sum((F.col("_bn2") > cap).cast("long")).alias("n_salted_rows"),
+        F.sum((F.col("_bn3") > hard).cast("long")).alias("n_dropped_rows"))
     # the group-size guard runs BEFORE collecting: an unbounded group must
     # never materialize its id list in the agg buffer (the guard is a
     # broadcast probe — see _keyed_with_splits — so the only shuffle of
     # the big side is this groupBy itself)
-    bounded = (_keyed_with_splits(keyed, key, id_col, cap, refine,
-                                  approx_rows)
-               .where(F.col("_bn3") <= cap * _SPLIT_HARD_CAP_FACTOR))
+    bounded = metered.where(F.col("_bn3") <= hard)
     # star edges ride the SAME aggregation and enumeration kernel (zero
     # extra plan branches, zero extra shuffles): the probe broadcasts already carry
     # each salted group's min id (_gm), so a split whose own min differs
@@ -1118,7 +1126,7 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                     out_a, out_b, pending = [], [], 0
 
     pairs = src.mapInArrow(enum_pairs, "a bigint, b bigint")
-    return pairs if unique_keys else pairs.distinct()
+    return (pairs if unique_keys else pairs.distinct()), meter
 
 
 def _text_key(*cols):
@@ -1183,9 +1191,10 @@ def _membership(keyed: DataFrame, groups: DataFrame) -> DataFrame:
 
 def _expand_pairs(rep_pairs: DataFrame, membership: DataFrame,
                   dup_keyed: DataFrame, out: tuple, via: tuple,
-                  approx_rows: int, cap: int = LSH_BUCKET_CAP) -> DataFrame:
+                  approx_rows: int, cap: int = LSH_BUCKET_CAP
+                  ) -> tuple[DataFrame, Observation]:
     """Expand a verdict on representatives back to ids: rep_pairs
-    (rep_a, rep_b, *values) -> (out_a < out_b, *values).
+    (rep_a, rep_b, *values) -> ((out_a < out_b, *values), meter).
 
     Cross-group pairs fan out by JOIN through the membership (``via``
     names its member-id columns): members are byte-identical to their
@@ -1198,27 +1207,27 @@ def _expand_pairs(rep_pairs: DataFrame, membership: DataFrame,
     is the exhaustive pair set.  Above it the pair LIST is bounded by
     design (10^8 copies imply 10^16 pairs no consumer wants):
     within-split pairs plus one star edge per split, the cross-split
-    pairs metered by bucket_split_stats.  The component partition stays
-    exact through the linear membership edges and the star edges (see
-    _bucket_pairs, dedup_connected_components)."""
+    pairs metered by the returned meter (_bucket_pairs').  The component
+    partition stays exact through the linear membership edges and the
+    star edges (see _bucket_pairs, dedup_connected_components)."""
     ra, rb, *vals = rep_pairs.columns
     id_col = membership.columns[0]
     (oa, ob), (xa, xb) = out, via
-    dup = (_bucket_pairs(dup_keyed.select("gk", id_col), "gk", id_col, cap,
-                         unique_keys=True, approx_rows=approx_rows)
-           .select(F.col("a").alias(oa), F.col("b").alias(ob),
-                   *[F.lit(1.0).alias(v) for v in vals]))
+    dup, meter = _bucket_pairs(dup_keyed.select("gk", id_col), "gk", id_col,
+                               cap, unique_keys=True, approx_rows=approx_rows)
+    dup = dup.select(F.col("a").alias(oa), F.col("b").alias(ob),
+                     *[F.lit(1.0).alias(v) for v in vals])
     m_a = membership.select(F.col("rep").alias(ra), F.col(id_col).alias(xa))
     m_b = membership.select(F.col("rep").alias(rb), F.col(id_col).alias(xb))
     cross = (rep_pairs.join(m_a, ra).join(m_b, rb)
              .select(F.least(xa, xb).alias(oa), F.greatest(xa, xb).alias(ob),
                      *vals))
-    return cross.unionByName(dup)
+    return cross.unionByName(dup), meter
 
 
 def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     """The MinHash path's shared core:
-    (exact, membership, rep_pairs, bands, n_docs).
+    (exact, membership, rep_pairs, meter, n_docs).
 
     exact      = (gk=_text_key(text), doc_id) — _collapse's key table,
                  restricted to texts with >= 3 words (the docs that have
@@ -1229,10 +1238,9 @@ def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     rep_pairs  = near-dup candidate pairs BETWEEN group representatives
                  from the banded-signature machinery, cap/refine/salt
                  bounded.
-    bands      = the (doc_id, fullsig, band) table feeding the cascade —
-                 exposed so run_dedup meters the cascade
-                 (bucket_split_stats) on exactly the keyed input the
-                 pairs used.
+    meter      = the band cascade's loss meter (_bucket_pairs), filled
+                 by the first action on rep_pairs — run_dedup's
+                 rep_pairs write.
     n_docs     = the footer row count already read to size the cascade's
                  broadcast gate — returned so callers don't re-read every
                  file's footer per query (round-5 self-review).
@@ -1255,19 +1263,20 @@ def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     membership = _membership(keyed, grp_t)
     reps = grp_t.select(F.col("rep").alias("doc_id"), "text")
     bands = _sig_bands(reps, "doc_id")
-    rep_pairs = _bucket_pairs(bands, "band", "doc_id", bucket_cap,
-                              refine=F.col("fullsig"),
-                              approx_rows=2 * n_docs)
+    rep_pairs, meter = _bucket_pairs(bands, "band", "doc_id", bucket_cap,
+                                     refine=F.col("fullsig"),
+                                     approx_rows=2 * n_docs)
     exact = keyed.where(F.col("nw") >= 3).select("gk", "doc_id")
-    return exact, membership, rep_pairs, bands, n_docs
+    return exact, membership, rep_pairs, meter, n_docs
 
 
 def _minhash_pairs(exact: DataFrame, membership: DataFrame,
                    rep_pairs: DataFrame, n_docs: int,
-                   bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """(doc_a < doc_b) near-dup pairs of a _minhash_rep_graph, shared by
-    dedup_minhash_lsh and run_dedup (which passes its persisted copy of
-    rep_pairs)."""
+                   bucket_cap: int = LSH_BUCKET_CAP
+                   ) -> tuple[DataFrame, Observation]:
+    """((doc_a < doc_b) near-dup pairs, meter) of a _minhash_rep_graph,
+    shared by dedup_minhash_lsh and run_dedup (which passes its persisted
+    copy of rep_pairs); the meter is the exact-group cascade's."""
     return _expand_pairs(rep_pairs, membership, exact,
                          ("doc_a", "doc_b"), ("da", "db"), n_docs,
                          bucket_cap)
@@ -1295,9 +1304,10 @@ def dedup_minhash_lsh(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
     241 s before).  Within-group pairs (texts with >= 3 words —
     shingle-less docs have no bands, mirroring the oracle's len(w) >= 3
     guard) share every band and are emitted directly."""
-    exact, membership, rep_pairs, _bands, n_docs = _minhash_rep_graph(
+    exact, membership, rep_pairs, _meter, n_docs = _minhash_rep_graph(
         spark, sf, bucket_cap)
-    return _minhash_pairs(exact, membership, rep_pairs, n_docs, bucket_cap)
+    return _minhash_pairs(exact, membership, rep_pairs, n_docs,
+                          bucket_cap)[0]
 
 
 # the oracles' words array and 4 min-hash columns h0..h3 of a text (the
@@ -1692,7 +1702,7 @@ def dedup_connected_components(spark, sf,
     the membership map at the end — the raw corpus is never an input to
     the iteration.  Oracle: recursive CTE reachability over the same edge
     relation (band-sharing pairs + text-partition edges)."""
-    _exact, membership, rep_pairs, _bands, _n = _minhash_rep_graph(
+    _exact, membership, rep_pairs, _meter, _n = _minhash_rep_graph(
         spark, sf, bucket_cap)
     return _cc_core(membership, rep_pairs)[0]
 
@@ -1823,9 +1833,10 @@ def _substring_kept(spark, sf) -> DataFrame:
 
 
 def _substring_window_stats(spark, sf) -> DataFrame:
-    """One-row loss meter of _substring_kept's drop, the substring
-    counterpart of bucket_split_stats (run_dedup's substring_windows
-    row).  The op DROPS over-cap window buckets (no refine/salt cascade:
+    """One-row loss meter of _substring_kept's drop (run_dedup's
+    substring_windows row), a second plan: the counted buckets sit on the
+    anti-join's build side, where AQE leaves an observation unfilled.
+    The op DROPS over-cap window buckets (no refine/salt cascade:
     boilerplate windows pair n^2 and carry no dedup signal), so the row
     reports the drop directly on the same bucket sizes: n_dropped_rows =
     window occurrences inside dropped buckets."""
@@ -3564,7 +3575,7 @@ def _near_vector_pairs(e: DataFrame, n_rows: int,
     # of (vector, id) — so the candidate-pair distinct() is skipped
     cand = (_bucket_pairs(keyed_lsh, "bucket", "vec_id", LSH_BUCKET_CAP,
                           refine=refine, unique_keys=True,
-                          approx_rows=n_rows)
+                          approx_rows=n_rows)[0]
             .select(F.col("a").alias("rep_a"), F.col("b").alias("rep_b")))
     va = reps.select(F.col("vec_id").alias("rep_a"), F.col("v").alias("va"))
     vb = reps.select(F.col("vec_id").alias("rep_b"), F.col("v").alias("vb"))
@@ -3572,7 +3583,7 @@ def _near_vector_pairs(e: DataFrame, n_rows: int,
                               "rep_a", "rep_b", "va", "vb", 4)
                  .where(F.col("cosine") >= threshold))
     return _expand_pairs(rep_pairs, membership, keyed,
-                         ("vec_a", "vec_b"), ("ia", "ib"), n_rows)
+                         ("vec_a", "vec_b"), ("ia", "ib"), n_rows)[0]
 
 
 SQL_DEDUP_EMBEDDING_COSINE = f"""

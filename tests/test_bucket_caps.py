@@ -35,7 +35,7 @@ def _lsh_candidate_pairs(spark, sf_dir, bucket_cap):
     n = _table_rowcount(spark, sf_dir, "embeddings")
     keyed, refine = _lsh_keyed(_embeddings_v(spark, sf_dir), _lsh_nplanes(n))
     return (_bucket_pairs(keyed, "bucket", "vec_id", bucket_cap,
-                          refine=refine, unique_keys=True, approx_rows=n)
+                          refine=refine, unique_keys=True, approx_rows=n)[0]
             .select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b")))
 
 
@@ -344,7 +344,7 @@ def test_salted_group_stays_one_component_via_star_edges(spark):
     keyed = spark.range(100).select(
         F.lit("k").alias("gk"), F.col("id").alias("i"))
     pairs = [(r.a, r.b) for r in
-             _bucket_pairs(keyed, "gk", "i", 8, unique_keys=True)
+             _bucket_pairs(keyed, "gk", "i", 8, unique_keys=True)[0]
              .collect()]
     comp = _components(ids, pairs)
     assert len(set(comp.values())) == 1
@@ -359,7 +359,7 @@ def test_salted_group_stays_one_component_via_star_edges(spark):
         F.lit("sig").alias("fullsig"))
     pairs2 = [(r.a, r.b) for r in
               _bucket_pairs(banded, "band", "i", 8,
-                            refine=F.col("fullsig")).collect()]
+                            refine=F.col("fullsig"))[0].collect()]
     comp2 = _components(ids, pairs2)
     assert len(set(comp2.values())) == 1
     assert len(pairs2) < 1500
@@ -369,7 +369,7 @@ def test_salted_group_stays_one_component_via_star_edges(spark):
         F.lit("k").alias("gk"), F.col("id").alias("i"))
     pairs3 = [(r.a, r.b) for r in
               _bucket_pairs(small, "gk", "i", 1024,
-                            unique_keys=True).collect()]
+                            unique_keys=True)[0].collect()]
     assert len(pairs3) == 45
 
 
@@ -519,15 +519,16 @@ def overcap_docs_dir(spark, tmp_path_factory):
     return d, texts
 
 
-def test_run_dedup_meters_overcap_cascades(spark, tmp_path,
+def test_run_dedup_meters_overcap_cascades(spark, tmp_path, monkeypatch,
                                            overcap_docs_dir):
     """At the default LSH_BUCKET_CAP, run_dedup's minhash_bands,
     exact_text_groups and substring_windows rows equal references the
     test computes itself: bucket_split_stats over keyed tables built
     here for the two cascades, a plain count per window for the
-    substring drop."""
+    substring drop.  The job itself never calls bucket_split_stats."""
     from collections import Counter
 
+    from sparklog import queries
     from sparklog.pipeline import run_dedup
     from sparklog.queries import (
         _SUBSTR_CAP,
@@ -538,7 +539,14 @@ def test_run_dedup_meters_overcap_cascades(spark, tmp_path,
     )
 
     d, texts = overcap_docs_dir
-    m = run_dedup(spark, d, str(tmp_path / "dedup"))["bucket_metrics"]
+
+    def second_plan(*_args, **_kw):
+        raise AssertionError("run_dedup re-ran a cascade to meter it")
+
+    # the job meters each cascade on the plan that runs it, never again
+    with monkeypatch.context() as mp:
+        mp.setattr(queries, "bucket_split_stats", second_plan)
+        m = run_dedup(spark, d, str(tmp_path / "dedup"))["bucket_metrics"]
     release_caches()
 
     def stats(keyed, key, refine=None):
@@ -602,6 +610,7 @@ def test_cascade_closure_equals_uncapped_closure_randomized(spark,
     budget below one group's pair count makes the enumeration kernel
     yield after every group: the pair set must not change."""
     import random
+    from collections import Counter
 
     from sparklog import queries as Q
     from sparklog.queries import _SPLIT_HARD_CAP_FACTOR
@@ -620,13 +629,21 @@ def test_cascade_closure_equals_uncapped_closure_randomized(spark,
     keyed = spark.createDataFrame(rows, ["gk", "i"])
 
     def emitted():
-        return sorted((r.a, r.b) for r in
-                      _bucket_pairs(keyed, "gk", "i", cap,
-                                    unique_keys=True).collect())
+        out, meter = _bucket_pairs(keyed, "gk", "i", cap, unique_keys=True)
+        return sorted((r.a, r.b) for r in out.collect()), meter.get
 
-    pairs = emitted()
+    pairs, meter = emitted()
     monkeypatch.setattr(Q, "_PAIR_FLUSH_BUDGET", 5)
-    assert emitted() == pairs
+    assert emitted() == (pairs, meter)
+    # the meter observed on the pairs' plan equals the countDistinct
+    # reference and the counts of the keyed table itself
+    assert meter == bucket_split_stats(keyed, "gk", "i",
+                                       cap).collect()[0].asDict()
+    sizes = Counter(key_of.values())
+    over = [n for n in sizes.values() if n > cap]
+    assert (meter["n_rows"], meter["n_buckets"],
+            meter["n_over_cap_buckets"], meter["n_salted_rows"]) == (
+        len(key_of), len(sizes), len(over), sum(over))
     # no pair ever crosses keys, and a < b always
     for a, b in pairs:
         assert key_of[a] == key_of[b] and a < b
@@ -648,3 +665,35 @@ def test_cascade_closure_equals_uncapped_closure_randomized(spark,
         max_pairs += splits * (min(per_split + cap, hard) ** 2) // 2 \
             + splits
     assert len(pairs) <= max_pairs
+
+
+def test_hard_guard_drop_is_metered(spark):
+    """A salt split past _SPLIT_HARD_CAP_FACTOR x cap is dropped whole,
+    and the drop is metered.  One key of 20 ids at cap 2 salts into 10
+    splits by Spark's own pmod(xxhash64(id), 10); 9 ids on residue 0
+    overflow the hard limit of 8, the 11 others spread at most 2 per
+    residue.  The group min is one of the 11, so no star edge points
+    into the dropped split: no emitted pair touches the 9 ids, and the
+    meter and bucket_split_stats both count them."""
+    from sparklog.queries import _SPLIT_HARD_CAP_FACTOR
+
+    cap = 2
+    assert cap * _SPLIT_HARD_CAP_FACTOR == 8
+    res = {r.id: r.res for r in spark.range(400).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(10)).alias("res")).collect()}
+    dropped = [i for i in sorted(res) if i >= 200 and res[i] == 0][:9]
+    others, per_res = [], {}
+    for i in sorted(res):
+        if i < 200 and res[i] != 0 and per_res.get(res[i], 0) < 2:
+            per_res[res[i]] = per_res.get(res[i], 0) + 1
+            others.append(i)
+    others = others[:11]
+    assert len(dropped) == 9 and len(others) == 11
+    keyed = spark.createDataFrame([("k", i) for i in dropped + others],
+                                  "gk string, i long")
+    out, meter = _bucket_pairs(keyed, "gk", "i", cap, unique_keys=True)
+    pairs = out.collect()
+    ref = bucket_split_stats(keyed, "gk", "i", cap).collect()[0]
+    assert meter.get["n_dropped_rows"] == ref.n_dropped_rows == 9
+    assert meter.get == ref.asDict()
+    assert pairs and not {i for p in pairs for i in p} & set(dropped)
