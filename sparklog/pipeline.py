@@ -12,8 +12,9 @@ Plan shape (everything except the one MapInArrow is JVM-side):
         class), counted on the write's own plan (lineage.partition_lineage)
       → salted repartition on sink key, AQE-sized         [the ONE shuffle]
       → dynamic-partition parquet write per sink
-    aggregates/metrics reuse the persisted parse output (partial+final agg),
-    and every stage observes its counts on its own write (no read-back).
+    aggregates, metrics and audit each re-read sinks/ and run concurrently
+    (one stage group, committed in that order); every stage observes its
+    counts on its own write (no read-back).
 
 Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 """
@@ -24,7 +25,9 @@ import argparse
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,33 +56,51 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
                               "tokens", cfg)
 
 
-def _run_stage(manifest: Manifest, stats: dict, name: str, fn,
-               fail_after: str | None = None) -> None:
-    """Run one manifest stage: skip it (recording the resume) when a
-    previous run committed it, else run ``fn(done)`` on the info dicts of
-    the stages committed so far and commit the info dict it returns.
-    ``fail_after`` kills the job right after the named stage commits."""
+_STAGE_THREAD = "sparklog-stage"   # name prefix of the stage threads
+
+
+def _run_group(spark: SparkSession, manifest: Manifest, stats: dict,
+               group, fail_after: str | None) -> None:
+    """Run one group of manifest stages.  A stage a previous run committed
+    is skipped (recording the resume); the others run concurrently, one
+    thread each, as ``fn(done)`` on the infos of the stages committed
+    before the group, and inherit the caller's Spark job group and local
+    properties.  The calling thread commits their infos in listed order and
+    raises the first failure in that order, or the ``fail_after`` kill
+    right after the named stage commits, only once every stage of the
+    group has finished, so no Spark job outlives the call."""
     done = manifest.load()["stages"]
-    if name in done:
-        stats["resumed_stages"].append(name)
+    stats["resumed_stages"] += [name for name, _ in group if name in done]
+    todo = [(name, fn) for name, fn in group if name not in done]
+    if not todo:
         return
-    manifest.commit_stage(name, fn(done))
-    if fail_after == name:
-        raise RuntimeError(f"injected failure after stage {name}")
+    inherit = inheritable_thread_target(spark)
+    if inherit is spark:   # pinned-thread mode off: no thread state to copy
+        def inherit(fn):
+            return fn
+    # leaving the pool waits for every stage, also when a commit raises
+    with ThreadPoolExecutor(len(todo),
+                            thread_name_prefix=_STAGE_THREAD) as pool:
+        runs = [(name, pool.submit(inherit(fn), done)) for name, fn in todo]
+        for name, run in runs:
+            manifest.commit_stage(name, run.result())
+            if fail_after == name:
+                raise RuntimeError(f"injected failure after stage {name}")
 
 
-def _run_job(out_dir: str, stages, fail_after: str | None = None
-             ) -> tuple[dict, dict]:
-    """Run (or resume) ``[(name, fn)]`` stages under the manifest in
-    ``out_dir``.  Returns (stats, committed stage infos): a job reports
-    its counts from the infos of the stages that produced them, so a
-    resumed run reports what a fresh run does and no output is re-read
-    after the stage loop."""
+def _run_job(spark: SparkSession, out_dir: str, groups,
+             fail_after: str | None = None) -> tuple[dict, dict]:
+    """Run (or resume) ``[[(name, fn), ...], ...]`` stage groups under the
+    manifest in ``out_dir``, one group after another (see _run_group; a
+    single stage is a group of one).  Returns (stats, committed stage
+    infos): a job reports its counts from the infos of the stages that
+    produced them, so a resumed run reports what a fresh run does and no
+    output is re-read after the stages."""
     manifest = Manifest(out_dir)
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
-    for name, fn in stages:
-        _run_stage(manifest, stats, name, fn, fail_after)
+    for group in groups:
+        _run_group(spark, manifest, stats, group, fail_after)
     stats["wall_sec"] = time.time() - t0
     state = manifest.load()
     stats["snapshot"] = state["snapshot_id"]
@@ -108,7 +129,12 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     The source goes through the catalog abstraction (SURVEY.md §7.5):
     ``table_format="iceberg"`` reads with Spark's iceberg source, so the
     runtime jar must be on the classpath; a load error is raised, never
-    replaced by a parquet read of the same path."""
+    replaced by a parquet read of the same path.
+
+    A committed sinks stage that cannot resume raises before any work."""
+    committed = Manifest(out_dir).load()["stages"]
+    if "sinks" in committed:
+        sinks_counts(committed["sinks"])
     src = spark.read.format(table_format).load(src_path)
     routed = with_route_columns(enrich(parse_stage(src, cfg), spark))
     sinks = os.path.join(out_dir, "sinks")
@@ -139,9 +165,10 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
                 f"token-array equality audit failed: {violations} rows")
         return {"violations": 0}
 
-    stats, done = _run_job(out_dir, [
-        ("sinks", _sinks), ("aggregates", _aggregates),
-        ("metrics", _metrics), ("audit", _audit)], fail_after)
+    stats, done = _run_job(spark, out_dir, [
+        [("sinks", _sinks)],
+        [("aggregates", _aggregates), ("metrics", _metrics),
+         ("audit", _audit)]], fail_after)
     stats["rows"], stats["n_failed"] = sinks_counts(done["sinks"])
     return stats
 
@@ -241,9 +268,9 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return _write(spark.createDataFrame(rows, schema).coalesce(1),
                       os.path.join(out_dir, "dedup_metrics"))
 
-    stats, done = _run_job(out_dir, [
-        ("near_dup_pairs", _pairs), ("components", _components),
-        ("substring_runs", _substring), ("dedup_metrics", _metrics)])
+    stats, done = _run_job(spark, out_dir, [
+        [("near_dup_pairs", _pairs)], [("components", _components)],
+        [("substring_runs", _substring)], [("dedup_metrics", _metrics)]])
     stats["n_pairs"] = done["near_dup_pairs"]["rows"]
     stats["n_substring_runs"] = done["substring_runs"]["rows"]
     stats["bucket_metrics"] = _bucket_metrics(done)
@@ -288,9 +315,9 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return {"reasons": {r["reason"]: r["count"]
                             for r in counts.collect()}}
 
-    stats, done = _run_job(out_dir, [
-        ("curated", _curated), ("corpus", _corpus),
-        ("curate_metrics", _metrics)])
+    stats, done = _run_job(spark, out_dir, [
+        [("curated", _curated)], [("corpus", _corpus)],
+        [("curate_metrics", _metrics)]])
     stats["reasons"] = done["curate_metrics"]["reasons"]
     stats["n_docs"] = sum(stats["reasons"].values())
     stats["n_kept"] = stats["reasons"].get("kept", 0)
@@ -330,9 +357,9 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return {"flag_combos": {"|".join(str(r[c]) for c in keys):
                                 r["count"] for r in rows}}
 
-    stats, done = _run_job(out_dir, [
-        ("flags", _flags), ("additions", _additions),
-        ("incremental_metrics", _metrics)])
+    stats, done = _run_job(spark, out_dir, [
+        [("flags", _flags)], [("additions", _additions)],
+        [("incremental_metrics", _metrics)]])
     stats["flag_combos"] = done["incremental_metrics"]["flag_combos"]
     stats["n_batch"] = sum(stats["flag_combos"].values())
     stats["n_added"] = done["additions"]["rows"]
@@ -358,7 +385,7 @@ def run_tokenize(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         save_merges(spark, merges, os.path.join(out_dir, "merges"))
         return {"n_merges": len(merges)}
 
-    stats, done = _run_job(out_dir, [("merges", _merges)])
+    stats, done = _run_job(spark, out_dir, [[("merges", _merges)]])
     stats["n_merges"] = done["merges"]["n_merges"]
     return stats
 

@@ -5,6 +5,7 @@ audit, and kill-and-rerun resume idempotency."""
 import glob
 import os
 import shutil
+import threading
 
 import pandas as pd
 import pytest
@@ -14,6 +15,7 @@ from sparklog import fixtures
 from sparklog.aggregate import hourly_counts
 from sparklog.encoding import detokenize_col, tokenize_col
 from sparklog.grammar import ParseConfig, detect_rfc, parse_rfc3164, parse_rfc5424
+from sparklog.lineage import Manifest
 from sparklog.pipeline import parse_stage, run_pipeline
 from sparklog.route import audit_token_equality
 
@@ -152,8 +154,28 @@ def test_default_partitions_match_pinned(spark, tmp_path):
                 == _table_rows(spark, os.path.join(outs[32], table)))
 
 
-def test_resume_after_kill_is_idempotent(spark, tmp_path):
-    """Kill after the sinks stage commits; rerun; outputs byte-identical."""
+def _committed(out):
+    """(snapshot id, committed stage names) of the manifest in ``out``."""
+    state = Manifest(out).load()
+    return state["snapshot_id"], set(state["stages"])
+
+
+def _settled(spark):
+    """The spark fixture's status tracker once the listener bus has
+    delivered every job event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker()
+
+
+_STAGES = ["sinks", "aggregates", "metrics", "audit"]
+
+
+@pytest.mark.parametrize("fail_after", _STAGES[:3])
+def test_resume_after_kill_is_idempotent(spark, tmp_path, fail_after):
+    """Kill after the sinks stage or a stage of the concurrent tail
+    commits; rerun: it resumes the committed prefix, and the outputs and
+    counts equal a fresh run's."""
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, fixtures.synth_lines(1000, seed=5),
                                 src_path, n_partitions=2)
@@ -165,30 +187,71 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
                 .orderBy("doc_id").collect())
         return [tuple(r) for r in rows]
 
+    prefix = _STAGES[:_STAGES.index(fail_after) + 1]
     out_a = str(tmp_path / "out_a")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, src_path, out_a, num_partitions=2,
-                     fail_after="sinks")
+                     fail_after=fail_after)
+    assert _committed(out_a) == (len(prefix), set(prefix))
     stats = run_pipeline(spark, src_path, out_a, num_partitions=2)
-    assert stats["resumed_stages"] == ["sinks"]
+    assert stats["resumed_stages"] == prefix
     assert stats["rows"] == 1000
 
     out_b = str(tmp_path / "out_b")
     fresh = run_pipeline(spark, src_path, out_b, num_partitions=2)
     assert sink_digest(out_a) == sink_digest(out_b)
+    for table in ("aggregates", "metrics"):
+        assert (_table_rows(spark, os.path.join(out_a, table))
+                == _table_rows(spark, os.path.join(out_b, table)))
     # counts come from the committed sinks stage, so the resumed run
     # reports what the fresh run does
     assert stats["n_failed"] == fresh["n_failed"]
+    assert stats["snapshot"] == fresh["snapshot"] == 4
+    for out in (out_a, out_b):
+        done = Manifest(out).load()["stages"]
+        stamps = [done[s]["committed_at"] for s in _STAGES]
+        assert stamps == sorted(stamps)
+
+
+@pytest.mark.parametrize("failing", ["audit", "aggregates"])
+def test_tail_failure_commits_the_listed_prefix(spark, tmp_path,
+                                                monkeypatch, failing):
+    """A stage of the concurrent tail fails: the job raises that stage's
+    error only once the other tail stages have finished (no Spark job
+    outlives it), with exactly the stages listed before it committed."""
+    from sparklog import pipeline
+
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(600, seed=6),
+                                src_path, n_partitions=2)
+    if failing == "audit":
+        monkeypatch.setattr(pipeline, "audit_token_equality",
+                            lambda *_args: 1)
+        raised = pytest.raises(AssertionError, match="token-array equality "
+                               "audit failed: 1 rows")
+    else:
+        def failed(_df):
+            raise ValueError("aggregates failed")
+
+        monkeypatch.setattr(pipeline, "hourly_counts", failed)
+        raised = pytest.raises(ValueError, match="aggregates failed")
+    out = str(tmp_path / "out")
+    with raised:
+        run_pipeline(spark, src_path, out, num_partitions=2)
+    assert _settled(spark).getActiveJobsIds() == []
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith(pipeline._STAGE_THREAD)]
+    prefix = _STAGES[:_STAGES.index(failing)]
+    assert _committed(out) == (len(prefix), set(prefix))
 
 
 def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
     """A manifest whose sinks stage holds per-scan-partition ``lineage``
     rows (the shape written before the counts were observed on the sink
     write) or no counts at all does not resume: it fails with a message
-    that says to delete _manifests/."""
+    that says to delete _manifests/, before any Spark job and without
+    committing a stage."""
     import json
-
-    from sparklog.lineage import Manifest
 
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, fixtures.synth_lines(600, seed=4),
@@ -196,6 +259,7 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, src_path, out, fail_after="sinks")
+    assert _committed(out) == (1, {"sinks"})
 
     def rewrite_sinks_info(info):
         m = Manifest(out)
@@ -210,16 +274,25 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
             json.dump(state, f)
         return committed
 
+    def rerun_raises(group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(RuntimeError, match="delete .*_manifests/"):
+                run_pipeline(spark, src_path, out)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(_settled(spark).getJobIdsForGroup(group)) == []
+        assert _committed(out) == (1, {"sinks"})
+
     observed = rewrite_sinks_info({"lineage": [
         {"partition_id": 0, "n_rows": 250, "n_failed": 4},
         {"partition_id": 1, "n_rows": 350, "n_failed": 7}]})
     assert observed["rows"] == 600
-    with pytest.raises(RuntimeError, match="delete .*_manifests/"):
-        run_pipeline(spark, src_path, out)
+    rerun_raises("per-partition-lineage")
 
     rewrite_sinks_info({})
-    with pytest.raises(RuntimeError, match="delete .*_manifests/"):
-        run_pipeline(spark, src_path, out)
+    rerun_raises("no-counts")
 
 
 def test_driver_memory_fits_host(monkeypatch):
