@@ -79,12 +79,3 @@ def partition_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
                       F.count("parse_error").alias("n_failed"),
                       F.create_map(*per_class).alias("sink_rows")), obs
 
-
-def sinks_counts(info: dict) -> tuple[int, int]:
-    """(rows, n_failed) of a committed sinks stage, as observed on its
-    write.  A stage committed without them (a manifest from before the
-    counts were observed on the write) cannot resume."""
-    if "rows" in info:
-        return info["rows"], info["n_failed"]
-    raise RuntimeError("the committed sinks stage carries no row counts; "
-                       "delete the output's _manifests/ to rerun the job")

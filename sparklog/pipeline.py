@@ -22,6 +22,7 @@ Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import time
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from .aggregate import hourly_counts, parse_metrics
 from .enrich import enrich
 from .grammar import ParseConfig
-from .lineage import Manifest, partition_lineage, sinks_counts
+from .lineage import Manifest, partition_lineage
 from .route import audit_token_equality, with_route_columns, write_sinks
 from .udfs import map_in_arrow_parse
 
@@ -70,8 +71,8 @@ def _run_group(spark: SparkSession, manifest: Manifest, stats: dict,
     right after the named stage commits, only once every stage of the
     group has finished, so no Spark job outlives the call."""
     done = manifest.load()["stages"]
-    stats["resumed_stages"] += [name for name, _ in group if name in done]
-    todo = [(name, fn) for name, fn in group if name not in done]
+    stats["resumed_stages"] += [name for name, *_ in group if name in done]
+    todo = [(name, fn) for name, fn, *_ in group if name not in done]
     if not todo:
         return
     inherit = inheritable_thread_target(spark)
@@ -90,13 +91,23 @@ def _run_group(spark: SparkSession, manifest: Manifest, stats: dict,
 
 def _run_job(spark: SparkSession, out_dir: str, groups,
              fail_after: str | None = None) -> tuple[dict, dict]:
-    """Run (or resume) ``[[(name, fn), ...], ...]`` stage groups under the
-    manifest in ``out_dir``, one group after another (see _run_group; a
-    single stage is a group of one).  Returns (stats, committed stage
+    """Run (or resume) ``[[(name, fn, *keys), ...], ...]`` stage groups
+    under the manifest in ``out_dir``, one group after another (see
+    _run_group; a single stage is a group of one).  A committed stage
+    resumes only if its info holds every one of its ``keys``; else the
+    job raises before any group runs.  Returns (stats, committed stage
     infos): a job reports its counts from the infos of the stages that
     produced them, so a resumed run reports what a fresh run does and no
     output is re-read after the stages."""
     manifest = Manifest(out_dir)
+    committed = manifest.load()["stages"]
+    for name, _fn, *keys in (stage for group in groups for stage in group):
+        missing = [k for k in keys
+                   if name in committed and k not in committed[name]]
+        if missing:
+            raise RuntimeError(
+                f"the committed {name} stage carries no {', '.join(missing)}"
+                "; delete the output's _manifests/ to rerun the job")
     stats: dict = {"resumed_stages": []}
     t0 = time.time()
     for group in groups:
@@ -129,17 +140,16 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     The source goes through the catalog abstraction (SURVEY.md §7.5):
     ``table_format="iceberg"`` reads with Spark's iceberg source, so the
     runtime jar must be on the classpath; a load error is raised, never
-    replaced by a parquet read of the same path.
-
-    A committed sinks stage that cannot resume raises before any work."""
-    committed = Manifest(out_dir).load()["stages"]
-    if "sinks" in committed:
-        sinks_counts(committed["sinks"])
-    src = spark.read.format(table_format).load(src_path)
-    routed = with_route_columns(enrich(parse_stage(src, cfg), spark))
+    replaced by a parquet read of the same path, which the first stage
+    that needs the source makes."""
     sinks = os.path.join(out_dir, "sinks")
 
+    @functools.cache
+    def _src():
+        return spark.read.format(table_format).load(src_path)
+
     def _sinks(_):
+        routed = with_route_columns(enrich(parse_stage(_src(), cfg), spark))
         observed, lineage = partition_lineage(routed)
         write_sinks(observed, sinks, num_partitions, salt_buckets)
         return lineage.get
@@ -159,17 +169,18 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
         return info
 
     def _audit(_):
-        violations = audit_token_equality(spark.read.parquet(sinks), src)
+        violations = audit_token_equality(spark.read.parquet(sinks), _src())
         if violations:
             raise AssertionError(
                 f"token-array equality audit failed: {violations} rows")
         return {"violations": 0}
 
     stats, done = _run_job(spark, out_dir, [
-        [("sinks", _sinks)],
+        [("sinks", _sinks, "rows", "n_failed")],
         [("aggregates", _aggregates), ("metrics", _metrics),
          ("audit", _audit)]], fail_after)
-    stats["rows"], stats["n_failed"] = sinks_counts(done["sinks"])
+    stats["rows"], stats["n_failed"] = (done["sinks"]["rows"],
+                                        done["sinks"]["n_failed"])
     return stats
 
 
@@ -185,15 +196,9 @@ _BUCKET_METRICS = (("n_rows", "long"), ("n_buckets", "long"),
 def _bucket_metrics(done: dict) -> dict:
     """path -> row of the metrics rows the near_dup_pairs, components and
     substring_runs stages committed, every column present."""
-    rows: dict = {}
-    for stage in ("near_dup_pairs", "components", "substring_runs"):
-        if "bucket_metrics" not in done[stage]:
-            raise RuntimeError(f"the committed {stage} stage carries no "
-                               "bucket metrics; delete the output's "
-                               "_manifests/ to rerun the job")
-        rows.update(done[stage]["bucket_metrics"])
     return {path: {c: row.get(c) for c, _t in _BUCKET_METRICS}
-            for path, row in rows.items()}
+            for stage in ("near_dup_pairs", "components", "substring_runs")
+            for path, row in done[stage]["bucket_metrics"].items()}
 
 
 def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
@@ -246,12 +251,6 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                      exact_text_groups=groups)
 
     def _components(_):
-        # a manifest from before the graph was persisted resumes here
-        # with nothing to read: stop rather than build the graph again
-        if not all(os.path.isdir(p) for p in graph):
-            raise RuntimeError("the committed near_dup_pairs stage left no "
-                               "rep_graph/; delete the output's "
-                               "_manifests/ to rerun the job")
         df, *cc = _cc_core(*(spark.read.parquet(p) for p in graph))
         return _save(df, "components", minhash_components=_cc_stats(*cc))
 
@@ -269,8 +268,10 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                       os.path.join(out_dir, "dedup_metrics"))
 
     stats, done = _run_job(spark, out_dir, [
-        [("near_dup_pairs", _pairs)], [("components", _components)],
-        [("substring_runs", _substring)], [("dedup_metrics", _metrics)]])
+        [("near_dup_pairs", _pairs, "bucket_metrics")],
+        [("components", _components, "bucket_metrics")],
+        [("substring_runs", _substring, "bucket_metrics")],
+        [("dedup_metrics", _metrics)]])
     stats["n_pairs"] = done["near_dup_pairs"]["rows"]
     stats["n_substring_runs"] = done["substring_runs"]["rows"]
     stats["bucket_metrics"] = _bucket_metrics(done)

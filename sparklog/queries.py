@@ -2138,8 +2138,7 @@ def _round_half_away(x, ndigits: int):
     The tie test runs on the exact fraction y - trunc(y), never on
     floor(y + 0.5), whose addition rounds 0.49999999999999994 up to 1.
     NaN and inf pass through and trunc keeps the sign of -0.0, as in
-    DuckDB.  ONE rounding for every numpy cosine: _cosines (the matrix
-    form) and _pair_cosine (the row-pair form)."""
+    DuckDB.  ONE rounding for every numpy cosine (_cosine)."""
     import numpy as np
 
     s = 10.0 ** ndigits
@@ -2163,36 +2162,42 @@ def _arrow_matrix(col, d: int | None = None):
             .astype(np.float64, copy=False).reshape(len(col), w))
 
 
-def _cosines(V, W, ndigits: int):
-    """(rows, d) x (m, d) -> (rows, m) cosines rounded like the oracles'
-    round(dot / (|v| * |w|), ndigits): dots and norms fold left-to-right
-    (_fold_dots/_row_dots), rounding is _round_half_away.  NaN wherever
-    either norm is zero — the oracle's NULL (0/0) cosine."""
+def _cosine(dots, sa, sb, ndigits: int):
+    """The oracles' round(dot / (|a| * |b|), ndigits) from left-to-right
+    folded dots and squared norms (_fold_dots/_row_dots; ``sa`` and
+    ``sb`` broadcast against ``dots``), rounded by _round_half_away ->
+    (values, undefined).  THE zero-norm rule of every numpy cosine: a
+    zero norm on either side makes the cosine undefined, the oracles'
+    NULL (DuckDB's x/0); the value under an undefined entry is
+    meaningless."""
     import numpy as np
 
-    nv, nw = np.sqrt(_row_dots(V, V)), np.sqrt(_row_dots(W, W))
+    na, nb = np.sqrt(sa), np.sqrt(sb)
     with np.errstate(invalid="ignore", divide="ignore"):
-        cs = _round_half_away(
-            _fold_dots(V, W) / (nv[:, None] * nw[None, :]), ndigits)
-    cs[nv == 0.0] = np.nan
-    cs[:, nw == 0.0] = np.nan
-    return cs
+        cs = _round_half_away(dots / (na * nb), ndigits)
+    return cs, (na == 0.0) | (nb == 0.0)
+
+
+def _cosines(V, W, ndigits: int):
+    """(rows, d) x (m, d) -> the (rows, m) _cosine matrix and its
+    undefined mask."""
+    return _cosine(_fold_dots(V, W), _row_dots(V, V)[:, None],
+                   _row_dots(W, W)[None, :], ndigits)
 
 
 def _cell_cosines(V, W):
     """Yield (row slice, cosines) over row chunks of V against IVF
-    codebook W: the 6-dp _cosines with zero-norm centroid cells at -inf,
-    so they never win an argmax.  Each chunk's (rows x nlist) matrix stays ~64 MB (a
-    10k-row batch x 64k cells would otherwise be ~5 GB); rows are
+    codebook W: the 6-dp _cosines with undefined cells at -inf, so they
+    never win an argmax.  Each chunk's (rows x nlist) matrix stays ~64 MB
+    (a 10k-row batch x 64k cells would otherwise be ~5 GB); rows are
     independent, so chunking changes no IEEE fold."""
     import numpy as np
 
-    zero_cells = _row_dots(W, W) == 0.0
     chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
     for s0 in range(0, V.shape[0], chunk):
         rows = slice(s0, s0 + chunk)
-        cs = _cosines(V[rows], W, 6)
-        cs[:, zero_cells] = -np.inf
+        cs, undefined = _cosines(V[rows], W, 6)
+        cs[undefined] = -np.inf
         yield rows, cs
 
 
@@ -2203,19 +2208,15 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     The corpus stays partition-local (never shuffles), and each Arrow
     batch emits only its LOCAL top-k rows per query, so the final
     ranking window sees ~batches*k*|q| candidate rows instead of
-    |c|*|q| (round-6 judge item #6: the previous formulation broadcast-
-    cross-joined and evaluated an interpreted Catalyst
-    aggregate(zip_with(...)) fold per element).
+    |c|*|q|.
 
     Similarity is the 4-dp _cosines of each batch's _arrow_matrix
-    against the query matrix — the IVF kernel's bit-exact fold, per-
-    dimension left-to-right like DuckDB's list_sum, NOT numpy's pairwise
-    dot — with a neighbor_id tiebreak so both engines rank identically.
-    Zero-norm pairs score NaN, which Spark orders ABOVE every number in
-    a descending sort — the batch-local cut keeps them by treating NaN
-    as +inf.  ONE definition shared by ann_cosine_topk
-    (the published op) and ann_recall_report (whose 'exact truth' side
-    must never diverge from it)."""
+    against the query matrix, with a neighbor_id tiebreak so both engines
+    rank identically.  An undefined cosine is NULL and ranks after every
+    number, as in the oracle: the batch-local cut keys it -inf and
+    Spark's desc() puts NULLs last.  ONE definition shared by
+    ann_cosine_topk (the published op) and ann_recall_report (whose
+    'exact truth' side must never diverge from it)."""
     import numpy as np
 
     qrows = sorted(q.collect(), key=lambda r: r.query_id)
@@ -2235,22 +2236,20 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
             rows = batch.num_rows
             if rows == 0:
                 continue
-            cs = _cosines(_arrow_matrix(batch.column("v"), dq), Q, 4)
+            cs, undefined = _cosines(
+                _arrow_matrix(batch.column("v"), dq), Q, 4)
             ids = batch.column("neighbor_id").to_numpy()
-            key = np.where(np.isnan(cs), np.inf, cs)
+            key = np.where(undefined, -np.inf, cs)
             t = min(k, rows)
-            out_q = np.empty(t * m, dtype=np.int64)
-            out_n = np.empty(t * m, dtype=np.int64)
-            out_c = np.empty(t * m, dtype=np.float64)
-            for qi in range(m):
-                # top-t by (cosine desc, neighbor_id asc): lexsort's
-                # last key dominates, so sort ascending on -key then ids
-                idx = np.lexsort((ids, -key[:, qi]))[:t]
-                out_q[qi * t:(qi + 1) * t] = qids[qi]
-                out_n[qi * t:(qi + 1) * t] = ids[idx]
-                out_c[qi * t:(qi + 1) * t] = cs[idx, qi]
+            # per query, top-t by (cosine desc, neighbor_id asc): lexsort's
+            # last key dominates, so sort ascending on -key then ids
+            idx = np.stack([np.lexsort((ids, -key[:, qi]))[:t]
+                            for qi in range(m)])             # (m, t)
+            qcol = np.arange(m)[:, None]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_n), pa.array(out_c)],
+                [pa.array(np.repeat(qids, t)), pa.array(ids[idx].ravel()),
+                 pa.array(cs[idx, qcol].ravel(),
+                          mask=undefined[idx, qcol].ravel())],
                 ["query_id", "neighbor_id", "cosine"])
 
     cand = c.select("neighbor_id", "v").mapInArrow(
@@ -2268,23 +2267,9 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
     candidate-verification stage: ann_ivf_topk probe scoring and
     _near_vector_pairs (dedup_embedding_cosine, ann_lsh_near_pairs).
 
-    Replaces the interpreted Catalyst aggregate(zip_with(...)) fold those
-    stages evaluated per row (O(d) interpreter steps per pair).  Both
-    sides are read by _arrow_matrix.  Bit-parity with the DuckDB oracle:
-    dot and both norms fold per dimension LEFT-TO-RIGHT (_row_dots,
-    list_sum's IEEE addition order), the row-pair form of _cosines,
-    then _round_half_away(x, ndigits), DuckDB's round with ties away
-    from zero (np.round's half-to-even gave 0.0312 for an exact 1/32
-    where the oracle gives 0.0313).  Zero-norm pairs produce NaN (0/0,
-    the _brute_topk treatment), and a NaN cosine passes ``>=`` filters
-    (Spark orders NaN above every double, so ``NaN >= 0.99`` is true),
-    but no caller feeds one any more: the pair dedups collapse through
-    _vector_collapse, which drops zero-norm vectors (their oracle cosine
-    is NULL), and ann_ivf_topk's sentinel filter excludes them.  The
-    interpreted Catalyst division would instead RAISE under ANSI mode
-    (Spark 4 default), so wherever both folds run, results are
-    bit-identical."""
-    import numpy as np
+    Both sides are read by _arrow_matrix and scored by the row-pair
+    _cosine, so an undefined (zero-norm) pair's cosine is NULL, as in
+    the oracle."""
 
     def score(batches):
         import pyarrow as pa
@@ -2295,14 +2280,11 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
                 continue
             A = _arrow_matrix(batch.column(va))
             B = _arrow_matrix(batch.column(vb), A.shape[1])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cs = _round_half_away(
-                    _row_dots(A, B) / (np.sqrt(_row_dots(A, A))
-                                       * np.sqrt(_row_dots(B, B))),
-                    ndigits)
+            cs, undefined = _cosine(_row_dots(A, B), _row_dots(A, A),
+                                    _row_dots(B, B), ndigits)
             yield pa.RecordBatch.from_arrays(
-                [batch.column(ida), batch.column(idb), pa.array(cs)],
-                [ida, idb, "cosine"])
+                [batch.column(ida), batch.column(idb),
+                 pa.array(cs, mask=undefined)], [ida, idb, "cosine"])
 
     src = df.select(ida, idb, va, vb)
     ta = src.schema[ida].dataType.simpleString()
@@ -3187,7 +3169,7 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
     order and round) before the top-2 selection; ties break to the
     lowest cell id (argmax-first over a cell-ascending codebook).  A
     zero-norm row's cosine is NULL everywhere: it gets the sentinel cell
-    and a NULL c1 (ADVICE r3), never a NaN argmax's pick."""
+    and a NULL c1 (ADVICE r3), never the argmax of an all-undefined row."""
     import numpy as np
 
     W = np.asarray(W, dtype=np.float64)          # (nlist, d)
@@ -3551,6 +3533,7 @@ def _vector_collapse(e: DataFrame):
     never group, so the key needs no cross-engine parity."""
     gk = F.concat(F.hex(F.xxhash64("v")),
                   F.hex(F.xxhash64(F.lit(1), F.col("v"))))
+    # unfiltered, identical zero vectors would pair at 1.0 as one group
     keyed, grp_v = _collapse(e.where(_sq_norm() > 0), gk, "vec_id",
                              v=F.min_by("v", "vec_id"))
     return (keyed, grp_v.select(F.col("rep").alias("vec_id"), "v"),
@@ -4269,6 +4252,16 @@ _PII_PHONE = (r"(\+\d{1,2}[-. ])?"
               r"(\(\d{3}\) ?|\+?\d{3}[-. ])\d{3}[-. ]\d{4}")
 
 
+def _pii_scrub(col: str):
+    """``col`` with every PII match replaced by its typed placeholder, in
+    email -> ip -> phone precedence (the oracles' nested regexp_replace)."""
+    out = F.col(col)
+    for rx, tag in ((_PII_EMAIL, "<EMAIL>"), (_PII_IP, "<IP>"),
+                    (_PII_PHONE, "<PHONE>")):
+        out = F.regexp_replace(out, F.lit(rx), F.lit(tag))
+    return out
+
+
 def pii_scrub_documents(spark, sf):
     """PII detection + scrubbing for training-data prep: per document,
     the number of email / IPv4 / phone-shaped matches in the raw text, a
@@ -4289,11 +4282,6 @@ def pii_scrub_documents(spark, sf):
         F.col("doc_id").cast("long").alias("doc_id"), "text")
     keyed, grp = _collapse(docs, _text_key("text"), "doc_id",
                            t=F.min("text"))
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("t"), F.lit(_PII_EMAIL), F.lit("<EMAIL>")),
-            F.lit(_PII_IP), F.lit("<IP>")),
-        F.lit(_PII_PHONE), F.lit("<PHONE>"))
     ne = F.regexp_count("t", F.lit(_PII_EMAIL)).cast("long")
     ni = F.regexp_count("t", F.lit(_PII_IP)).cast("long")
     np_ = F.regexp_count("t", F.lit(_PII_PHONE)).cast("long")
@@ -4301,7 +4289,7 @@ def pii_scrub_documents(spark, sf):
         "gk", ne.alias("n_emails"), ni.alias("n_ips"),
         np_.alias("n_phones"),
         ((ne + ni + np_) > 0).alias("has_pii"),
-        F.md5(scrubbed).alias("scrubbed_md5"))
+        F.md5(_pii_scrub("t")).alias("scrubbed_md5"))
     return (keyed.join(scored, "gk")
                  .select("doc_id", "n_emails", "n_ips", "n_phones",
                          "has_pii", "scrubbed_md5"))
@@ -4574,13 +4562,7 @@ def _curate_core(spark, sf, with_text: bool, passthrough: tuple = (),
                     else _fixture_blocklist_domains(spark, sf))
     keyed, grp = _collapse(docs, _text_key("text"), "doc_id", *passthrough,
                            t=F.min("text"))
-    scrub = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("t"), F.lit(_PII_EMAIL),
-                             F.lit("<EMAIL>")),
-            F.lit(_PII_IP), F.lit("<IP>")),
-        F.lit(_PII_PHONE), F.lit("<PHONE>"))
-    out_scrub = scrub if with_text else F.md5(scrub)
+    out_scrub = _pii_scrub("t") if with_text else F.md5(_pii_scrub("t"))
     mat = (grp.withColumn("w", F.split("t", " "))
               .select("gk", F.col("t").isNull().alias("is_null"),
                       F.explode(F.array(F.struct(

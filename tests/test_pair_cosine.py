@@ -3,13 +3,12 @@ _pair_cosine Arrow kernel replaced the interpreted aggregate(zip_with(...))
 Catalyst fold in ann_ivf_topk probe scoring and in the rep-pair verify of
 dedup_embedding_cosine and ann_lsh_near_pairs.  These tests pin (a) value
 equality with the interpreted fold it replaced (same left-to-right IEEE
-fold, NaN for zero-norm pairs), (b) the DuckDB oracle's rounding — ties
+fold, NULL for zero-norm pairs), (b) the DuckDB oracle's rounding — ties
 away from zero, which every numpy kernel shares through _round_half_away
 — (c) the row-local property of _ivf_two that lets the query side
 score only the probe vectors, and (d) that every kernel reading vectors
 through _arrow_matrix rejects ragged input."""
 
-import math
 import os
 import sys
 
@@ -33,10 +32,8 @@ def _interpreted_cosine(df):
 
 
 def test_pair_cosine_matches_interpreted_fold(spark):
-    """Value equality on non-zero-norm pairs (the only pairs the old
-    fold could evaluate at all: under ANSI mode — Spark 4 default — the
-    Catalyst division RAISES on a zero divisor, so every corpus the old
-    fold ever ran green on is zero-norm-free)."""
+    """Value equality on non-zero-norm pairs (zero-norm pairs: see
+    test_pair_cosine_zero_norm_is_null)."""
     from sparklog.queries import _pair_cosine
 
     data = [
@@ -54,17 +51,28 @@ def test_pair_cosine_matches_interpreted_fold(spark):
     assert got == exp
 
 
-def test_pair_cosine_zero_norm_is_nan(spark):
-    """Zero-norm pairs get the _brute_topk NaN treatment (the
-    interpreted fold they replace would raise under ANSI instead — the
-    kernel is strictly more defined, identical wherever both run)."""
+def test_pair_cosine_zero_norm_is_null(spark):
+    """A zero-norm pair's cosine is NULL, the oracles' x/0.  The
+    interpreted fold's double division raises DIVIDE_BY_ZERO under ANSI
+    mode (the Spark 4 default) and is NULL with ANSI off."""
+    from pyspark.errors import ArithmeticException
+
     from sparklog.queries import _pair_cosine
 
-    df = spark.createDataFrame(
-        [(3, 4, [0.0, 0.0], [1.0, 1.0])],
-        "a bigint, b bigint, va array<double>, vb array<double>")
+    df = spark.range(1).selectExpr("3L AS a", "4L AS b",
+                                   "array(0D * id, 0D) AS va",
+                                   "array(1D, 1D) AS vb")
     [r] = _pair_cosine(df, "a", "b", "va", "vb", 4).collect()
-    assert math.isnan(r.cosine)
+    assert r.cosine is None
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            _interpreted_cosine(df).collect()
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        assert _interpreted_cosine(df).collect()[0].cosine is None
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_pair_cosine_rounds_ties_like_duckdb(spark):

@@ -3,6 +3,7 @@ aggregate goldens vs an independent pandas computation, token-equality
 audit, and kill-and-rerun resume idempotency."""
 
 import glob
+import json
 import os
 import shutil
 import threading
@@ -104,7 +105,6 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     assert stats["rows"] == 2000
     assert stats["n_failed"] > 0          # dead-letter path exercised
     # audit stage committed with zero violations
-    import json
     with open(os.path.join(out_dir, "_manifests", "CURRENT")) as f:
         name = f.read().strip()
     with open(os.path.join(out_dir, "_manifests", name)) as f:
@@ -158,6 +158,23 @@ def _committed(out):
     """(snapshot id, committed stage names) of the manifest in ``out``."""
     state = Manifest(out).load()
     return state["snapshot_id"], set(state["stages"])
+
+
+def _rewrite_committed(out, stage, info):
+    """Replace the committed info of ``stage`` in the current snapshot of
+    the manifest in ``out`` by ``info``, keeping its commit stamp; returns
+    the info it replaced."""
+    m = Manifest(out)
+    with open(os.path.join(m.dir, "CURRENT")) as f:
+        path = os.path.join(m.dir, f.read().strip())
+    with open(path) as f:
+        state = json.load(f)
+    committed = state["stages"][stage]
+    state["stages"][stage] = {"committed_at": committed["committed_at"],
+                              **info}
+    with open(path, "w") as f:
+        json.dump(state, f)
+    return committed
 
 
 def _settled(spark):
@@ -251,8 +268,6 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
     write) or no counts at all does not resume: it fails with a message
     that says to delete _manifests/, before any Spark job and without
     committing a stage."""
-    import json
-
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, fixtures.synth_lines(600, seed=4),
                                 src_path, n_partitions=2)
@@ -260,19 +275,6 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, src_path, out, fail_after="sinks")
     assert _committed(out) == (1, {"sinks"})
-
-    def rewrite_sinks_info(info):
-        m = Manifest(out)
-        with open(os.path.join(m.dir, "CURRENT")) as f:
-            path = os.path.join(m.dir, f.read().strip())
-        with open(path) as f:
-            state = json.load(f)
-        committed = state["stages"]["sinks"]
-        state["stages"]["sinks"] = {
-            "committed_at": committed["committed_at"], **info}
-        with open(path, "w") as f:
-            json.dump(state, f)
-        return committed
 
     def rerun_raises(group):
         sc = spark.sparkContext
@@ -285,13 +287,13 @@ def test_resume_from_per_partition_lineage_manifest(spark, tmp_path):
         assert list(_settled(spark).getJobIdsForGroup(group)) == []
         assert _committed(out) == (1, {"sinks"})
 
-    observed = rewrite_sinks_info({"lineage": [
+    observed = _rewrite_committed(out, "sinks", {"lineage": [
         {"partition_id": 0, "n_rows": 250, "n_failed": 4},
         {"partition_id": 1, "n_rows": 350, "n_failed": 7}]})
     assert observed["rows"] == 600
     rerun_raises("per-partition-lineage")
 
-    rewrite_sinks_info({})
+    _rewrite_committed(out, "sinks", {})
     rerun_raises("no-counts")
 
 
@@ -516,6 +518,42 @@ def test_run_dedup_resumes_from_persisted_rep_graph(spark, tmp_path,
     with pytest.raises(RuntimeError, match="delete .*_manifests/"):
         run_dedup(spark, sf, old)
     assert len(builds) == 1   # dedup_connected_components above
+
+
+def test_run_dedup_checks_every_committed_stage_first(spark, tmp_path,
+                                                     monkeypatch):
+    """A run killed in substring_runs whose committed components stage
+    then loses its bucket metrics does not resume: the rerun raises the
+    message that says to delete _manifests/ before any Spark job, and
+    commits no stage (it does not run substring_runs first)."""
+    from sparklog import queries
+    from sparklog.pipeline import run_dedup
+
+    sf = "/root/testdata/sf0.001"
+    out = str(tmp_path / "out")
+
+    def killed(*_args):
+        raise RuntimeError("killed in substring_runs")
+
+    with monkeypatch.context() as m:
+        m.setattr(queries, "dedup_substring", killed)
+        with pytest.raises(RuntimeError, match="killed in substring_runs"):
+            run_dedup(spark, sf, out)
+    before = _committed(out)
+    assert before == (2, {"near_dup_pairs", "components"})
+    info = Manifest(out).load()["stages"]["components"]
+    del info["bucket_metrics"]
+    _rewrite_committed(out, "components", info)
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-resume-check", "dedup-resume-check")
+    try:
+        with pytest.raises(RuntimeError, match="components stage carries "
+                           "no .*delete .*_manifests/"):
+            run_dedup(spark, sf, out)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(_settled(spark).getJobIdsForGroup("dedup-resume-check")) == []
+    assert _committed(out) == before
 
 
 def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):

@@ -15,6 +15,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
+from __spark_entry__ import _ensure_pyfiles  # noqa: E402
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -76,6 +78,7 @@ def main():
     from sparklog.session import get_spark
 
     spark = get_spark("local[8]", shuffle_partitions=8)
+    _ensure_pyfiles(spark)   # workers import sparklog from any cwd
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_conn(sf_dir)
 
