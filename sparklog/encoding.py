@@ -2,14 +2,17 @@
 table shape ``(doc_id, tokens:array<int32>, n_tok, source)``.
 
 Encoding (fixture generator and decoder are inverses): ``tokens[i]`` is the
-Unicode code point of ``raw[i]``.  Syslog bodies are printable US-ASCII
-(RFC5424 PRINTUSASCII), so int32 is ample and round-tripping is exact —
-which makes the routed-row token-array equality audit well-defined.
+Unicode code point of ``raw[i]``.  int32 holds every code point, so the
+round trip is exact for any line, ASCII or not (astral code points
+included) — which makes the routed-row token-array equality audit
+well-defined.
 
 Two decoder paths:
 
-* **SQL/JVM path (codegen'd, no Python):**
-  ``concat_ws('', transform(tokens, t -> char(t)))``
+* **SQL/JVM path (codegen'd, no Python):** ``char(t)`` per code point
+  below 256, and above it the code point as 8 hex digits, unhexed and
+  decoded as UTF-32 (big-endian): Spark's ``char(n)`` is
+  ``chr(n % 256)``.  ASCII text never takes the decode branch.
 * **Arrow path** (``detokenize_arrow``) for the Python parse batch: one
   decoder over the list column's flat values and offsets builds a
   pa.StringArray — no per-row Python.  ``udfs._string_from_token_list``
@@ -44,15 +47,14 @@ def detokenize_arrow(tokens):
         pa.py_buffer(data))
 
 
-# Spark SQL expression for the JVM-side (whole-stage-codegen) decoder.
-DETOKENIZE_SQL = "concat_ws('', transform({col}, t -> char(t)))"
-
-
 def detokenize_col(col: str = "tokens"):
-    """Spark Column that decodes a tokens array JVM-side (no Python)."""
+    """Spark Column that decodes a tokens array JVM-side (no Python, whole-
+    stage codegen): the SQL/JVM path of the module docstring."""
     from pyspark.sql import functions as F
 
-    return F.expr(DETOKENIZE_SQL.format(col=col))
+    return F.expr(f"concat_ws('', transform({col}, t -> case when t < 256 "
+                  "then char(t) else decode(unhex(lpad(hex(t), 8, '0')), "
+                  "'UTF-32') end))")
 
 
 def tokenize_col(col: str = "raw"):

@@ -215,17 +215,20 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     The MinHash rep graph is built once, by near_dup_pairs, which
     persists its (doc_id, rep) membership and (a, b) rep pairs under
     ``rep_graph/`` for the components stage (and for a resume).  Each
-    stage commits the metrics row of the cascade it ran: the two MinHash
-    cascades' meters (_bucket_pairs), observed on the rep_pairs and pairs
-    writes that run them, _cc_stats and _substring_window_stats; and
-    dedup_metrics only writes those committed rows out."""
+    stage commits the metrics row of the cascade it ran, counted by the
+    plan that ran it: the two MinHash cascades' meters (_bucket_pairs),
+    observed on the rep_pairs and pairs writes, _cc_stats on the CC
+    labels, and the substring drop's meter (_substring_kept), observed on
+    the substring_runs write; dedup_metrics only writes those committed
+    rows out."""
     from .queries import (
         _cc_core,
         _cc_stats,
         _minhash_pairs,
         _minhash_rep_graph,
-        _substring_window_stats,
-        dedup_substring,
+        _substring_kept,
+        _substring_match_positions,
+        _substring_maximal_runs,
         release_caches,
     )
 
@@ -255,9 +258,16 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return _save(df, "components", minhash_components=_cc_stats(*cc))
 
     def _substring(_):
-        return _save(dedup_substring(spark, sf_dir), "substring_runs",
-                     substring_windows=_substring_window_stats(
-                         spark, sf_dir).collect()[0].asDict())
+        kept, meter = _substring_kept(spark, sf_dir)
+        info = _save(_substring_maximal_runs(_substring_match_positions(kept)),
+                     "substring_runs")
+        if not info["rows"]:
+            # with no runs, AQE replaces the plan above the empty shuffle
+            # stage by an empty relation, the observed windows with it, so
+            # the write fills no meter: meter the windows on their own
+            kept, meter = _substring_kept(spark, sf_dir)
+            kept.write.format("noop").mode("overwrite").save()
+        return {**info, "bucket_metrics": {"substring_windows": meter.get}}
 
     def _metrics(done):
         rows = [(path, *row.values())

@@ -1611,7 +1611,8 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
     trick from the MapReduce CC literature).  Lineage is truncated every
     iteration with localCheckpoint (on a real cluster: checkpoint to the
     object store), and the loop exits on the first iteration with zero
-    label changes — a cheap count on the narrow (v, l) table.  Runs on the
+    label changes, counted by an observation on that checkpoint (each
+    vertex carries its label from before the step as l0).  Runs on the
     COLLAPSED rep graph (unique texts), never the raw corpus."""
     # materialize the edge set ONCE: every iteration joins it, and without
     # the checkpoint each nb-join would re-execute the whole upstream
@@ -1622,31 +1623,28 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
                 .localCheckpoint())
     labels = (vertices.select("v", F.col("v").alias("l"))
                       .localCheckpoint())
-    n_iters, converged = 0, False
-    for _ in range(max_iter):
+    for n_iters in range(1, max_iter + 1):
         nb = (sym.join(labels.select(F.col("v").alias("y"),
                                      F.col("l").alias("ly")), "y")
                  .groupBy("x").agg(F.min("ly").alias("nl")))
         stepped = (labels.join(nb.select(F.col("x").alias("v"), "nl"),
                                "v", "left")
-                         .select("v", F.least("l", F.coalesce("nl", "l"))
+                         .select("v", F.col("l").alias("l0"),
+                                 F.least("l", F.coalesce("nl", "l"))
                                   .alias("l")))
         jumped = (stepped.join(stepped.select(F.col("v").alias("l"),
                                               F.col("l").alias("ll")),
                                "l", "left")
-                         .select("v", F.least("l", F.coalesce("ll", "l"))
+                         .select("v", "l0",
+                                 F.least("l", F.coalesce("ll", "l"))
                                   .alias("l")))
-        new_labels = jumped.localCheckpoint()
-        changed = (new_labels.join(labels.select("v",
-                                                 F.col("l").alias("lo")),
-                                   "v")
-                             .where(F.col("l") != F.col("lo")).count())
-        labels = new_labels
-        n_iters += 1
-        if changed == 0:
-            converged = True
-            break
-    return labels, n_iters, converged
+        moved = Observation()
+        labels = (jumped.observe(moved, F.count_if(F.col("l") != F.col("l0"))
+                                         .alias("n"))
+                        .select("v", "l").localCheckpoint())
+        if moved.get["n"] == 0:
+            return labels, n_iters, True
+    return labels, max_iter, False
 
 
 def _cc_core(membership: DataFrame, rep_pairs: DataFrame):
@@ -1746,8 +1744,8 @@ _SUBSTR_CAP = 64    # max occurrences of a window before its bucket is
 
 def _substring_windows(spark, sf) -> DataFrame:
     """(rep, pos, h) sliding word windows over UNIQUE texts — the keyed
-    table dedup_substring buckets on, shared with _substring_window_stats
-    so the loss meter describes exactly what the op pairs.
+    table _substring_kept buckets, meters and drops for both substring
+    ops.
 
     The words array is materialized ONCE per unique text in its own
     projection BELOW the explode (the _with_shingles pattern): transform
@@ -1787,11 +1785,12 @@ def dedup_substring(spark, sf):
     Algorithm: COLLAPSE-FIRST to unique texts (rep = min doc_id — the
     x100 replica corpus pays windowing once per distinct text), then
     every text emits its (L - W + 1) sliding word windows keyed by
-    md5(window); windows bucket by hash; buckets over _SUBSTR_CAP
-    occurrences are dropped (boilerplate guard, mirrored in the
-    oracle); within-bucket cross-text pairs align on their position
-    DIAGONAL (pos_a - pos_b), and consecutive matched positions on one
-    diagonal coalesce into maximal runs by the gaps-and-islands trick
+    md5(window); one window over the hash sizes each bucket, and buckets
+    over _SUBSTR_CAP occurrences are dropped (boilerplate guard, mirrored
+    in the oracle's cap join; _substring_kept); within-bucket cross-text
+    pairs align on their position DIAGONAL (pos_a - pos_b), and
+    consecutive matched positions on one diagonal coalesce into maximal
+    runs by the gaps-and-islands trick
     (pos - row_number is constant within an island), giving
     match_len = run_windows + W - 1 words.
 
@@ -1800,53 +1799,48 @@ def dedup_substring(spark, sf):
     array approach also sorts every token); a sampled deployment keeps
     only windows with hash % p == 0 (winnowing) for candidate doc
     pairs and re-windows just the candidates, trading recall of runs
-    shorter than ~p·W.  The self-join's two sides and the bucket-size
-    probe all reuse the SAME canonical window exchange (AQE stage
-    reuse, the minhash precedent); the over-cap side of the anti-join
-    is tiny by construction and AQE broadcasts it.  The islands window
-    partitions by (doc_a, doc_b, diagonal) — bounded by a document's
-    own window count, never corpus-sized.  md5-per-window (O(W) per
-    window) keeps whole-stage codegen and cross-engine bit-parity; a
+    shorter than ~p·W.  The bucket window and the self-join's two sides
+    share ONE hash-partitioned window exchange (AQE stage reuse, the
+    minhash precedent): the window needs no shuffle of its own, but
+    every row of a bucket, over the cap or not, lands in one task.  The
+    islands window partitions by (doc_a, doc_b, diagonal) — bounded by a
+    document's own window count, never corpus-sized.  md5-per-window
+    (O(W) per window) keeps whole-stage codegen and cross-engine
+    bit-parity; a
     rolling Rabin-Karp hash in an Arrow kernel would cut the hashing
     constant ~W-fold at the cost of the Python boundary, documented
     trade.  Joining on the 128-bit hash instead of the raw window
     string is the embedding-dedup 2x64-bit pattern (collision odds
     ~2^-64 at any realistic corpus)."""
-    kept = _substring_kept(spark, sf)
+    kept = _substring_kept(spark, sf)[0]
     return _substring_maximal_runs(_substring_match_positions(kept))
 
 
-def _substring_buckets(wins: DataFrame) -> DataFrame:
-    """(h, n) occurrences per window hash: the bucket sizes the over-cap
-    drop reads, shared by _substring_kept and its loss meter."""
-    return wins.groupBy("h").agg(F.count("*").alias("n"))
+def _substring_kept(spark, sf) -> tuple[DataFrame, Observation]:
+    """(windows surviving the over-cap bucket drop, meter): ONE
+    definition, so the exact op, the sampled op's both phases, and the
+    subset property between them can never diverge on cap policy.
 
-
-def _substring_kept(spark, sf) -> DataFrame:
-    """Windows surviving the over-cap bucket drop — ONE definition so
-    the exact op, the sampled op's both phases, and the subset property
-    between them can never diverge on cap policy."""
-    wins = _substring_windows(spark, sf)
-    over = (_substring_buckets(wins)
-            .where(F.col("n") > _SUBSTR_CAP).select("h"))
-    return wins.join(over, "h", "left_anti")
-
-
-def _substring_window_stats(spark, sf) -> DataFrame:
-    """One-row loss meter of _substring_kept's drop (run_dedup's
-    substring_windows row), a second plan: the counted buckets sit on the
-    anti-join's build side, where AQE leaves an observation unfilled.
-    The op DROPS over-cap window buckets (no refine/salt cascade:
-    boilerplate windows pair n^2 and carry no dedup signal), so the row
-    reports the drop directly on the same bucket sizes: n_dropped_rows =
-    window occurrences inside dropped buckets."""
-    n, over = F.col("n"), F.col("n") > _SUBSTR_CAP
-    return _substring_buckets(_substring_windows(spark, sf)).agg(
-        F.sum(n).alias("n_rows"),
-        F.count("*").alias("n_buckets"),
-        F.sum(over.cast("long")).alias("n_over_cap_buckets"),
-        F.sum(F.when(over, n).otherwise(F.lit(0))).cast("long")
-         .alias("n_dropped_rows"))
+    One window over h sizes each bucket (n) and marks its min (rep, pos)
+    row, the one row that counts the bucket.  The meter observes the
+    drop on that frame, below the n <= _SUBSTR_CAP filter, so the write
+    of the runs fills it (run_dedup's substring_windows row): n_rows and
+    n_buckets before the drop, n_over_cap_buckets and n_dropped_rows
+    (window occurrences inside dropped buckets).  The op DROPS over-cap
+    buckets (no refine/salt cascade: boilerplate windows pair n^2 and
+    carry no dedup signal)."""
+    meter, by_h = Observation(), Window.partitionBy("h")
+    first, n, marker = F.struct("rep", "pos"), F.col("n"), F.col("marker")
+    over = n > _SUBSTR_CAP
+    sized = _substring_windows(spark, sf).select(
+        "rep", "pos", "h", F.count(F.lit(1)).over(by_h).alias("n"),
+        (first == F.min(first).over(by_h)).alias("marker"))
+    return (sized.observe(meter, F.count(F.lit(1)).alias("n_rows"),
+                          F.count_if(marker).alias("n_buckets"),
+                          F.count_if(marker & over)
+                           .alias("n_over_cap_buckets"),
+                          F.count_if(over).alias("n_dropped_rows"))
+                 .where(n <= _SUBSTR_CAP).select("rep", "pos", "h"), meter)
 
 
 def _substring_match_positions(w_df: DataFrame) -> DataFrame:
@@ -1895,16 +1889,17 @@ def dedup_substring_sampled(spark, sf):
     pair is missed with probability ~(7/8)^(L-W+1) — 87.5% at the
     minimum L = W (one window), ~26% at L = W + 9, under 7% by
     L = W + 19, negligible for the multi-hundred-word boilerplate
-    blocks the tool hunts (ADVICE r7: the old text put 26% at L = W).  Cost: the pairing shuffle
-    (the expensive part — candidate join + islands) runs on 1/8 of the
-    window rows; the full window table is touched only by (a) one
-    map-side-combined bucket-size aggregate (the cap audit) and (b) the
-    phase-2 re-window, which a production deployment pushes down to the
-    candidate docs' files (the semi-join here prunes rows, not I/O —
-    at 100 TB the candidate id set drives partition pruning instead).
+    blocks the tool hunts (ADVICE r7: the old text put 26% at L = W).
+    Cost: the pairing shuffle (the expensive part — candidate join +
+    islands) runs on 1/8 of the window rows; the full window table is
+    touched only by (a) _substring_kept's bucket window (the cap drop)
+    and (b) the phase-2 re-window, which a production deployment pushes
+    down to the candidate docs' files (the semi-join here prunes rows,
+    not I/O — at 100 TB the candidate id set drives partition pruning
+    instead).
     Tuning p trades recall floor against shuffle volume; the exact op
     remains the audit tool at sample p = 1."""
-    kept = _substring_kept(spark, sf)
+    kept = _substring_kept(spark, sf)[0]
     samp = kept.where(
         F.substring("h", 1, 1).isin(*_SUBSTR_SAMPLE_HEX))
     cand = _substring_match_positions(samp).select(
@@ -3167,9 +3162,10 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
     Bit-parity with the DuckDB oracle: the scores are _cell_cosines'
     6-dp _cosines of the _arrow_matrix rows (the oracle's list_sum fold
     order and round) before the top-2 selection; ties break to the
-    lowest cell id (argmax-first over a cell-ascending codebook).  A
-    zero-norm row's cosine is NULL everywhere: it gets the sentinel cell
-    and a NULL c1 (ADVICE r3), never the argmax of an all-undefined row."""
+    lowest cell id (argmax-first over a cell-ascending codebook).  A row
+    with no defined cosine (a zero-norm row: its best cell is still
+    _cell_cosines' -inf) gets the sentinel cell and a NULL c1 (ADVICE
+    r3), never the argmax of an all-undefined row."""
     import numpy as np
 
     W = np.asarray(W, dtype=np.float64)          # (nlist, d)
@@ -3182,7 +3178,6 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
             if rows == 0:
                 continue
             V = _arrow_matrix(batch.column("v"))
-            zero = _row_dots(V, V) == 0.0
             b1 = np.empty(rows, dtype=np.int64)
             b2 = np.empty(rows, dtype=np.int64)
             c1 = np.empty(rows)
@@ -3192,6 +3187,7 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
                 c1[chunk] = cs[r, bc1]
                 cs[r, bc1] = -np.inf
                 b2[chunk] = np.argmax(cs, axis=1)
+            zero = np.isneginf(c1)
             cell1 = np.where(zero, _IVF_SENTINEL_CELL, b1).astype(np.int32)
             cell2 = np.where(zero, _IVF_SENTINEL_CELL, b2).astype(np.int32)
             yield pa.RecordBatch.from_arrays(

@@ -61,24 +61,22 @@ def write_sinks(df: DataFrame, out_dir: str,
 
 
 def audit_token_equality(routed: DataFrame, source: DataFrame) -> int:
-    """North-rule invariant: every routed row's token array equals its
-    source row's.  The routed side carries the decoded ``raw`` string (the
-    token array never crosses the Arrow boundary outbound — see
+    """North-rule invariant: every source row is routed exactly once, with
+    its token array.  The routed side carries the decoded ``raw`` string
+    (the token array never crosses the Arrow boundary outbound — see
     parse_stage); the source side is decoded by a string-only mapInArrow
     pass.  Because the token codec is bijective (codepoint<->int), string
-    equality IS token-array equality.  One full-outer join on doc_id
-    computes mismatched, dropped (source-only), and extra (routed-only)
-    rows together — a single shuffle of each side instead of the three a
-    separate inner+2x-anti formulation costs.  Returns the violation count
-    (must be 0)."""
+    equality IS token-array equality.  One signed multiset count over
+    (doc_id, raw), +1 per routed row and -1 per source row, must balance
+    to 0 in every group.  Returns the violation count, the sum of
+    |balance| (must be 0): a dropped or an extra (e.g. duplicated) row
+    counts 1, and a mismatch counts its routed row and its source row."""
     from .udfs import DECODED_SCHEMA, make_decoder_fn
 
-    r = routed.select("doc_id", F.col("raw").alias("routed_raw"))
+    r = routed.select("doc_id", "raw", F.lit(1).alias("d"))
     s = (source.select("doc_id", "tokens")
                .mapInArrow(make_decoder_fn(), DECODED_SCHEMA)
-               .select("doc_id", F.col("raw").alias("src_raw")))
-    j = r.join(s, "doc_id", "full_outer")
-    violation = (F.col("routed_raw").isNull()           # dropped
-                 | F.col("src_raw").isNull()            # extra
-                 | ~(F.col("routed_raw") == F.col("src_raw")))
-    return j.where(violation).count()
+               .select("doc_id", "raw", F.lit(-1).alias("d")))
+    balance = r.unionByName(s).groupBy("doc_id", "raw").agg(
+        F.abs(F.sum("d")).alias("b"))
+    return balance.agg(F.sum("b")).collect()[0][0] or 0

@@ -578,6 +578,25 @@ def test_run_dedup_meters_overcap_cascades(spark, tmp_path, monkeypatch,
     assert sw["n_refined_rows"] is None and sw["n_salted_rows"] is None
 
 
+@pytest.mark.parametrize("name", ["dedup_substring",
+                                  "dedup_substring_sampled"])
+def test_overcap_substring_oracle_parity(spark, overcap_docs_dir, name):
+    """The substring ops' window drop equals the oracles' cap join on an
+    over-cap bucket: the 70 texts' shared block is their only shared
+    window, so the oracle reports no run, and a leak of that bucket would
+    add all 2,415 pairs of the 70 texts."""
+    from sparklog.queries import REGISTRY, release_caches
+    from tools.check_parity import compare, duck_conn
+
+    d, _texts = overcap_docs_dir
+    fn, sql = REGISTRY[name]
+    got = fn(spark, d).toPandas()
+    release_caches()
+    want = duck_conn(d).execute(sql).df()
+    assert len(want) == 0
+    assert compare(name, got, want) == []
+
+
 def test_cc_labels_reports_truncation_distinctly(spark):
     """Round-5 self-review: hitting max_iter with labels still moving
     must be DISTINGUISHABLE from converging on the last pass — the

@@ -30,13 +30,19 @@ def golden_src(spark, tmp_path_factory):
 
 
 def test_tokenize_roundtrip_jvm(spark):
-    """JVM tokenize → detokenize must be the identity on golden lines."""
-    pdf = fixtures.golden_frame()
-    df = spark.createDataFrame(pdf)
+    """JVM tokenize → detokenize must be the identity on golden lines and
+    on non-ASCII ones: Latin-1, the rest of the BMP and astral code
+    points (Spark's char(n) is chr(n % 256), so it cannot decode them)."""
+    lines = list(fixtures.golden_frame()["raw"]) + [
+        "<34>Oct 11 22:14:15 h su: caf\u00e9 \u20ac \U0001F600 \u4e2d\u6587",
+        "\u00ff\u0100\u07ff\u0800\uffff\U00010000\U0010FFFF", "\U0001F600",
+        ""]
+    df = spark.createDataFrame(pd.DataFrame({"raw": lines}))
     back = (df.withColumn("tokens", tokenize_col("raw"))
-              .withColumn("raw2", detokenize_col("tokens"))
-              .where(F.col("raw2") != F.col("raw")))
-    assert back.count() == 0
+              .withColumn("raw2", detokenize_col("tokens")))
+    assert [r.raw2 for r in back.collect()] == lines
+    astral = back.where(F.col("raw") == "\U0001F600").first()
+    assert astral.tokens == [0x1F600]
 
 
 def test_goldens_through_pipeline(spark, golden_src):
@@ -124,6 +130,53 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     assert {c: n for c, n in lineage["sink_rows"].items() if n} == {
         r["sink_class"]: r["count"]
         for r in sinks.groupBy("sink_class").count().collect()}
+
+
+def test_audit_counts_duplicated_dropped_and_mismatched_rows(spark,
+                                                             golden_src):
+    """The audit balances routed rows against source rows as multisets of
+    (doc_id, raw): a duplicated or a dropped routed row counts 1, and a
+    mismatched one counts its routed row and its source row."""
+    src = spark.read.parquet(golden_src)
+    routed = parse_stage(src).select("doc_id", "raw")
+    first = routed.orderBy("doc_id").limit(1)
+    doc = first.first().doc_id
+    mismatched = routed.withColumn(
+        "raw", F.when(F.col("doc_id") == doc, F.concat("raw", F.lit("x")))
+                .otherwise(F.col("raw")))
+    assert audit_token_equality(routed, src) == 0
+    assert audit_token_equality(routed.unionByName(first), src) == 1
+    assert audit_token_equality(
+        routed.join(first, "doc_id", "left_anti"), src) == 1
+    assert audit_token_equality(mismatched, src) == 2
+
+
+def test_pipeline_fails_audit_on_fanned_out_rows(spark, tmp_path,
+                                                 monkeypatch):
+    """A dim that repeats a key fans rows out in enrich's left join: the
+    routed rows of that hostname are written twice, and the job fails at
+    the audit, with every stage listed before it committed."""
+    from sparklog import enrich
+
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(600, seed=8),
+                                src_path, n_partitions=2)
+    dim_host = enrich.dim_host
+
+    def repeated(spark_, n_hosts=1000):
+        dim = dim_host(spark_, n_hosts)
+        return dim.unionByName(dim.where(F.col("hostname") == "host1"))
+
+    monkeypatch.setattr(enrich, "dim_host", repeated)
+    out = str(tmp_path / "out")
+    with pytest.raises(AssertionError, match="audit failed") as failed:
+        run_pipeline(spark, src_path, out, num_partitions=2)
+    n_host1 = (spark.read.parquet(os.path.join(out, "sinks"))
+               .where(F.col("hostname") == "host1").count())
+    # each source row of host1 is written twice: one extra row apiece
+    assert n_host1 > 0 and n_host1 % 2 == 0
+    assert str(failed.value).endswith(f"audit failed: {n_host1 // 2} rows")
+    assert _committed(out) == (3, {"sinks", "aggregates", "metrics"})
 
 
 def _table_rows(spark, path):
@@ -536,7 +589,7 @@ def test_run_dedup_checks_every_committed_stage_first(spark, tmp_path,
         raise RuntimeError("killed in substring_runs")
 
     with monkeypatch.context() as m:
-        m.setattr(queries, "dedup_substring", killed)
+        m.setattr(queries, "_substring_kept", killed)
         with pytest.raises(RuntimeError, match="killed in substring_runs"):
             run_dedup(spark, sf, out)
     before = _committed(out)

@@ -404,22 +404,25 @@ def test_dedup_incremental_plan_probes_corpus_with_broadcast(spark):
 def test_dedup_substring_plan_shape(spark):
     """The substring-dedup candidate join must be a pure equi-join on
     the window hash (never a cartesian/nested-loop with the rep-order
-    predicate as the join condition), and the islands window must
+    predicate as the join condition), and the one islands window must
     partition by the (doc_a, doc_b, diag) pair key — bounded by a
-    document's own window count — never by a raw corpus-wide key.
-    Same guards for the winnowing-sampled variant, which additionally
-    must prune phase 2 with SEMI joins (candidate docs before the pair
-    join, candidate pairs after) — a projected inner join would carry
-    the cand columns and break the semi shape."""
+    document's own window count — never by a raw corpus-wide key; every
+    other window is the over-cap drop's, partitioned by the window hash
+    h alone.  Same guards for the winnowing-sampled variant, which
+    additionally must prune phase 2 with SEMI joins (candidate docs
+    before the pair join, candidate pairs after) — a projected inner
+    join would carry the cand columns and break the semi shape."""
     from sparklog.queries import dedup_substring, dedup_substring_sampled
 
     for fn in (dedup_substring, dedup_substring_sampled):
         p = _plan(fn(spark, SF))
         assert "CartesianProduct" not in p, p
         assert "NestedLoopJoin" not in p, p
-        spec = [ln for ln in p.splitlines()
-                if "windowspecdefinition" in ln]
-        assert spec and all("diag" in ln for ln in spec), spec
+        # a Window's Arguments end "... AS x#N], [partition keys], ..."
+        parts = [re.sub(r"#\d+L?", "", keys) for keys in re.findall(
+            r"windowspecdefinition.* AS \w+#\d+L?\], \[([^\]]*)\]", p)]
+        assert parts.count("doc_a, doc_b, diag") == 1, parts
+        assert set(parts) == {"doc_a, doc_b, diag", "h"}, parts
         # round-8 (VERDICT r7 #1): the words array must materialize ONCE
         # per scan branch, in a Project BELOW the window Generate — a
         # split(t, ' ') referenced inside the transform lambda re-splits

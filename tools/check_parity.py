@@ -22,12 +22,16 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def duck_conn(sf_dir: str):
+    """DuckDB views of the tables in ``sf_dir``; a table is a parquet
+    file or a directory of them (a Spark-written table)."""
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        if os.path.isdir(p):
+            p += "/*.parquet"
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
 
 
