@@ -128,17 +128,16 @@ def tokenize_text(text, merges, memo: dict) -> list:
     return out
 
 
-def with_bpe_token_counts(df, text_col: str, merges,
-                          token_col: str = "token", cnt_col: str = "cnt"):
+def with_bpe_token_counts(df, text_col: str, merges):
     """Explode ``df`` into one row per (row, distinct token): every
-    passthrough column is replicated and (token, in-text count) appended
-    — the per-text token counting happens INSIDE the kernel (a Counter
-    over the token stream, O(L) per unique text), so no downstream
-    per-text aggregate is needed.  This matters because MapInArrow does
-    NOT preserve the child's output partitioning (fresh attribute ids),
-    so a post-kernel groupBy(gk, token) would add an exchange the
-    pre-BPE formulation never paid; counting in-kernel keeps
-    token_vocab_topk at its pinned two hash exchanges."""
+    passthrough column is replicated and (token, cnt = in-text count)
+    appended — the per-text token counting happens INSIDE the kernel (a
+    Counter over the token stream, O(L) per unique text), so no
+    downstream per-text aggregate is needed.  This matters because
+    MapInArrow does NOT preserve the child's output partitioning (fresh
+    attribute ids), so a post-kernel groupBy(gk, token) would add an
+    exchange the pre-BPE formulation never paid; counting in-kernel
+    keeps token_vocab_topk at its pinned two hash exchanges."""
     from collections import Counter
 
     from pyspark.sql.types import LongType, StringType, StructType
@@ -147,8 +146,8 @@ def with_bpe_token_counts(df, text_col: str, merges,
     passthrough = [c for c in df.columns if c != text_col]
     schema = StructType(
         [f for f in df.schema.fields if f.name != text_col])
-    schema = schema.add(token_col, StringType(), False)
-    schema = schema.add(cnt_col, LongType(), False)
+    schema = schema.add("token", StringType(), False)
+    schema = schema.add("cnt", LongType(), False)
 
     def fn(batches):
         import pyarrow as pa
@@ -170,13 +169,13 @@ def with_bpe_token_counts(df, text_col: str, merges,
             arrays.append(pa.array(toks, type=pa.string()))
             arrays.append(pa.array(cnts, type=pa.int64()))
             yield pa.RecordBatch.from_arrays(
-                arrays, passthrough + [token_col, cnt_col])
+                arrays, passthrough + ["token", "cnt"])
 
     return df.mapInArrow(fn, schema)
 
 
-def with_bpe_tokens(df, text_col: str, merges, out_col: str = "toks"):
-    """Append ``out_col array<string>`` = BPE token sequence of
+def with_bpe_tokens(df, text_col: str, merges):
+    """Append ``toks array<string>`` = BPE token sequence of
     ``text_col`` to every row of ``df`` via ONE mapInArrow kernel.
 
     Scale shape: the merge table (≤ BPE_MERGES rules) ships in the
@@ -194,7 +193,7 @@ def with_bpe_tokens(df, text_col: str, merges, out_col: str = "toks"):
     # copy the field list — StructType.add mutates in place, and
     # df.schema is the DataFrame's own cached instance
     schema = StructType(list(df.schema.fields)
-                        + [StructField(out_col,
+                        + [StructField("toks",
                                        ArrayType(StringType(), False),
                                        False)])
     cols = df.columns
@@ -208,7 +207,7 @@ def with_bpe_tokens(df, text_col: str, merges, out_col: str = "toks"):
             toks = [tokenize_text(t, merges, memo) for t in texts]
             arrays = [batch.column(c) for c in cols]
             arrays.append(pa.array(toks, type=pa.list_(pa.string())))
-            yield pa.RecordBatch.from_arrays(arrays, cols + [out_col])
+            yield pa.RecordBatch.from_arrays(arrays, cols + ["toks"])
 
     return df.mapInArrow(fn, schema)
 

@@ -64,13 +64,12 @@ def dim_host(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
         "hostname string, geo string, tier string")
 
 
-def enrich(parsed: DataFrame, spark: SparkSession,
-           n_hosts: int = 1000) -> DataFrame:
+def enrich(parsed: DataFrame, spark: SparkSession) -> DataFrame:
     """Left broadcast joins — dims are KBs, so the fact side never shuffles
     and Catalyst plans BroadcastHashJoinExec for all three."""
     return (
         parsed
         .join(F.broadcast(dim_facility(spark)), "facility", "left")
         .join(F.broadcast(dim_severity(spark)), "severity", "left")
-        .join(F.broadcast(dim_host(spark, n_hosts)), "hostname", "left")
+        .join(F.broadcast(dim_host(spark)), "hostname", "left")
     )

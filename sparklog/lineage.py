@@ -17,11 +17,12 @@ mode), so a kill-and-rerun produces byte-identical output.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .route import SINK_CLASSES
@@ -67,15 +68,45 @@ class Manifest:
         return state
 
 
-def partition_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
+class Meter:
+    """Aggregates observed on the plan of the first action on a frame
+    (see metered); ``get`` is the row of them once that action ran."""
+
+    def __init__(self, obs: Observation, df: DataFrame,
+                 aggs: tuple[Column, ...]):
+        self._obs, self._df, self._aggs = obs, df, aggs
+
+    @functools.cached_property
+    def get(self) -> dict:
+        if self._obs._jo.getRow().length():
+            return self._obs.get
+        # the action filled an empty row: AQE replaced the plan above a
+        # shuffle stage that came out empty by an empty relation, the
+        # observed node with it.  Observe the frame on its own, where the
+        # node is the plan's root and no stage above can prune it.
+        obs = Observation()
+        (self._df.observe(obs, *self._aggs)
+         .write.format("noop").mode("overwrite").save())
+        return obs.get
+
+
+def metered(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Meter]:
+    """(``df`` observing the aggregates ``aggs``, its meter): the one way
+    sparklog counts rows on a plan.  Run the first action on the returned
+    frame, then read ``meter.get``; the counts come from that action,
+    unless a stage above the observed frame came out empty, which costs
+    one more pass over ``df``."""
+    obs = Observation()
+    return df.observe(obs, *aggs), Meter(obs, df, aggs)
+
+
+def partition_lineage(df: DataFrame) -> tuple[DataFrame, Meter]:
     """Attach the sinks lineage counters to the routed ``df``: rows, parse
     failures and rows per ``sink_class``.  They are counted on the plan
-    that writes ``df``; after that write, the returned observation's
-    ``get`` is the sinks stage's manifest info."""
-    obs = Observation()
+    that writes ``df``; after that write, the returned meter's ``get`` is
+    the sinks stage's manifest info."""
     per_class = [x for c in SINK_CLASSES
                  for x in (F.lit(c), F.count_if(F.col("sink_class") == c))]
-    return df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                      F.count("parse_error").alias("n_failed"),
-                      F.create_map(*per_class).alias("sink_rows")), obs
-
+    return metered(df, F.count(F.lit(1)).alias("rows"),
+                   F.count("parse_error").alias("n_failed"),
+                   F.create_map(*per_class).alias("sink_rows"))

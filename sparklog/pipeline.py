@@ -12,9 +12,10 @@ Plan shape (everything except the one MapInArrow is JVM-side):
         class), counted on the write's own plan (lineage.partition_lineage)
       → salted repartition on sink key, AQE-sized         [the ONE shuffle]
       → dynamic-partition parquet write per sink
-    aggregates, metrics and audit each re-read sinks/ and run concurrently
-    (one stage group, committed in that order); every stage observes its
-    counts on its own write (no read-back).
+    aggregates, metrics and audit run concurrently (one stage group,
+    committed in that order) on one read of sinks/, typed with the routed
+    plan's schema (no schema-inference job); every stage counts its rows
+    on its own write (lineage.metered, no read-back).
 
 Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 """
@@ -22,20 +23,20 @@ Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 from __future__ import annotations
 
 import argparse
-import functools
 import json
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import hourly_counts, parse_metrics
 from .enrich import enrich
 from .grammar import ParseConfig
-from .lineage import Manifest, partition_lineage
+from .lineage import Manifest, Meter, metered, partition_lineage
 from .route import audit_token_equality, with_route_columns, write_sinks
 from .udfs import map_in_arrow_parse
 
@@ -122,10 +123,22 @@ def _write(df: DataFrame, path: str, *metrics: Column) -> dict:
     """Overwrite ``path`` with ``df`` as parquet; the row count and the
     aggregate ``metrics`` are observed on that same write (no second pass
     over the output)."""
-    obs = Observation()
-    (df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
-       .write.mode("overwrite").parquet(path))
-    return obs.get
+    observed, meter = metered(df, F.count(F.lit(1)).alias("rows"), *metrics)
+    observed.write.mode("overwrite").parquet(path)
+    return meter.get
+
+
+def _once(fn):
+    """``fn()`` built on the first call and returned by every later one,
+    also when the stage threads of one group call it at once."""
+    lock, memo = threading.Lock(), []
+
+    def call():
+        with lock:
+            if not memo:
+                memo.append(fn())
+            return memo[0]
+    return call
 
 
 def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
@@ -144,22 +157,30 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     that needs the source makes."""
     sinks = os.path.join(out_dir, "sinks")
 
-    @functools.cache
+    @_once
     def _src():
         return spark.read.format(table_format).load(src_path)
 
+    @_once
+    def _routed():
+        return with_route_columns(enrich(parse_stage(_src(), cfg), spark))
+
+    @_once
+    def _sunk():
+        # the tail's one read of the sinks, typed: no schema inference
+        return spark.read.schema(_routed().schema).parquet(sinks)
+
     def _sinks(_):
-        routed = with_route_columns(enrich(parse_stage(_src(), cfg), spark))
-        observed, lineage = partition_lineage(routed)
+        observed, lineage = partition_lineage(_routed())
         write_sinks(observed, sinks, num_partitions, salt_buckets)
         return lineage.get
 
     def _aggregates(_):
-        return _write(hourly_counts(spark.read.parquet(sinks))
-                      .repartition(1), os.path.join(out_dir, "aggregates"))
+        return _write(hourly_counts(_sunk()).repartition(1),
+                      os.path.join(out_dir, "aggregates"))
 
     def _metrics(_):
-        info = _write(parse_metrics(spark.read.parquet(sinks))
+        info = _write(parse_metrics(_sunk())
                       .repartition(1), os.path.join(out_dir, "metrics"),
                       F.collect_list(F.struct("source", "rfc", "n_ok",
                                               "n_failed")).alias("per_source"))
@@ -169,7 +190,7 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
         return info
 
     def _audit(_):
-        violations = audit_token_equality(spark.read.parquet(sinks), _src())
+        violations = audit_token_equality(_sunk(), _src())
         if violations:
             raise AssertionError(
                 f"token-array equality audit failed: {violations} rows")
@@ -236,11 +257,11 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
              for t in ("membership", "rep_pairs")]
 
     def _save(df, name, **metrics):
-        # a meter (Observation) on df's plan is read once the write filled it
+        # a meter on df's plan is read once the write ran it
         info = _write(df, os.path.join(out_dir, name))
         release_caches()
         return {**info, "bucket_metrics": {
-            k: m.get if isinstance(m, Observation) else m
+            k: m.get if isinstance(m, Meter) else m
             for k, m in metrics.items()}}
 
     def _pairs(_):
@@ -259,15 +280,8 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
 
     def _substring(_):
         kept, meter = _substring_kept(spark, sf_dir)
-        info = _save(_substring_maximal_runs(_substring_match_positions(kept)),
-                     "substring_runs")
-        if not info["rows"]:
-            # with no runs, AQE replaces the plan above the empty shuffle
-            # stage by an empty relation, the observed windows with it, so
-            # the write fills no meter: meter the windows on their own
-            kept, meter = _substring_kept(spark, sf_dir)
-            kept.write.format("noop").mode("overwrite").save()
-        return {**info, "bucket_metrics": {"substring_windows": meter.get}}
+        return _save(_substring_maximal_runs(_substring_match_positions(kept)),
+                     "substring_runs", substring_windows=meter)
 
     def _metrics(done):
         rows = [(path, *row.values())

@@ -29,13 +29,14 @@ Parity rules (so order-insensitive value hashes match):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .api import parse_lines
 from .encoding import detokenize_col, tokenize_col
 from .enrich import FACILITY_NAMES, SEVERITY_CLASS, SEVERITY_NAMES
+from .lineage import Meter, metered
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -699,26 +700,26 @@ _SHINGLES_DUCK = (
 )
 
 
-def _word_ngrams_spark(n: int, w: str = "w") -> str:
+def _word_ngrams_spark(n: int) -> str:
     """Spark SQL expression: the word n-grams of array column `w` as
     space-joined strings (empty array when the doc is too short).  ONE
     definition shared by decontaminate_benchmark and
     text_repetition_scores so gram semantics can't drift."""
     if n == 1:
-        return w
-    return (f"case when size({w}) < {n} then "
+        return "w"
+    return (f"case when size(w) < {n} then "
             f"cast(array() as array<string>) else "
-            f"transform(sequence(1, size({w}) - {n - 1}), "
-            f"i -> concat_ws(' ', slice({w}, i, {n}))) end")
+            f"transform(sequence(1, size(w) - {n - 1}), "
+            f"i -> concat_ws(' ', slice(w, i, {n}))) end")
 
 
-def _word_ngrams_duck(n: int, w: str = "w") -> str:
+def _word_ngrams_duck(n: int) -> str:
     """DuckDB mirror of _word_ngrams_spark."""
     if n == 1:
-        return w
-    return (f"list_transform(generate_series(1, greatest(len({w}) - "
+        return "w"
+    return (f"list_transform(generate_series(1, greatest(len(w) - "
             f"{n - 1}, 0)), i -> array_to_string("
-            f"list_slice({w}, i, i + {n - 1}), ' '))")
+            f"list_slice(w, i, i + {n - 1}), ' '))")
 
 
 def _with_shingles(d: DataFrame, *extra_cols: str) -> DataFrame:
@@ -1010,7 +1011,7 @@ def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
 
 def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                   refine=None, unique_keys: bool = False,
-                  approx_rows=None) -> tuple[DataFrame, Observation]:
+                  approx_rows=None) -> tuple[DataFrame, Meter]:
     """(key, id) rows -> (distinct candidate pairs (a < b) per bounded
     group, meter).  ONE aggregation subtree, no self-join: a band self-join
     re-executes its whole upstream plan per side, while collect_set +
@@ -1041,15 +1042,11 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
     the pairs fills it.  Each raw bucket counts through one marker row
     (see _keyed_with_splits): the (key, id) rows must be unique."""
     hard = cap * _SPLIT_HARD_CAP_FACTOR
-    meter = Observation()
     n_over = F.count_if((F.col("_bn") > cap)
                         & (F.col("_id") == F.col("_gm0")))
-    # filled only when no join sits between this frame and the action
-    # (AQE leaves a join side's observation unfilled): run_dedup's two
-    # writes qualify, _near_vector_pairs' cand (meter unread) does not
-    metered = _keyed_with_splits(keyed, key, id_col, cap, refine,
-                                 approx_rows).observe(
-        meter, F.count("*").alias("n_rows"),
+    cascade, meter = metered(
+        _keyed_with_splits(keyed, key, id_col, cap, refine, approx_rows),
+        F.count("*").alias("n_rows"),
         (F.count_if((F.col("_bn") == 0) & (F.col("_id") == F.col("_fm")))
          + n_over).alias("n_buckets"),
         n_over.alias("n_over_cap_buckets"),
@@ -1061,7 +1058,7 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
     # never materialize its id list in the agg buffer (the guard is a
     # broadcast probe — see _keyed_with_splits — so the only shuffle of
     # the big side is this groupBy itself)
-    bounded = metered.where(F.col("_bn3") <= hard)
+    bounded = cascade.where(F.col("_bn3") <= hard)
     # star edges ride the SAME aggregation and enumeration kernel (zero
     # extra plan branches, zero extra shuffles): the probe broadcasts already carry
     # each salted group's min id (_gm), so a split whose own min differs
@@ -1192,7 +1189,7 @@ def _membership(keyed: DataFrame, groups: DataFrame) -> DataFrame:
 def _expand_pairs(rep_pairs: DataFrame, membership: DataFrame,
                   dup_keyed: DataFrame, out: tuple, via: tuple,
                   approx_rows: int, cap: int = LSH_BUCKET_CAP
-                  ) -> tuple[DataFrame, Observation]:
+                  ) -> tuple[DataFrame, Meter]:
     """Expand a verdict on representatives back to ids: rep_pairs
     (rep_a, rep_b, *values) -> ((out_a < out_b, *values), meter).
 
@@ -1273,7 +1270,7 @@ def _minhash_rep_graph(spark, sf, bucket_cap: int = LSH_BUCKET_CAP):
 def _minhash_pairs(exact: DataFrame, membership: DataFrame,
                    rep_pairs: DataFrame, n_docs: int,
                    bucket_cap: int = LSH_BUCKET_CAP
-                   ) -> tuple[DataFrame, Observation]:
+                   ) -> tuple[DataFrame, Meter]:
     """((doc_a < doc_b) near-dup pairs, meter) of a _minhash_rep_graph,
     shared by dedup_minhash_lsh and run_dedup (which passes its persisted
     copy of rep_pairs); the meter is the exact-group cascade's."""
@@ -1611,9 +1608,10 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
     trick from the MapReduce CC literature).  Lineage is truncated every
     iteration with localCheckpoint (on a real cluster: checkpoint to the
     object store), and the loop exits on the first iteration with zero
-    label changes, counted by an observation on that checkpoint (each
-    vertex carries its label from before the step as l0).  Runs on the
-    COLLAPSED rep graph (unique texts), never the raw corpus."""
+    label changes, counted by a meter (lineage.metered) on that
+    checkpoint (each vertex carries its label from before the step as
+    l0).  Runs on the COLLAPSED rep graph (unique texts), never the raw
+    corpus."""
     # materialize the edge set ONCE: every iteration joins it, and without
     # the checkpoint each nb-join would re-execute the whole upstream
     # candidate machinery (bands/signatures) per iteration
@@ -1638,10 +1636,9 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
                          .select("v", "l0",
                                  F.least("l", F.coalesce("ll", "l"))
                                   .alias("l")))
-        moved = Observation()
-        labels = (jumped.observe(moved, F.count_if(F.col("l") != F.col("l0"))
-                                         .alias("n"))
-                        .select("v", "l").localCheckpoint())
+        jumped, moved = metered(
+            jumped, F.count_if(F.col("l") != F.col("l0")).alias("n"))
+        labels = jumped.select("v", "l").localCheckpoint()
         if moved.get["n"] == 0:
             return labels, n_iters, True
     return labels, max_iter, False
@@ -1816,7 +1813,7 @@ def dedup_substring(spark, sf):
     return _substring_maximal_runs(_substring_match_positions(kept))
 
 
-def _substring_kept(spark, sf) -> tuple[DataFrame, Observation]:
+def _substring_kept(spark, sf) -> tuple[DataFrame, Meter]:
     """(windows surviving the over-cap bucket drop, meter): ONE
     definition, so the exact op, the sampled op's both phases, and the
     subset property between them can never diverge on cap policy.
@@ -1829,18 +1826,18 @@ def _substring_kept(spark, sf) -> tuple[DataFrame, Observation]:
     (window occurrences inside dropped buckets).  The op DROPS over-cap
     buckets (no refine/salt cascade: boilerplate windows pair n^2 and
     carry no dedup signal)."""
-    meter, by_h = Observation(), Window.partitionBy("h")
+    by_h = Window.partitionBy("h")
     first, n, marker = F.struct("rep", "pos"), F.col("n"), F.col("marker")
     over = n > _SUBSTR_CAP
     sized = _substring_windows(spark, sf).select(
         "rep", "pos", "h", F.count(F.lit(1)).over(by_h).alias("n"),
         (first == F.min(first).over(by_h)).alias("marker"))
-    return (sized.observe(meter, F.count(F.lit(1)).alias("n_rows"),
-                          F.count_if(marker).alias("n_buckets"),
-                          F.count_if(marker & over)
-                           .alias("n_over_cap_buckets"),
-                          F.count_if(over).alias("n_dropped_rows"))
-                 .where(n <= _SUBSTR_CAP).select("rep", "pos", "h"), meter)
+    sized, meter = metered(sized, F.count(F.lit(1)).alias("n_rows"),
+                           F.count_if(marker).alias("n_buckets"),
+                           F.count_if(marker & over)
+                            .alias("n_over_cap_buckets"),
+                           F.count_if(over).alias("n_dropped_rows"))
+    return sized.where(n <= _SUBSTR_CAP).select("rep", "pos", "h"), meter
 
 
 def _substring_match_positions(w_df: DataFrame) -> DataFrame:
@@ -2897,9 +2894,8 @@ _W_DUCK = ("list_transform(generate_series(0, 63), i -> "
            " / 1000.0)")
 
 
-def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
-                    vcol: str = "v") -> DataFrame:
-    """(id, v) -> (id, sig): the FULL _LSH_MAX_PLANES-bit hyperplane
+def _lsh_signatures(e: DataFrame) -> DataFrame:
+    """(vec_id, v) -> (vec_id, sig): the FULL _LSH_MAX_PLANES-bit hyperplane
     sign signature in ONE numpy mapInArrow pass (round-8).
 
     The previous per-bit Catalyst expression — one interpreted
@@ -2934,7 +2930,7 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
             rows = batch.num_rows
             if rows == 0:
                 continue
-            V = _arrow_matrix(batch.column(vcol), 64)
+            V = _arrow_matrix(batch.column("v"), 64)
             acc = _fold_dots(V, W)      # left-to-right fold per plane
             codes = np.where(acc < 0, 48, 49).astype(np.uint8)  # '0'/'1'
             buf = codes.tobytes()
@@ -2942,30 +2938,29 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
             sigs = [buf[i * n:(i + 1) * n].decode("ascii")
                     for i in range(rows)]
             yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), pa.array(sigs)], [id_col, "sig"])
+                [batch.column("vec_id"), pa.array(sigs)], ["vec_id", "sig"])
 
-    return e.select(id_col, vcol).mapInArrow(
-        sig, f"{id_col} bigint, sig string")
+    return e.select("vec_id", "v").mapInArrow(sig, "vec_id bigint, sig string")
 
 
-def _lsh_keyed(e: DataFrame, p: int, id_col: str = "vec_id"):
-    """(id, v) -> ((id, bucket, sig) table, refine column | None): the
-    nplanes(N)-prefix bucket key plus the lazy refine suffix, both as
+def _lsh_keyed(e: DataFrame, p: int):
+    """(vec_id, v) -> ((vec_id, bucket, sig) table, refine column | None):
+    the nplanes(N)-prefix bucket key plus the lazy refine suffix, both as
     substrings of the one materialized signature."""
-    sigs = _lsh_signatures(e, id_col)
-    keyed = sigs.select(id_col, F.substring("sig", 1, p).alias("bucket"),
+    sigs = _lsh_signatures(e)
+    keyed = sigs.select("vec_id", F.substring("sig", 1, p).alias("bucket"),
                         "sig")
     refine = (F.substring("sig", p + 1, _LSH_MAX_PLANES - p)
               if p < _LSH_MAX_PLANES else None)
     return keyed, refine
 
 
-def _sql_lsh_sig(n_from: int, n_to: int, vcol: str = "v") -> str:
+def _sql_lsh_sig(n_from: int, n_to: int) -> str:
     """DuckDB hyperplane-bit template — identical integer weight values
     to the _lsh_signatures kernel."""
     return " || ".join(
         f"""CASE WHEN list_sum(list_transform(generate_series(1, 64),
-            j -> {vcol}[j] * ((({k}::BIGINT * 73856093 + (j - 1) * 19349663)
+            j -> v[j] * ((({k}::BIGINT * 73856093 + (j - 1) * 19349663)
             % 2001 - 1000) / 1000.0))) >= 0 THEN '1' ELSE '0' END"""
         for k in range(n_from, n_to))
 
@@ -3002,10 +2997,13 @@ def ann_lsh_buckets(spark, sf):
                  .where(F.col("n_vecs") > 1))
 
 
-def ann_lsh_near_pairs(spark, sf, threshold: float = 0.25):
+_ANN_LSH_THRESHOLD = 0.25   # ann_lsh_near_pairs' and its oracle's cosine
+
+
+def ann_lsh_near_pairs(spark, sf):
     """The LSH ANN scale path end-to-end, oracle-gated (round-3 judge
     item #8): sign-bucket candidate pairs -> exact-cosine verification
-    >= threshold, on the RAW corpus (no planted duplicates) — the
+    >= _ANN_LSH_THRESHOLD, on the RAW corpus (no planted duplicates) — the
     _near_vector_pairs body dedup_embedding_cosine runs, at a lower
     threshold.  The oracle mirrors the bucket construction exactly —
     same integer-derived hyperplanes, same nplanes(count(*)) prefix —
@@ -3020,7 +3018,7 @@ def ann_lsh_near_pairs(spark, sf, threshold: float = 0.25):
         for them is NULL (DuckDB's 0.0/0.0)."""
     return _near_vector_pairs(_embeddings_v(spark, sf),
                               _table_rowcount(spark, sf, "embeddings"),
-                              threshold)
+                              _ANN_LSH_THRESHOLD)
 
 
 def _sql_ann_lsh_near_pairs() -> str:
@@ -3042,7 +3040,7 @@ WITH e AS (
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
 FROM s a JOIN s b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {cos} >= 0.25
+WHERE {cos} >= {_ANN_LSH_THRESHOLD}
 """
 
 

@@ -11,6 +11,8 @@ per-epoch directory, without the batch path's salted repartition).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,24 +29,22 @@ TOKENS_SCHEMA = T.StructType([
 ])
 
 
-def read_token_stream(spark: SparkSession, src_dir: str,
-                      max_files: int = 16) -> DataFrame:
+def read_token_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     return (spark.readStream
             .schema(TOKENS_SCHEMA)
-            .option("maxFilesPerTrigger", max_files)
+            .option("maxFilesPerTrigger", 16)
             .parquet(src_dir))
 
 
 def streaming_hourly_counts(stream: DataFrame,
-                            cfg: ParseConfig | None = None,
-                            watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window facility x severity counts.  Late rows
-    beyond the watermark are dropped by Spark's state store — the streaming
-    analogue of the batch hourly_counts."""
+                            cfg: ParseConfig | None = None) -> DataFrame:
+    """Watermarked tumbling-window facility x severity counts.  Rows later
+    than the one-hour watermark are dropped by Spark's state store — the
+    streaming analogue of the batch hourly_counts."""
     parsed = parse_stage(stream, cfg)
     return (parsed
             .where(F.col("parse_error").isNull())
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("w"),
                      "facility", "severity")
             .agg(F.count("*").alias("n_events"))
@@ -175,12 +175,12 @@ def read_user_state_result(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def run_streaming_hourly_batch(spark: SparkSession, tokens_dir: str,
                                checkpoint: str,
-                               cfg: ParseConfig | None = None,
-                               name: str = "streaming_hourly_sink"):
+                               cfg: ParseConfig | None = None):
     """Run the availableNow hourly-counts stream to completion and return
     the final windowed counts as a batch DataFrame (complete-mode memory
     sink, so windows still open at end-of-stream are included — the batch
     oracle sees every hour)."""
+    name = "streaming_hourly_sink"
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
@@ -199,11 +199,18 @@ DOCS_STREAM_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
 ])
 
+# run_incremental_dedup_stream's output as written (epoch partitions last)
+FLAGS_STREAM_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("exact_dup_corpus", T.BooleanType()),
+    T.StructField("near_dup_corpus", T.BooleanType()),
+    T.StructField("epoch", T.IntegerType()),
+])
+
 
 def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
                                  corpus: DataFrame, out_dir: str,
-                                 checkpoint: str,
-                                 max_files: int = 2) -> DataFrame:
+                                 checkpoint: str) -> DataFrame:
     """Continuous-ingestion dedup: a file-source stream of new documents
     probes the STATIC corpus's key/band tables per epoch (stream-static
     via foreachBatch, so each epoch runs the exact batch probe operator
@@ -220,7 +227,8 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
     batch/compaction concern (queries.dedup_incremental), not a
     per-epoch one — which is exactly why the unioned epoch outputs equal
     the batch operator's corpus-facing flags regardless of how the file
-    source splits epochs."""
+    source splits epochs.  An empty batch dir fires no epoch: the typed
+    read of ``out_dir``, created here, then returns no rows."""
     from .queries import _collapse, _gk_bands, _probe_corpus_flags, _text_key
 
     c_keyed, c_grp = _collapse(corpus.where(F.col("text").isNotNull()),
@@ -229,6 +237,7 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
     c_gks = c_keyed.select("gk").distinct().persist()
     c_bands = _gk_bands(c_grp).persist()
 
+    os.makedirs(out_dir, exist_ok=True)
     write = _epoch_writer(out_dir)
 
     def write_epoch(df: DataFrame, epoch_id: int) -> None:
@@ -238,7 +247,7 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
 
     try:
         q = (spark.readStream.schema(DOCS_STREAM_SCHEMA)
-             .option("maxFilesPerTrigger", max_files)
+             .option("maxFilesPerTrigger", 2)
              .parquet(batch_dir)
              .writeStream.foreachBatch(write_epoch)
              .option("checkpointLocation", checkpoint)
@@ -250,12 +259,4 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
         # the caller's session
         c_gks.unpersist()
         c_bands.unpersist()
-    try:
-        return spark.read.parquet(out_dir)
-    except Exception:
-        # an EMPTY batch dir fires zero epochs, so nothing was ever
-        # written and the read cannot infer a schema — return the empty
-        # result the batch operator produces on the same input
-        return spark.createDataFrame(
-            [], "doc_id long, exact_dup_corpus boolean, "
-                "near_dup_corpus boolean, epoch int")
+    return spark.read.schema(FLAGS_STREAM_SCHEMA).parquet(out_dir)

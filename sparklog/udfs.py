@@ -254,7 +254,7 @@ DECODED_SCHEMA = T.StructType([
 ])
 
 
-def make_decoder_fn(input_col: str = "tokens"):
+def make_decoder_fn():
     """mapInArrow batch fn: tokens -> (doc_id, raw) only, for the audit's
     source side (input-side token arrays are cheap; it is the OUTPUT side
     that must stay string-only)."""
@@ -262,7 +262,7 @@ def make_decoder_fn(input_col: str = "tokens"):
     def fn(batches):
         for b in batches:
             yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), _line_array(b.column(input_col))],
+                [b.column("doc_id"), _line_array(b.column("tokens"))],
                 names=["doc_id", "raw"])
 
     return fn

@@ -364,6 +364,35 @@ def test_driver_memory_fits_host(monkeypatch):
     assert _driver_memory() == f"{min(48 * 1024, total_kb * 2 // 5 // 1024)}m"
 
 
+def test_once_builds_once_under_concurrent_calls():
+    """run_pipeline's tail threads share its source and sinks reads
+    through _once: however many threads call at once, the read is built
+    once and every caller gets that one object."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sparklog.pipeline import _once
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.01)
+        return object()
+
+    shared = _once(build)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            got = list(pool.map(lambda _: shared(), range(64), timeout=30))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)
+
+
 def test_parse_stage_matches_parse_lines_pandas(spark, tmp_path):
     """The Spark parse stage (tokens -> mapInArrow) and the pandas library
     API share one dispatcher; both adapters must produce identical rows on
