@@ -1,14 +1,16 @@
-"""Larger-SF benchmark (round-2 judge item #4): run the headline suite at
-the x10 corpus (bench/gen_large_sf.py -> /tmp/sparklog_sf1, "sf1") with an
-INTERLEAVED-rounds protocol and report per-query round-to-round spread.
+"""Larger-SF benchmark: run the headline suite at the x10 corpus
+(bench/gen_large_sf.py -> /tmp/sparklog_sf1, "sf1") with bench.py's
+INTERLEAVED-rounds protocol (bench._interleaved) and report per-query
+round-to-round spread.
 
 Protocol: one Spark session (JVM/worker warmup excluded), then
 `2 * reps` passes over the full query list in order; pass i belongs to
 round i % 2, so both rounds sample the same host-noise windows
 query-by-query (suite-A-then-suite-B measured 2-6x cross-round drift on
-this host; interleaving is the standard fix).  Each round's per-query
-time is the best of its `reps` passes; spread = |a - b| / min(a, b)
-between the two round bests.  Stability bar: spread < 20%.
+this host; interleaving is the standard fix).  A query's timed window
+runs from building its plan to the end of its noop write.  Each round's
+per-query time is the best of its `reps` passes; spread = |a - b| /
+min(a, b) between the two round bests.  Stability bar: spread < 20%.
 
 Usage: python bench/large_sf.py [--sf-dir /tmp/sparklog_sf1] [--reps 3]
 Prints one JSON line with both rounds' timings, spreads, and max spread.
@@ -20,14 +22,9 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -37,8 +34,8 @@ def main() -> None:
                     help="passes per round (best-of)")
     args = ap.parse_args()
 
-    from bench import HEADLINE
-    from sparklog.queries import REGISTRY, release_caches
+    from bench import HEADLINE, _force, _interleaved
+    from sparklog.queries import REGISTRY
     from sparklog.session import get_spark
 
     spark = get_spark()
@@ -46,27 +43,8 @@ def main() -> None:
     _force(REGISTRY["syslog_priority_split"][0](spark, args.sf_dir).limit(10))
 
     n_rounds = 2
-    samples: dict[str, list[list[float]]] = {
-        q: [[] for _ in range(n_rounds)] for q in HEADLINE}
-    for p in range(n_rounds * args.reps):
-        rnd = p % n_rounds
-        for q in HEADLINE:
-            df = REGISTRY[q][0](spark, args.sf_dir)
-            t0 = time.time()
-            _force(df)
-            samples[q][rnd].append(time.time() - t0)
-            release_caches()  # no cross-pass cache hits / storage creep
-        print(f"pass {p + 1}/{n_rounds * args.reps} (round {rnd + 1}) done",
-              file=sys.stderr, flush=True)
-
-    rounds = [{q: round(min(samples[q][r]), 3) for q in HEADLINE}
-              for r in range(n_rounds)]
-    spreads = {}
-    for q in HEADLINE:
-        ts = [rounds[r][q] for r in range(n_rounds)]
-        lo, hi = min(ts), max(ts)
-        spreads[q] = round((hi - lo) / lo, 3) if lo > 0 else 0.0
-
+    best, rounds, spreads = _interleaved(spark, REGISTRY, args.sf_dir,
+                                         HEADLINE, args.reps, n_rounds)
     print(json.dumps({
         "metric": "large_sf_suite_sec",
         "sf": args.sf_dir,
@@ -77,7 +55,7 @@ def main() -> None:
         "totals": [round(sum(r.values()), 3) for r in rounds],
         "spread": spreads,
         "max_spread": max(spreads.values()),
-        "best": {q: min(r[q] for r in rounds) for q in HEADLINE},
+        "best": best,
     }))
 
 

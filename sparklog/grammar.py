@@ -324,7 +324,7 @@ def parse_rfc3164(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataF
     return parse_frame(raw, cfg, RFC_3164)
 
 
-def _parse_rfc3164_slow(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:
+def _parse_rfc3164_slow(raw: pd.Series, cfg: ParseConfig) -> pd.DataFrame:
     """Full RFC3164 parse (rfc3164/rfc3164.go:98-127) as masked column ops."""
     s = raw.fillna("").astype(object).str.slice(0, MAX_PACKET_LEN_3164)
     n = s.str.len()
@@ -413,7 +413,7 @@ def parse_rfc5424(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataF
     return parse_frame(raw, cfg, RFC_5424)
 
 
-def _parse_rfc5424_slow(raw: pd.Series, cfg: ParseConfig = DEFAULT_CONFIG) -> pd.DataFrame:
+def _parse_rfc5424_slow(raw: pd.Series, cfg: ParseConfig) -> pd.DataFrame:
     """Full RFC5424 parse (rfc5424/rfc5424.go:118-143) as masked column ops."""
     s = raw.fillna("").astype(object).str.slice(0, MAX_PACKET_LEN_5424)
     n = s.str.len()

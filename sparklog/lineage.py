@@ -100,13 +100,19 @@ def metered(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Meter]:
     return df.observe(obs, *aggs), Meter(obs, df, aggs)
 
 
+def count_map(col: Column, keys) -> Column:
+    """Aggregate: each of the strings ``keys`` -> the rows whose ``col``
+    equals it, zero counts included (a fixed-key map to observe)."""
+    return F.create_map(*[x for k in keys
+                          for x in (F.lit(k), F.count_if(col == k))])
+
+
 def partition_lineage(df: DataFrame) -> tuple[DataFrame, Meter]:
     """Attach the sinks lineage counters to the routed ``df``: rows, parse
     failures and rows per ``sink_class``.  They are counted on the plan
     that writes ``df``; after that write, the returned meter's ``get`` is
     the sinks stage's manifest info."""
-    per_class = [x for c in SINK_CLASSES
-                 for x in (F.lit(c), F.count_if(F.col("sink_class") == c))]
     return metered(df, F.count(F.lit(1)).alias("rows"),
                    F.count("parse_error").alias("n_failed"),
-                   F.create_map(*per_class).alias("sink_rows"))
+                   count_map(F.col("sink_class"),
+                             SINK_CLASSES).alias("sink_rows"))

@@ -23,6 +23,7 @@ Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import threading
@@ -36,7 +37,7 @@ from pyspark.sql import functions as F
 from .aggregate import hourly_counts, parse_metrics
 from .enrich import enrich
 from .grammar import ParseConfig
-from .lineage import Manifest, Meter, metered, partition_lineage
+from .lineage import Manifest, count_map, metered, partition_lineage
 from .route import audit_token_equality, with_route_columns, write_sinks
 from .udfs import map_in_arrow_parse
 
@@ -238,13 +239,12 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     ``rep_graph/`` for the components stage (and for a resume).  Each
     stage commits the metrics row of the cascade it ran, counted by the
     plan that ran it: the two MinHash cascades' meters (_bucket_pairs),
-    observed on the rep_pairs and pairs writes, _cc_stats on the CC
-    labels, and the substring drop's meter (_substring_kept), observed on
-    the substring_runs write; dedup_metrics only writes those committed
-    rows out."""
+    observed on the rep_pairs and pairs writes, the components meter
+    (_cc_core), observed on the components write, and the substring
+    drop's meter (_substring_kept), observed on the substring_runs write;
+    dedup_metrics only writes those committed rows out."""
     from .queries import (
         _cc_core,
-        _cc_stats,
         _minhash_pairs,
         _minhash_rep_graph,
         _substring_kept,
@@ -256,13 +256,12 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     graph = [os.path.join(out_dir, "rep_graph", t)
              for t in ("membership", "rep_pairs")]
 
-    def _save(df, name, **metrics):
+    def _save(df, name, **meters):
         # a meter on df's plan is read once the write ran it
         info = _write(df, os.path.join(out_dir, name))
         release_caches()
-        return {**info, "bucket_metrics": {
-            k: m.get if isinstance(m, Meter) else m
-            for k, m in metrics.items()}}
+        return {**info, "bucket_metrics": {k: m.get
+                                           for k, m in meters.items()}}
 
     def _pairs(_):
         exact, membership, rep_pairs, bands, n_docs = _minhash_rep_graph(
@@ -275,8 +274,8 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                      exact_text_groups=groups)
 
     def _components(_):
-        df, *cc = _cc_core(*(spark.read.parquet(p) for p in graph))
-        return _save(df, "components", minhash_components=_cc_stats(*cc))
+        df, meter = _cc_core(*(spark.read.parquet(p) for p in graph))
+        return _save(df, "components", minhash_components=meter)
 
     def _substring(_):
         kept, meter = _substring_kept(spark, sf_dir)
@@ -299,16 +298,21 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     stats["n_pairs"] = done["near_dup_pairs"]["rows"]
     stats["n_substring_runs"] = done["substring_runs"]["rows"]
     stats["bucket_metrics"] = _bucket_metrics(done)
-    # every membership rep is a label vertex, so the distinct labels are
+    # every membership rep is a label vertex, so the label roots are
     # exactly the distinct component_rep values written
     stats["n_components"] = (stats["bucket_metrics"]["minhash_components"]
                              ["n_components"])
     return stats
 
 
+def _seen(counts: dict) -> dict:
+    """A fixed-key count map (lineage.count_map) without its zero counts:
+    the keys a groupBy over the counted rows gives."""
+    return {k: n for k, n in counts.items() if n}
+
+
 def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """Nightly curation job (round-5 judge item: turn the audits into the
-    pass a user actually RUNS): one composed collapse-first sweep
+    """Nightly curation job: one composed collapse-first sweep
     (queries.curate_corpus) writes
 
       curated/  — the FULL verdict ledger: every doc_id with keep/reason
@@ -317,17 +321,19 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
       corpus/   — kept docs only, scrubbed text as the new ``text``
                   column + ``source`` metadata: the next training corpus
 
-    plus per-reason counts in the manifest.  Same manifest/stage pattern
-    as run_pipeline: the single expensive scan materializes once into
-    ``curated`` and both the corpus write and the metrics are cheap
-    re-reads of that parquet — re-running the curate plan per stage would
-    double the corpus-sized work."""
-    from .queries import curate_corpus
+    plus per-reason counts in the manifest, counted on the curated write.
+    Same manifest/stage pattern as run_pipeline: the single expensive scan
+    materializes once into ``curated`` and the corpus write re-reads that
+    parquet — re-running the curate plan per stage would double the
+    corpus-sized work."""
+    from .queries import CURATE_REASONS, curate_corpus
 
     curated = os.path.join(out_dir, "curated")
 
     def _curated(_):
-        return _write(curate_corpus(spark, sf_dir), curated)
+        return _write(curate_corpus(spark, sf_dir), curated,
+                      count_map(F.col("reason"), CURATE_REASONS)
+                      .alias("reasons"))
 
     def _corpus(_):
         return _write(spark.read.parquet(curated).where("keep")
@@ -335,15 +341,9 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                               F.col("scrubbed_text").alias("text")),
                       os.path.join(out_dir, "corpus"))
 
-    def _metrics(_):
-        counts = spark.read.parquet(curated).groupBy("reason").count()
-        return {"reasons": {r["reason"]: r["count"]
-                            for r in counts.collect()}}
-
     stats, done = _run_job(spark, out_dir, [
-        [("curated", _curated)], [("corpus", _corpus)],
-        [("curate_metrics", _metrics)]])
-    stats["reasons"] = done["curate_metrics"]["reasons"]
+        [("curated", _curated, "reasons")], [("corpus", _corpus)]])
+    stats["reasons"] = _seen(done["curated"]["reasons"])
     stats["n_docs"] = sum(stats["reasons"].values())
     stats["n_kept"] = stats["reasons"].get("kept", 0)
     return stats
@@ -359,16 +359,21 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
       additions/  — the kept batch docs with their text: what actually
                     gets appended to the corpus
 
-    plus flag counts in the manifest.  Same manifest/stage pattern as
-    run_dedup/run_curate: the probe materializes once into ``flags`` and
-    the additions join is batch-sized."""
+    plus the counts of each flag combination in the manifest, counted on
+    the flags write.  Same manifest/stage pattern as run_dedup/run_curate:
+    the probe materializes once into ``flags`` and the additions join is
+    batch-sized."""
     from .queries import _t, dedup_incremental
 
     flags = os.path.join(out_dir, "flags")
-    keys = ("exact_dup_corpus", "near_dup_corpus", "dup_in_batch", "keep")
+    # a flag combination's key: its flags as "True"/"False", "|"-joined
+    combo = F.concat_ws("|", *(F.initcap(F.col(c).cast("string")) for c in (
+        "exact_dup_corpus", "near_dup_corpus", "dup_in_batch", "keep")))
+    combos = [*map("|".join, itertools.product(("True", "False"), repeat=4))]
 
     def _flags(_):
-        return _write(dedup_incremental(spark, sf_dir), flags)
+        return _write(dedup_incremental(spark, sf_dir), flags,
+                      count_map(combo, combos).alias("flag_combos"))
 
     def _additions(_):
         kept = spark.read.parquet(flags).where("keep").select("doc_id")
@@ -377,15 +382,9 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return _write(docs.join(F.broadcast(kept), "doc_id"),
                       os.path.join(out_dir, "additions"))
 
-    def _metrics(_):
-        rows = spark.read.parquet(flags).groupBy(*keys).count().collect()
-        return {"flag_combos": {"|".join(str(r[c]) for c in keys):
-                                r["count"] for r in rows}}
-
     stats, done = _run_job(spark, out_dir, [
-        [("flags", _flags)], [("additions", _additions)],
-        [("incremental_metrics", _metrics)]])
-    stats["flag_combos"] = done["incremental_metrics"]["flag_combos"]
+        [("flags", _flags, "flag_combos")], [("additions", _additions)]])
+    stats["flag_combos"] = _seen(done["flags"]["flag_combos"])
     stats["n_batch"] = sum(stats["flag_combos"].values())
     stats["n_added"] = done["additions"]["rows"]
     return stats

@@ -1593,10 +1593,9 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
     """Min-label connected components over (v) vertices and (a, b) edges:
     returns ((v, l) labels, n_iterations, converged) with l = min vertex
     id of v's component; the iteration count (including the final
-    no-change pass) and the converged flag feed run_dedup's
-    minhash_components row (_cc_stats), so production monitoring sees
-    convergence (round-4 judge item #6) — and
-    can DISTINGUISH it from hitting max_iter with labels still moving
+    no-change pass) and the converged flag go into run_dedup's
+    minhash_components row (_cc_core), so monitoring can tell a
+    converged run from one that hit max_iter with labels still moving
     (a >max_iter-diameter graph would otherwise report the same
     cc_iterations as a run that legitimately converged on the last
     pass).
@@ -1646,27 +1645,24 @@ def _cc_labels(vertices: DataFrame, pairs: DataFrame,
 
 def _cc_core(membership: DataFrame, rep_pairs: DataFrame):
     """Components of a MinHash rep graph: ((doc_id, component_rep) frame,
-    labels, n_iters, converged).  Shared by dedup_connected_components
-    and run_dedup's components stage, which runs it on the graph its
-    near_dup_pairs stage persisted and records _cc_stats beside it."""
+    meter).  The meter's row is run_dedup's minhash_components row,
+    counted on the first action on the frame (run_dedup's components
+    write): n_rows = the rep graph's vertices and n_components = the
+    label roots (each rep, and each converged label, is the doc_id of
+    exactly one membership row), beside the loop's cc_iterations and
+    cc_converged.  Shared by dedup_connected_components and run_dedup's
+    components stage, which runs it on the graph its near_dup_pairs stage
+    persisted."""
     vertices = membership.select(F.col("rep").alias("v")).distinct()
     labels, n_iters, converged = _cc_labels(vertices, rep_pairs)
-    df = (membership.join(labels.select(F.col("v").alias("rep"),
-                                        F.col("l").alias("component_rep")),
-                          "rep")
-                    .select("doc_id", "component_rep"))
-    return df, labels, n_iters, converged
-
-
-def _cc_stats(labels: DataFrame, n_iters: int, converged: bool) -> dict:
-    """run_dedup's minhash_components row: n_rows = vertices of the
-    collapsed rep graph, n_components, cc_iterations, cc_converged.  The
-    counts run on the localCheckpoint-truncated labels: one narrow
-    aggregate, not a plan re-execution."""
-    n_rows, n_components = labels.agg(F.count("*"),
-                                      F.countDistinct("l")).collect()[0]
-    return {"n_rows": n_rows, "cc_iterations": n_iters,
-            "cc_converged": converged, "n_components": n_components}
+    df, meter = metered(
+        membership.join(labels.toDF("rep", "component_rep"), "rep"),
+        F.count_if(F.col("doc_id") == F.col("rep")).alias("n_rows"),
+        F.lit(n_iters).alias("cc_iterations"),
+        F.lit(converged).alias("cc_converged"),
+        F.count_if(F.col("doc_id") == F.col("component_rep"))
+         .alias("n_components"))
+    return df.select("doc_id", "component_rep"), meter
 
 
 def dedup_connected_components(spark, sf,
@@ -1689,14 +1685,16 @@ def dedup_connected_components(spark, sf,
     (n_refined_rows), and when the _SPLIT_HARD_CAP_FACTOR guard fires
     (n_dropped_rows > 0 — catastrophic salt imbalance only) the dropped
     splits' rows lose their star edge too, so their members may land in
-    a separate component (ADVICE r5: the closure is exact only absent
-    hard-guard drops).
+    a separate component: the closure is exact only absent hard-guard
+    drops.
 
     Scale shape: the label propagation runs on the collapsed rep graph
     (one vertex per UNIQUE text), and docs re-join their component through
     the membership map at the end — the raw corpus is never an input to
-    the iteration.  Oracle: recursive CTE reachability over the same edge
-    relation (band-sharing pairs + text-partition edges)."""
+    the iteration.  The components row of the cascade metrics is
+    run_dedup's (_cc_core's meter); this query reads none.  Oracle:
+    recursive CTE reachability over the same edge relation (band-sharing
+    pairs + text-partition edges)."""
     _exact, membership, rep_pairs, _meter, _n = _minhash_rep_graph(
         spark, sf, bucket_cap)
     return _cc_core(membership, rep_pairs)[0]
@@ -4483,6 +4481,9 @@ LIMIT {_URL_TOPK}
 
 _CURATE_MIN_WORDS = 10
 _CURATE_MIN_STOPWORDS = 2
+# every value of the curation ``reason`` column (_curate_core)
+CURATE_REASONS = ("null_text", "too_short", "non_english", "repetitive",
+                  "blocked_domain", "kept")
 
 
 def curate_documents(spark, sf, blocklist: DataFrame | None = None):

@@ -640,8 +640,9 @@ def test_run_dedup_checks_every_committed_stage_first(spark, tmp_path,
 
 def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):
     """The curation job writes the full verdict ledger + the scrubbed kept
-    corpus (with source metadata, no doc_id self-join) + per-reason counts,
-    and resumes stages idempotently through the manifest."""
+    corpus (with source metadata, no doc_id self-join) + per-reason counts
+    equal to a groupBy over the written ledger, commits only those two
+    stages, and resumes them idempotently through the manifest."""
     import os
     import re
 
@@ -659,6 +660,9 @@ def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):
     # ledger covers every doc; corpus is exactly the kept subset
     ledger = spark.read.parquet(os.path.join(out, "curated"))
     assert ledger.count() == n_docs
+    assert stats["reasons"] == {r["reason"]: r["count"] for r in
+                                ledger.groupBy("reason").count().collect()}
+    assert set(Manifest(out).load()["stages"]) == {"curated", "corpus"}
     corpus = spark.read.parquet(os.path.join(out, "corpus"))
     assert corpus.columns == ["doc_id", "source", "text"]
     assert corpus.count() == stats["n_kept"]
@@ -669,8 +673,7 @@ def test_run_curate_writes_ledger_corpus_and_reasons(spark, tmp_path):
     assert leftover == []
     # rerun resumes every stage from the manifest
     again = run_curate(spark, "/root/testdata/sf0.001", out)
-    assert set(again["resumed_stages"]) == {"curated", "corpus",
-                                            "curate_metrics"}
+    assert set(again["resumed_stages"]) == {"curated", "corpus"}
     assert again["reasons"] == stats["reasons"]
 
 
@@ -678,7 +681,8 @@ def test_run_incremental_writes_flags_additions_and_metrics(spark,
                                                             tmp_path):
     """The incremental-dedup job writes the per-batch-doc flag ledger +
     the kept additions (with text and source, via a broadcast doc_id
-    join) + flag-combo counts, and resumes stages idempotently."""
+    join) + flag-combo counts equal to a groupBy over the written ledger,
+    commits only those two stages, and resumes them idempotently."""
     import os
 
     from sparklog.pipeline import run_incremental
@@ -694,9 +698,14 @@ def test_run_incremental_writes_flags_additions_and_metrics(spark,
     adds = spark.read.parquet(os.path.join(out, "additions"))
     assert set(adds.columns) == {"doc_id", "text", "source"}
     assert adds.count() == n_keep
+    keys = ("exact_dup_corpus", "near_dup_corpus", "dup_in_batch", "keep")
+    flags = spark.read.parquet(os.path.join(out, "flags"))
+    assert stats["flag_combos"] == {
+        "|".join(str(r[c]) for c in keys): r["count"]
+        for r in flags.groupBy(*keys).count().collect()}
+    assert set(Manifest(out).load()["stages"]) == {"flags", "additions"}
     again = run_incremental(spark, "/root/testdata/sf0.001", out)
-    assert set(again["resumed_stages"]) == {"flags", "additions",
-                                            "incremental_metrics"}
+    assert set(again["resumed_stages"]) == {"flags", "additions"}
     assert again["flag_combos"] == stats["flag_combos"]
     assert again["n_added"] == stats["n_added"]
 
